@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
 object Relational {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.ParquetSource.read(spark, s"$dir/$name.parquet")
 
   /** TPC-H Q1-style pricing summary over lineitem. */
   /** TPC-H Q1 in EXACT integer units (r20 third-scale lesson — see

@@ -1,7 +1,7 @@
 package graft.api
 
 import org.apache.spark.sql.SparkSession
-import graft.sources.EventLog
+import graft.sources.{EventLog, ParquetSource}
 
 /** Registers the canonical views as temp views so the whole engine
   * surface is reachable from `spark.sql` (pairs with GraftExtensions,
@@ -12,7 +12,7 @@ object GraftCatalog {
     EventLog.named(spark, dir).createOrReplaceTempView("entry_log")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
-      spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
+      ParquetSource.read(spark, s"$dir/$t.parquet").createOrReplaceTempView(t)
     }
   }
 }

@@ -16,7 +16,7 @@ import graft.functions.DotProduct
 object Knn {
 
   def emb(spark: SparkSession, dir: String): DataFrame =
-    embOf(spark.read.parquet(s"$dir/embeddings.parquet"))
+    embOf(graft.sources.ParquetSource.read(spark, s"$dir/embeddings.parquet"))
 
   /** Normalize a RAW embedding table or stream (vec_id, label,
     * embedding) to the (v, nrm) shape every operator here consumes —

@@ -38,7 +38,9 @@ object LshBuckets {
 
   /** JVM-lifetime cache of corpus sizes, keyed by a caller-chosen dataset
     * key (e.g. the parquet dir) PLUS an invalidation token derived from
-    * the scan's resolved input files (count + sorted-name hash): if the
+    * the scan's resolved input files (their sorted names'
+    * [[graft.sources.Fingerprint]] — a 32-bit hashCode collision would
+    * silently serve another corpus's row count): if the
     * data at a path is rewritten within one long-lived JVM (testdata
     * regeneration under sbt shell, future service reuse), the parquet
     * writer emits fresh UUID-named part files, the token changes, and
@@ -55,8 +57,7 @@ object LshBuckets {
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   def corpusSize(e: DataFrame, key: String): Long = {
-    val files = e.inputFiles
-    val token = s"${files.length}:${files.sorted.toSeq.hashCode}"
+    val token = graft.sources.Fingerprint.of(e.inputFiles.sorted)
     sizeCache.computeIfAbsent(s"$key@$token", _ => Long.box(e.count()))
       .longValue()
   }

@@ -34,10 +34,15 @@ object EventLog {
     * refuses to map nanos to its µs TimestampType); the micros form
     * surfaces as TIMESTAMP_NTZ. [[tsUs]] normalizes either to epoch
     * micros, so every downstream operator is agnostic to which
-    * generation wrote the file. */
+    * generation wrote the file.
+    *
+    * Every serving read starts here, so the file is read through
+    * [[ParquetSource]]: the schema is inferred once per file generation
+    * (listing + `nanosAsLong`), not once per read — a rewrite of either
+    * `ts` generation in place lists differently and re-infers. */
   def raw(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/events.parquet")
+    ParquetSource.read(spark, s"$dir/events.parquet")
   }
 
   /** Epoch-micros expression for whichever physical `ts` the parquet

@@ -111,9 +111,13 @@ object EventLogWriter {
       .parquet(path)
 
   /** Read the produced layout back as the canonical entry view —
-    * sequences are materialized, no window derivation. */
+    * sequences are materialized, no window derivation. Through
+    * [[ParquetSource]]: a read-back after an append or a compaction
+    * lists new files and infers afresh (what a plain read costs); a
+    * repeat read of an unchanged layout reuses the schema and runs no
+    * job before its action. */
   def readProduced(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    ParquetSource.read(spark, path)
       .select("space", "segment", "sequence", "ts_us", "event_id", "value",
         "payload")
 
@@ -136,7 +140,9 @@ object EventLogWriter {
     * The remaining window is one metadata rename, the best a
     * non-transactional FS offers (a real deployment puts a table
     * format's commit protocol under this; the rewrite job itself is
-    * unchanged). Returns the per-space audit
+    * unchanged). Each rewritten space is read through [[ParquetSource]]
+    * (its files are new since the last read, so it infers once, on the
+    * listing the relation scans). Returns the per-space audit
     * (space, n_files_before, n_files_after, bytes) — compaction is a
     * maintenance job, and its report is the point. */
   def compact(spark: SparkSession, path: String,
@@ -172,7 +178,7 @@ object EventLogWriter {
             val tmp = new Path(root, s".compact_tmp_space=$space")
             val bak = new Path(root, s".compact_bak_space=$space")
             fs.delete(tmp, true)
-            spark.read.parquet(dir.getPath.toString)
+            ParquetSource.read(spark, dir.getPath.toString)
               // a space larger than targetBytes * Int.MaxValue can't be
               // expressed as a partition count — clamp, don't overflow
               .repartition(math.min(target, Int.MaxValue.toLong).toInt,

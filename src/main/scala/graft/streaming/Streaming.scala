@@ -55,7 +55,7 @@ object Streaming {
   def readEntryStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Int = 1): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val probe = spark.read.parquet(dir)
+    val probe = graft.sources.ParquetSource.read(spark, dir)
     spark.readStream
       .schema(probe.schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)

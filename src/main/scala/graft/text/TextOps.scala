@@ -17,7 +17,7 @@ import graft.functions.{MinKByKey, PolyHash64}
 object TextOps {
 
   def docs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    graft.sources.ParquetSource.read(spark, s"$dir/documents.parquet")
 
   /** Whitespace tokens, empty-safe. Kept as an expression so downstream
     * ops stay inside whole-stage codegen. */
@@ -2776,7 +2776,7 @@ object TextOps {
     val files = d.inputFiles
     val token =
       if (files.isEmpty) null
-      else s"${files.length}:${files.sorted.toSeq.hashCode}:$minDf:$maxDfTenths"
+      else s"${graft.sources.Fingerprint.of(files.sorted)}:$minDf:$maxDfTenths"
     if (token == null || !verifiedVocabs.contains(token)) {
       requireInjectiveTermHash(dft.select(col("lang"), col("term")))
       if (token != null) verifiedVocabs.add(token)

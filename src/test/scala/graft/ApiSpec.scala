@@ -203,6 +203,157 @@ class ApiSpec extends SparkSpec {
     assert(deduped.count() == entries.count())
   }
 
+  /** Jobs started while `body` runs, seen by a SparkListener. Listener
+    * events arrive asynchronously but in order, so a tagged sentinel job
+    * before and after `body` brackets exactly its jobs. */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def sentinel(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel("jobsDuring:start")
+      body
+      sentinel("jobsDuring:end")
+      val order = Iterator.continually(
+          seen.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .map(d => if (d == null) fail("listener bus never delivered") else d)
+        .takeWhile(_ != "jobsDuring:end").toList
+      order.length - order.indexOf("jobsDuring:start") - 1
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The physical plan and its scan node's (untruncated) fields, exprIds
+    * stripped (two reads of one path resolve to different attribute ids). */
+  private def planFields(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val plan = df.queryExecution.sparkPlan
+    val scans = plan.collect { case s: FileSourceScanExec => s }
+    assert(scans.length == 1, plan.toString)
+    def norm(x: String) = x.replaceAll("#\\d+", "")
+    ("plan" -> norm(plan.toString)) +:
+      Seq("ReadSchema", "PartitionFilters", "PushedFilters", "DataFilters")
+        .map(k => k -> scans.head.metadata.get(k).map(norm))
+  }
+
+  /** Writes `events.parquet` as one file whose `ts` carries the given
+    * parquet timestamp unit — the two generations the test data has
+    * shipped (NANOS rounds ≤ 12, MICROS since). */
+  private def writeEvents(dir: String, unit: String, rows: Int): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.ParquetFileWriter
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      s"message events { required int64 event_id; " +
+        s"required int64 ts (TIMESTAMP($unit,false)); }")
+    val w = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema)
+      .withConf(spark.sessionState.newHadoopConf())
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .build()
+    val g = new SimpleGroupFactory(schema)
+    try (1 to rows).foreach { i =>
+      w.write(g.newGroup().append("event_id", i.toLong)
+        .append("ts", 1700000000000000L * (if (unit == "NANOS") 1000L else 1L)))
+    } finally w.close()
+  }
+
+  test("ParquetSource: a repeat read runs no job and plans like spark.read.parquet") {
+    import graft.sources.ParquetSource
+    val produced = Files.createTempDirectory("graft_src_prod").toString
+    EventLogWriter.write(EventLog.entries(spark, SF), produced)
+    EventLog.raw(spark, SF) // sets nanosAsLong, as every log read does
+    Seq(
+      s"$SF/events.parquet" -> ((d: org.apache.spark.sql.DataFrame) =>
+        d.filter(col("event_type") === "click" && col("user_id") > 3)
+          .select(col("user_id"), row_number().over(
+            org.apache.spark.sql.expressions.Window.partitionBy("user_id")
+              .orderBy("ts", "event_id")).as("sequence"))),
+      produced -> ((d: org.apache.spark.sql.DataFrame) =>
+        d.filter(col("space") === "click" && col("segment") === "1")
+          .select("sequence", "value"))
+    ).foreach { case (path, query) =>
+      ParquetSource.read(spark, path)
+      var again: org.apache.spark.sql.DataFrame = null
+      assert(jobsDuring { again = ParquetSource.read(spark, path); again.schema } == 0,
+        s"repeat read of $path launched a job")
+      val plain = spark.read.parquet(path)
+      assert(again.schema == plain.schema, path)
+      assert(planFields(query(again)) == planFields(query(plain)), path)
+      assert(query(again).collect().toSet == query(plain).collect().toSet, path)
+    }
+  }
+
+  test("ParquetSource: a rewrite, an append or a setting change is never served a stale schema") {
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+    import graft.sources.ParquetSource
+    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+    val dir = Files.createTempDirectory("graft_src_gen").toString
+    def tsType = EventLog.raw(spark, dir).schema("ts").dataType
+    // rewriting events.parquet in place with the other ts generation
+    writeEvents(dir, "MICROS", 3)
+    assert(tsType == TimestampNTZType)
+    writeEvents(dir, "NANOS", 3)
+    assert(tsType == LongType)
+    writeEvents(dir, "MICROS", 3)
+    assert(tsType == TimestampNTZType)
+    // the nanos form is only readable under nanosAsLong: turning it off
+    // must re-infer (and fail as the plain read fails), not hit the memo
+    writeEvents(dir, "NANOS", 3)
+    assert(tsType == LongType)
+    try {
+      spark.conf.set(nanosKey, "false")
+      val plain = intercept[Exception](spark.read.parquet(s"$dir/events.parquet"))
+      val ours = intercept[Exception](
+        ParquetSource.read(spark, s"$dir/events.parquet"))
+      assert(ours.getClass == plain.getClass, ours.toString)
+    } finally spark.conf.set(nanosKey, "true")
+    assert(ParquetSource.read(spark, s"$dir/events.parquet")
+      .schema("ts").dataType == LongType)
+    // an append lands new files: the next read sees its rows
+    val app = Files.createTempDirectory("graft_src_app").toString
+    spark.range(10).write.mode(SaveMode.Overwrite).parquet(app)
+    assert(ParquetSource.read(spark, app).count() == 10)
+    spark.range(10, 15).write.mode(SaveMode.Append).parquet(app)
+    assert(ParquetSource.read(spark, app).count() == 15)
+    // empty and missing paths fail exactly as the plain read fails
+    val empty = Files.createTempDirectory("graft_src_empty").toString
+    Seq(empty, s"$empty/missing.parquet").foreach { p =>
+      val plain = intercept[Exception](spark.read.parquet(p))
+      val ours = intercept[Exception](ParquetSource.read(spark, p))
+      assert(ours.getClass == plain.getClass, s"$p: $ours")
+    }
+  }
+
+  test("every parquet source read in src/main goes through ParquetSource") {
+    import java.nio.file.{Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), root.toAbsolutePath.toString)
+    // `.read.parquet(` across line breaks too (`spark.read\n  .parquet(`)
+    val call = """\.read\s*\.parquet\s*\(""".r
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "ParquetSource.scala")
+      .filter((p: Path) => call.findFirstIn(Files.readString(p)).isDefined)
+      .map(root.relativize(_).toString).toList
+    assert(offenders.isEmpty,
+      s"spark.read.parquet outside graft.sources.ParquetSource (re-infers " +
+        s"the schema with a Spark job per read): ${offenders.mkString(", ")}")
+  }
+
   test("extensions expose native kernels to SQL") {
     spark // force base session first
     SparkSession.clearActiveSession()

@@ -2,8 +2,8 @@
 # Interleaved A/B of the WORKING TREE vs HEAD on a bench filter set.
 # A = HEAD (stash), B = working tree. usage: ab_interleaved.sh <filter> [rounds]
 #
-# Stash discipline (ADVICE r20): capture the ref `git stash push` creates
-# and only pop when one WAS created — on a clean tree `git stash -q` saves
+# Stash discipline: compare stash@{0} before and after the
+# push and only pop when one WAS created — on a clean tree `git stash -q` saves
 # nothing and a blind pop would pull an unrelated pre-existing stash entry
 # into the tree; `-u` includes untracked files so the A side is pure HEAD;
 # a trap restores the working tree even if a compile/bench step dies.
@@ -19,8 +19,13 @@ restore() {
 trap restore EXIT
 # run one side: runA <round> | runB <round>
 runA() {
-  if git stash push -q -u -m "ab_interleaved_$1" 2>/dev/null \
-      && [ -n "$(git stash list | grep ab_interleaved_$1)" ]; then
+  # a push that saved something moves stash@{0}; matching the message
+  # instead would also match an older entry (ab_interleaved_1 vs _10)
+  local before after
+  before=$(git rev-parse -q --verify 'stash@{0}' || true)
+  git stash push -q -u -m "ab_interleaved_$1" 2>/dev/null || true
+  after=$(git rev-parse -q --verify 'stash@{0}' || true)
+  if [ -n "$after" ] && [ "$after" != "$before" ]; then
     STASHED=1
   fi
   sbt compile -batch >/dev/null 2>&1
