@@ -19,8 +19,10 @@ class GraftStore(spark: SparkSession, dir: String) {
 
   private[api] def named: DataFrame = EventLog.named(spark, dir)
 
-  /** Pruned entry view — raw-column predicates reach the parquet scan
-    * and the sequence window only sees the touched segments. */
+  /** Pruned entry view: on a small log, the space's cached sequenced
+    * view, filtered to the segment; otherwise raw-column predicates
+    * reach the parquet scan and the sequence window only sees the
+    * touched segments (see [[EventLog.entries]]). */
   private[api] def entriesFor(space: Option[String],
       segment: Option[String] = None): DataFrame =
     EventLog.entries(spark, dir, space, segment)

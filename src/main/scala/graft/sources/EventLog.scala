@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType}
+import org.apache.spark.storage.StorageLevel
 
 /** Canonical event-log adapter: maps the driver's `events` table onto the
   * streamkit data model (store → space → segment → sequenced entries), cf.
@@ -17,10 +18,14 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType}
   * Scale note (100 TB): in a production layout the log is written
   * partitioned by `space` and bucketed+sorted by (`segment`, `sequence`),
   * so sequence is materialized at produce time and ConsumeSegment is a
-  * partition-pruned, shuffle-free scan. The window-function derivation
-  * below exists only because the driver's test parquet is unpartitioned;
-  * every operator downstream consumes the canonical view and is agnostic
-  * to which layout produced it.
+  * partition-pruned, shuffle-free scan. A raw log carries no sequence, so
+  * [[entries]] derives it with a window. The derivation depends only on
+  * the file generation, so for a small raw log (within `Par.tiny`) the
+  * sequenced view is derived once per generation and held in Spark's
+  * cache ([[entries]] has the rules); a big raw log takes the pruned
+  * derivation ([[derive]]) on every read. Every operator downstream
+  * consumes the canonical view and is agnostic to which layout, or
+  * which path, produced it.
   */
 object EventLog {
 
@@ -40,9 +45,13 @@ object EventLog {
     * [[ParquetSource]]: the schema is inferred once per file generation
     * (listing + `nanosAsLong`), not once per read — a rewrite of either
     * `ts` generation in place lists differently and re-infers. */
-  def raw(spark: SparkSession, dir: String): DataFrame = {
+  def raw(spark: SparkSession, dir: String): DataFrame = source(spark, dir).df
+
+  /** [[raw]] with the listing it was resolved from. */
+  private[graft] def source(spark: SparkSession,
+      dir: String): ParquetSource.Resolved = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ParquetSource.read(spark, s"$dir/events.parquet")
+    ParquetSource.resolve(spark, s"$dir/events.parquet")
   }
 
   /** Epoch-micros expression for whichever physical `ts` the parquet
@@ -74,16 +83,50 @@ object EventLog {
 
   /** Canonical entry view: named + per-segment `sequence` (1-based).
     *
+    * A small raw log (a listing within `Par.tiny`: at most `MaxFiles`
+    * files under `TinyBytes`) is served from a sequenced view held in
+    * Spark's cache at `MEMORY_ONLY`, one per file generation: a
+    * space-pruned read uses that space's view, an unpruned read the
+    * whole log's, and a segment read filters its space's view. The first
+    * read of a view runs [[derive]] and encodes the result; later reads
+    * scan the cached columns, with no file scan, shuffle or window. An
+    * evicted block is recomputed from the same plan.
+    *
+    * The generation is the listing fingerprint [[ParquetSource.resolve]]
+    * already computed, and the relation carries it
+    * (`ParquetSource.GenerationOption`), so a view cached over one
+    * generation can only serve reads of that generation. Every listed
+    * read, over the bound or not, first unpersists the views cached
+    * from another generation of its path; at most 256 views are held
+    * (`Fingerprint.memo`), the least recently used unpersisted first.
+    *
+    * Any other log (over the bound, or resolved by the plain read) takes
+    * [[derive]] on every read. */
+  def entries(spark: SparkSession, dir: String,
+      space: Option[String] = None,
+      segment: Option[String] = None): DataFrame =
+    sequenced(source(spark, dir), space, segment)
+
+  /** [[entries]] over an already resolved raw log. */
+  private[graft] def sequenced(src: ParquetSource.Resolved,
+      space: Option[String], segment: Option[String]): DataFrame =
+    src.listing.flatMap(cachedView(_, src.df, space)) match {
+      case Some(view) =>
+        segment.fold(view)(sg => view.filter(col("segment") === sg))
+      case None => derive(src.df, space, segment)
+    }
+
+  /** The sequence derivation over a raw log.
+    *
     * `space`/`segment` prefilters are applied on the RAW columns before
     * the rename, because a predicate on `cast(user_id as string)` cannot
     * reach the parquet scan — on the raw columns both prune row groups
     * AND shrink the sequence-derivation window to just the touched
     * segments. The string→long translation is adapter knowledge (the
     * canonical mapping defines segment = string form of user_id). */
-  def entries(spark: SparkSession, dir: String,
-      space: Option[String] = None,
-      segment: Option[String] = None): DataFrame = {
-    var r = raw(spark, dir)
+  private[graft] def derive(raw: DataFrame, space: Option[String],
+      segment: Option[String]): DataFrame = {
+    var r = raw
     space.foreach(sp => r = r.filter(col("event_type") === sp))
     segment.foreach { sg =>
       r = segmentAsLong(sg).map(id => r.filter(col("user_id") === id))
@@ -98,6 +141,42 @@ object EventLog {
         col("value"),
         col("props").as("payload"))
       .withColumn("sequence", row_number().over(w).cast("long"))
+  }
+
+  /** A sequenced view held in Spark's cache, with the path and
+    * generation it was derived from. */
+  private final case class View(root: String, generation: String,
+      df: DataFrame)
+
+  /** (generation, space) → its cached view. */
+  private val views = Fingerprint.memo[View](unpersist)
+
+  private def unpersist(v: View): Unit =
+    if (!v.df.sparkSession.sparkContext.isStopped) v.df.unpersist()
+
+  /** The cached view of `space` (or of the whole log) at `l`'s
+    * generation, registered if need be; None over the tiny bound. The
+    * views of `l`'s path from any other generation are unpersisted
+    * first. One lock covers the table and the cache registration. */
+  private def cachedView(l: ParquetSource.Listing, raw: DataFrame,
+      space: Option[String]): Option[DataFrame] = views.synchronized {
+    val it = views.values.iterator
+    while (it.hasNext) {
+      val v = it.next()
+      if (v.root == l.root && v.generation != l.generation) {
+        it.remove()
+        unpersist(v)
+      }
+    }
+    if (!graft.operators.Par.tiny(l.files, l.bytes)) None
+    else {
+      val view = derive(raw, space, None)
+      if (view.storageLevel == StorageLevel.NONE)
+        view.persist(StorageLevel.MEMORY_ONLY)
+      views.put(Fingerprint.of(l.generation +: space.toSeq),
+        View(l.root, l.generation, view))
+      Some(view)
+    }
   }
 
   private def segmentAsLong(sg: String): Option[Long] =

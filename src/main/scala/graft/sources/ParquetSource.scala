@@ -20,9 +20,9 @@ import org.apache.spark.sql.types.StructType
   * mtime) — plus the session settings that change what inference
   * returns. A hit builds the relation exactly as
   * `DataFrameReader` → `DataSource.resolveRelation` does (same index,
-  * partition schema, nullable data schema and file format), so it runs
-  * no job and no second listing; the plan is the one
-  * `spark.read.parquet` would give. A miss runs
+  * partition schema, nullable data schema and file format; its options
+  * hold only the [[GenerationOption]]), so it runs no job and no second
+  * listing; the plan is the one `spark.read.parquet` would give. A miss runs
   * `ParquetFileFormat.inferSchema` on the same listing, so it costs
   * what a plain read costs. A rewritten, appended or compacted path
   * lists differently and misses (Spark writers emit fresh file names; an
@@ -48,23 +48,43 @@ object ParquetSource {
     "spark.sql.parquet.respectSummaryFiles",
     "spark.sql.caseSensitive")
 
-  private val MaxEntries = 256
+  /** Listing+settings fingerprint → inferred data schema (nullable). */
+  private val schemas = Fingerprint.memo[StructType]()
 
-  /** Listing+settings fingerprint → inferred data schema (nullable),
-    * least-recently-used entry evicted past [[MaxEntries]]. */
-  private val schemas =
-    new java.util.LinkedHashMap[String, StructType](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, StructType]): Boolean =
-        size() > MaxEntries
-    }
+  /** The relation option that carries the listing fingerprint. Spark's
+    * cache matches a file relation by `HadoopFsRelation` equality, whose
+    * `InMemoryFileIndex` compares root paths only, so two generations of
+    * one path would compare equal and a plan cached over one would serve
+    * a read of the other. The options take part in that equality (and
+    * the parquet reader ignores a key it does not know), so with the
+    * fingerprint among them a cached plan only serves its own
+    * generation. */
+  val GenerationOption = "graft.listing"
+
+  /** One file generation of a path, as [[resolve]] listed it: the
+    * qualified root, the listing fingerprint that keys the schema memo
+    * (every leaf file's path, length and mtime, plus the inference
+    * settings), and the listing's file count and total bytes. */
+  final case class Listing(root: String, generation: String, files: Int,
+      bytes: Long)
+
+  /** A read and, when the listing shortcut resolved it, the listing it
+    * was resolved from (None where the plain read decided). */
+  final case class Resolved(df: DataFrame, listing: Option[Listing])
 
   def read(spark: SparkSession, path: String): DataFrame =
-    resolve(spark, path).getOrElse(spark.read.parquet(path))
+    resolve(spark, path).df
+
+  /** [[read]] with its listing, so a caller can key per-generation state
+    * on the fingerprint without listing the path a second time. */
+  def resolve(spark: SparkSession, path: String): Resolved =
+    resolveListed(spark, path).getOrElse(
+      Resolved(spark.read.parquet(path), None))
 
   /** The relation over one listing with the memoized (or freshly
     * inferred) schema; None where the plain read must decide. */
-  private def resolve(spark: SparkSession, path: String): Option[DataFrame] = {
+  private def resolveListed(spark: SparkSession,
+      path: String): Option[Resolved] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val status =
@@ -75,8 +95,8 @@ object ParquetSource {
         !(st.isDirectory && fs.exists(new Path(root, "_spark_metadata"))))
     if (!modeled) None
     else {
-      val index = new InMemoryFileIndex(spark,
-        Seq(root.makeQualified(fs.getUri, fs.getWorkingDirectory)),
+      val qualified = root.makeQualified(fs.getUri, fs.getWorkingDirectory)
+      val index = new InMemoryFileIndex(spark, Seq(qualified),
         Map.empty, None, FileStatusCache.getOrCreate(spark))
       val files = index.allFiles()
       val key = Fingerprint.of(
@@ -102,9 +122,12 @@ object ParquetSource {
             s
           }
       }
-      dataSchema.map(s => spark.baseRelationToDataFrame(HadoopFsRelation(
-        index, index.partitionSchema, s, None, new ParquetFileFormat(),
-        Map.empty)(spark)))
+      dataSchema.map(s => Resolved(
+        spark.baseRelationToDataFrame(HadoopFsRelation(index,
+          index.partitionSchema, s, None, new ParquetFileFormat(),
+          Map(GenerationOption -> key))(spark)),
+        Some(Listing(qualified.toString, key, files.length,
+          files.map(_.getLen).sum))))
     }
   }
 }

@@ -153,7 +153,8 @@ object Chunks {
     * spread): a chunk's text is `concat_ws(' ', slice(words, …))` of
     * non-empty space-free words, so `filter(split(lower(text), ' '),
     * != '')` — what every downstream tokenizer computes — is exactly
-    * `transform(slice(words, …), lower)`: emit that as `toks` and the
+    * `transform(slice(words, …), lower)`: emit that as `toks`, marked
+    * with [[graft.text.TextOps.asLowerToks]], and the
     * bm25/posting/vector builds ([[graft.text.TextOps.lowerToks]])
     * skip the concat + re-split entirely. The chunk family previously
     * paid the word-split THREE times per hybrid-serve build (chunk
@@ -167,8 +168,9 @@ object Chunks {
         (col("doc_id") * lit(MaxChunksPerDoc) + col("chunk_idx") + idGuard)
           .as("doc_id"),
         col("lang"),
-        expr(s"transform(slice(words, CAST(chunk_idx * $width + 1 AS INT), " +
-          s"$width), w -> lower(w))").as("toks"))
+        graft.text.TextOps.asLowerToks(expr(
+          s"transform(slice(words, CAST(chunk_idx * $width + 1 AS INT), " +
+            s"$width), w -> lower(w))")))
 
   /** PASSAGE-granular BM25 retrieval (r17) — the actual RAG/eval
     * retrieval unit (document-level search returns a 10k-word doc when

@@ -30,18 +30,30 @@ object TextOps {
     * consumers (the streamingCurate convergence argument): stateless
     * per-row expressions, so it applies to a stream unchanged.
     *
-    * PASS-THROUGH when the relation already carries a `toks` column
-    * (r21, the r20 verdict's #5 — restructure the chunk tokenize, don't
-    * spread it): the contract is that the producer built `toks` as the
-    * lowercase of exactly the ' '-split non-empty words —
-    * [[graft.text.Chunks.chunkDocsTok]] is the one producer,
-    * spec-pinned token-identical to the text path — so a pre-tokenized
-    * corpus skips the re-split and the chunk grid pays ONE split pass
-    * per corpus instead of one per index build. Text-only relations
-    * (every other caller) take the unchanged tokenize path. */
+    * PASS-THROUGH only for a relation whose `toks` column carries the
+    * [[asLowerToks]] marker (r21, the r20 verdict's #5 — restructure the
+    * chunk tokenize, don't spread it): the marker is the producer's
+    * declaration that `toks` is the lowercase of exactly the ' '-split
+    * non-empty words — [[graft.text.Chunks.chunkDocsTok]] is the one
+    * producer, spec-pinned token-identical to the text path — so a
+    * pre-tokenized corpus skips the re-split and the chunk grid pays ONE
+    * split pass per corpus instead of one per index build. Every other
+    * relation, including one that merely has a column named `toks`, is
+    * tokenized from `text`. */
   private[graft] def lowerToks(d: DataFrame): DataFrame =
-    if (d.columns.contains("toks")) d
+    if (d.columns.contains("toks") &&
+        d.schema("toks").metadata.contains(LowerToksMarker)) d
     else withToks(d.withColumn("text", lower(col("text"))))
+
+  private val LowerToksMarker = "graft.lowerToks"
+
+  /** `toks` as a column [[lowerToks]] passes through: the caller vouches
+    * that it holds the lowercase ' '-split non-empty words of the row's
+    * text. The marker is column metadata, so it follows the column
+    * through selects, filters, joins and checkpoints. */
+  private[graft] def asLowerToks(toks: Column): Column =
+    toks.as("toks", new org.apache.spark.sql.types.MetadataBuilder()
+      .putBoolean(LowerToksMarker, true).build())
 
   /** Per-document surface statistics. Ratio divisors go through
     * nullif: a zero-token doc (null/empty/whitespace text — one

@@ -246,17 +246,21 @@ class ApiSpec extends SparkSpec {
         .map(k => k -> scans.head.metadata.get(k).map(norm))
   }
 
-  /** Writes `events.parquet` as one file whose `ts` carries the given
-    * parquet timestamp unit — the two generations the test data has
+  /** Writes `events.parquet` in place as one file with the given rows —
+    * (event_id, user_id, event_type, ts µs) — and `ts` in the given
+    * parquet timestamp unit: the two generations the test data has
     * shipped (NANOS rounds ≤ 12, MICROS since). */
-  private def writeEvents(dir: String, unit: String, rows: Int): Unit = {
+  private def writeLog(dir: String, unit: String,
+      log: Seq[(Long, Long, String, Long)]): Unit = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.ParquetFileWriter
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.schema.MessageTypeParser
     val schema = MessageTypeParser.parseMessageType(
-      s"message events { required int64 event_id; " +
-        s"required int64 ts (TIMESTAMP($unit,false)); }")
+      s"message events { required int64 event_id; required int64 user_id; " +
+        s"required binary event_type (STRING); " +
+        s"required int64 ts (TIMESTAMP($unit,false)); required double value; " +
+        s"required binary props (STRING); }")
     val w = ExampleParquetWriter
       .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
       .withType(schema)
@@ -264,9 +268,11 @@ class ApiSpec extends SparkSpec {
       .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
       .build()
     val g = new SimpleGroupFactory(schema)
-    try (1 to rows).foreach { i =>
-      w.write(g.newGroup().append("event_id", i.toLong)
-        .append("ts", 1700000000000000L * (if (unit == "NANOS") 1000L else 1L)))
+    try log.foreach { case (id, user, tpe, tsUs) =>
+      w.write(g.newGroup().append("event_id", id).append("user_id", user)
+        .append("event_type", tpe)
+        .append("ts", tsUs * (if (unit == "NANOS") 1000L else 1L))
+        .append("value", id.toDouble).append("props", s"p$id"))
     } finally w.close()
   }
 
@@ -302,16 +308,17 @@ class ApiSpec extends SparkSpec {
     val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
     val dir = Files.createTempDirectory("graft_src_gen").toString
     def tsType = EventLog.raw(spark, dir).schema("ts").dataType
+    val threeRows = (1L to 3L).map(i => (i, 1L, "a", 1700000000000000L))
     // rewriting events.parquet in place with the other ts generation
-    writeEvents(dir, "MICROS", 3)
+    writeLog(dir, "MICROS", threeRows)
     assert(tsType == TimestampNTZType)
-    writeEvents(dir, "NANOS", 3)
+    writeLog(dir, "NANOS", threeRows)
     assert(tsType == LongType)
-    writeEvents(dir, "MICROS", 3)
+    writeLog(dir, "MICROS", threeRows)
     assert(tsType == TimestampNTZType)
     // the nanos form is only readable under nanosAsLong: turning it off
     // must re-infer (and fail as the plain read fails), not hit the memo
-    writeEvents(dir, "NANOS", 3)
+    writeLog(dir, "NANOS", threeRows)
     assert(tsType == LongType)
     try {
       spark.conf.set(nanosKey, "false")
@@ -335,6 +342,163 @@ class ApiSpec extends SparkSpec {
       val ours = intercept[Exception](ParquetSource.read(spark, p))
       assert(ours.getClass == plain.getClass, s"$p: $ours")
     }
+  }
+
+  // ── EventLog.entries: the per-generation sequenced view ────────────
+
+  private def nodes(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    // the tree itself, not its string: an in-memory scan prints the
+    // cached plan (file scan and window included) but does not hold it
+    val p: SparkPlan = df.queryExecution.sparkPlan
+    (p.collect { case s: InMemoryTableScanExec => s }.length,
+      p.collect { case s: FileSourceScanExec => s }.length,
+      p.collect { case w: WindowExec => w }.length)
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** Every facade read kind that goes through `EventLog.entries`, with
+    * whether its operator itself needs a window. */
+  private def facadeReads(st: GraftStore, midTsUs: Long) = {
+    val sp = st.space("purchase")
+    Seq(
+      ("consume_segment", sp.segment("7").consume(minSeq = Some(2L)), false),
+      ("peek", sp.segment("7").peek, false),
+      ("consume_space", sp.consume(limit = Some(40)), false),
+      ("consume_from", sp.consumeFrom("7", 3L, Some(40)), false),
+      ("consume_multi", st.consume(Map("click" -> ("3", 2L),
+        "view" -> ("5", 1L)), limit = Some(60)), false),
+      ("peek_all", sp.peekAll, false),
+      ("tail", sp.tail(2), true),
+      ("replay_state", sp.replayState(), false),
+      ("state_as_of", sp.stateAsOf(midTsUs), false),
+      ("state_diff", sp.stateDiff(midTsUs, Long.MaxValue), false),
+      ("snapshot", sp.snapshot(5L), false),
+      ("entries", st.entries, false),
+      ("validate", st.validate, false),
+      ("trx_audit", st.trxAudit(), true))
+  }
+
+  test("entries: facade reads on a small log are served from the cached view") {
+    import graft.operators.Par
+    val midTsUs = EventLog.named(spark, SF)
+      .agg(((min("ts_us") + max("ts_us")) / 2).cast("long")).head.getLong(0)
+    // the same log in more files than the tiny bound: today's derivation
+    val big = Files.createTempDirectory("graft_overbound").toString
+    EventLog.raw(spark, SF).repartition(Par.MaxFiles + 1)
+      .write.parquet(s"$big/events.parquet")
+    val bigReads = facadeReads(GraftStore(spark, big), midTsUs)
+    facadeReads(store, midTsUs).foreach(r => rows(r._2)) // first reads
+    facadeReads(store, midTsUs).zip(bigReads).foreach {
+      case ((kind, memo, windowed), (_, derived, _)) =>
+        val (cached, files, windows) = nodes(memo)
+        assert(cached >= 1 && files == 0, s"$kind:\n${memo.queryExecution.sparkPlan}")
+        if (!windowed) assert(windows == 0, s"$kind:\n${memo.queryExecution.sparkPlan}")
+        val (bigCached, bigFiles, bigWindows) = nodes(derived)
+        // (an operator that never reads `sequence` prunes the window)
+        assert(bigCached == 0 && bigFiles >= 1, kind)
+        if (kind == "consume_segment") assert(bigWindows >= 1, kind)
+        val want = rows(derived)
+        assert(want.nonEmpty, kind)
+        assert(rows(memo) == want, kind)
+    }
+  }
+
+  private val t0 = 1700000000000000L
+
+  /** The log's entries as (space, segment, sequence, value) rows, as
+    * [[writeLog]]'s rows define them (every entry's value is its id). */
+  private def model(log: Seq[(Long, Long, String, Long)]): Seq[String] =
+    log.groupBy(e => (e._3, e._2)).toSeq.flatMap { case ((tpe, user), es) =>
+      es.sortBy(e => (e._4, e._1)).zipWithIndex.map { case (e, i) =>
+        s"$tpe|$user|${i + 1}|${e._1.toDouble}" }
+    }.sorted
+
+  /** [[writeLog]]'s rows (`ts` MICROS) written to `dir/events.parquet`
+    * by Spark, in one task, at most `perFile` rows per file (0: any). */
+  private def sparkLog(dir: String, log: Seq[(Long, Long, String, Long)],
+      mode: SaveMode, perFile: Long = 0L): Unit =
+    spark.createDataFrame(log.map { case (id, user, tpe, ts) =>
+        (id, user, tpe, ts, id.toDouble, s"p$id") })
+      .toDF("event_id", "user_id", "event_type", "ts", "value", "props")
+      .withColumn("ts", timestamp_micros(col("ts")).cast("timestamp_ntz"))
+      .coalesce(1).write.option("maxRecordsPerFile", perFile)
+      .mode(mode).parquet(s"$dir/events.parquet")
+
+  private def seqs(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    rows(df.select("space", "segment", "sequence", "value"))
+
+  test("entries: an in-place rewrite of the log is never served a stale view") {
+    val dir = Files.createTempDirectory("graft_memo_gen").toString
+    def st = GraftStore(spark, dir)
+    def check(log: Seq[(Long, Long, String, Long)], s: GraftStore): Unit = {
+      val want = model(log)
+      assert(seqs(s.entries) == want)
+      assert(seqs(s.space("a").consume()) == want.filter(_.startsWith("a|")))
+      assert(seqs(s.space("a").segment("1").consume()) ==
+        want.filter(_.startsWith("a|1|")))
+    }
+    val gen1 = Seq((1L, 1L, "a", t0 + 10), (2L, 1L, "a", t0 + 20),
+      (3L, 2L, "a", t0 + 15), (4L, 1L, "b", t0 + 5))
+    // an entry lands at the head of an existing segment: every later
+    // sequence of that segment moves
+    val gen2 = gen1 :+ ((5L, 1L, "a", t0 + 1))
+    val gen3 = gen2 :+ ((6L, 1L, "a", t0 + 12))
+    Seq("MICROS" -> gen1, "MICROS" -> gen2, "NANOS" -> gen2,
+        "NANOS" -> gen3, "MICROS" -> gen3).foreach { case (unit, log) =>
+      writeLog(dir, unit, log)
+      check(log, st)
+      check(log, st) // the repeat read, from the cached views
+      assert(nodes(st.space("a").segment("1").consume())._1 == 1)
+    }
+    // a cleared cache and a fresh session both derive afresh
+    spark.sharedState.cacheManager.clearCache()
+    check(gen3, st)
+    check(gen3, GraftStore(spark.newSession(), dir))
+    spark.sharedState.cacheManager.clearCache()
+    check(gen3, GraftStore(spark.newSession(), dir))
+    // a read that listed the log before an append registers its view
+    // only after a read of the new generation was planned: the new read
+    // is still served the appended entry, not the late reader's listing
+    val grown = Files.createTempDirectory("graft_memo_late").toString
+    sparkLog(grown, gen1, SaveMode.Append)
+    val late = EventLog.source(spark, grown)
+    sparkLog(grown, Seq((5L, 1L, "a", t0 + 1)), SaveMode.Append)
+    val fresh = EventLog.entries(spark, grown, Some("a"))
+    EventLog.sequenced(late, Some("a"), None)
+    assert(seqs(fresh) == model(gen2).filter(_.startsWith("a|")))
+  }
+
+  test("entries: a small log rewritten past the tiny bound is read afresh") {
+    import org.apache.spark.storage.StorageLevel
+    import graft.operators.Par
+    val dir = Files.createTempDirectory("graft_memo_grow").toString
+    val gen1 = Seq((1L, 1L, "a", t0 + 10), (2L, 1L, "a", t0 + 20),
+      (3L, 2L, "b", t0 + 5))
+    writeLog(dir, "MICROS", gen1)
+    val schema = EventLog.raw(spark, dir).schema
+    val views = Seq(Some("a"), Some("b")).map(EventLog.entries(spark, dir, _))
+    views.foreach(v => rows(v))
+    views.foreach(v => assert(v.storageLevel == StorageLevel.MEMORY_ONLY))
+    // the same path rewritten in MaxFiles + 1 files (one entry each),
+    // same schema, with new entries in the cached spaces
+    val gen2 = gen1 ++ (4L to Par.MaxFiles + 1L).map(i =>
+      (i, i % 3, if (i % 2 == 0) "a" else "b", t0 + i))
+    sparkLog(dir, gen2, SaveMode.Overwrite, perFile = 1L)
+    val l = EventLog.source(spark, dir).listing.get
+    assert(!Par.tiny(l.files, l.bytes) && l.files == Par.MaxFiles + 1)
+    assert(EventLog.raw(spark, dir).schema == schema)
+    Seq("a", "b").foreach { sp =>
+      val read = EventLog.entries(spark, dir, Some(sp))
+      assert(nodes(read)._1 == 0, read.queryExecution.sparkPlan)
+      assert(seqs(read) == model(gen2).filter(_.startsWith(s"$sp|")), sp)
+    }
+    // the old generation's views are no longer held
+    views.foreach(v => assert(v.storageLevel == StorageLevel.NONE))
   }
 
   test("every parquet source read in src/main goes through ParquetSource") {

@@ -28,6 +28,19 @@ class ChunkSpec extends SparkSpec {
       .count()
     assert(diff == 0L,
       "chunkDocsTok toks drifted from the text-path tokenization")
+    // and its toks carry the marker lowerToks passes through
+    assert(TextOps.lowerToks(viaSlice) eq viaSlice)
+  }
+
+  test("lowerToks: only a marked toks column passes through") {
+    val d = Seq((1L, "Hello  World", Seq("X", "Y"))).toDF("doc_id", "text", "toks")
+    // an unrelated column named toks is replaced by the tokenized text
+    assert(TextOps.lowerToks(d).select("toks").head.getSeq[String](0) ==
+      Seq("hello", "world"))
+    val marked = d.select(col("doc_id"), col("text"),
+      TextOps.asLowerToks(col("toks")))
+    assert(TextOps.lowerToks(marked).select("toks").head.getSeq[String](0) ==
+      Seq("X", "Y"))
   }
 
   test("chunkAssign: grid reconstructs the document exactly") {

@@ -30,6 +30,36 @@ class ParSpec extends SparkSpec {
     assert(Par.slotsFor(32, 0L) === 8) // empty relation is still tiny
   }
 
+  test("tiny: an absolute bound on the listing's files and bytes") {
+    assert(Par.tiny(1, 0L))
+    assert(Par.tiny(Par.MaxFiles, Par.TinyBytes - 1))
+    assert(!Par.tiny(Par.MaxFiles + 1, 1L))
+    assert(!Par.tiny(1, Par.TinyBytes))
+    assert(!Par.tiny(1, -1L))
+  }
+
+  test("entries over the tiny bound plans the pruned derivation, uncached") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.sources.EventLog
+    val src = EventLog.source(spark, SF)
+    val l = src.listing.get
+    assert(Par.tiny(l.files, l.bytes)) // the test log itself is memoized
+    Seq(l.copy(files = Par.MaxFiles + 1), l.copy(bytes = Par.TinyBytes))
+      .foreach { big =>
+        val p = EventLog.sequenced(src.copy(listing = Some(big)),
+          Some("purchase"), Some("42")).queryExecution.sparkPlan
+        val scans = p.collect { case s: FileSourceScanExec => s }
+        assert(scans.length == 1, p)
+        val pushed = scans.head.metadata("PushedFilters")
+        assert(pushed.contains("EqualTo(event_type,purchase)"), pushed)
+        assert(pushed.contains("EqualTo(user_id,42)"), pushed)
+        assert(p.collect { case w: WindowExec => w }.nonEmpty, p)
+        assert(p.collect { case s: InMemoryTableScanExec => s }.isEmpty, p)
+      }
+  }
+
   test("slots: no-op for relations in more files than MaxFiles") {
     // a many-file relation already has scan parallelism of its own and
     // an unbounded stat sweep is driver-side cost — slots must refuse

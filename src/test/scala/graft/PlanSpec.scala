@@ -15,11 +15,26 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
 
   test("consume_segment pushes space AND segment predicates to parquet") {
+    // the derivation (every read of a log over the tiny bound)
     val p = plan(StreamOps.consumeSegment(
-      EventLog.entries(spark, SF, Some("purchase"), Some("42")),
+      EventLog.derive(EventLog.raw(spark, SF), Some("purchase"), Some("42")),
       "purchase", "42", minSeq = Some(2L)))
     assert(p.contains("EqualTo(event_type,purchase)"), p)
     assert(p.contains("EqualTo(user_id,42)"), p)
+    // a small log serves the read from the space's cached view: the
+    // space predicate is pushed to parquet under the view, the segment
+    // predicate applies at the in-memory scan
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val memo = StreamOps.consumeSegment(
+      EventLog.entries(spark, SF, Some("purchase"), Some("42")),
+      "purchase", "42", minSeq = Some(2L)).queryExecution.sparkPlan
+    val scans = memo.collect { case s: InMemoryTableScanExec => s }
+    assert(scans.length == 1, memo)
+    assert(scans.head.predicates.exists(_.sql == "(segment = '42')"),
+      scans.head.predicates.map(_.sql))
+    val cached = scans.head.relation.cachedPlan.toString
+    assert(cached.contains("EqualTo(event_type,purchase)"), cached)
+    assert(!cached.contains("user_id,42"), cached)
   }
 
   test("q5_region broadcasts exactly the true dimensions; customer/orders shuffle") {
