@@ -98,8 +98,10 @@ object Bench {
     * [[PhaseSplit]] rows that is the eager index-write job (plus any
     * eager checkpoint prep), for everything else it is plan construction
     * — and `exec` times the count. Cold/warm report make+exec, so the
-    * headline is comparable across rounds. */
-  private def time(spark: SparkSession, sfDir: String,
+    * headline is comparable across rounds. A failure prints
+    * `FAILED <query> <class>: <first line>` to stderr (stdout, the
+    * driver's metric line, is unchanged). */
+  private def time(spark: SparkSession, sfDir: String, name: String,
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
       : (Double, Double, Boolean) = {
     val t0 = System.nanoTime()
@@ -110,7 +112,11 @@ object Bench {
       val t2 = System.nanoTime()
       ((t1 - t0) / 1e9, (t2 - t1) / 1e9, true)
     } catch {
-      case _: Throwable => ((System.nanoTime() - t0) / 1e9, 0.0, false)
+      case t: Throwable =>
+        val first = Option(t.getMessage).flatMap(_.linesIterator.nextOption())
+          .getOrElse("")
+        System.err.println(s"FAILED $name ${t.getClass.getName}: $first")
+        ((System.nanoTime() - t0) / 1e9, 0.0, false)
     }
   }
 
@@ -141,7 +147,7 @@ object Bench {
       case None => SparkEntry.queries
     }
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val (mk, ex, ok) = time(spark, sfDir, fn)
+      val (mk, ex, ok) = time(spark, sfDir, name, fn)
       release(spark)
       (name, mk, ex, ok)
     }
@@ -164,7 +170,7 @@ object Bench {
     val warmResults = results
       .filter { case (_, mk, ex, ok) => ok && mk + ex >= WarmThresholdSec }
       .map { case (n, _, _, _) =>
-        val (mk, ex, ok) = time(spark2, sfDir, SparkEntry.queries(n))
+        val (mk, ex, ok) = time(spark2, sfDir, n, SparkEntry.queries(n))
         release(spark2)
         (n, mk + ex, ok)
       }

@@ -851,9 +851,9 @@ object Dedup {
     * production pipeline runs INSTEAD of keep-lowest-id: within each
     * cluster keep the highest-quality member (doc_id asc tie-break on
     * the rounded score, so the choice is deterministic and
-    * engine-stable). One hash agg with `max_by` over a struct — the
-    * Knn.assignNearest argmax pattern, never a row_number window over
-    * the corpus. Input: (doc_id, cluster) from [[dedupClusters]] and a
+    * engine-stable). One hash agg with `max_by` over a struct — a
+    * map-side-combinable argmax, never a row_number window over the
+    * corpus. Input: (doc_id, cluster) from [[dedupClusters]] and a
     * quality table carrying (doc_id, quality_score). */
   def keeperByQuality(clusters: DataFrame, quality: DataFrame): DataFrame =
     clusters.join(quality.select("doc_id", "quality_score"), "doc_id")

@@ -1,9 +1,10 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.DotProduct
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
+import graft.functions.{CentroidGroup, CentroidModel, DotProduct, NearestCentroids, PqEncode, PqLut, VectorMean}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (SURVEY §2-F).
@@ -12,7 +13,17 @@ import graft.functions.DotProduct
   * against the corpus, rank per query — a TakeOrdered per query, no
   * all-pairs shuffle. [[lsh]] (random hyperplanes) and [[ivf]] (inverted
   * file over seeded centroids) are the 100 TB paths: both turn search
-  * into a bucket-equijoin so cost scales with bucket size, not corpus². */
+  * into a bucket-equijoin so cost scales with bucket size, not corpus².
+  *
+  * The IVF / IVF-PQ family (float, int8 and PQ codecs) shares one
+  * centroid machinery in [[graft.functions]]: a centroid table is
+  * collected once per call into a [[CentroidModel]] shipped to the
+  * executors as a broadcast variable, and every nearest-centroid
+  * question is a per-row kernel — [[NearestCentroids]] for list
+  * assignment (n = 1) and probe lists (n = nprobe), [[PqEncode]] and
+  * [[PqLut]] for PQ codes and lookup tables, [[VectorMean]] for a Lloyd
+  * round's means. A Lloyd round is one aggregation (one Exchange);
+  * assignment, encoding and probe lists shuffle nothing. */
 object Knn {
 
   def emb(spark: SparkSession, dir: String): DataFrame =
@@ -259,15 +270,11 @@ object Knn {
     spark.sql(s"DROP TABLE IF EXISTS $tableName")
     val centroids = writeIvfIndexQuantized(e.filter(isIndexed), tableName,
       path, nlist, buckets)
-    val probeW = Window.partitionBy("probe_vec").orderBy(col("d"), col("c_id"))
-    val probes = quantize(e.filter(!isIndexed))
+    val probes = probeLists(quantize(e.filter(!isIndexed))
       .filter(col("qnrm") > lit(0.0))
       .select(col("vec_id").as("probe_vec"), col("v"), col("nrm"),
-        col("qv").as("sqv"), col("qnrm").as("snrm"))
-      .crossJoin(broadcast(withCnrm2(centroids)))
-      .withColumn("d", sqDist)
-      .withColumn("rn", row_number().over(probeW))
-      .filter(col("rn") <= nprobe)
+        col("qv").as("sqv"), col("qnrm").as("snrm")),
+      CentroidModel.of(centroids), nprobe)
       .select(col("probe_vec"), col("sqv"), col("snrm"), col("c_id"))
     probes
       .join(graft.sources.Staged.liveTable(spark, tableName).filter(col("qnrm") > lit(0.0)),
@@ -413,16 +420,12 @@ object Knn {
     require(labeledSixteenths >= 1 && labeledSixteenths <= 15,
       s"labeledSixteenths must be in [1, 15], got $labeledSixteenths")
     require(tau > 0.0, s"bad tau=$tau")
-    val probeW = Window.partitionBy("probe_vec").orderBy(col("d"), col("c_id"))
-    val probes = quantize(queries.filter(!isLabeled(labeledSixteenths)))
+    val probes = probeLists(quantize(queries.filter(!isLabeled(labeledSixteenths)))
       .filter(col("qnrm") > lit(0.0))
       .select(col("vec_id").as("probe_vec"),
         col("label").as("true_label"), col("v"), col("nrm"),
-        col("qv").as("sqv"), col("qnrm").as("snrm"))
-      .crossJoin(broadcast(withCnrm2(centroids)))
-      .withColumn("d", sqDist)
-      .withColumn("rn", row_number().over(probeW))
-      .filter(col("rn") <= nprobe)
+        col("qv").as("sqv"), col("qnrm").as("snrm")),
+      CentroidModel.of(centroids), nprobe)
       .select(col("probe_vec"), col("true_label"), col("sqv"),
         col("snrm"), col("c_id"))
     val pairs = probes
@@ -579,16 +582,11 @@ object Knn {
   def tripletProbe(spark: SparkSession, tableName: String,
       centroids: DataFrame, labels: DataFrame, queries: DataFrame,
       marginE4: Long = 500L, nprobe: Int = 2): DataFrame = {
-    val probeW = Window.partitionBy("anchor_id")
-      .orderBy(col("d"), col("c_id"))
-    val probes = quantize(queries).filter(col("qnrm") > lit(0.0))
+    val probes = probeLists(quantize(queries).filter(col("qnrm") > lit(0.0))
       .select(col("vec_id").as("anchor_id"),
         col("label").as("anchor_label"), col("v"), col("nrm"),
-        col("qv").as("sqv"), col("qnrm").as("snrm"))
-      .crossJoin(broadcast(withCnrm2(centroids)))
-      .withColumn("d", sqDist)
-      .withColumn("rn", row_number().over(probeW))
-      .filter(col("rn") <= nprobe)
+        col("qv").as("sqv"), col("qnrm").as("snrm")),
+      CentroidModel.of(centroids), nprobe)
       .select(col("anchor_id"), col("anchor_label"), col("sqv"),
         col("snrm"), col("c_id"))
     val scored = probes
@@ -1243,79 +1241,83 @@ object Knn {
     ranked(scored, k)
   }
 
-  /** Squared L2 distance to a centroid via the dot-product identity
-    * ‖v−c‖² = ‖v‖² + ‖c‖² − 2·v·c — the per-pair work is ONE codegen'd
-    * DotProduct kernel call instead of a zip_with lambda that allocates
-    * an intermediate array per (vector, centroid) pair. Requires `nrm`
-    * (vector norm, precomputed once in [[emb]]) and `cnrm2` (centroid
-    * squared norm, computed once per round on the tiny centroid table). */
-  private def sqDist: Column =
-    col("nrm") * col("nrm") + col("cnrm2") -
-      lit(2.0) * DotProduct(col("v"), col("cv"))
+  /** Every row of `df` (carrying `v`, `nrm`) once per list of its
+    * `nprobe` nearest centroids, `c_id` appended — the probe list as one
+    * [[NearestCentroids]] kernel call and an explode: no cross join, no
+    * window over the candidates, no shuffle on the query key. */
+  private def probeLists(df: DataFrame, model: CentroidModel,
+      nprobe: Int): DataFrame =
+    df.withColumn("c_id",
+      explode(NearestCentroids(col("v"), col("nrm"), model, nprobe)))
 
-  private def withCnrm2(centroids: DataFrame): DataFrame =
-    centroids.withColumn("cnrm2", DotProduct(col("cv"), col("cv")))
+  /** Every row of `df` (carrying `v`, `nrm`) assigned to its nearest
+    * centroid, `c_id` appended — a per-row kernel, no Exchange. An empty
+    * model assigns nothing (the rows vanish, as against an empty
+    * centroid cross join). A duplicated `vec_id` keeps one assignment
+    * per input row. */
+  private[graft] def assignTo(df: DataFrame, model: CentroidModel): DataFrame =
+    if (model.isEmpty)
+      df.withColumn("c_id", lit(null).cast("long")).filter(lit(false))
+    else
+      df.withColumn("c_id",
+        NearestCentroids.nearest(col("v"), col("nrm"), model))
 
-  /** Nearest-centroid assignment as a map-side-combinable `min_by`
-    * aggregation on (distance, c_id) — NOT a `row_number` window, which
-    * would shuffle+sort #vectors × nlist rows on vec_id. The agg combines
-    * partially per partition, so only one (vec_id, best) row per vector
-    * crosses the wire. Carried columns are functionally dependent on
-    * vec_id, folded into the same min_by. */
-  private def assignNearest(scored: DataFrame, carry: Seq[String]): DataFrame = {
-    val key = struct(col("d"), col("c_id"))
-    scored.groupBy(col("vec_id"))
-      .agg(min_by(col("c_id"), key).as("c_id"),
-        carry.map(c => min_by(col(c), key).as(c)): _*)
+  /** A one-group model as the `(c_id, cv)` centroid frame — a local
+    * relation: reading it back runs no job. */
+  private def centroidFrame(spark: SparkSession,
+      model: CentroidModel): DataFrame = {
+    val g = model.table.groups(0)
+    val rows = g.ids.indices.map(i =>
+      Row(g.ids(i), Option(g.vecs(i)).map(_.toSeq).orNull))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("c_id", LongType, nullable = false),
+        StructField("cv", ArrayType(DoubleType)))))
   }
 
-  /** Deterministic mini k-means (Lloyd) entirely in DataFrame ops: seeds
-    * are the k vectors with smallest xxhash64(vec_id) (no driver-side
-    * randomness), then `iters` assign/recompute rounds. Centroid ids are
-    * the seed hashes themselves — distinct and orderable, assigned with
-    * no unpartitioned window. Each round is one broadcast cross-score +
-    * one min_by assignment + one posexplode mean — at scale this is the
-    * offline training pass an IVF index runs once. */
-  def kmeansCentroids(e: DataFrame, k: Int, iters: Int = 2): DataFrame = {
-    // eager localCheckpoint per round (the dedupClusters pattern): the
-    // centroid table is k tiny rows but its LINEAGE doubles through every
-    // assign/recompute round and is then re-planned by each downstream
-    // consumer (vector assignment, query probes) — checkpointing keeps
-    // cold planning/codegen time flat instead of growing with iters
+  /** Deterministic mini k-means (Lloyd): seeds are the k vectors with
+    * smallest xxhash64(vec_id) (no driver-side randomness), then `iters`
+    * assign/recompute rounds. Centroid ids are the seed hashes
+    * themselves — distinct and orderable. The centroid table is k rows:
+    * each round collects it, ships it once as a broadcast model, and
+    * runs ONE aggregation ([[lloydRound]]) — the assignment is the
+    * [[NearestCentroids]] kernel inside the grouping key and the mean
+    * the [[VectorMean]] aggregate, so a round plans exactly one
+    * Exchange. Clusters that lose every member vanish. The centroid
+    * update is a distributed sum, order-dependent across partitionings
+    * (KnnSpec pins it to the reference plan within 1e-9). Returns the
+    * trained table as a local `(c_id, cv)` frame. */
+  def kmeansCentroids(e: DataFrame, k: Int, iters: Int = 2): DataFrame =
+    centroidFrame(e.sparkSession, kmeansModel(e, k, iters))
+
+  private def kmeansModel(e: DataFrame, k: Int, iters: Int = 2): CentroidModel = {
     // (h, vec_id) tie-break for the same reason as the sampled training
     // draw: seed selection must stay deterministic even across a 64-bit
     // collision at the limit boundary (r17 ADVICE)
-    var centroids = e
+    var model = CentroidModel.of(e
       .withColumn("h", xxhash64(col("vec_id")))
       .orderBy(col("h"), col("vec_id")).limit(k)
-      .select(col("h").as("c_id"), col("v").as("cv"))
-    (1 to iters).foreach { _ =>
-      val scored = e.crossJoin(broadcast(withCnrm2(centroids)))
-        .withColumn("d", sqDist)
-      centroids = assignNearest(scored, Seq("v"))
-        .select(col("c_id"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("c_id", "pos").agg(avg(col("x")).as("cx"))
-        .groupBy("c_id")
-        .agg(array_sort(collect_list(struct(col("pos"), col("cx")))).as("ps"))
-        .select(col("c_id"), expr("transform(ps, p -> p.cx)").as("cv"))
-        .localCheckpoint(true)
-    }
-    centroids
+      .select(col("h").as("c_id"), col("v").as("cv")))
+    (1 to iters).foreach { _ => model = CentroidModel.of(lloydRound(e, model)) }
+    model
   }
+
+  /** One Lloyd round over `e` (v, nrm) against `model`: the new
+    * `(c_id, cv)` means of every non-empty cluster. */
+  private[graft] def lloydRound(e: DataFrame, model: CentroidModel): DataFrame =
+    e.groupBy(NearestCentroids.nearest(col("v"), col("nrm"), model).as("c_id"))
+      .agg(VectorMean(col("v")).as("cv"))
+      .filter(col("cv").isNotNull)
 
   /** Corpus clustering: assign every vector to its nearest trained
     * centroid and roll up per-cluster stats — the curation pass that
     * groups a corpus by embedding region (topic discovery, domain
-    * balancing). Same broadcast-score + min_by plan as the IVF build, so
-    * it scales identically. */
+    * balancing). Same kernel assignment as the IVF build, so it scales
+    * identically. */
   def clusterStats(e: DataFrame, k: Int = 8): DataFrame = {
     // same base materialization as [[ivf]]: k-means rounds + the final
     // assignment re-scan the source otherwise
     val base = e.localCheckpoint(true)
-    val centroids = kmeansCentroids(base, k)
-    assignNearest(
-      base.crossJoin(broadcast(withCnrm2(centroids))).withColumn("d", sqDist),
-      Seq("nrm"))
+    assignTo(base, kmeansModel(base, k))
       .groupBy(col("c_id"))
       .agg(
         count(lit(1)).as("n_vectors"),
@@ -1372,10 +1374,7 @@ object Knn {
           .orderBy(col("sh"), col("vec_id")).limit(s).drop("sh")
           .localCheckpoint(true)
       }
-    val centroids = kmeansCentroids(trainSet, k)
-    assignNearest(
-      base.crossJoin(broadcast(withCnrm2(centroids))).withColumn("d", sqDist),
-      Seq("v", "nrm"))
+    assignTo(base, kmeansModel(trainSet, k))
       .select(col("vec_id"), col("v"), col("nrm"), col("c_id"))
       .localCheckpoint(true)
   }
@@ -1505,7 +1504,8 @@ object Knn {
     // degenerate vectors never enter the index: they are unsearchable
     // under cosine (the finiteNorm rationale)
     val base = e.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
-    val centroids = kmeansCentroids(base, nlist)
+    val model = kmeansModel(base, nlist)
+    val centroids = centroidFrame(e.sparkSession, model)
     if (persistCentroids)
       graft.sources.Staged.commit(e.sparkSession,
           s"${tableName}_centroids", s"${path}_centroids") { (tbl, p) =>
@@ -1514,9 +1514,7 @@ object Knn {
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
           .saveAsTable(tbl)
       }
-    val assigned = assignNearest(
-      base.crossJoin(broadcast(withCnrm2(centroids))).withColumn("d", sqDist),
-      Seq("v", "nrm"))
+    val assigned = assignTo(base, model)
       .select(col("vec_id"), col("v"), col("nrm"), col("c_id"))
     // staged rebuild (Staged.commit): the live index serves while the
     // new generation builds; promote is a catalog rename
@@ -1548,10 +1546,8 @@ object Knn {
   def writeIvfIndexQuantized(e: DataFrame, tableName: String, path: String,
       nlist: Int = 10, buckets: Int = 8): DataFrame = {
     val base = quantize(e).localCheckpoint(true)
-    val centroids = kmeansCentroids(base, nlist)
-    val assigned = assignNearest(
-      base.crossJoin(broadcast(withCnrm2(centroids))).withColumn("d", sqDist),
-      Seq("qv", "qnrm"))
+    val model = kmeansModel(base, nlist)
+    val assigned = assignTo(base, model)
       .select(col("vec_id"), col("qv"), col("qnrm"), col("c_id"))
     // staged rebuild (Staged.commit): the live index serves while the
     // new generation builds; promote is a catalog rename
@@ -1566,7 +1562,7 @@ object Knn {
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
           .saveAsTable(tbl)
     }
-    centroids
+    centroidFrame(e.sparkSession, model)
   }
 
   /** Search a quantized persisted IVF index ([[writeIvfIndexQuantized]]):
@@ -1581,25 +1577,19 @@ object Knn {
       centroids: DataFrame, queries: DataFrame, k: Int,
       nprobe: Int = 2): DataFrame =
     ranked(ivfScoredQuantized(
-      ivfProbesQuantized(centroids, queries, nprobe),
+      ivfProbesQuantized(CentroidModel.of(centroids), queries, nprobe),
       graft.sources.Staged.liveTable(spark, tableName)), k)
 
   /** The quantized probe lists (query_id, qv, qnrm, c_id): centroid
     * ranking in FLOAT space (the build's own discipline), codes carried
     * for scoring — shared by [[searchIvfIndexQuantized]] and its delta
     * face. */
-  private def ivfProbesQuantized(centroids: DataFrame, queries: DataFrame,
-      nprobe: Int): DataFrame = {
-    val probeW = Window.partitionBy("query_id").orderBy(col("d"), col("c_id"))
-    quantize(queries).filter(col("qnrm") > lit(0.0))
+  private def ivfProbesQuantized(model: CentroidModel, queries: DataFrame,
+      nprobe: Int): DataFrame =
+    probeLists(quantize(queries).filter(col("qnrm") > lit(0.0))
       .select(col("vec_id").as("query_id"), col("v"), col("nrm"),
-        col("qv"), col("qnrm"))
-      .crossJoin(broadcast(withCnrm2(centroids)))
-      .withColumn("d", sqDist)
-      .withColumn("rn", row_number().over(probeW))
-      .filter(col("rn") <= nprobe)
+        col("qv"), col("qnrm")), model, nprobe)
       .select(col("query_id"), col("qv"), col("qnrm"), col("c_id"))
-  }
 
   /** Score quantized probe lists against one code-list frame (zero-norm
     * codes fenced on the index side), UNRANKED. */
@@ -1620,8 +1610,9 @@ object Knn {
   def searchIvfIndexQuantizedDelta(spark: SparkSession, tableName: String,
       centroids: DataFrame, queries: DataFrame, k: Int,
       nprobe: Int = 2): DataFrame = {
-    val index = requireCentroidAlignment(spark, tableName, centroids)
-    val probes = ivfProbesQuantized(centroids, queries, nprobe)
+    val model = CentroidModel.of(centroids)
+    val index = requireCentroidAlignment(spark, tableName, model)
+    val probes = ivfProbesQuantized(model, queries, nprobe)
       .localCheckpoint(true)
     val scored = ivfScoredQuantized(probes, index)
     ivfDelta(spark, tableName, Seq("qv", "qnrm")) match {
@@ -1642,25 +1633,27 @@ object Knn {
     * repo fences everywhere; an empty probe result is
     * indistinguishable from "no neighbors" without this check). The
     * fence: every inverted-list id in the index must exist in the
-    * centroid table — one left-anti existence count over the bucketed
-    * index scan, memoized per (index table, centroid-set digest) per
-    * JVM (the LshBuckets.corpusSize posture): a generation change
-    * flips the digest and re-pays one scan; steady-state probes pay a
-    * centroid-table collect (nlist rows) and nothing else. Any
-    * mid-swap state necessarily differs in c_id set from every
-    * verified state, so the memo cannot mask a mismatch. */
+    * centroid MODEL the probe's kernels read — one left-anti existence
+    * count over the bucketed index scan, memoized per (index table,
+    * centroid-set digest) per JVM (the LshBuckets.corpusSize posture):
+    * a generation change flips the digest and re-pays one scan;
+    * steady-state probes pay the one model collect (nlist rows) their
+    * kernels need anyway, and the fence checks those very ids — no
+    * second read of the centroid table that a promote could swap in
+    * between. Any mid-swap state necessarily differs in c_id set from
+    * every verified state, so the memo cannot mask a mismatch. */
   private val centroidAlignmentMemo =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   private[graft] def requireCentroidAlignment(spark: SparkSession,
-      tableName: String, centroids: DataFrame): DataFrame = {
+      tableName: String, model: CentroidModel): DataFrame = {
     // resolve the live index ONCE and return the resolved frame: the
     // caller probes the SAME resolution the fence verified, closing the
     // r17-ADVICE TOCTOU where a promote landing between the check and a
     // by-name re-resolution served a NEW index against already-collected
     // OLD centroids unverified for that micro-batch
     val index = graft.sources.Staged.liveTable(spark, tableName)
-    val cids = centroids.select(col("c_id")).collect().map(_.getLong(0))
+    val cids = model.ids
     require(cids.length <= 1000000,
       s"centroid table $tableName: ${cids.length} rows — not a " +
         "broadcastable centroid artifact")
@@ -1678,9 +1671,10 @@ object Knn {
       org.apache.commons.codec.digest.DigestUtils.md5Hex(
         cids.sorted.mkString(":"))
     if (!centroidAlignmentMemo.contains(key)) {
+      val known = spark.createDataFrame(cids.toSeq.map(Tuple1(_))).toDF("c_id")
       val orphans = index
         .select(col("c_id")).distinct()
-        .join(centroids.select(col("c_id")), Seq("c_id"), "left_anti")
+        .join(broadcast(known), Seq("c_id"), "left_anti")
         .count()
       require(orphans == 0L,
         s"IVF generation mismatch: $orphans inverted-list ids in " +
@@ -1693,8 +1687,8 @@ object Knn {
     index
   }
 
-  /** Search a persisted IVF index ([[writeIvfIndex]]): queries rank the
-    * centroid table for their `nprobe` nearest lists, then meet the
+  /** Search a persisted IVF index ([[writeIvfIndex]]): queries take the
+    * `nprobe` nearest lists from the centroid model, then meet the
     * bucketed index in a `c_id` equijoin — the index side arrives
     * pre-partitioned (zero Exchange, PlanSpec-asserted), so at 100 TB
     * the scan touches only the probed lists' buckets. */
@@ -1702,33 +1696,28 @@ object Knn {
       centroids: DataFrame, queries: DataFrame, k: Int,
       nprobe: Int = 2): DataFrame =
     searchIvfIndexOn(graft.sources.Staged.liveTable(spark, tableName),
-      centroids, queries, k, nprobe)
+      CentroidModel.of(centroids), queries, k, nprobe)
 
   /** [[searchIvfIndex]] over an ALREADY-RESOLVED index frame — the face
     * the alignment-fenced probes use so the fence and the probe read
     * the SAME generation (the frame [[requireCentroidAlignment]]
-    * returned), never a by-name re-resolution a concurrent promote
-    * could swap underneath (r17 ADVICE TOCTOU). */
+    * returned) against the model the fence checked, never a by-name
+    * re-resolution a concurrent promote could swap underneath (r17
+    * ADVICE TOCTOU). */
   def searchIvfIndexOn(index: DataFrame,
-      centroids: DataFrame, queries: DataFrame, k: Int,
+      model: CentroidModel, queries: DataFrame, k: Int,
       nprobe: Int = 2): DataFrame =
-    ranked(ivfScored(ivfProbes(centroids, queries, nprobe), index), k)
+    ranked(ivfScored(ivfProbes(model, queries, nprobe), index), k)
 
-  /** The per-query probe lists (query_id, v, nrm, c_id): rank the
-    * broadcast centroid table, keep the `nprobe` nearest — the ONE
-    * probe derivation shared by [[searchIvfIndexOn]] and the delta
-    * face (which scores the same probes against two frames). */
-  private def ivfProbes(centroids: DataFrame, queries: DataFrame,
-      nprobe: Int): DataFrame = {
-    val probeW = Window.partitionBy("query_id").orderBy(col("d"), col("c_id"))
-    queries.filter(finiteNorm(col("nrm")))
-      .select(col("vec_id").as("query_id"), col("v"), col("nrm"))
-      .crossJoin(broadcast(withCnrm2(centroids)))
-      .withColumn("d", sqDist)
-      .withColumn("rn", row_number().over(probeW))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("v"), col("nrm"), col("c_id"))
-  }
+  /** The per-query probe lists (query_id, v, nrm, c_id): the `nprobe`
+    * nearest centroids of the model — the ONE probe derivation shared
+    * by [[searchIvfIndexOn]] and the delta face (which scores the same
+    * probes against two frames). */
+  private def ivfProbes(model: CentroidModel, queries: DataFrame,
+      nprobe: Int): DataFrame =
+    probeLists(queries.filter(finiteNorm(col("nrm")))
+      .select(col("vec_id").as("query_id"), col("v"), col("nrm")),
+      model, nprobe)
 
   /** Score probe lists against one inverted-list frame — the c_id
     * equijoin + float cosine, UNRANKED (the delta face unions two
@@ -1865,11 +1854,10 @@ object Knn {
     require(spark.catalog.tableExists(tableName),
       s"appendIvfIndexDelta: no base index $tableName — build it with " +
         "writeIvfIndex first")
-    val index = requireCentroidAlignment(spark, tableName, centroids)
+    val model = CentroidModel.of(centroids)
+    val index = requireCentroidAlignment(spark, tableName, model)
     val base = eNew.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
-    val assigned = assignNearest(
-      base.crossJoin(broadcast(withCnrm2(centroids))).withColumn("d", sqDist),
-      Seq("v", "nrm"))
+    val assigned = assignTo(base, model)
       .select(col("vec_id"), col("v"), col("nrm"), col("c_id"))
     appendIvfDeltaRows(spark, index, assigned, tableName, path,
       Seq("v", "nrm"), buckets)
@@ -1887,11 +1875,10 @@ object Knn {
     require(spark.catalog.tableExists(tableName),
       s"appendIvfIndexQuantizedDelta: no base index $tableName — build " +
         "it with writeIvfIndexQuantized first")
-    val index = requireCentroidAlignment(spark, tableName, centroids)
+    val model = CentroidModel.of(centroids)
+    val index = requireCentroidAlignment(spark, tableName, model)
     val base = quantize(eNew).localCheckpoint(true)
-    val assigned = assignNearest(
-      base.crossJoin(broadcast(withCnrm2(centroids))).withColumn("d", sqDist),
-      Seq("qv", "qnrm"))
+    val assigned = assignTo(base, model)
       .select(col("vec_id"), col("qv"), col("qnrm"), col("c_id"))
     appendIvfDeltaRows(spark, index, assigned, tableName, path,
       Seq("qv", "qnrm"), buckets)
@@ -1910,8 +1897,9 @@ object Knn {
   def searchIvfIndexDelta(spark: SparkSession, tableName: String,
       centroids: DataFrame, queries: DataFrame, k: Int,
       nprobe: Int = 2): DataFrame = {
-    val index = requireCentroidAlignment(spark, tableName, centroids)
-    val probes = ivfProbes(centroids, queries, nprobe).localCheckpoint(true)
+    val model = CentroidModel.of(centroids)
+    val index = requireCentroidAlignment(spark, tableName, model)
+    val probes = ivfProbes(model, queries, nprobe).localCheckpoint(true)
     val scored = ivfScored(probes, index)
     ivfDelta(spark, tableName, Seq("v", "nrm")) match {
       case Some(dp) => ranked(scored.unionByName(ivfScored(probes, dp)), k)
@@ -2043,28 +2031,11 @@ object Knn {
     // source and re-derive norms — five scans collapse to one; the
     // finiteNorm fence keeps degenerate vectors out of the float path
     val base = e.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
-    val centroids = kmeansCentroids(base, nlist)
-    // assign every vector to its nearest centroid: broadcast centroids,
-    // min_by agg (partial combine) — no vec_id shuffle+sort
-    val assigned = assignNearest(
-      base.crossJoin(broadcast(withCnrm2(centroids))).withColumn("d", sqDist),
-      Seq("v", "nrm"))
+    val model = kmeansModel(base, nlist)
+    val assigned = assignTo(base, model)
       .select(col("vec_id"), col("v"), col("nrm"), col("c_id"))
-    val probeW = Window.partitionBy("query_id").orderBy(col("d"), col("c_id"))
-    val probes = base.filter(queryPred)
-      .select(col("vec_id").as("query_id"), col("v"), col("nrm"))
-      .crossJoin(broadcast(withCnrm2(centroids)))
-      .withColumn("d", sqDist)
-      .withColumn("rn", row_number().over(probeW))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("v"), col("nrm"), col("c_id"))
-    val scored = probes.as("q").join(assigned.as("c"),
-        col("q.c_id") === col("c.c_id") &&
-          col("query_id") =!= col("c.vec_id"))
-      .withColumn("score", cosine)
-      .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
-        col("score"))
-    ranked(scored, k)
+    ranked(ivfScored(ivfProbes(model, base.filter(queryPred), nprobe),
+      assigned), k)
   }
   // ── Product quantization (IVF-PQ — the NINTH persisted-index family) ──
   //
@@ -2099,7 +2070,7 @@ object Knn {
     * IEEE division per element (each element belongs to exactly one
     * slice), so scores are bit-unchanged. `nrm` is a real column of the
     * caller's materialized base, never a recomputed alias chain. */
-  private def pqSubvectors(e: DataFrame, m: Int): DataFrame =
+  private[graft] def pqSubvectors(e: DataFrame, m: Int): DataFrame =
     e.filter(finiteNorm(col("nrm")))
       .withColumn("dimguard",
         coalesce(assert_true(size(col("v")) % lit(m) === lit(0),
@@ -2114,107 +2085,99 @@ object Knn {
             s"size(v) div $m), x -> x / nrm))")).as(Seq("sub_id", "sv")))
       .withColumn("sv2", DotProduct(col("sv"), col("sv")))
 
-  private def pqSubDist: Column =
-    col("sv2") + col("cn2") - lit(2.0) * DotProduct(col("sv"), col("cv"))
-
   /** Train the m per-subspace codebooks as ONE grouped Lloyd loop: all
-    * m·ksub centroids update in the same distributed jobs, keyed by
+    * m·ksub centroids update in the same distributed job, keyed by
     * (sub_id, c_id) — m separate k-means runs would serialize m driver
     * loops for no reason. Seeds are the subvectors of the `ksub`
     * corpus vectors with smallest xxhash64(vec_id) (the kmeansCentroids
     * discipline: deterministic, no driver randomness, and the SAME seed
     * rows for every subspace so each subspace starts with exactly ksub
-    * centroids). Empty clusters KEEP their previous centroid
-    * (left-join + coalesce) instead of vanishing — every subspace holds
-    * exactly min(ksub, n) rows at all times, the uniform-layout
-    * invariant the flattened ADC LUT addressing depends on.
-    * Returns (sub_id, c_id, code_idx, cv, cn2) with code_idx a DENSE
-    * 0-based index per subspace (row_number over ≤ m·ksub rows).
+    * centroids). Each round ([[pqRound]]) is one aggregation over the
+    * subvectors: the [[NearestCentroids]] kernel assigns within the
+    * subspace's codebook group, [[VectorMean]] averages, and the means
+    * are collected and merged into the model on the driver. Empty
+    * clusters KEEP their previous centroid instead of vanishing — every
+    * subspace holds exactly min(ksub, n) rows at all times, the
+    * uniform-layout invariant the flattened ADC LUT addressing depends
+    * on. Returns (sub_id, c_id, cv, code_idx, cn2) with code_idx the
+    * DENSE 0-based position of c_id within its subspace.
     *
     * Determinism scope (r15 advice): the centroid update is a
-    * distributed avg(double), which is order-dependent across
-    * PARTITIONINGS — so codebooks (and thus codes, where an assignment
-    * is near-tied) are pinned deterministic for a fixed session/
-    * partitioning (what PqSpec rebuilds under), NOT bit-identical
-    * across arbitrary environments. That is the honest contract for a
-    * rows-only approximate family; cross-environment reproducibility
-    * of SERVED results comes from persisting the trained artifact
+    * distributed sum, which is order-dependent across PARTITIONINGS —
+    * so codebooks (and thus codes, where an assignment is near-tied)
+    * are pinned deterministic for a fixed session/partitioning (what
+    * PqSpec rebuilds under), NOT bit-identical across arbitrary
+    * environments. That is the honest contract for a rows-only
+    * approximate family; cross-environment reproducibility of SERVED
+    * results comes from persisting the trained artifact
     * ([[writeIvfPqIndex]]) and probing it, never from retraining. */
   def pqCodebook(base: DataFrame, m: Int = PqSubspaces,
       ksub: Int = PqCodesPerSub, iters: Int = 2): DataFrame =
-    pqCodebookFrom(pqSubvectors(base, m).localCheckpoint(true),
-      base, m, ksub, iters)
+    codebookFrame(base.sparkSession, pqCodebookModel(base, m, ksub, iters))
 
-  /** [[pqCodebook]] over an already-materialized subvector frame — the
-    * shared face (r21, guide §1.2 step 1): [[writeIvfPqIndex]]
-    * checkpoints ONE subvector derivation and feeds it to both the
-    * codebook trainer and the encoder, instead of the encoder
-    * re-deriving the per-vector normalized slices the trainer already
-    * checkpointed. `subvecs` must be exactly
-    * `pqSubvectors(base, m)` (or a materialization of it). */
-  private def pqCodebookFrom(subvecs: DataFrame, base: DataFrame,
-      m: Int, ksub: Int, iters: Int = 2): DataFrame = {
-    val seedIds = base.filter(finiteNorm(col("nrm")))
-      .withColumn("h", xxhash64(col("vec_id")))
-      .orderBy("h").limit(ksub).select(col("vec_id"), col("h"))
-    var centroids = subvecs.join(seedIds, Seq("vec_id"))
-      .select(col("sub_id"), col("h").as("c_id"), col("sv").as("cv"))
-      .localCheckpoint(true)
+  private def pqCodebookModel(base: DataFrame, m: Int, ksub: Int,
+      iters: Int = 2): CentroidModel = {
+    val spark = base.sparkSession
+    def vec(r: Row, i: Int) = r.getSeq[Double](i).toArray
+    val seeds = pqSubvectors(base.filter(finiteNorm(col("nrm")))
+        .withColumn("h", xxhash64(col("vec_id")))
+        .orderBy("h").limit(ksub), m)
+      .select(col("sub_id"), xxhash64(col("vec_id")).as("c_id"),
+        col("sv").as("cv"))
+      .collect().groupBy(_.getInt(0))
+    var model = CentroidModel(spark, Array.tabulate(m) { s =>
+      val g = seeds.getOrElse(s, Array.empty[Row]).sortBy(_.getLong(1))
+      new CentroidGroup(g.map(_.getLong(1)), g.map(vec(_, 2)))
+    })
+    val subvecs = pqSubvectors(base, m)
     (1 to iters).foreach { _ =>
-      val scored = subvecs.join(
-          broadcast(centroids.withColumn("cn2",
-            DotProduct(col("cv"), col("cv")))), Seq("sub_id"))
-        .withColumn("d", pqSubDist)
-      val assigned = scored.groupBy(col("vec_id"), col("sub_id"))
-        .agg(min_by(col("c_id"), struct(col("d"), col("c_id"))).as("c_id"),
-          min_by(col("sv"), struct(col("d"), col("c_id"))).as("sv"))
-      val means = assigned
-        .select(col("sub_id"), col("c_id"), posexplode(col("sv")).as(Seq("pos", "x")))
-        .groupBy(col("sub_id"), col("c_id"), col("pos"))
-        .agg(avg(col("x")).as("cx"))
-        .groupBy(col("sub_id"), col("c_id"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("cx")))).as("ps"))
-        .select(col("sub_id"), col("c_id"),
-          expr("transform(ps, p -> p.cx)").as("mv"))
-      centroids = centroids.join(means, Seq("sub_id", "c_id"), "left")
-        .select(col("sub_id"), col("c_id"),
-          coalesce(col("mv"), col("cv")).as("cv"))
-        .localCheckpoint(true)
+      val means = pqRound(subvecs, model).collect()
+        .map(r => (r.getInt(0), r.getLong(1)) -> vec(r, 2)).toMap
+      model = CentroidModel(spark, model.table.groups.zipWithIndex.map {
+        case (g, s) => new CentroidGroup(g.ids, g.ids.indices.map(i =>
+          means.getOrElse((s, g.ids(i)), g.vecs(i))).toArray)
+      })
     }
-    val idxW = Window.partitionBy("sub_id").orderBy("c_id")
-    centroids
-      .withColumn("code_idx", (row_number().over(idxW) - lit(1)))
-      .withColumn("cn2", DotProduct(col("cv"), col("cv")))
+    model
+  }
+
+  /** One codebook Lloyd round over the (vec_id, sub_id, sv, sv2)
+    * subvectors: the (sub_id, c_id, mv) means of every non-empty
+    * cluster. */
+  private[graft] def pqRound(subvecs: DataFrame,
+      model: CentroidModel): DataFrame =
+    subvecs.groupBy(col("sub_id"), NearestCentroids.inGroup(col("sv"),
+        col("sv2"), col("sub_id"), model).as("c_id"))
+      .agg(VectorMean(col("sv")).as("mv"))
+
+  /** A codebook model as the persisted (sub_id, c_id, cv, code_idx, cn2)
+    * frame — a local relation. */
+  private def codebookFrame(spark: SparkSession,
+      model: CentroidModel): DataFrame = {
+    val rows = model.table.groups.zipWithIndex.flatMap { case (g, s) =>
+      g.ids.indices.map(i =>
+        Row(s, g.ids(i), g.vecs(i).toSeq, i, g.n2(i)))
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows.toIndexedSeq: _*),
+      StructType(Seq(StructField("sub_id", IntegerType, nullable = false),
+        StructField("c_id", LongType, nullable = false),
+        StructField("cv", ArrayType(DoubleType)),
+        StructField("code_idx", IntegerType, nullable = false),
+        StructField("cn2", DoubleType, nullable = false))))
   }
 
   /** Encode every vector as its m-code array (dense code_idx per
-    * subspace, subspace order): one broadcast codebook join + one
-    * min_by assignment per (vec_id, sub_id) + one collect per vector.
+    * subspace, subspace order): one [[PqEncode]] kernel call per
+    * vector against the broadcast codebook — no join, no shuffle.
     * Codes are DETERMINISTIC given the codebook: distance ties break on
-    * c_id (the assignNearest posture), so rebuilds within one session/
-    * partitioning produce identical code arrays (spec-pinned; see
-    * [[pqCodebook]] for why the trainer itself is same-partitioning
-    * deterministic only). */
+    * c_id, so rebuilds within one session/partitioning produce
+    * identical code arrays (spec-pinned; see [[pqCodebook]] for why the
+    * trainer itself is same-partitioning deterministic only). */
   def pqEncode(base: DataFrame, codebook: DataFrame,
       m: Int = PqSubspaces): DataFrame =
-    pqEncodeFrom(pqSubvectors(base, m), codebook)
-
-  /** [[pqEncode]] over an already-derived subvector frame — see
-    * [[pqCodebookFrom]]. */
-  private def pqEncodeFrom(subvecs: DataFrame,
-      codebook: DataFrame): DataFrame =
-    subvecs
-      .join(broadcast(codebook), Seq("sub_id"))
-      .withColumn("d", pqSubDist)
-      .groupBy(col("vec_id"), col("sub_id"))
-      // given ONE codebook, encoding is fully deterministic (ties on
-      // c_id); see pqCodebook's determinism-scope note for the trainer
-      .agg(min_by(col("code_idx"), struct(col("d"), col("c_id"))).as("code_idx"))
-      .groupBy(col("vec_id"))
-      .agg(array_sort(collect_list(struct(col("sub_id"), col("code_idx"))))
-        .as("sc"))
-      .select(col("vec_id"),
-        expr("transform(sc, p -> p.code_idx)").as("codes"))
+    base.filter(finiteNorm(col("nrm")))
+      .select(col("vec_id"), PqEncode(col("v"), col("nrm"),
+        CentroidModel.codebook(codebook), m).as("codes"))
 
   /** Build + persist the IVF-PQ index: coarse IVF assignment in float
     * space (the writeIvfIndex discipline — build accuracy is a
@@ -2239,29 +2202,20 @@ object Knn {
       buckets: Int = 8): (DataFrame, DataFrame) = {
     val spark = e.sparkSession
     val base = e.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
-    val coarse = kmeansCentroids(base, nlist)
-    // ONE subvector derivation feeds the codebook trainer AND the
-    // encoder (r21 — pqEncode previously re-derived the normalized
-    // slices the trainer had already checkpointed: one full per-vector
-    // posexplode/normalize pass per build saved, values identical)
-    val subvecs = pqSubvectors(base, m).localCheckpoint(true)
-    val codebook = pqCodebookFrom(subvecs, base, m, ksub)
-      .localCheckpoint(true)
+    val coarse = kmeansModel(base, nlist)
+    val codebook = pqCodebookModel(base, m, ksub)
     graft.sources.Staged.commit(spark, s"${tableName}_coarse",
         s"${path}_coarse") { (tbl, p) =>
-      coarse.write.option("path", p)
+      centroidFrame(spark, coarse).write.option("path", p)
         .mode(org.apache.spark.sql.SaveMode.Overwrite).saveAsTable(tbl)
     }
     graft.sources.Staged.commit(spark, s"${tableName}_codebook",
         s"${path}_codebook") { (tbl, p) =>
-      codebook.write.option("path", p)
+      codebookFrame(spark, codebook).write.option("path", p)
         .mode(org.apache.spark.sql.SaveMode.Overwrite).saveAsTable(tbl)
     }
-    val assigned = assignNearest(
-      base.crossJoin(broadcast(withCnrm2(coarse))).withColumn("d", sqDist),
-      Seq.empty)
-      .select(col("vec_id"), col("c_id"))
-    val rows = assigned.join(pqEncodeFrom(subvecs, codebook), Seq("vec_id"))
+    val rows = assignTo(base, coarse).select(col("vec_id"), col("c_id"),
+      PqEncode(col("v"), col("nrm"), codebook, m).as("codes"))
     graft.sources.Staged.commit(spark, tableName, path) {
       (tbl, p) =>
         rows
@@ -2278,36 +2232,20 @@ object Knn {
   }
 
   /** Per-query flattened ADC lookup table: (query_id, lut) with
-    * lut[sub_id·ksub_eff + code_idx] = dot(query subvector, centroid) —
-    * the layout [[graft.functions.PqAdcScore]] reads. ksub_eff is the
-    * realized per-subspace codebook size (= min(ksub, corpus size);
-    * UNIFORM across subspaces by the pqCodebook empty-cluster-keep
-    * invariant), inferred by the kernel from lut length / m. Built by
-    * crossing the query subvectors with the broadcast codebook —
-    * |Q|·m·ksub rows, tiny for any probe set. */
+    * lut[sub_id·ksub + code_idx] = dot(query subvector, centroid) —
+    * the layout [[graft.functions.PqAdcScore]] reads (ksub = the
+    * realized per-subspace codebook size, UNIFORM across subspaces by
+    * the pqCodebook empty-cluster-keep invariant). One [[PqLut]] kernel
+    * call per query against the broadcast codebook. */
   def pqLut(queries: DataFrame, codebook: DataFrame,
-      m: Int = PqSubspaces): DataFrame = {
-    // ksub_eff per subspace for the flat key; uniform by construction —
-    // computed in-plan (max code_idx + 1) so no driver round-trip
-    val ksubEff = codebook.groupBy(col("sub_id"))
-      .agg((max(col("code_idx")) + lit(1)).as("ksub_eff"))
-    pqSubvectors(queries, m)
-      .withColumnRenamed("vec_id", "query_id")
-      .join(broadcast(codebook), Seq("sub_id"))
-      .join(broadcast(ksubEff), Seq("sub_id"))
-      .withColumn("k2",
-        col("sub_id").cast("long") * col("ksub_eff").cast("long") +
-          col("code_idx").cast("long"))
-      .withColumn("dotv", DotProduct(col("sv"), col("cv")))
-      .groupBy(col("query_id"))
-      .agg(array_sort(collect_list(struct(col("k2"), col("dotv")))).as("kv"))
-      .select(col("query_id"),
-        expr("transform(kv, p -> p.dotv)").as("lut"))
-  }
+      m: Int = PqSubspaces): DataFrame =
+    queries.filter(finiteNorm(col("nrm")))
+      .select(col("vec_id").as("query_id"), PqLut(col("v"), col("nrm"),
+        CentroidModel.codebook(codebook), m).as("lut"))
 
-  /** Search the persisted IVF-PQ index: queries rank the float coarse
-    * centroids for `nprobe` lists (broadcast — tiny), build their ADC
-    * LUTs against the broadcast codebook, then meet the bucketed code
+  /** Search the persisted IVF-PQ index: queries take their `nprobe`
+    * lists from the coarse model and their ADC LUTs from the codebook
+    * model (both kernels on the query row), then meet the bucketed code
     * lists in a c_id equijoin and score each candidate with ONE
     * [[graft.functions.PqAdcScore]] table-lookup pass — O(m) per pair
     * instead of O(dim), over an index dim/m× smaller than int8 codes.
@@ -2317,24 +2255,20 @@ object Knn {
   def searchIvfPq(spark: SparkSession, tableName: String,
       coarse: DataFrame, codebook: DataFrame, queries: DataFrame, k: Int,
       nprobe: Int = 2, m: Int = PqSubspaces): DataFrame =
-    ranked(pqScored(pqProbes(coarse, codebook, queries, nprobe, m),
+    ranked(pqScored(pqProbes(CentroidModel.of(coarse),
+      CentroidModel.codebook(codebook), queries, nprobe, m),
       graft.sources.Staged.liveTable(spark, tableName)), k)
 
-  /** The PQ probe lists (query_id, c_id, lut): coarse ranking in float
-    * space + the per-query flattened ADC LUT — shared by [[searchIvfPq]]
-    * and its delta face. */
-  private def pqProbes(coarse: DataFrame, codebook: DataFrame,
-      queries: DataFrame, nprobe: Int, m: Int): DataFrame = {
-    val q = queries.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
-    val probeW = Window.partitionBy("query_id").orderBy(col("d"), col("c_id"))
-    q.select(col("vec_id").as("query_id"), col("v"), col("nrm"))
-      .crossJoin(broadcast(withCnrm2(coarse)))
-      .withColumn("d", sqDist)
-      .withColumn("rn", row_number().over(probeW))
-      .filter(col("rn") <= nprobe)
-      .select(col("query_id"), col("c_id"))
-      .join(pqLut(q, codebook, m), Seq("query_id"))
-  }
+  /** The PQ probe lists (query_id, c_id, lut): the coarse probe list +
+    * the per-query flattened ADC LUT, both kernel calls on the query
+    * row — shared by [[searchIvfPq]] and its delta face. */
+  private def pqProbes(coarse: CentroidModel, codebook: CentroidModel,
+      queries: DataFrame, nprobe: Int, m: Int): DataFrame =
+    probeLists(queries.filter(finiteNorm(col("nrm")))
+      .select(col("vec_id").as("query_id"), col("v"), col("nrm")),
+      coarse, nprobe)
+      .select(col("query_id"), col("c_id"),
+        PqLut(col("v"), col("nrm"), codebook, m).as("lut"))
 
   /** Score PQ probe lists against one code-list frame with the O(m)
     * ADC kernel, UNRANKED. */
@@ -2375,21 +2309,23 @@ object Knn {
     require(spark.catalog.tableExists(tableName),
       s"appendIvfPqIndexDelta: no base index $tableName — build it " +
         "with writeIvfPqIndex first")
-    val coarse = graft.sources.Staged.liveTable(spark,
-      s"${tableName}_coarse")
-    val codebook = graft.sources.Staged.liveTable(spark,
-      s"${tableName}_codebook")
+    val (coarse, codebook) = pqModels(spark, tableName)
     val index = requireCentroidAlignment(spark, tableName, coarse)
     val base = eNew.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
-    val assigned = assignNearest(
-      base.crossJoin(broadcast(withCnrm2(coarse))).withColumn("d", sqDist),
-      Seq.empty)
-      .select(col("vec_id"), col("c_id"))
-    val rows = assigned.join(pqEncode(base, codebook, m), Seq("vec_id"))
-      .select(col("vec_id"), col("codes"), col("c_id"))
+    val rows = assignTo(base, coarse).select(col("vec_id"),
+      PqEncode(col("v"), col("nrm"), codebook, m).as("codes"), col("c_id"))
     appendIvfDeltaRows(spark, index, rows, tableName, path,
       Seq("codes"), buckets)
   }
+
+  /** The frozen (coarse, codebook) models of a persisted IVF-PQ index,
+    * read from its live side tables. */
+  private def pqModels(spark: SparkSession,
+      tableName: String): (CentroidModel, CentroidModel) =
+    (CentroidModel.of(graft.sources.Staged.liveTable(spark,
+        s"${tableName}_coarse")),
+      CentroidModel.codebook(graft.sources.Staged.liveTable(spark,
+        s"${tableName}_codebook")))
 
   /** [[searchIvfPq]] over base ∪ live delta — the [[searchIvfIndexDelta]]
     * shape for the PQ family: probe lists + LUTs computed once, each
@@ -2398,10 +2334,7 @@ object Knn {
   def searchIvfPqDelta(spark: SparkSession, tableName: String,
       queries: DataFrame, k: Int, nprobe: Int = 2,
       m: Int = PqSubspaces): DataFrame = {
-    val coarse = graft.sources.Staged.liveTable(spark,
-      s"${tableName}_coarse")
-    val codebook = graft.sources.Staged.liveTable(spark,
-      s"${tableName}_codebook")
+    val (coarse, codebook) = pqModels(spark, tableName)
     val index = requireCentroidAlignment(spark, tableName, coarse)
     val probes = pqProbes(coarse, codebook, queries, nprobe, m)
       .localCheckpoint(true)

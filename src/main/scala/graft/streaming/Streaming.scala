@@ -698,8 +698,10 @@ object Streaming {
         val q = graft.similarity.Knn.embOf(b.select(
           col("doc_id").as("vec_id"), lit(0).cast("int").as("label"),
           col("embedding")))
-        val centroids = graft.sources.Staged.liveTable(spark,
-          s"${ivfTable}_centroids")
+        // ONE collect of the centroid table: the model the probe's
+        // kernels read is the model the fence checks
+        val model = graft.functions.CentroidModel.of(
+          graft.sources.Staged.liveTable(spark, s"${ivfTable}_centroids"))
         // the two staged artifacts promote independently — verify the
         // index's c_id space IS the one this centroid generation
         // describes (memoized; a mid-swap probe would otherwise emit
@@ -709,9 +711,9 @@ object Streaming {
         // probe can no longer swap an unverified index in (r17 ADVICE
         // TOCTOU).
         val index = graft.similarity.Knn.requireCentroidAlignment(spark,
-          ivfTable, centroids)
+          ivfTable, model)
         val sem = graft.similarity.Knn.searchIvfIndexOn(index,
-            centroids, q, kSem, nprobe)
+            model, q, kSem, nprobe)
           .filter(col("score") >= tauSem)
           .select(col("query_id").as("doc_id"),
             col("neighbor_id").as("cand_id"), col("score"))

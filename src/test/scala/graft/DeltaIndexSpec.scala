@@ -496,6 +496,50 @@ class DeltaIndexSpec extends SparkSpec {
       a2.getAs[Long]("delta_share_milli") == 0L, a2.toString)
   }
 
+  test("fenced IVF probes and appends read each centroid table once: the fence checks the model the kernels read") {
+    import graft.similarity.Knn
+    def live(t: String) = graft.sources.Staged.liveTable(spark, t)
+    val q = emb.filter(col("vec_id") < 5)
+    // float family: centroids committed beside the index, read by name
+    val tf = "dlt_once_f"
+    val pf = freshDir("of")
+    dropAll(tf)
+    spark.sql(s"DROP TABLE IF EXISTS `${tf}_centroids`")
+    Knn.writeIvfIndex(embBase, tf, pf, nlist = 8, persistCentroids = true)
+    val cf = s"${tf}_centroids"
+    assert(TableScans.during(spark, cf) {
+      Knn.appendIvfIndexDelta(embDelta, tf, pf, live(cf)) } == Seq(1))
+    assert(TableScans.during(spark, cf) {
+      Knn.searchIvfIndexDelta(spark, tf, live(cf), q, k = 10).collect()
+    } == Seq(1))
+    // int8 family: its float centroid table persisted by the caller
+    val tq = "dlt_once_q"
+    val pq = freshDir("oq")
+    dropAll(tq)
+    spark.sql(s"DROP TABLE IF EXISTS `${tq}_cents`")
+    Knn.writeIvfIndexQuantized(embBase, tq, pq, nlist = 8)
+      .write.option("path", freshDir("oqc")).saveAsTable(s"${tq}_cents")
+    val cq = s"${tq}_cents"
+    assert(TableScans.during(spark, cq) {
+      Knn.appendIvfIndexQuantizedDelta(embDelta, tq, pq, spark.table(cq))
+    } == Seq(1))
+    assert(TableScans.during(spark, cq) {
+      Knn.searchIvfIndexQuantizedDelta(spark, tq, spark.table(cq), q,
+        k = 10).collect()
+    } == Seq(1))
+    // PQ family: both frozen side tables, resolved by name
+    val tp = "dlt_once_p"
+    val pp = freshDir("op")
+    Seq(tp, s"${tp}_coarse", s"${tp}_codebook", s"${tp}_delta")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    Knn.writeIvfPqIndex(embBase, tp, pp, nlist = 8)
+    val sides = Seq(s"${tp}_coarse", s"${tp}_codebook")
+    assert(TableScans.during(spark, sides: _*) {
+      Knn.appendIvfPqIndexDelta(embDelta, tp, pp) } == Seq(1, 1))
+    assert(TableScans.during(spark, sides: _*) {
+      Knn.searchIvfPqDelta(spark, tp, q, k = 10).collect() } == Seq(1, 1))
+  }
+
   test("IVF delta (quantized): repeat appends extend the generation; base ∪ delta at nprobe = nlist ≡ quantized brute; merge carries the code rows") {
     import graft.similarity.Knn
     val tbl = "dlt_ivf_q"

@@ -210,14 +210,16 @@ class HybridSpec extends SparkSpec {
       persistCentroids = true)
     // the committed pair verifies (and memoizes)
     Knn.requireCentroidAlignment(spark, "fence_ivf",
-      graft.sources.Staged.liveTable(spark, "fence_ivf_centroids"))
+      graft.functions.CentroidModel.of(
+        graft.sources.Staged.liveTable(spark, "fence_ivf_centroids")))
     // a centroid set from a DIFFERENT build (disjoint c_id space —
     // exactly what a probe sees mid-swap) must raise the NAMED error,
     // never serve a silently empty semantic member
     val alien = Seq((999999901L, Array(1.0, 0.0)),
       (999999902L, Array(0.0, 1.0))).toDF("c_id", "cv")
     val err = intercept[IllegalArgumentException] {
-      Knn.requireCentroidAlignment(spark, "fence_ivf", alien)
+      Knn.requireCentroidAlignment(spark, "fence_ivf",
+        graft.functions.CentroidModel.of(alien))
     }
     assert(err.getMessage.contains("generation mismatch"), err.getMessage)
   }
@@ -250,13 +252,20 @@ class HybridSpec extends SparkSpec {
     val stream = spark.readStream.schema(queries.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
     val buf = scala.collection.mutable.ArrayBuffer.empty[Seq[Any]]
-    val q = Streaming.runHybridSearchProbeIvf(spark, stream,
-        "hyb_vec2", "hyb_vec2_vocab", "hyb_ivf_live",
-        kSem = 500, nprobe = 4) { b =>
-      val rows = b.collect().map(_.toSeq)
-      buf.synchronized { buf ++= rows }
+    var batches = 0
+    // each micro-batch reads the centroid table ONCE: the alignment
+    // fence checks the model the probe's kernels read
+    val scans = TableScans.during(spark, "hyb_ivf_live_centroids") {
+      val q = Streaming.runHybridSearchProbeIvf(spark, stream,
+          "hyb_vec2", "hyb_vec2_vocab", "hyb_ivf_live",
+          kSem = 500, nprobe = 4) { b =>
+        val rows = b.collect().map(_.toSeq)
+        buf.synchronized { buf ++= rows; batches += 1 }
+      }
+      q.processAllAvailable(); q.stop()
     }
-    q.processAllAvailable(); q.stop()
+    assert(batches > 0 && scans == Seq(batches),
+      s"$batches micro-batches read the centroid table ${scans.head} times")
     val got = buf.toSet
     val want = Hybrid.hybridSearch(docs, e).collect().map(_.toSeq).toSet
     assert(want.nonEmpty && got == want,

@@ -864,4 +864,70 @@ class KnnSpec extends SparkSpec {
     val share = r.getAs[Double]("top_eig_share")
     assert(share > 0.99, s"anti-correlated rank-1 share $share")
   }
+
+  // ── centroid kernels ≡ the DataFrame reference (CentroidReference) ──
+
+  /** Kernel vs reference on one corpus and one centroid table:
+    * assignments and probe lists identical, one Lloyd round's means
+    * within 1e-9 over the same cluster set. */
+  private def assertCentroidKernelsMatch(base: org.apache.spark.sql.DataFrame,
+      centroids: org.apache.spark.sql.DataFrame, tag: String): Unit = {
+    import graft.functions.{CentroidModel, NearestCentroids}
+    val model = CentroidModel.of(centroids)
+    val k = model.ids.length
+    def byVec(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = byVec(CentroidReference.assign(base, centroids))
+    assert(want.nonEmpty, tag)
+    assert(byVec(Knn.assignTo(base, model).select("vec_id", "c_id")) == want,
+      s"$tag: kernel assignment differs from the min_by reference")
+    (1 to k).foreach { n =>
+      val wantLists = CentroidReference.probes(base, centroids, n).collect()
+        .groupBy(_.getLong(0)).map { case (id, rs) =>
+          id -> rs.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq }
+      val gotLists = base.select(col("vec_id"),
+          NearestCentroids(col("v"), col("nrm"), model, n)).collect()
+        .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      assert(gotLists == wantLists,
+        s"$tag: nprobe=$n kernel probe lists differ from the window reference")
+    }
+    def means(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val wantMeans = means(CentroidReference.lloydRound(base, centroids))
+    val gotMeans = means(Knn.lloydRound(base, model))
+    assert(gotMeans.keySet == wantMeans.keySet, s"$tag: Lloyd cluster sets differ")
+    wantMeans.foreach { case (c, w) =>
+      val g = gotMeans(c)
+      assert(g.length == w.length &&
+        g.zip(w).forall { case (a, b) => math.abs(a - b) <= 1e-9 },
+        s"$tag: Lloyd mean of $c: $g vs $w")
+    }
+  }
+
+  test("centroid kernels ≡ the DataFrame reference on sf0.001: assignment, probe lists, Lloyd round") {
+    val base = e.filter(Knn.finiteNorm(col("nrm"))).localCheckpoint(true)
+    // seeds + one kernel round: a trained (not seed-aligned) table
+    assertCentroidKernelsMatch(base, Knn.kmeansCentroids(base, 10, iters = 1),
+      "sf0.001")
+  }
+
+  test("centroid kernels ≡ the DataFrame reference on planted distance ties") {
+    import spark.implicits._
+    // unit centroids (‖c‖² = 1 exactly, so equal dots are equal
+    // distances), one DUPLICATED under two ids, over an integer grid:
+    // the origin ties with every centroid, axis points tie between the
+    // twins — only the c_id tie-break decides
+    val centroids = Seq((30L, Seq(1.0, 0.0)), (10L, Seq(-1.0, 0.0)),
+        (20L, Seq(0.0, 1.0)), (40L, Seq(1.0, 0.0)), (5L, Seq(0.0, -1.0)))
+      .toDF("c_id", "cv")
+    val grid = for (x <- -2 to 2; y <- -2 to 2)
+      yield ((x + 2) * 5L + (y + 2), 0, Seq(x.toDouble, y.toDouble))
+    val base = Knn.embOf(grid.toDF("vec_id", "label", "embedding"))
+      .localCheckpoint(true)
+    assertCentroidKernelsMatch(base, centroids, "planted ties")
+    // the origin sits at distance 1 from all five: the smallest id wins
+    val origin = Knn.assignTo(base.filter(col("vec_id") === 12L),
+      graft.functions.CentroidModel.of(centroids)).select("c_id").head.getLong(0)
+    assert(origin == 5L, s"origin assigned to $origin")
+  }
 }

@@ -92,14 +92,43 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("ivf centroid assignment is a min_by aggregation, not a row_number window") {
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    val assigned = graft.similarity.Knn.kmeansCentroids(
-      graft.similarity.Knn.emb(spark, SF), k = 4, iters = 1)
-    val wins = assigned.queryExecution.optimizedPlan
-      .collect { case w: LWindow => w }
-    assert(wins.isEmpty,
-      s"k-means round should be window-free, found: ${wins.mkString}")
+  test("ivf centroid kernels: one Exchange per Lloyd round, none to assign or encode") {
+    import graft.similarity.Knn
+    import graft.functions.CentroidModel
+    val exchanges = "\\bExchange\\b".r
+    val e = Knn.emb(spark, SF).filter(Knn.finiteNorm(col("nrm")))
+      .localCheckpoint(true)
+    val model = CentroidModel.of(Knn.kmeansCentroids(e, k = 4, iters = 1))
+    // a Lloyd round is ONE aggregation: the assignment kernel in the
+    // grouping key, the vector mean as the aggregate
+    val round = plan(Knn.lloydRound(e, model))
+    assert(exchanges.findAllIn(round).length == 1, round)
+    assert(!round.contains("Generate") && !round.contains("Window"), round)
+    val codebook = Knn.pqCodebook(e, iters = 1)
+    val pqRound = plan(Knn.pqRound(Knn.pqSubvectors(e, 8),
+      CentroidModel.codebook(codebook)))
+    assert(exchanges.findAllIn(pqRound).length == 1, pqRound)
+    // assignment and PQ encoding are per-row kernels: no Exchange
+    val assign = plan(Knn.assignTo(e, model))
+    assert(exchanges.findAllIn(assign).isEmpty, assign)
+    val enc = plan(Knn.pqEncode(e, codebook))
+    assert(exchanges.findAllIn(enc).isEmpty, enc)
+    // probe lists come from the kernel: no nested-loop join against the
+    // centroid table in any of the three probe plans
+    val dir = Files.createTempDirectory("graft_kernel_plan").toString
+    Seq("kp_ivf", "kp_ivfq", "kp_pq", "kp_pq_coarse", "kp_pq_codebook")
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    val q = e.filter(col("vec_id") < 5)
+    val c = Knn.writeIvfIndex(e, "kp_ivf", s"$dir/ivf", nlist = 4)
+    val cq = Knn.writeIvfIndexQuantized(e, "kp_ivfq", s"$dir/ivfq", nlist = 4)
+    val (co, cb) = Knn.writeIvfPqIndex(e, "kp_pq", s"$dir/pq", nlist = 4)
+    Seq(Knn.searchIvfIndex(spark, "kp_ivf", c, q, k = 5),
+        Knn.searchIvfIndexQuantized(spark, "kp_ivfq", cq, q, k = 5),
+        Knn.searchIvfPq(spark, "kp_pq", co, cb, q, k = 5)).foreach { df =>
+      val p = plan(df)
+      assert(!p.contains("BroadcastNestedLoopJoin") &&
+        !p.contains("CartesianProduct"), p)
+    }
   }
 
   test("co-bucketed segment join runs with no Exchange on either side") {

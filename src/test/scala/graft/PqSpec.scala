@@ -148,4 +148,36 @@ class PqSpec extends SparkSpec {
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
+
+  test("PQ kernels ≡ the join-based reference: codes, LUTs and a codebook round (sf0.001 and planted ties)") {
+    import graft.functions.CentroidModel
+    // planted: 20 byte-identical replicas per prototype, so seeds repeat
+    // prototype subvectors under distinct ids — exact distance ties
+    Seq("sf0.001" -> Knn.emb(spark, SF).localCheckpoint(true),
+        "planted" -> planted).foreach { case (tag, e) =>
+      val cb = Knn.pqCodebook(e, iters = 1).localCheckpoint(true)
+      val sub = Knn.pqSubvectors(e, 8).localCheckpoint(true)
+      def codes(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
+      val want = codes(CentroidReference.pqEncode(sub, cb))
+      assert(want.nonEmpty, tag)
+      assert(codes(Knn.pqEncode(e, cb)) == want,
+        s"$tag: kernel codes differ from the join reference")
+      def luts(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+      val q = col("vec_id") < 5
+      assert(luts(Knn.pqLut(e.filter(q), cb)) ==
+        luts(CentroidReference.pqLut(sub.filter(q), cb)),
+        s"$tag: kernel LUTs differ from the join reference")
+      def means(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getInt(0), r.getLong(1)) -> r.getSeq[Double](2)).toMap
+      val wantMeans = means(CentroidReference.pqRound(sub, cb))
+      val gotMeans = means(Knn.pqRound(sub, CentroidModel.codebook(cb)))
+      assert(gotMeans.keySet == wantMeans.keySet, s"$tag: round cluster sets differ")
+      wantMeans.foreach { case (c, w) =>
+        assert(gotMeans(c).zip(w).forall { case (a, b) => math.abs(a - b) <= 1e-9 },
+          s"$tag: codebook mean of $c: ${gotMeans(c)} vs $w")
+      }
+    }
+  }
 }
