@@ -64,12 +64,7 @@ object Bench {
     } catch { case _: Throwable => -1L }
 
   private def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     // absorb session/codegen startup so it isn't billed to the first query
     spark.range(1000000).selectExpr("sum(id)").collect()
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }

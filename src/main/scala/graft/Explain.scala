@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan/timing inspector: `runMain graft.Explain <query> [sfDir] [runs]`
   * prints the formatted physical plan and wall times (first run = cold,
   * rest = warm) for one SparkEntry query. */
@@ -11,13 +9,7 @@ object Explain {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     // comma-separated names share one session (plan-capture batching)
     name.split(",").map(_.trim).filter(_.nonEmpty).foreach { q =>
       val fn = SparkEntry.queries(q)

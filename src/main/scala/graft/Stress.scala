@@ -69,12 +69,7 @@ object Stress {
       Queries.filter(want)
     } else Queries
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     def fmt(v: Double): String = f"$v%.3f"

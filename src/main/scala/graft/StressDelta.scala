@@ -49,12 +49,7 @@ object StressDelta {
     val batches = if (args.length > 1) args(1).toInt else 4
     require(batches >= 1 && batches <= 16, s"bad batches=$batches")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     def fmt(v: Double): String = f"$v%.3f"
@@ -249,12 +244,10 @@ object StressDelta {
             emb.filter(col("vec_id") < 5), k = 10), "score")
       }
       audit(s"pq_audit_$i",
-        graft.similarity.Knn.ivfDeltaAudit(spark, pTbl,
-          carry = Seq("codes")))
+        graft.similarity.Knn.ivfDeltaAudit(spark, pTbl))
     }
     step("pq_merge") {
-      graft.similarity.Knn.mergeIvfIndex(spark, pTbl, s"$wh/pq",
-        carry = Seq("codes"))
+      graft.similarity.Knn.mergeIvfIndex(spark, pTbl, s"$wh/pq")
     }
     step("pq_probe_merged") {
       digest("pq_probe_merged",
@@ -262,8 +255,7 @@ object StressDelta {
           emb.filter(col("vec_id") < 5), k = 10), "score")
     }
     audit("pq_audit_merged",
-      graft.similarity.Knn.ivfDeltaAudit(spark, pTbl,
-        carry = Seq("codes")))
+      graft.similarity.Knn.ivfDeltaAudit(spark, pTbl))
 
     val line = "{" +
       s""""stress_delta":true,"sf":"$sfDir","cpus":$cpus,""" +

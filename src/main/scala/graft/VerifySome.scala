@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev tool: graft.Verify restricted to a comma-separated query subset —
@@ -14,13 +13,7 @@ object VerifySome {
     val unknown = wanted -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => wanted(kv._1)).foreach {
       case (name, fn) =>

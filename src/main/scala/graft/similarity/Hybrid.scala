@@ -35,8 +35,9 @@ import graft.functions.DotProduct
   * pair join, brute slice×corpus kernel scan) and the 100 TB pair
   * sources swap in WITHOUT touching the fusion: docSimilarPrefix for
   * the lexical member (spec-proven row-identical) and the persisted
-  * IVF probe ([[Knn.probeScoredBy]]) for the semantic member — the
-  * dedup_clusters_lsh pair-source-swap argument. The streaming face
+  * IVF probe ([[Knn.searchIvfIndex]], as [[hybridSearchIvf]] runs it)
+  * for the semantic member — the dedup_clusters_lsh pair-source-swap
+  * argument. The streaming face
   * ([[graft.streaming.Streaming.runHybridSearchProbe]]) probes the
   * persisted doc-vector index + the frozen embedding table per
   * micro-batch and reuses [[fuse]] verbatim.

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 import graft.functions.{CentroidGroup, CentroidModel, DotProduct, NearestCentroids, PqEncode, PqLut, VectorMean}
+import graft.sources.Staged
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (SURVEY §2-F).
@@ -23,7 +24,11 @@ import graft.functions.{CentroidGroup, CentroidModel, DotProduct, NearestCentroi
   * assignment (n = 1) and probe lists (n = nprobe), [[PqEncode]] and
   * [[PqLut]] for PQ codes and lookup tables, [[VectorMean]] for a Lloyd
   * round's means. A Lloyd round is one aggregation (one Exchange);
-  * assignment, encoding and probe lists shuffle nothing. */
+  * assignment, encoding and probe lists shuffle nothing. Above the
+  * centroids the three layouts are ONE path — build, probe lists,
+  * score, delta append, delta search, merge — over an [[IvfCodec]]
+  * that supplies only what a codec changes: the stored payload, the
+  * probe-side payload, an index-side filter and the score. */
 object Knn {
 
   def emb(spark: SparkSession, dir: String): DataFrame =
@@ -96,17 +101,18 @@ object Knn {
   }
 
   /** Exact top-k cosine neighbors for each query vector. */
-  def brute(e: DataFrame, queryPred: Column, k: Int): DataFrame = {
-    val fe = e.filter(finiteNorm(col("nrm")))
-    val q = fe.filter(queryPred).select(col("vec_id").as("query_id"),
-      col("v"), col("nrm"))
-    val scored = q.as("q").join(fe.as("c"),
-        col("query_id") =!= col("c.vec_id"))
-      .withColumn("score", cosine)
+  def brute(e: DataFrame, queryPred: Column, k: Int): DataFrame =
+    exhaustive(FloatCodec, e.filter(finiteNorm(col("nrm"))), queryPred, k)
+
+  /** Exact top-k over a prepared `corpus`: the `queryPred` rows against
+    * every other row, scored by `codec` with no list pruning. */
+  private def exhaustive(codec: IvfCodec, corpus: DataFrame,
+      queryPred: Column, k: Int): DataFrame =
+    ranked(corpus.filter(queryPred).withColumnRenamed("vec_id", "query_id")
+      .as("q").join(corpus.as("c"), col("query_id") =!= col("c.vec_id"))
+      .withColumn("score", codec.score)
       .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
-        col("score"))
-    ranked(scored, k)
-  }
+        col("score")), k)
 
   /** Int8 scalar quantization of the corpus: per-vector symmetric scale
     * (q_i = floor(v_i · 127 / max|v_j| + 0.5), zero vectors → all-zero
@@ -129,186 +135,131 @@ object Knn {
     * integers), +,×,÷,floor are IEEE-identical, so score AND rank order
     * reproduce bit-exactly — the property that puts the int8 kernel
     * under the hash gate. */
-  private def quantizedScore: Column =
-    floor(graft.functions.ByteDot(col("q.qv"), col("c.qv")).cast("double")
-        * lit(10000.0) / (col("q.qnrm") * col("c.qnrm")) + lit(0.5))
-      .cast("double") / lit(10000.0)
+  private def quantizedScore(a: Column, b: Column, na: Column,
+      nb: Column): Column =
+    quantizedE4(a, b, na, nb).cast("double") / lit(10000.0)
+
+  /** [[quantizedScore]] before its one division: the exact BIGINT
+    * floor(dot · 10⁴ / (|a|·|b|) + 0.5) the triplet rollups rank on. */
+  private def quantizedE4(a: Column, b: Column, na: Column,
+      nb: Column): Column =
+    floor(graft.functions.ByteDot(a, b).cast("double") * lit(10000.0) /
+      (na * nb) + lit(0.5))
 
   /** Exact top-k search IN THE QUANTIZED SPACE: integer [[ByteDot]]
-    * accumulation (bit-deterministic — no FP summation-order hazard),
-    * cosine of the int8 codes. Approximate w.r.t. the float cosine only
-    * through the quantization itself; KnnSpec bounds recall@k against
-    * [[brute]], and since r12 the whole chain (codes, integer dot,
-    * [[quantizedScore]], rank) is oracle-EXACT: DuckDB list arithmetic
-    * reproduces every row (dots of ≤127² ints are exact in doubles, and
-    * no float round() appears anywhere). Same broadcast-queries shape
-    * as brute — at scale the win is the 8× smaller corpus side staying
-    * cache-resident. */
-  def bruteQuantized(e: DataFrame, queryPred: Column, k: Int): DataFrame = {
-    // zero vectors quantize to all-zero codes with qnrm = 0; their
-    // cosine is undefined (0/0 → NaN, which sorts ABOVE every real
-    // score in a descending order) — exclude them from both sides, the
-    // dual of quantize's explicit zero-vector handling
-    val qe = quantize(e).select(col("vec_id"), col("qv"), col("qnrm"))
-      .filter(col("qnrm") > lit(0.0))
-    val q = qe.filter(queryPred).select(col("vec_id").as("query_id"),
-      col("qv"), col("qnrm"))
-    val scored = q.as("q").join(qe.as("c"),
-        col("query_id") =!= col("c.vec_id"))
-      .withColumn("score", quantizedScore)
-      .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
-        col("score"))
-    ranked(scored, k)
-  }
+    * accumulation (bit-deterministic), cosine of the int8 codes —
+    * approximate w.r.t. the float cosine only through the quantization
+    * (KnnSpec bounds recall@k against [[brute]]), and oracle-EXACT: dots
+    * of ≤127² ints are exact in doubles and no float round() appears
+    * anywhere. The brute face of [[Int8Codec]]'s score. */
+  def bruteQuantized(e: DataFrame, queryPred: Column, k: Int): DataFrame =
+    // zero-norm codes have no cosine (0/0 sorts ABOVE every real score)
+    exhaustive(Int8Codec, quantize(e).filter(col("qnrm") > lit(0.0)),
+      queryPred, k)
 
   /** Cross-split SEMANTIC contamination check — the embedding dual of
     * the text `contamination_*` rows: flag (train, test) example pairs
     * whose quantized cosine reaches `tau`, catching the paraphrased /
     * re-rendered near-duplicates that digest- and substring-based
     * decontamination can never see (the eval-hygiene gap SemDeDup-style
-    * pipelines close). Split membership is the split_assign rule
-    * verbatim (md5 nibble of the id — a pure row function both engines
-    * compute identically), scoring is the knn_quantized integer chain
-    * (floor-half-up codes, exact integer ByteDot, one floor-half-up
-    * double expression), zero-norm codes excluded on both sides — so
-    * the whole operator sits under the hash gate. The pair join is the
-    * sanctioned brute baseline: test side broadcast (the minority
-    * split), train side streamed — the dedup_embedding posture. The
-    * 100 TB path is IMPLEMENTED as [[contaminationSemanticIvf]] (r13):
-    * the same scoring chain over IVF-probe candidates from the
-    * persisted quantized index — this brute form survives as its
-    * oracle baseline, exactly like knn_brute under knn_ivf. */
+    * pipelines close). Split membership is [[isTrain]], scoring the
+    * knn_quantized integer chain ([[quantizedScore]]), zero-norm codes
+    * excluded on both sides — so the whole operator sits under the hash
+    * gate. The pair join is the sanctioned brute baseline: test side
+    * broadcast (the minority split), train side streamed. The 100 TB
+    * path is [[contaminationSemanticIvf]]; this brute form survives as
+    * its oracle baseline, exactly like knn_brute under knn_ivf. */
   def contaminationSemantic(e: DataFrame, trainSixteenths: Int = 13,
       tau: Double = 0.45): DataFrame = {
+    require(tau > 0.0, s"bad tau=$tau")
+    quantizedPairs(e, isTrain(trainSixteenths), tau)
+      .select(col("r.vec_id").as("test_vec"), col("l.vec_id").as("train_vec"),
+        col("score"))
+  }
+
+  /** The brute int8 pair join: every positive-norm `isLeft` row `l`
+    * against every other row `r` (broadcast — the minority side), kept
+    * where [[quantizedScore]] ≥ tau. The codes feed both sides — encoded
+    * once, never per side. */
+  private def quantizedPairs(e: DataFrame, isLeft: Column,
+      tau: Double): DataFrame = {
+    val q = quantize(e).filter(col("qnrm") > lit(0.0))
+      .select(col("vec_id"), col("label"), isLeft.as("left"), col("qv"),
+        col("qnrm"))
+      .localCheckpoint(true)
+    q.filter(col("left")).as("l")
+      .crossJoin(broadcast(q.filter(!col("left")).as("r")))
+      .withColumn("score", quantizedScore(col("l.qv"), col("r.qv"),
+        col("l.qnrm"), col("r.qnrm")))
+      .filter(col("score") >= tau)
+  }
+
+  /** The split_assign rule (md5 nibble of the id — a pure row function
+    * both engines compute identically): true on the train split. */
+  private def isTrain(trainSixteenths: Int): Column = {
     require(trainSixteenths >= 1 && trainSixteenths <= 15,
       s"trainSixteenths must be in [1, 15], got $trainSixteenths")
-    require(tau > 0.0, s"bad tau=$tau")
-    val boundary = trainSixteenths.toHexString
-    // feeds both split slices — encode once, never per side
-    val q = quantize(e).filter(col("qnrm") > lit(0.0))
-      .withColumn("split",
-        when(substring(md5(col("vec_id").cast("string")), 1, 1) < boundary,
-          "train").otherwise("test"))
-      .select(col("vec_id"), col("split"), col("qv"), col("qnrm"))
-      .localCheckpoint(true)
-    val train = q.filter(col("split") === "train")
-      .select(col("vec_id").as("train_vec"), col("qv").as("tqv"),
-        col("qnrm").as("tnrm"))
-    val test = q.filter(col("split") === "test")
-      .select(col("vec_id").as("test_vec"), col("qv").as("sqv"),
-        col("qnrm").as("snrm"))
-    train.crossJoin(broadcast(test))
-      .withColumn("score",
-        floor(graft.functions.ByteDot(col("tqv"), col("sqv")).cast("double")
-            * lit(10000.0) / (col("tnrm") * col("snrm")) + lit(0.5))
-          .cast("double") / lit(10000.0))
-      .filter(col("score") >= tau)
-      .select("test_vec", "train_vec", "score")
+    substring(md5(col("vec_id").cast("string")), 1, 1) <
+      trainSixteenths.toHexString
   }
 
   /** Cross-split semantic contamination over the PERSISTED quantized IVF
-    * index — the 100 TB path that [[contaminationSemantic]]'s docstring
-    * promises: instead of broadcasting the whole test split into a cross
-    * join (which stops planning long before 100 TB — the test split is
-    * 3/16 of the corpus by construction), the TRAIN split is written as
-    * the [[writeIvfIndexQuantized]] bucketed code index and the test
-    * split PROBES it: each test vector ranks the tiny float centroid
-    * table for its `nprobe` nearest lists, meets the bucketed lists in a
-    * `c_id` equijoin (index side pre-partitioned — zero index-side
-    * Exchange, the KnnSpec-asserted layout), and is scored with the
-    * IDENTICAL integer chain (floor-half-up codes, exact integer
-    * [[graft.functions.ByteDot]], one floor-half-up double expression).
+    * index — the 100 TB path: instead of broadcasting the whole test
+    * split into a cross join (3/16 of the corpus by construction), the
+    * TRAIN split is written as the int8 index and the test split PROBES
+    * it ([[probeScoredBy]]), scored with the IDENTICAL integer chain.
     * Every emitted pair is therefore a subset of the brute operator's
     * pairs with BIT-IDENTICAL scores (KnnSpec asserts both); recall is
-    * probe-dependent (a τ-near-duplicate assigned to a list the probe
-    * skips is missed — nprobe tunes that trade), which is why this
+    * probe-dependent (nprobe tunes that trade), which is why this
     * registers rows-only while the brute baseline keeps the oracle.
     * Split discipline holds BY CONSTRUCTION: only train rows enter the
-    * index, only test rows probe. Per-probe cost is nprobe·|list| —
-    * corpus-linear build, candidate-linear search, no cross product
-    * anywhere (PlanSpec-fenced). */
+    * index, only test rows probe. */
   def contaminationSemanticIvf(spark: SparkSession, e: DataFrame,
       tableName: String, path: String, trainSixteenths: Int = 13,
       tau: Double = 0.45, nlist: Int = 10, buckets: Int = 8,
       nprobe: Int = 2): DataFrame = {
     require(tau > 0.0, s"bad tau=$tau")
-    contaminationProbeScored(spark, e, tableName, path, trainSixteenths,
-      nlist, buckets, nprobe)
+    probeScoredBy(spark, e, tableName, path, isTrain(trainSixteenths),
+        nlist, buckets, nprobe)
       .filter(col("score") >= tau)
-      .select(col("test_vec"), col("vec_id").as("train_vec"), col("score"))
+      .select(col("probe_vec").as("test_vec"), col("vec_id").as("train_vec"),
+        col("score"))
   }
 
-  /** Shared by [[contaminationSemanticIvf]] and its audit: build the
-    * quantized train-split index, probe with the test split, score every
-    * probe candidate — UNFILTERED (test_vec, vec_id, score) rows. */
-  private def contaminationProbeScored(spark: SparkSession, e: DataFrame,
-      tableName: String, path: String, trainSixteenths: Int,
-      nlist: Int, buckets: Int, nprobe: Int): DataFrame = {
-    require(trainSixteenths >= 1 && trainSixteenths <= 15,
-      s"trainSixteenths must be in [1, 15], got $trainSixteenths")
-    val boundary = trainSixteenths.toHexString
-    // the split_assign md5-nibble rule, verbatim from the brute operator
-    val isTrain =
-      substring(md5(col("vec_id").cast("string")), 1, 1) < boundary
-    probeScoredBy(spark, e, tableName, path, isTrain, nlist, buckets,
-      nprobe).withColumnRenamed("probe_vec", "test_vec")
-  }
-
-  /** The generic persisted-quantized-IVF probe: rows selected by
-    * `isIndexed` are written as the bucketed code index, the complement
-    * probes its `nprobe` nearest lists (float centroid ranking on the
-    * tiny broadcast centroid table), and every candidate is scored with
-    * the knn_quantized integer chain — UNFILTERED (probe_vec, vec_id,
-    * score) rows, where vec_id is the indexed side. One definition under
-    * [[contaminationSemanticIvf]] (isIndexed = the split rule) and
-    * [[labelPropagationIvf]] (isIndexed = the labeled-slice rule), so
-    * the plan fences (bucketed scan, zero index-side Exchange, one
-    * probe-side c_id Exchange, no cartesian) are proven once. */
+  /** The persisted-quantized-IVF probe of [[contaminationSemanticIvf]]
+    * and its audit: rows selected by `isIndexed` are written as the int8
+    * index ([[Int8Codec]]), the complement probes it — UNFILTERED
+    * (probe_vec, vec_id, score) rows, vec_id on the indexed side. */
   private def probeScoredBy(spark: SparkSession, e: DataFrame,
       tableName: String, path: String, isIndexed: Column,
       nlist: Int, buckets: Int, nprobe: Int): DataFrame = {
     spark.sql(s"DROP TABLE IF EXISTS $tableName")
-    val centroids = writeIvfIndexQuantized(e.filter(isIndexed), tableName,
-      path, nlist, buckets)
-    val probes = probeLists(quantize(e.filter(!isIndexed))
-      .filter(col("qnrm") > lit(0.0))
-      .select(col("vec_id").as("probe_vec"), col("v"), col("nrm"),
-        col("qv").as("sqv"), col("qnrm").as("snrm")),
-      CentroidModel.of(centroids), nprobe)
-      .select(col("probe_vec"), col("sqv"), col("snrm"), col("c_id"))
-    probes
-      .join(graft.sources.Staged.liveTable(spark, tableName).filter(col("qnrm") > lit(0.0)),
-        Seq("c_id"))
-      .withColumn("score",
-        floor(graft.functions.ByteDot(col("qv"), col("sqv")).cast("double")
-            * lit(10000.0) / (col("qnrm") * col("snrm")) + lit(0.5))
-          .cast("double") / lit(10000.0))
+    val coarse = buildIvf(e.filter(isIndexed), tableName, path, nlist,
+      buckets)((_, _) => Int8Codec)
+    Int8Codec.scored(Int8Codec.probes(e.filter(!isIndexed), coarse, nprobe),
+        Staged.liveTable(spark, tableName))
+      .select(col("query_id").as("probe_vec"),
+        col("neighbor_id").as("vec_id"), col("score"))
   }
 
   /** Probe-coverage accounting for [[contaminationSemanticIvf]] (the
-    * lsh_bucket_audit discipline — every candidate-pruning operator
-    * carries an audit row): one row — train rows indexed, test rows
-    * probing, candidate pairs actually scored through the probe
-    * equijoin, and pairs at or above `tau`. The pruning factor
-    * n_candidates / (n_train · n_test) is what replaces the brute cross
-    * product; at fixed nprobe/nlist it stays ≈ nprobe/nlist of the
-    * brute pair count INDEPENDENT of corpus size, which is the number a
-    * pipeline watches when tuning probe width against missed-
-    * contamination risk. */
+    * lsh_bucket_audit discipline): train rows indexed, test rows
+    * probing, candidate pairs scored through the probe equijoin, and
+    * pairs at or above `tau`. n_candidates / (n_train · n_test) is the
+    * pruning factor that replaces the brute cross product — ≈
+    * nprobe/nlist at any corpus size, the number a pipeline watches when
+    * tuning probe width against missed-contamination risk. */
   def contaminationSemanticIvfAudit(spark: SparkSession, e: DataFrame,
       tableName: String, path: String, trainSixteenths: Int = 13,
       tau: Double = 0.45, nlist: Int = 10, buckets: Int = 8,
       nprobe: Int = 2): DataFrame = {
     require(tau > 0.0, s"bad tau=$tau")
-    val scored = contaminationProbeScored(spark, e, tableName, path,
-      trainSixteenths, nlist, buckets, nprobe)
-    val boundary = trainSixteenths.toHexString
-    val isTrain =
-      substring(md5(col("vec_id").cast("string")), 1, 1) < boundary
-    val q = quantize(e).filter(col("qnrm") > lit(0.0))
-    val sizes = q.agg(
-      sum(when(isTrain, 1L).otherwise(0L)).as("n_train"),
-      sum(when(isTrain, 0L).otherwise(1L)).as("n_test"))
+    val train = isTrain(trainSixteenths)
+    val scored = probeScoredBy(spark, e, tableName, path, train, nlist,
+      buckets, nprobe)
+    val sizes = quantize(e).filter(col("qnrm") > lit(0.0)).agg(
+      sum(when(train, 1L).otherwise(0L)).as("n_train"),
+      sum(when(train, 0L).otherwise(1L)).as("n_test"))
     val stats = scored.agg(
       count(lit(1)).as("n_candidates"),
       sum(when(col("score") >= tau, 1L).otherwise(0L)).as("n_flagged"))
@@ -319,22 +270,16 @@ object Knn {
   }
 
   /** Semi-supervised LABEL PROPAGATION over the quantized embedding
-    * space — the cheap labeling pass a training pipeline runs when only
-    * a slice of the corpus carries curated labels (domain tags, quality
-    * grades, license classes): every UNLABELED vector adopts the
-    * majority label among its τ-near LABELED neighbors. The labeled
-    * slice is a pure md5-nibble row function of vec_id (salted ':lbl'
-    * so it draws independently of the split_assign rule), scoring is
-    * the knn_quantized integer chain, votes are exact integer counts,
-    * and the winner is decided on (count desc, label asc) — a total
-    * order over integers, so the prediction cannot drift between
-    * engines or partitionings and the whole operator sits under the
-    * hash gate. Vectors with no τ-neighbor get no row (integer
-    * membership — the "abstain" a real pipeline routes to manual
-    * labeling). Pair join = the sanctioned brute baseline (unlabeled
+    * space — the cheap labeling pass a pipeline runs when only a slice
+    * of the corpus carries curated labels: every UNLABELED vector adopts
+    * the majority label among its τ-near LABELED neighbors. The labeled
+    * slice is [[isLabeled]], scoring the knn_quantized integer chain,
+    * votes exact integer counts, the winner decided on (count desc,
+    * label asc) — a total integer order, so the operator sits under the
+    * hash gate. Vectors with no τ-neighbor get no row (the "abstain" a
+    * pipeline routes to manual labeling). Brute pair join (unlabeled
     * minority broadcast); the 100 TB swap is [[labelPropagationIvf]].
-    * Label domain must stay within Int (the -label tie-break negation);
-    * votes never overflow (≤ corpus cardinality). */
+    * Label domain must stay within Int (the -label tie-break negation). */
   def labelPropagation(e: DataFrame, labeledSixteenths: Int = 12,
       tau: Double = 0.3): DataFrame =
     voteRollup(labelPropPairs(e, labeledSixteenths, tau))
@@ -343,28 +288,17 @@ object Knn {
     * brute and IVF formulations so the rollup is one definition. */
   private[graft] def labelPropPairs(e: DataFrame, labeledSixteenths: Int,
       tau: Double): DataFrame = {
+    labelPropArgs(labeledSixteenths, tau)
+    quantizedPairs(e, isLabeled(labeledSixteenths), tau)
+      .select(col("r.vec_id").as("vec_id"), col("r.label").as("true_label"),
+        col("l.vec_id").as("lab_vec"), col("l.label").as("lab_label"),
+        col("score"))
+  }
+
+  private def labelPropArgs(labeledSixteenths: Int, tau: Double): Unit = {
     require(labeledSixteenths >= 1 && labeledSixteenths <= 15,
       s"labeledSixteenths must be in [1, 15], got $labeledSixteenths")
     require(tau > 0.0, s"bad tau=$tau")
-    val q = quantize(e).filter(col("qnrm") > lit(0.0))
-      .withColumn("labeled", isLabeled(labeledSixteenths))
-      .select(col("vec_id"), col("label"), col("labeled"), col("qv"),
-        col("qnrm"))
-      .localCheckpoint(true)
-    val lab = q.filter(col("labeled"))
-      .select(col("vec_id").as("lab_vec"), col("label").as("lab_label"),
-        col("qv").as("lqv"), col("qnrm").as("lnrm"))
-    val unl = q.filter(!col("labeled"))
-      .select(col("vec_id"), col("label").as("true_label"),
-        col("qv").as("uqv"), col("qnrm").as("unrm"))
-    lab.crossJoin(broadcast(unl))
-      .withColumn("score",
-        floor(graft.functions.ByteDot(col("lqv"), col("uqv")).cast("double")
-            * lit(10000.0) / (col("lnrm") * col("unrm")) + lit(0.5))
-          .cast("double") / lit(10000.0))
-      .filter(col("score") >= tau)
-      .select(col("vec_id"), col("true_label"), col("lab_vec"),
-        col("lab_label"), col("score"))
   }
 
   /** The labeled-slice membership rule (salted md5 nibble on vec_id). */
@@ -400,50 +334,43 @@ object Knn {
       .select(col("vec_id"), col("label"), col("qv"), col("qnrm"))
 
   /** The probe-only half of [[labelPropagationIvf]] — propagate labels
-    * for a QUERY batch against an ALREADY-BUILT quantized index of the
-    * labeled slice (the [[tripletProbe]] posture): queries outside the
-    * labeled slice rank the float centroid table for their `nprobe`
-    * nearest lists, meet the bucketed code lists in a c_id equijoin,
-    * score with the identical integer e4 chain, pick up voter labels
-    * through one thin key equijoin, and feed the SAME [[voteRollup]].
-    * Separated from the build so the live propagator
-    * ([[graft.streaming.Streaming.runLabelPropProbe]]) can replay it
-    * per micro-batch against the frozen artifacts — a vector's vote
-    * tally is a pure function of its own row against the index, so
-    * per-batch semantics are exact and NO driver-resident labeled-code
-    * closure exists on the serving path (the corpus-scale labeled side
-    * the closure variant's scale-honesty note routes here). */
+    * for a QUERY batch against an ALREADY-BUILT int8 index of the
+    * labeled slice: probe lists from [[Int8Codec]], the identical
+    * integer chain, voter labels through one thin key equijoin, the
+    * SAME [[voteRollup]]. Separated from the build so the live
+    * propagator ([[graft.streaming.Streaming.runLabelPropProbe]]) can
+    * replay it per micro-batch against the frozen artifacts — a
+    * vector's tally is a pure function of its own row against the
+    * index, so per-batch semantics are exact. */
   def labelPropProbe(spark: SparkSession, tableName: String,
       centroids: DataFrame, labels: DataFrame, queries: DataFrame,
       labeledSixteenths: Int = 12, tau: Double = 0.3,
       nprobe: Int = 2): DataFrame = {
-    require(labeledSixteenths >= 1 && labeledSixteenths <= 15,
-      s"labeledSixteenths must be in [1, 15], got $labeledSixteenths")
-    require(tau > 0.0, s"bad tau=$tau")
-    val probes = probeLists(quantize(queries.filter(!isLabeled(labeledSixteenths)))
-      .filter(col("qnrm") > lit(0.0))
-      .select(col("vec_id").as("probe_vec"),
-        col("label").as("true_label"), col("v"), col("nrm"),
-        col("qv").as("sqv"), col("qnrm").as("snrm")),
-      CentroidModel.of(centroids), nprobe)
-      .select(col("probe_vec"), col("true_label"), col("sqv"),
-        col("snrm"), col("c_id"))
-    val pairs = probes
-      .join(graft.sources.Staged.liveTable(spark, tableName)
-        .filter(col("qnrm") > lit(0.0)), Seq("c_id"))
-      .withColumn("score",
-        floor(graft.functions.ByteDot(col("qv"), col("sqv")).cast("double")
-            * lit(10000.0) / (col("qnrm") * col("snrm")) + lit(0.5))
-          .cast("double") / lit(10000.0))
+    labelPropArgs(labeledSixteenths, tau)
+    voteRollup(labelPropProbePairs(spark, tableName,
+      CentroidModel.of(centroids), labels, queries, labeledSixteenths, tau,
+      nprobe))
+  }
+
+  /** The vote pairs (same columns as [[labelPropPairs]]) of `queries`
+    * outside the labeled slice against the int8 index `tableName`, voter
+    * labels from `labels`. */
+  private def labelPropProbePairs(spark: SparkSession, tableName: String,
+      coarse: CentroidModel, labels: DataFrame, queries: DataFrame,
+      labeledSixteenths: Int, tau: Double, nprobe: Int): DataFrame =
+    Int8Codec.probes(queries.filter(!isLabeled(labeledSixteenths)), coarse,
+        nprobe, Seq(col("label").as("true_label")))
+      .as("q")
+      .join(Int8Codec.indexSide(Staged.liveTable(spark, tableName)).as("c"),
+        Seq("c_id"))
+      .withColumn("score", Int8Codec.score)
       .filter(col("score") >= tau)
-      .select(col("probe_vec").as("vec_id"), col("true_label"),
-        col("vec_id").as("lab_vec"), col("score"))
+      .select(col("query_id").as("vec_id"), col("true_label"),
+        col("c.vec_id").as("lab_vec"), col("score"))
       .join(labels.select(col("vec_id").as("lab_vec"),
         col("label").as("lab_label")), Seq("lab_vec"))
       .select(col("vec_id"), col("true_label"), col("lab_vec"),
         col("lab_label"), col("score"))
-    voteRollup(pairs)
-  }
 
   /** Propagation-quality confusion rollup over the docs the operator
     * actually labels — the sign-off view (the domain_classifier_eval
@@ -456,71 +383,51 @@ object Knn {
       .agg(count(lit(1)).as("n_vecs"))
 
   /** Label propagation over the PERSISTED quantized IVF index — the
-    * 100 TB path (the contaminationSemanticIvf posture, one shared
-    * probe definition): the LABELED slice is written as the bucketed
-    * code index, unlabeled vectors probe their nprobe nearest lists,
-    * candidates are scored with the identical integer chain and fed to
-    * the SAME vote rollup. Emitted votes are a subset of the brute
-    * pairs with bit-identical scores (KnnSpec), so predictions can
-    * differ from brute only where the probe pruned a voter — the
-    * recall trade nprobe tunes; rows-only for that reason. Labels ride
-    * two candidate-sized key equijoins (the index stores codes only). */
+    * 100 TB path ([[labelPropPairsIvf]]):
+    * emitted votes are a subset of the brute pairs with bit-identical
+    * scores (KnnSpec), so predictions differ from brute only where the
+    * probe pruned a voter — rows-only for that reason. Labels ride two
+    * candidate-sized key equijoins (the index stores codes only). */
   def labelPropagationIvf(spark: SparkSession, e: DataFrame,
       tableName: String, path: String, labeledSixteenths: Int = 12,
       tau: Double = 0.3, nlist: Int = 10, buckets: Int = 8,
       nprobe: Int = 2): DataFrame = {
-    require(labeledSixteenths >= 1 && labeledSixteenths <= 15,
-      s"labeledSixteenths must be in [1, 15], got $labeledSixteenths")
-    require(tau > 0.0, s"bad tau=$tau")
+    labelPropArgs(labeledSixteenths, tau)
     voteRollup(labelPropPairsIvf(spark, e, tableName, path,
       labeledSixteenths, tau, nlist, buckets, nprobe))
   }
 
-  /** The IVF-probe vote pairs (same columns as [[labelPropPairs]]). */
+  /** The IVF-probe vote pairs: the labeled slice written as the int8
+    * index, the rest of `e` probing it ([[labelPropProbePairs]]). */
   private[graft] def labelPropPairsIvf(spark: SparkSession, e: DataFrame,
       tableName: String, path: String, labeledSixteenths: Int,
-      tau: Double, nlist: Int, buckets: Int, nprobe: Int): DataFrame =
-    probeScoredBy(spark, e, tableName, path, isLabeled(labeledSixteenths),
-      nlist, buckets, nprobe)
-      .filter(col("score") >= tau)
-      .withColumnRenamed("vec_id", "lab_vec")
-      .join(e.select(col("vec_id").as("lab_vec"),
-        col("label").as("lab_label")), Seq("lab_vec"))
-      .withColumnRenamed("probe_vec", "vec_id")
-      .join(e.select(col("vec_id"), col("label").as("true_label")),
-        Seq("vec_id"))
-      .select(col("vec_id"), col("true_label"), col("lab_vec"),
-        col("lab_label"), col("score"))
+      tau: Double, nlist: Int, buckets: Int, nprobe: Int): DataFrame = {
+    spark.sql(s"DROP TABLE IF EXISTS $tableName")
+    val coarse = buildIvf(e.filter(isLabeled(labeledSixteenths)), tableName,
+      path, nlist, buckets)((_, _) => Int8Codec)
+    labelPropProbePairs(spark, tableName, coarse, e, e, labeledSixteenths,
+      tau, nprobe)
+  }
 
-  /** Hard-TRIPLET MINING over the quantized embedding space (r17) —
-    * the contrastive-training curation pass that turns a labeled
-    * corpus into (anchor, hardest positive, hardest negative) rows:
-    * for each anchor in a deterministic `vec_id % anchorMod` slice,
-    * the SAME-label pool vector with the LOWEST cosine (the pair the
-    * model most needs to pull together) and the DIFFERENT-label pool
-    * vector with the HIGHEST cosine (the impostor it most needs to
-    * push apart), plus the margin between them and an `is_hard` flag
-    * (margin below `marginE4` = the triplet sits in the active-loss
-    * region — the rows a curriculum actually trains on). The pool is
-    * the NON-anchor complement (the query-batch-vs-corpus framing the
-    * IVF sibling needs; self-exclusion falls out for free).
+  /** Hard-TRIPLET MINING over the quantized embedding space — the
+    * contrastive-curation pass: for each anchor in a deterministic
+    * `vec_id % anchorMod` slice, the SAME-label pool vector with the
+    * LOWEST cosine and the DIFFERENT-label pool vector with the HIGHEST,
+    * their margin, and `is_hard` (margin below `marginE4` — the
+    * active-loss rows a curriculum trains on). The pool is the
+    * NON-anchor complement, so self-exclusion falls out for free.
     *
-    * Oracle-EXACT end to end: scoring is the knn_quantized integer
-    * chain kept as the raw e4 integer (floor-half-up of the exact
-    * ByteDot — never a float round), argmin/argmax are struct-min
-    * aggregates on (score_e4, cand_id) / (−score_e4, cand_id) — total
-    * integer orders with deterministic lexicographic ties, never a
-    * window (the DuckDB oracle runs the row_number formulation:
-    * two-formulation cross-check) — and membership is integer (an
-    * anchor missing either a same-label or a different-label pool
-    * vector emits no row: the "abstain" a pipeline routes around).
-    * The margin is a difference of exact integers, so `is_hard` can
-    * never sit one ulp from the threshold.
-    *
-    * Scale: this brute anchors×pool join is the sanctioned baseline
-    * (the knn_brute posture — anchors are a bounded sample); the
-    * 100 TB path is [[tripletMineIvf]], which mines the identical
-    * rollup from persisted-IVF probe candidates. */
+    * Oracle-EXACT end to end: scoring is [[quantizedE4]], kept as the
+    * raw e4 integer; argmin/argmax are struct-min aggregates on
+    * (score_e4, cand_id) / (−score_e4, cand_id) — total integer orders
+    * with deterministic ties, never a window (the DuckDB oracle runs the
+    * row_number formulation: two-formulation cross-check) — and
+    * membership is integer (an anchor missing a same-label or a
+    * different-label pool vector emits no row). The margin is a
+    * difference of exact integers, so `is_hard` never sits one ulp from
+    * the threshold. This brute anchors×pool join is the sanctioned
+    * baseline (anchors are a bounded sample); the 100 TB path is
+    * [[tripletMineIvf]]. */
   def tripletMine(e: DataFrame, anchorMod: Long = 25L,
       marginE4: Long = 500L): DataFrame = {
     require(anchorMod >= 2L, s"anchorMod must be >= 2, got $anchorMod")
@@ -536,24 +443,17 @@ object Knn {
       .select(col("anchor_id"), col("anchor_label"),
         col("c.vec_id").as("cand_id"),
         (col("c.label") === col("anchor_label")).as("same"),
-        floor(graft.functions.ByteDot(col("aqv"), col("qv")).cast("double")
-            * lit(10000.0) / (col("anrm") * col("qnrm")) + lit(0.5))
-          .cast("long").as("score_e4"))
+        quantizedE4(col("aqv"), col("c.qv"), col("anrm"), col("c.qnrm"))
+          .as("score_e4"))
     tripletRollup(scored, marginE4)
   }
 
-  /** Triplet mining over the PERSISTED quantized IVF index — the
-    * 100 TB path (the labelPropagationIvf posture, the one shared
-    * [[probeScoredBy]] definition): the non-anchor pool is written as
-    * the bucketed code index, anchors probe their `nprobe` nearest
-    * lists, candidates are scored with the identical integer chain and
-    * fed to the SAME rollup. With nprobe = nlist the probe is
-    * exhaustive and the output is row-identical to [[tripletMine]]
-    * (KnnSpec asserts it); with a pruned probe the mined positive can
-    * only be ≥ and the negative ≤ the brute choice in score — the
-    * recall trade nprobe tunes. Rows-only (probe recall depends on the
-    * seeded k-means assignment). Labels ride two thin key equijoins
-    * (the index stores codes only). */
+  /** Triplet mining over the PERSISTED quantized IVF index: the
+    * non-anchor pool is written as the int8 index and the anchors probe
+    * it ([[tripletProbe]]). With nprobe = nlist the output is
+    * row-identical to [[tripletMine]] (KnnSpec asserts it); with a
+    * pruned probe the mined positive can only be ≥ and the negative ≤
+    * the brute choice in score. Rows-only. */
   def tripletMineIvf(spark: SparkSession, e: DataFrame,
       tableName: String, path: String, anchorMod: Long = 25L,
       marginE4: Long = 500L, nlist: Int = 10, buckets: Int = 8,
@@ -569,34 +469,24 @@ object Knn {
   }
 
   /** The probe-only half of [[tripletMineIvf]] — mine triplets for a
-    * QUERY batch against an ALREADY-BUILT quantized index (the
-    * searchIvfIndexQuantized posture): anchors rank the float centroid
-    * table for their nprobe nearest lists, meet the bucketed code
-    * lists in a c_id equijoin, score with the integer e4 chain, pick
-    * up candidate labels through one thin key equijoin, and feed the
-    * SAME [[tripletRollup]]. Separated from the build so the live
-    * miner ([[graft.streaming.Streaming]]'s triplet probe) can replay
-    * it per micro-batch against the frozen artifacts — each anchor's
-    * triplet is a pure function of its own row against the index, so
-    * per-batch semantics are exact. */
+    * QUERY batch against an ALREADY-BUILT int8 index: probe lists from
+    * [[Int8Codec]], scores as [[quantizedE4]], candidate labels through
+    * one thin key equijoin, the SAME [[tripletRollup]]. The live miner
+    * ([[graft.streaming.Streaming]]'s triplet probe) replays it per
+    * micro-batch — each anchor's triplet is a pure function of its own
+    * row against the index, so per-batch semantics are exact. */
   def tripletProbe(spark: SparkSession, tableName: String,
       centroids: DataFrame, labels: DataFrame, queries: DataFrame,
       marginE4: Long = 500L, nprobe: Int = 2): DataFrame = {
-    val probes = probeLists(quantize(queries).filter(col("qnrm") > lit(0.0))
-      .select(col("vec_id").as("anchor_id"),
-        col("label").as("anchor_label"), col("v"), col("nrm"),
-        col("qv").as("sqv"), col("qnrm").as("snrm")),
-      CentroidModel.of(centroids), nprobe)
-      .select(col("anchor_id"), col("anchor_label"), col("sqv"),
-        col("snrm"), col("c_id"))
-    val scored = probes
-      .join(graft.sources.Staged.liveTable(spark, tableName).filter(col("qnrm") > lit(0.0)),
+    val scored = Int8Codec.probes(queries, CentroidModel.of(centroids),
+        nprobe, Seq(col("label").as("anchor_label")))
+      .as("q")
+      .join(Int8Codec.indexSide(Staged.liveTable(spark, tableName)).as("c"),
         Seq("c_id"))
-      .select(col("anchor_id"), col("anchor_label"),
-        col("vec_id").as("cand_id"),
-        floor(graft.functions.ByteDot(col("qv"), col("sqv")).cast("double")
-            * lit(10000.0) / (col("qnrm") * col("snrm")) + lit(0.5))
-          .cast("long").as("score_e4"))
+      .select(col("query_id").as("anchor_id"), col("anchor_label"),
+        col("c.vec_id").as("cand_id"),
+        quantizedE4(col("q.qv"), col("c.qv"), col("q.qnrm"), col("c.qnrm"))
+          .as("score_e4"))
       .join(labels.select(col("vec_id").as("cand_id"),
         col("label").as("cand_label")), Seq("cand_id"))
       .select(col("anchor_id"), col("anchor_label"), col("cand_id"),
@@ -712,9 +602,8 @@ object Knn {
       .filter(col("s2") > lit(0L) && col("c2") > lit(0L))
       .select(col("label").cast("long").as("label"),
         (col("n_vecs") + momentGuard(col("n_tot"), maxVecs)).as("n_vecs"),
-        (floor(col("dot").cast("double") * lit(10000.0) /
-          (sqrt(col("s2").cast("double")) * sqrt(col("c2").cast("double")))
-          + lit(0.5)).cast("double") / lit(10000.0)).as("centroid_cos"))
+        (momentE4(col("s2"), col("c2")).cast("double") / lit(10000.0))
+          .as("centroid_cos"))
   }
 
   /** Exact integer GRAM MATRIX over the quantized code space (r18) —
@@ -948,14 +837,7 @@ object Knn {
     * exact count riding the centroid sums. */
   def embCentroidAffinity(e: DataFrame,
       maxVecs: Long = MaxMomentVecs): DataFrame = {
-    val codes = explodedCodes(e)
-      // feeds the centroid agg AND the scoring join — one materialization
-      .localCheckpoint(true)
-    val cent = centroidSumsCounted(codes)
-      .localCheckpoint(true) // 2 consumers: the norm rollup + the dot join
-    val snrm = cent.groupBy(col("label"))
-      .agg(sum(col("s") * col("s")).as("s2"), max(col("nl")).as("nl"))
-      .filter(col("s2") > lit(0L))
+    val (codes, cent, snrm) = centroidMoments(e)
     codes.join(broadcast(cent.select("label", "pos", "s")),
         Seq("label", "pos"))
       .groupBy(col("vec_id"), col("label"), col("q2"))
@@ -963,9 +845,8 @@ object Knn {
       .join(broadcast(snrm), "label")
       .select(col("vec_id"), col("label"),
         (col("dot") + momentGuard(col("nl"), maxVecs)).as("dot"),
-        (floor(col("dot").cast("double") * lit(10000.0) /
-          (sqrt(col("q2").cast("double")) * sqrt(col("s2").cast("double")))
-          + lit(0.5)).cast("double") / lit(10000.0)).as("score"))
+        (momentE4(col("q2"), col("s2")).cast("double") / lit(10000.0))
+          .as("score"))
   }
 
   /** Nearest-centroid CONFUSION matrix — the centroid-classifier
@@ -988,13 +869,7 @@ object Knn {
     * key. */
   def centroidConfusion(e: DataFrame,
       maxVecs: Long = MaxMomentVecs): DataFrame = {
-    val codes = explodedCodes(e)
-      .localCheckpoint(true) // feeds the centroid agg AND all-pairs dots
-    val cent = centroidSumsCounted(codes)
-      .localCheckpoint(true) // 2 consumers: norm rollup + scoring join
-    val snrm = cent.groupBy(col("label"))
-      .agg(sum(col("s") * col("s")).as("s2"), max(col("nl")).as("nl"))
-      .filter(col("s2") > lit(0L))
+    val (codes, cent, snrm) = centroidMoments(e)
     val dots = codes
       .join(broadcast(cent.select(col("label").as("cand"), col("pos"),
         col("s"))), "pos")
@@ -1004,9 +879,7 @@ object Knn {
       .join(broadcast(snrm.select(col("label").as("cand"), col("s2"),
         col("nl"))), "cand")
       .withColumn("score_e4",
-        floor(col("dot").cast("double") * lit(10000.0) /
-          (sqrt(col("q2").cast("double")) * sqrt(col("s2").cast("double")))
-          + lit(0.5)).cast("long") + momentGuard(col("nl"), maxVecs))
+        momentE4(col("q2"), col("s2")) + momentGuard(col("nl"), maxVecs))
       .groupBy(col("vec_id"), col("label"))
       .agg(max_by(col("cand"),
         struct(col("score_e4"), (-col("cand")).as("neg"))).as("assigned"))
@@ -1043,6 +916,26 @@ object Knn {
       .select(col("pos").cast("long").as("pos"),
         (col("n") + momentGuard(col("n"), maxVecs)).as("n"), col("s"),
         col("s2"), col("dead"))
+
+  /** The moment family's integer cosine of the exact BIGINT `dot`
+    * against squared norms `a2`, `b2`: floor(dot · 10⁴ / (√a2·√b2) +
+    * 0.5) — ONE floor-half-up double expression over exact integers. */
+  private def momentE4(a2: Column, b2: Column): Column =
+    floor(col("dot").cast("double") * lit(10000.0) /
+      (sqrt(a2.cast("double")) * sqrt(b2.cast("double"))) + lit(0.5))
+
+  /** The shared prefix of the centroid diagnostics: the positive-norm
+    * codes and their per-label centroid sums, each materialized once
+    * (both feed more than one consumer), and the per-label squared
+    * centroid norms `s2` (> 0) with the guard count `nl`. */
+  private def centroidMoments(
+      e: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val codes = explodedCodes(e).localCheckpoint(true)
+    val cent = centroidSumsCounted(codes).localCheckpoint(true)
+    (codes, cent, cent.groupBy(col("label"))
+      .agg(sum(col("s") * col("s")).as("s2"), max(col("nl")).as("nl"))
+      .filter(col("s2") > lit(0L)))
+  }
 
   /** Exploded positive-norm codes — one definition feeding the affinity
     * operator and the frozen [[centroidSums]] artifact. */
@@ -1115,9 +1008,8 @@ object Knn {
         col("n_matched") === col("cent_dims"))
       .filter(col("dot") < lit(0L))
       .select(col("vec_id"), col("label"), col("dot"),
-        (floor(col("dot").cast("double") * lit(10000.0) /
-          (sqrt(col("q2").cast("double")) * sqrt(col("s2").cast("double")))
-          + lit(0.5)).cast("double") / lit(10000.0)).as("score"))
+        (momentE4(col("q2"), col("s2")).cast("double") / lit(10000.0))
+          .as("score"))
   }
 
   /** The flagged tail of [[embCentroidAffinity]]: vectors pointing AWAY
@@ -1155,23 +1047,15 @@ object Knn {
     * exact count riding the centroid sums. */
   def embClusterQuality(e: DataFrame,
       maxVecs: Long = MaxMomentVecs): DataFrame = {
-    val codes = explodedCodes(e)
-      .localCheckpoint(true) // 2 consumers: centroid agg + scoring join
-    val cent = centroidSumsCounted(codes)
-      .localCheckpoint(true) // 3 consumers: norms, vector dots, pair dots
-    val snrm = cent.groupBy(col("label"))
-      .agg(sum(col("s") * col("s")).as("s2"), max(col("nl")).as("nl"))
-      .filter(col("s2") > lit(0L))
+    val (codes, cent, snrm) = centroidMoments(e)
     val scoreE4 = codes
       .join(broadcast(cent.select("label", "pos", "s")), Seq("label", "pos"))
       .groupBy(col("vec_id"), col("label"), col("q2"))
       .agg(sum(col("code").cast("long") * col("s")).as("dot"))
       .join(broadcast(snrm), "label")
       .select(col("label"),
-        (floor(col("dot").cast("double") * lit(10000.0) /
-          (sqrt(col("q2").cast("double")) * sqrt(col("s2").cast("double")))
-          + lit(0.5)).cast("long") +
-          momentGuard(col("nl"), maxVecs)).as("score_e4"))
+        (momentE4(col("q2"), col("s2")) + momentGuard(col("nl"), maxVecs))
+          .as("score_e4"))
     val coh = scoreE4.groupBy(col("label"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("score_e4")).as("sum_e4"))
     val sep = cent.as("a").join(cent.as("b"),
@@ -1181,10 +1065,7 @@ object Knn {
       .join(snrm, "label")
       .join(broadcast(snrm.select(col("label").as("other_label"),
         col("s2").as("o2"))), "other_label")
-      .withColumn("cos_e4",
-        floor(col("dot").cast("double") * lit(10000.0) /
-          (sqrt(col("s2").cast("double")) * sqrt(col("o2").cast("double")))
-          + lit(0.5)).cast("long"))
+      .withColumn("cos_e4", momentE4(col("s2"), col("o2")))
       .groupBy(col("label"))
       .agg(max_by(col("other_label"),
           struct(col("cos_e4"), (-col("other_label")).as("neg")))
@@ -1240,15 +1121,6 @@ object Knn {
       .select(col("query_id"), col("neighbor_id"), col("score"))
     ranked(scored, k)
   }
-
-  /** Every row of `df` (carrying `v`, `nrm`) once per list of its
-    * `nprobe` nearest centroids, `c_id` appended — the probe list as one
-    * [[NearestCentroids]] kernel call and an explode: no cross join, no
-    * window over the candidates, no shuffle on the query key. */
-  private def probeLists(df: DataFrame, model: CentroidModel,
-      nprobe: Int): DataFrame =
-    df.withColumn("c_id",
-      explode(NearestCentroids(col("v"), col("nrm"), model, nprobe)))
 
   /** Every row of `df` (carrying `v`, `nrm`) assigned to its nearest
     * centroid, `c_id` appended — a per-row kernel, no Exchange. An empty
@@ -1324,10 +1196,6 @@ object Knn {
         round(avg(col("nrm")), 4).as("avg_norm"))
   }
 
-  /** Nearest-centroid assignment of the whole corpus for the semantic
-    * paths: k = ~n/targetClusterSize seeded-k-means clusters. Returns the
-    * eagerly-materialized (vec_id, v, nrm, c_id) table — it feeds both
-    * pair sides, the occupancy agg, and the final join. */
   /** Above this corpus size, [[assignSemanticClusters]] trains its
     * centroids on a bounded deterministic SAMPLE instead of the full
     * corpus (r16 verdict #5 — the standard large-scale k-means shape):
@@ -1345,6 +1213,10 @@ object Knn {
   private[graft] val SampleTrainSwitch = 65536L
   private[graft] val SampleMembersPerCentroid = 16L
 
+  /** Nearest-centroid assignment of the whole corpus for the semantic
+    * paths: k = ~n/targetClusterSize seeded-k-means clusters. Returns the
+    * eagerly-materialized (vec_id, v, nrm, c_id) table — it feeds both
+    * pair sides, the occupancy agg, and the final join. */
   private[similarity] def assignSemanticClusters(e: DataFrame,
       targetClusterSize: Long, n: Long,
       trainSwitch: Long = SampleTrainSwitch): DataFrame = {
@@ -1484,143 +1356,194 @@ object Knn {
         coalesce(col("max_occupancy"), lit(0L)).as("max_occupancy"))
   }
 
-  /** Persist an IVF index: every vector assigned to its nearest
-    * centroid's inverted list, written as an external table BUCKETED BY
-    * the list id — the offline build §5 promises. Search against the
-    * persisted table needs no re-training, no re-assignment, and no
-    * Exchange on the index side: the bucketed layout already hash-
-    * partitions by `c_id`, and an equality/IN probe filter on `c_id`
-    * prunes entire buckets at planning time. Returns the centroid table
-    * (tiny — persist alongside, or recompute probes from it). With
-    * `persistCentroids`, the centroid table ALSO commits to
-    * `${tableName}_centroids` (the writeIvfPqIndex coarse/codebook
-    * posture) so a separate serving process — the live hybrid probe —
-    * reads both artifacts from tables alone, no in-memory handle;
-    * centroids commit BEFORE the main table, whose promote stays the
-    * commit point probes key on. */
+  // ── The IVF family: one core, three codecs ──────────────────────────
+
+  /** One IVF codec — the residual half of the coarse-quantizer + codec
+    * split (Jégou et al., "Product Quantization for Nearest Neighbor
+    * Search", TPAMI 2011). The coarse half is ONE path for every codec:
+    * the [[finiteNorm]]-fenced base, the k-means lists, the
+    * [[NearestCentroids]] assignment and probe lists, the bucketed list
+    * write ([[writeLists]]), the delta generation and the merge. A codec
+    * supplies only what differs: the stored payload of a list row
+    * ([[stored]]), the probe-side payload its score reads ([[probes]]),
+    * a filter on the index side ([[indexFilter]]) and the [[score]]
+    * column over the probe row `q` and the list row `c`. */
+  private sealed trait IvfCodec {
+    /** List rows of assigned base rows (vec_id, v, nrm, c_id), in the
+      * codec's stored column order. */
+    def stored(assigned: DataFrame): DataFrame
+    /** (query_id, probe payload, c_id): each query once per probed
+      * list. */
+    def probes(queries: DataFrame, coarse: CentroidModel,
+        nprobe: Int): DataFrame
+    def indexFilter: Column = lit(true)
+    def score: Column
+
+    final def indexSide(index: DataFrame): DataFrame = index.filter(indexFilter)
+
+    /** Probe lists scored against one list frame — the c_id equijoin
+      * (the index side arrives pre-partitioned), self-pairs out,
+      * UNRANKED: the delta search unions two scored frames into one
+      * bounded rank. */
+    final def scored(probes: DataFrame, index: DataFrame): DataFrame =
+      probes.as("q").join(indexSide(index).as("c"),
+          col("q.c_id") === col("c.c_id") &&
+            col("query_id") =!= col("c.vec_id"))
+        .withColumn("score", score)
+        .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
+          col("score"))
+
+    final def search(coarse: CentroidModel, queries: DataFrame, k: Int,
+        nprobe: Int, index: DataFrame): DataFrame =
+      ranked(scored(probes(queries, coarse, nprobe), index), k)
+  }
+
+  /** Float lists: the vector and its norm, scored by [[cosine]]. */
+  private object FloatCodec extends IvfCodec {
+    def stored(assigned: DataFrame): DataFrame =
+      assigned.select(col("vec_id"), col("v"), col("nrm"), col("c_id"))
+    def probes(queries: DataFrame, coarse: CentroidModel,
+        nprobe: Int): DataFrame =
+      probeLists(queries.filter(finiteNorm(col("nrm"))), coarse, nprobe)
+    def score: Column = cosine
+  }
+
+  /** Int8 lists: the [[quantize]] codes and their integer norm (8×
+    * smaller resident than float vectors), scored by the exact integer
+    * [[quantizedScore]] chain; zero-norm codes are out on both sides
+    * (0/0 has no cosine). Probe lists rank the FLOAT centroids. */
+  private object Int8Codec extends IvfCodec {
+    def stored(assigned: DataFrame): DataFrame =
+      quantize(assigned)
+        .select(col("vec_id"), col("qv"), col("qnrm"), col("c_id"))
+    def probes(queries: DataFrame, coarse: CentroidModel,
+        nprobe: Int): DataFrame =
+      probes(queries, coarse, nprobe, Nil)
+    /** The probe rows with the query columns `keep` carried along. */
+    def probes(queries: DataFrame, coarse: CentroidModel, nprobe: Int,
+        keep: Seq[Column]): DataFrame =
+      probeLists(quantize(queries).filter(col("qnrm") > lit(0.0)), coarse,
+        nprobe, keep :+ col("qv") :+ col("qnrm")).drop("v", "nrm")
+    override def indexFilter: Column = col("qnrm") > lit(0.0)
+    def score: Column =
+      quantizedScore(col("q.qv"), col("c.qv"), col("q.qnrm"), col("c.qnrm"))
+  }
+
+  /** PQ lists: m codes per vector under a frozen `codebook`
+    * ([[PqEncode]]), scored by ONE [[graft.functions.PqAdcScore]]
+    * table-lookup pass against the query's flattened ADC LUT ([[PqLut]])
+    * — O(m) per pair — at floor-half-up 4 decimals. */
+  private final class PqCodec(codebook: CentroidModel, m: Int)
+      extends IvfCodec {
+    def stored(assigned: DataFrame): DataFrame =
+      assigned.select(col("vec_id"), col("c_id"),
+        PqEncode(col("v"), col("nrm"), codebook, m).as("codes"))
+    def probes(queries: DataFrame, coarse: CentroidModel,
+        nprobe: Int): DataFrame =
+      probeLists(queries.filter(finiteNorm(col("nrm"))), coarse, nprobe)
+        .withColumn("lut", PqLut(col("v"), col("nrm"), codebook, m))
+        .drop("v", "nrm")
+    def score: Column =
+      floor(graft.functions.PqAdcScore(col("c.codes"), col("q.lut"))
+        * lit(10000.0) + lit(0.5)).cast("double") / lit(10000.0)
+  }
+
+  /** (query_id, v, nrm, `payload`…) of every query once per list of its
+    * `nprobe` nearest centroids, `c_id` appended — one kernel call and
+    * an explode: no cross join, no window, no shuffle on the query key. */
+  private def probeLists(queries: DataFrame, coarse: CentroidModel,
+      nprobe: Int, payload: Seq[Column] = Nil): DataFrame =
+    queries.select(col("vec_id").as("query_id") +: col("v") +: col("nrm") +:
+        payload: _*)
+      .withColumn("c_id",
+        explode(NearestCentroids(col("v"), col("nrm"), coarse, nprobe)))
+
+  /** The ONE IVF build: degenerate vectors never enter an index (they are
+    * unsearchable — the [[finiteNorm]] rationale); the fenced base is
+    * materialized once for the k-means rounds and the assignment;
+    * `codecFor` trains and commits the codec's side artifacts (BEFORE
+    * the main table, whose promote is the commit point probes key on).
+    * Returns the coarse model. */
+  private def buildIvf(e: DataFrame, tableName: String, path: String,
+      nlist: Int, buckets: Int)(
+      codecFor: (DataFrame, CentroidModel) => IvfCodec): CentroidModel = {
+    val base = e.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
+    val coarse = kmeansModel(base, nlist)
+    val codec = codecFor(base, coarse)
+    writeLists(tableName, path, buckets, codec.stored(assignTo(base, coarse)))
+    coarse
+  }
+
+  /** Commit a tiny model artifact (centroids, coarse, codebook). */
+  private def commitSide(tableName: String, path: String,
+      frame: DataFrame): Unit =
+    Staged.commit(frame.sparkSession, tableName, path) { (tbl, p) =>
+      frame.write.option("path", p)
+        .mode(org.apache.spark.sql.SaveMode.Overwrite).saveAsTable(tbl)
+    }
+
+  /** The ONE inverted-list write (build, delta append, merge): rows
+    * BUCKETED BY the list id through a staged rebuild — the live table
+    * serves while the new generation builds. A probe needs no index-side
+    * Exchange: the bucketed layout already hash-partitions by `c_id`,
+    * and an equality/IN filter on `c_id` prunes whole buckets at
+    * planning time (ApiSpec pins that this is the only such write). */
+  private def writeLists(tableName: String, path: String, buckets: Int,
+      rows: DataFrame): Unit =
+    Staged.commit(rows.sparkSession, tableName, path) { (tbl, p) =>
+      rows
+        .repartition(col("c_id"))
+        .write
+        .option("path", p)
+        .bucketBy(buckets, "c_id")
+        .sortBy("c_id")
+        .mode(org.apache.spark.sql.SaveMode.Overwrite)
+        .saveAsTable(tbl)
+    }
+
+  /** (vec_id, payload…, c_id) of a live base table, read from its schema:
+    * a delta and a merge carry exactly the payload the base stores. */
+  private def listColumns(base: DataFrame): Seq[String] =
+    ("vec_id" +: base.columns.filterNot(Set("vec_id", "c_id"))) :+ "c_id"
+
+  /** Persist a float IVF index ([[buildIvf]]). Returns the centroid
+    * table (tiny — persist alongside, or recompute probes from it); with
+    * `persistCentroids` it ALSO commits to `${tableName}_centroids`, so
+    * a separate serving process (the live hybrid probe) reads both
+    * artifacts from tables alone. */
   def writeIvfIndex(e: DataFrame, tableName: String, path: String,
       nlist: Int = 10, buckets: Int = 8,
       persistCentroids: Boolean = false): DataFrame = {
-    // degenerate vectors never enter the index: they are unsearchable
-    // under cosine (the finiteNorm rationale)
-    val base = e.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
-    val model = kmeansModel(base, nlist)
-    val centroids = centroidFrame(e.sparkSession, model)
-    if (persistCentroids)
-      graft.sources.Staged.commit(e.sparkSession,
-          s"${tableName}_centroids", s"${path}_centroids") { (tbl, p) =>
-        centroids.write
-          .option("path", p)
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .saveAsTable(tbl)
-      }
-    val assigned = assignTo(base, model)
-      .select(col("vec_id"), col("v"), col("nrm"), col("c_id"))
-    // staged rebuild (Staged.commit): the live index serves while the
-    // new generation builds; promote is a catalog rename
-    graft.sources.Staged.commit(e.sparkSession, tableName, path) {
-      (tbl, p) =>
-        assigned
-          .repartition(col("c_id"))
-          .write
-          .option("path", p)
-          .bucketBy(buckets, "c_id")
-          .sortBy("c_id")
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .saveAsTable(tbl)
-    }
-    centroids
+    val spark = e.sparkSession
+    centroidFrame(spark, buildIvf(e, tableName, path, nlist, buckets) {
+      (_, coarse) =>
+        if (persistCentroids)
+          commitSide(s"${tableName}_centroids", s"${path}_centroids",
+            centroidFrame(spark, coarse))
+        FloatCodec
+    })
   }
 
-  /** Persist an IVF index whose inverted lists store int8-QUANTIZED
-    * codes — the IVF-PQ-shaped layout a 100 TB embedding corpus
-    * actually serves from: centroid assignment runs in FLOAT space
-    * (build accuracy is an offline, once-per-corpus cost), but the
-    * stored rows carry only (qv, qnrm) — the resident index is 8×
-    * smaller than float vectors, which is the difference between
-    * inverted lists that stay executor-cached and ones that spill.
-    * Bucketed by `c_id` exactly like [[writeIvfIndex]], so the probe
-    * equijoin reads pre-partitioned buckets with zero index-side
-    * Exchange (KnnSpec-asserted). Returns the float centroid table
-    * (probes rank centroids in float space — it is tiny). */
+  /** Persist an int8 IVF index ([[Int8Codec]]) — the layout a 100 TB
+    * corpus serves from: lists 8× smaller than float vectors stay
+    * executor-cached where float lists spill. Returns the float centroid
+    * table. */
   def writeIvfIndexQuantized(e: DataFrame, tableName: String, path: String,
-      nlist: Int = 10, buckets: Int = 8): DataFrame = {
-    val base = quantize(e).localCheckpoint(true)
-    val model = kmeansModel(base, nlist)
-    val assigned = assignTo(base, model)
-      .select(col("vec_id"), col("qv"), col("qnrm"), col("c_id"))
-    // staged rebuild (Staged.commit): the live index serves while the
-    // new generation builds; promote is a catalog rename
-    graft.sources.Staged.commit(e.sparkSession, tableName, path) {
-      (tbl, p) =>
-        assigned
-          .repartition(col("c_id"))
-          .write
-          .option("path", p)
-          .bucketBy(buckets, "c_id")
-          .sortBy("c_id")
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .saveAsTable(tbl)
-    }
-    centroidFrame(e.sparkSession, model)
-  }
+      nlist: Int = 10, buckets: Int = 8): DataFrame =
+    centroidFrame(e.sparkSession,
+      buildIvf(e, tableName, path, nlist, buckets)((_, _) => Int8Codec))
 
-  /** Search a quantized persisted IVF index ([[writeIvfIndexQuantized]]):
-    * queries rank the float centroid table for their `nprobe` nearest
-    * lists (float space — the query set is small), then meet the
-    * bucketed code lists in a `c_id` equijoin and score with the
-    * integer [[graft.functions.ByteDot]] kernel — bit-deterministic
-    * accumulation, no FP summation-order hazard, 8× less data read per
-    * probed list. Zero-norm codes are excluded on both sides (their
-    * cosine is 0/0 = NaN, which would sort above every real score). */
   def searchIvfIndexQuantized(spark: SparkSession, tableName: String,
       centroids: DataFrame, queries: DataFrame, k: Int,
       nprobe: Int = 2): DataFrame =
-    ranked(ivfScoredQuantized(
-      ivfProbesQuantized(CentroidModel.of(centroids), queries, nprobe),
-      graft.sources.Staged.liveTable(spark, tableName)), k)
+    Int8Codec.search(CentroidModel.of(centroids), queries, k, nprobe,
+      Staged.liveTable(spark, tableName))
 
-  /** The quantized probe lists (query_id, qv, qnrm, c_id): centroid
-    * ranking in FLOAT space (the build's own discipline), codes carried
-    * for scoring — shared by [[searchIvfIndexQuantized]] and its delta
-    * face. */
-  private def ivfProbesQuantized(model: CentroidModel, queries: DataFrame,
-      nprobe: Int): DataFrame =
-    probeLists(quantize(queries).filter(col("qnrm") > lit(0.0))
-      .select(col("vec_id").as("query_id"), col("v"), col("nrm"),
-        col("qv"), col("qnrm")), model, nprobe)
-      .select(col("query_id"), col("qv"), col("qnrm"), col("c_id"))
-
-  /** Score quantized probe lists against one code-list frame (zero-norm
-    * codes fenced on the index side), UNRANKED. */
-  private def ivfScoredQuantized(probes: DataFrame,
-      index: DataFrame): DataFrame =
-    probes.as("q")
-      .join(index.filter(col("qnrm") > lit(0.0)).as("c"),
-        col("q.c_id") === col("c.c_id") &&
-          col("query_id") =!= col("c.vec_id"))
-      .withColumn("score", quantizedScore)
-      .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
-        col("score"))
-
-  /** [[searchIvfIndexQuantized]] over base ∪ live delta — the
-    * [[searchIvfIndexDelta]] shape for the quantized family (probes
-    * once, each side its own equijoin, union of SCORED rows into the
-    * one bounded rank). */
   def searchIvfIndexQuantizedDelta(spark: SparkSession, tableName: String,
       centroids: DataFrame, queries: DataFrame, k: Int,
-      nprobe: Int = 2): DataFrame = {
-    val model = CentroidModel.of(centroids)
-    val index = requireCentroidAlignment(spark, tableName, model)
-    val probes = ivfProbesQuantized(model, queries, nprobe)
-      .localCheckpoint(true)
-    val scored = ivfScoredQuantized(probes, index)
-    ivfDelta(spark, tableName, Seq("qv", "qnrm")) match {
-      case Some(dp) =>
-        ranked(scored.unionByName(ivfScoredQuantized(probes, dp)), k)
-      case None => ranked(scored, k)
-    }
-  }
+      nprobe: Int = 2): DataFrame =
+    searchIvfDelta(spark, tableName, CentroidModel.of(centroids), Int8Codec,
+      queries, k, nprobe)
 
   /** Cross-table generation fence for the two-artifact IVF layout
     * ([[writeIvfIndex]] with persistCentroids): centroids and index
@@ -1687,15 +1610,15 @@ object Knn {
     index
   }
 
-  /** Search a persisted IVF index ([[writeIvfIndex]]): queries take the
-    * `nprobe` nearest lists from the centroid model, then meet the
+  /** Search a persisted float IVF index ([[writeIvfIndex]]): queries take
+    * the `nprobe` nearest lists from the centroid model, then meet the
     * bucketed index in a `c_id` equijoin — the index side arrives
     * pre-partitioned (zero Exchange, PlanSpec-asserted), so at 100 TB
     * the scan touches only the probed lists' buckets. */
   def searchIvfIndex(spark: SparkSession, tableName: String,
       centroids: DataFrame, queries: DataFrame, k: Int,
       nprobe: Int = 2): DataFrame =
-    searchIvfIndexOn(graft.sources.Staged.liveTable(spark, tableName),
+    searchIvfIndexOn(Staged.liveTable(spark, tableName),
       CentroidModel.of(centroids), queries, k, nprobe)
 
   /** [[searchIvfIndex]] over an ALREADY-RESOLVED index frame — the face
@@ -1707,119 +1630,112 @@ object Knn {
   def searchIvfIndexOn(index: DataFrame,
       model: CentroidModel, queries: DataFrame, k: Int,
       nprobe: Int = 2): DataFrame =
-    ranked(ivfScored(ivfProbes(model, queries, nprobe), index), k)
+    FloatCodec.search(model, queries, k, nprobe, index)
 
-  /** The per-query probe lists (query_id, v, nrm, c_id): the `nprobe`
-    * nearest centroids of the model — the ONE probe derivation shared
-    * by [[searchIvfIndexOn]] and the delta face (which scores the same
-    * probes against two frames). */
-  private def ivfProbes(model: CentroidModel, queries: DataFrame,
-      nprobe: Int): DataFrame =
-    probeLists(queries.filter(finiteNorm(col("nrm")))
-      .select(col("vec_id").as("query_id"), col("v"), col("nrm")),
-      model, nprobe)
+  // ───── ANN delta (r18 verdict #1: a daily crawl against a weekly
+  // re-cluster must not pay the weekly cost — the frozen-model posture of
+  // appendDocVectorIndexDelta applied to the IVF layouts) ─────
 
-  /** Score probe lists against one inverted-list frame — the c_id
-    * equijoin + float cosine, UNRANKED (the delta face unions two
-    * scored frames into the one bounded rank). */
-  private def ivfScored(probes: DataFrame, index: DataFrame): DataFrame =
-    probes.as("q").join(index.as("c"),
-        col("q.c_id") === col("c.c_id") &&
-          col("query_id") =!= col("c.vec_id"))
-      .withColumn("score", cosine)
-      .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
-        col("score"))
-
-  // ───── ANN delta-append (r18 verdict #1: the serving indexes were the
-  // last full-rebuild wall — a daily crawl against a weekly re-cluster
-  // must not pay the weekly cost. The appendDocVectorIndexDelta frozen-
-  // model posture applied to the IVF layouts: the delta is assigned to
-  // the FROZEN centroids; re-clustering is the full-rebuild cadence.) ──
-
-  /** The live IVF delta rows for `tableName` (same stored schema as the
-    * family's base rows, `carry` = the family's payload columns), or
-    * None when absent or STALE — the in-table `base_gen` marker no
-    * longer matches the main table's generation because a rebuild or
-    * [[mergeIvfIndex]] promoted since (the docVectorDelta posture: one
-    * table, one atomic commit, no cross-table crash window at all). */
+  /** The live IVF delta rows for `tableName` in the list columns of its
+    * live `base`, or None when absent, from another layout, or STALE —
+    * the in-table `base_gen` marker no longer matches the main table's
+    * generation because a rebuild or [[mergeIvfIndex]] promoted since
+    * (one table, one atomic commit, no cross-table crash window). */
   private[similarity] def ivfDelta(spark: SparkSession, tableName: String,
-      carry: Seq[String]): Option[DataFrame] = {
+      base: DataFrame): Option[DataFrame] = {
     val dt = s"${tableName}_delta"
-    graft.sources.Staged.recover(spark, dt)
+    Staged.recover(spark, dt)
     if (!spark.catalog.tableExists(dt)) None
     else {
       val d = spark.table(dt)
-      // a delta table from another family/layout (missing the marker
-      // or this family's payload columns) is not serviceable — the
-      // next append overwrites it (the rawTextDelta legacy posture)
+      val cols = listColumns(base)
+      // not serviceable: the next append overwrites it
       if (!d.columns.contains("base_gen") ||
-          !carry.forall(d.columns.contains)) return None
+          !cols.forall(d.columns.contains)) return None
       val bg = d.select(col("base_gen")).limit(1).collect()
       if (bg.nonEmpty && bg.head.getString(0) ==
-          graft.sources.Staged.generation(spark, tableName))
-        Some(d.select(col("vec_id") +: carry.map(col) :+ col("c_id"): _*))
+          Staged.generation(spark, tableName))
+        Some(d.select(cols.map(col): _*))
       else None
     }
   }
 
-  /** The shared delta-append tail for both IVF families: disjointness
-    * fences (vec_ids must be NEW — the appendTextIndexDelta contract),
-    * old-delta union (a repeat append extends the generation,
-    * delta-sized rewrites only), and ONE Staged commit of the bucketed
-    * delta rows with the in-table `base_gen` marker. `assigned` rows
-    * are ALREADY assigned to the frozen centroids by the caller. */
-  private def appendIvfDeltaRows(spark: SparkSession, index: DataFrame,
-      assigned: DataFrame, tableName: String, path: String,
-      carry: Seq[String], buckets: Int): Unit = {
+  /** The ONE delta append: arriving vectors (fenced like the build) are
+    * assigned to the FROZEN coarse model and encoded under the codec's
+    * frozen model — re-training is the full-rebuild cadence — and land
+    * in `<table>_delta` ([[writeLists]]) marked with the base generation,
+    * so the batch promotes in ONE atomic commit; a repeat append extends
+    * the generation. Fences, by name: [[requireCentroidAlignment]]
+    * rejects a coarse model from another generation BEFORE any
+    * assignment (mismatched c_ids would equijoin to nothing), and the
+    * disjointness fences reject vec_ids already indexed or already in
+    * the live delta. Contract (DeltaIndexSpec, per codec): probe over
+    * base ∪ delta ≡ a rebuild with the same frozen models — exactly, as
+    * assignment and encoding are pure per-vector functions. `models`
+    * resolves after the base table's existence check. */
+  private def appendIvf(eNew: DataFrame, tableName: String, path: String,
+      buckets: Int, face: String)(
+      models: => (CentroidModel, IvfCodec)): Unit = {
+    val spark = eNew.sparkSession
+    Staged.recover(spark, tableName)
+    require(spark.catalog.tableExists(tableName),
+      s"append${face}Delta: no base index $tableName — build it with " +
+        s"write$face first")
+    val (coarse, codec) = models
+    val index = requireCentroidAlignment(spark, tableName, coarse)
+    val base = eNew.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
+    val assigned = codec.stored(assignTo(base, coarse))
+      .select(listColumns(index).map(col): _*)
     val newIds = assigned.select(col("vec_id")).distinct()
     val clashBase = index.join(broadcast(newIds), Seq("vec_id"),
       "left_semi").count()
     require(clashBase == 0L,
-      s"appendIvfIndexDelta($tableName): $clashBase already-indexed " +
+      s"append${face}Delta($tableName): $clashBase already-indexed " +
         "vec_ids in the delta batch — a delta holds only NEW vectors " +
         "(re-embeds go through rebuild or the merge cadence)")
-    val old = ivfDelta(spark, tableName, carry)
+    val old = ivfDelta(spark, tableName, index)
     old.foreach { op =>
       val clashDelta = op.join(broadcast(newIds), Seq("vec_id"),
         "left_semi").count()
       require(clashDelta == 0L,
-        s"appendIvfIndexDelta($tableName): $clashDelta vec_ids already " +
+        s"append${face}Delta($tableName): $clashDelta vec_ids already " +
           "in the live delta — batches must be disjoint")
     }
-    val baseGen = graft.sources.Staged.generation(spark, tableName)
+    val baseGen = Staged.generation(spark, tableName)
     // materialize before the commit drops the old delta the plan reads
     val rows = old.map(_.unionByName(assigned)).getOrElse(assigned)
       .localCheckpoint(true)
       .withColumn("base_gen", lit(baseGen))
-    graft.sources.Staged.commit(spark, s"${tableName}_delta",
-        s"${path}_delta") { (tbl, p) =>
-      rows
-        .repartition(col("c_id"))
-        .write
-        .option("path", p)
-        .bucketBy(buckets, "c_id")
-        .sortBy("c_id")
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .saveAsTable(tbl)
-    }
+    writeLists(s"${tableName}_delta", s"${path}_delta", buckets, rows)
   }
 
-  /** Generation accounting for an IVF delta (r24 — the
-    * textIndexDeltaAudit / docVectorDeltaAudit sibling for the ANN
-    * family, so every delta family carries its merge-scheduling ops
-    * row): stored-vector masses and the integer half-up milli share of
-    * the serving index the live delta holds. A stale/absent delta
-    * reports zero delta mass — the post-merge/post-rebuild steady
-    * state (a silently-ignored stale delta SHOWS here). Reads two
-    * count aggregates; `carry` names the family's payload columns
-    * (float `v`/`nrm`, int8 `qv`/`qnrm`, PQ `codes`). The counts are
-    * pure functions of the corpus + the split + the finiteNorm fence,
-    * so the row sits under the hash gate. */
-  def ivfDeltaAudit(spark: SparkSession, tableName: String,
-      carry: Seq[String] = Seq("v", "nrm")): DataFrame = {
-    val nBase = graft.sources.Staged.liveTable(spark, tableName)
-      .agg(count(lit(1)).as("n_vecs_base"))
-    val nDelta = ivfDelta(spark, tableName, carry)
+  /** The ONE delta search — base ∪ live delta. The live index resolves
+    * once, through the alignment fence (the searchIvfIndexOn TOCTOU
+    * posture); probe lists are computed ONCE and each side is scored as
+    * its OWN c_id equijoin before the one bounded rank — unioning the
+    * two index frames first would erase the base scan's bucketed
+    * partitioning and re-shuffle the whole index. With no serviceable
+    * delta this is exactly the base search. */
+  private def searchIvfDelta(spark: SparkSession, tableName: String,
+      coarse: CentroidModel, codec: IvfCodec, queries: DataFrame, k: Int,
+      nprobe: Int): DataFrame = {
+    val index = requireCentroidAlignment(spark, tableName, coarse)
+    val probes = codec.probes(queries, coarse, nprobe).localCheckpoint(true)
+    ranked(ivfDelta(spark, tableName, index).foldLeft(
+      codec.scored(probes, index))((s, dp) =>
+        s.unionByName(codec.scored(probes, dp))), k)
+  }
+
+  /** Generation accounting for an IVF delta of any codec (the
+    * textIndexDeltaAudit sibling): stored-vector masses and the integer
+    * half-up milli share the live delta holds. A stale/absent delta
+    * reports zero delta mass, so a silently-ignored stale delta SHOWS
+    * here. Pure counts over the corpus, the split and the finiteNorm
+    * fence — the row sits under the hash gate. */
+  def ivfDeltaAudit(spark: SparkSession, tableName: String): DataFrame = {
+    val base = Staged.liveTable(spark, tableName)
+    val nBase = base.agg(count(lit(1)).as("n_vecs_base"))
+    val nDelta = ivfDelta(spark, tableName, base)
       .map(_.agg(count(lit(1)).as("n_vecs_delta")))
       .getOrElse(spark.range(1).select(lit(0L).as("n_vecs_delta")))
     nBase.crossJoin(broadcast(nDelta))
@@ -1830,127 +1746,45 @@ object Knn {
                 ELSE 0 END""").as("delta_share_milli"))
   }
 
-  /** Append a crawl delta to a persisted FLOAT IVF index
-    * ([[writeIvfIndex]]): arriving vectors are assigned to the FROZEN
-    * centroid model (never re-trained here — a re-cluster is the
-    * full-rebuild cadence, exactly the frozen-vocab contract of the
-    * doc-vector family) and land bucketed by `c_id` in
-    * `<table>_delta`, marked with the base generation in-table so the
-    * whole batch promotes in ONE atomic Staged commit.
-    *
-    * Contract (DeltaIndexSpec pins it): probe over base ∪ delta ≡ a
-    * full [[writeIvfIndex]]-shaped rebuild that ASSIGNS with the same
-    * frozen centroids — exactly, not approximately: assignment is a
-    * pure per-vector function of (v, centroids), so base rows keep
-    * their lists and delta rows get the lists the rebuild would give
-    * them. The alignment fence ([[requireCentroidAlignment]]) rejects
-    * a centroid frame from another generation BEFORE any assignment —
-    * mismatched c_ids would land delta lists that every probe
-    * equijoins to nothing (the silent-empty class). */
+  /** Append a crawl delta to a float IVF index ([[appendIvf]]). */
   def appendIvfIndexDelta(eNew: DataFrame, tableName: String,
-      path: String, centroids: DataFrame, buckets: Int = 8): Unit = {
-    val spark = eNew.sparkSession
-    graft.sources.Staged.recover(spark, tableName)
-    require(spark.catalog.tableExists(tableName),
-      s"appendIvfIndexDelta: no base index $tableName — build it with " +
-        "writeIvfIndex first")
-    val model = CentroidModel.of(centroids)
-    val index = requireCentroidAlignment(spark, tableName, model)
-    val base = eNew.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
-    val assigned = assignTo(base, model)
-      .select(col("vec_id"), col("v"), col("nrm"), col("c_id"))
-    appendIvfDeltaRows(spark, index, assigned, tableName, path,
-      Seq("v", "nrm"), buckets)
-  }
+      path: String, centroids: DataFrame, buckets: Int = 8): Unit =
+    appendIvf(eNew, tableName, path, buckets, "IvfIndex")(
+      (CentroidModel.of(centroids), FloatCodec))
 
-  /** [[appendIvfIndexDelta]] for the QUANTIZED family
-    * ([[writeIvfIndexQuantized]]): same frozen-centroid assignment (in
-    * float space — the build's own discipline), stored rows carry the
-    * int8 codes. Degenerate vectors quantize to zero codes and are
-    * excluded by the probes' qnrm > 0 fence, mirroring the build. */
   def appendIvfIndexQuantizedDelta(eNew: DataFrame, tableName: String,
-      path: String, centroids: DataFrame, buckets: Int = 8): Unit = {
-    val spark = eNew.sparkSession
-    graft.sources.Staged.recover(spark, tableName)
-    require(spark.catalog.tableExists(tableName),
-      s"appendIvfIndexQuantizedDelta: no base index $tableName — build " +
-        "it with writeIvfIndexQuantized first")
-    val model = CentroidModel.of(centroids)
-    val index = requireCentroidAlignment(spark, tableName, model)
-    val base = quantize(eNew).localCheckpoint(true)
-    val assigned = assignTo(base, model)
-      .select(col("vec_id"), col("qv"), col("qnrm"), col("c_id"))
-    appendIvfDeltaRows(spark, index, assigned, tableName, path,
-      Seq("qv", "qnrm"), buckets)
-  }
+      path: String, centroids: DataFrame, buckets: Int = 8): Unit =
+    appendIvf(eNew, tableName, path, buckets, "IvfIndexQuantized")(
+      (CentroidModel.of(centroids), Int8Codec))
 
-  /** Search a float IVF index over base ∪ live delta — the daily-crawl
-    * serving shape. The probe lists are computed ONCE (checkpointed —
-    * two scoring consumers) and each side is scored as its OWN c_id
-    * equijoin before the one bounded rank: unioning the two index
-    * frames first would erase the base scan's bucketed
-    * outputPartitioning and re-shuffle the whole index, while the
-    * union of SCORED rows is probe-sized. With no serviceable delta
-    * this is exactly [[searchIvfIndex]]. Resolves the live index once
-    * through the alignment fence and probes THAT frame (the
-    * searchIvfIndexOn TOCTOU posture). */
+  /** [[searchIvfIndex]] over base ∪ live delta ([[searchIvfDelta]]). */
   def searchIvfIndexDelta(spark: SparkSession, tableName: String,
       centroids: DataFrame, queries: DataFrame, k: Int,
-      nprobe: Int = 2): DataFrame = {
-    val model = CentroidModel.of(centroids)
-    val index = requireCentroidAlignment(spark, tableName, model)
-    val probes = ivfProbes(model, queries, nprobe).localCheckpoint(true)
-    val scored = ivfScored(probes, index)
-    ivfDelta(spark, tableName, Seq("v", "nrm")) match {
-      case Some(dp) => ranked(scored.unionByName(ivfScored(probes, dp)), k)
-      case None => ranked(scored, k)
-    }
-  }
+      nprobe: Int = 2): DataFrame =
+    searchIvfDelta(spark, tableName, CentroidModel.of(centroids),
+      FloatCodec, queries, k, nprobe)
 
-  /** Compact the live delta into the base index — one bucketed
-    * index-ROW union write, ZERO assignment recompute (assignment cost
-    * is paid once per vector, at its append — the mergeTextIndex
-    * claim), ONE Staged commit. Fully idempotent: the promote flips
-    * the base generation, which STALES the delta for every probe
-    * instantly; the delta drop is cleanup, not correctness, and a
-    * crash-rerun finds no serviceable delta and just sweeps. Works
-    * unchanged for both families (`carry` = the family's payload
-    * columns). The frozen centroid model is NOT retrained here —
-    * re-clustering is the full-rebuild cadence, by design. */
+  /** Compact the live delta into the base index, any codec: one
+    * index-ROW union write in the base's own list columns, ZERO
+    * assignment or encoding recompute, ONE Staged commit. Idempotent:
+    * the promote STALES the delta for every probe instantly, so the drop
+    * is cleanup and a crash-rerun just sweeps. Models are NOT retrained
+    * — re-clustering is the full-rebuild cadence. */
   def mergeIvfIndex(spark: SparkSession, tableName: String, path: String,
-      carry: Seq[String] = Seq("v", "nrm"), buckets: Int = 8): Unit = {
-    ivfDelta(spark, tableName, carry) match {
-      case None =>
-        spark.sql(s"DROP TABLE IF EXISTS `${tableName}_delta`")
-      case Some(dp) =>
-        val cols = (Seq("vec_id") ++ carry ++ Seq("c_id")).map(col)
-        val merged = graft.sources.Staged.liveTable(spark, tableName)
-          .select(cols: _*)
-          .unionByName(dp)
-        graft.sources.Staged.commit(spark, tableName, path) { (tbl, p) =>
-          merged
-            .repartition(col("c_id"))
-            .write
-            .option("path", p)
-            .bucketBy(buckets, "c_id")
-            .sortBy("c_id")
-            .mode(org.apache.spark.sql.SaveMode.Overwrite)
-            .saveAsTable(tbl)
-        }
-        spark.sql(s"DROP TABLE IF EXISTS `${tableName}_delta`")
+      buckets: Int = 8): Unit = {
+    val base = Staged.liveTable(spark, tableName)
+    ivfDelta(spark, tableName, base).foreach { dp =>
+      writeLists(tableName, path, buckets,
+        base.select(listColumns(base).map(col): _*).unionByName(dp))
     }
+    spark.sql(s"DROP TABLE IF EXISTS `${tableName}_delta`")
   }
-
-  /** IVF LIST-BALANCE audit over a PERSISTED index table (the
-    * rebalanceAudit discipline applied to inverted lists): list
-    * population, total vectors, heaviest/lightest lists, and
-    * max-over-ideal as the all-integer half-up milli (1000 = perfectly
-    * balanced lists). Probe latency is gated by the heaviest probed
-    * list — an imbalance creep after corpus drift is the "rebuild the
-    * index" signal, invisible in search results until tail latency
-    * pages. One hash agg over the bucketed index scan (zero Exchange:
-    * the table is bucketed by c_id, the agg key) to ≤ nlist rows.
-    * rows-only: the list assignment is seeded k-means. */
+  /** IVF LIST-BALANCE audit over a persisted index of any codec: list
+    * population, heaviest/lightest lists, and max-over-ideal as the
+    * integer half-up milli (1000 = perfectly balanced). Probe latency is
+    * gated by the heaviest probed list — imbalance creep after drift is
+    * the "rebuild the index" signal. One hash agg over the bucketed scan
+    * (zero Exchange). Rows-only: lists come from seeded k-means. */
   def ivfBalanceAudit(spark: SparkSession, tableName: String): DataFrame =
     graft.sources.Staged.liveTable(spark, tableName)
       .groupBy(col("c_id")).agg(count(lit(1)).as("list_size"))
@@ -1964,9 +1798,6 @@ object Knn {
         expr("(2 * max_list * n_lists * 1000 + n_vectors) div " +
           "(2 * n_vectors)"))
 
-  /** IVF: k-means centroids ([[kmeansCentroids]]; at scale trained once
-    * offline), every vector joins its nearest centroid's inverted list;
-    * queries probe the `nprobe` nearest lists. */
   /** ANN quality audit — recall@k of the IVF search against the brute
     * baseline on the same probe set, as ONE auditable row (the
     * lsh_bucket_audit discipline applied to search QUALITY instead of
@@ -1987,15 +1818,10 @@ object Knn {
       brute(e, queryPred, k),
       ivf(e, queryPred, k, nprobe, nlist), k)
 
-  /** [[ivfRecallAudit]] for the PRODUCTION path: the persisted
-    * quantized IVF probe ([[writeIvfIndexQuantized]] /
-    * [[searchIvfIndexQuantized]]) against the quantized brute baseline
-    * on the same probes. Both sides rank with the SAME integer scoring
-    * chain, so the recall number isolates exactly what the list
-    * PRUNING costs — no quantization-error confound (that error is
-    * bounded separately by the knn_quantized recall spec against float
-    * brute). The index build is the once-per-release job; the audit is
-    * the per-release sign-off row next to it. */
+  /** [[ivfRecallAudit]] for the PRODUCTION path: the persisted int8
+    * probe against the quantized brute baseline. Both sides rank with the
+    * SAME integer chain, so the number isolates exactly what list
+    * PRUNING costs — no quantization-error confound. */
   def ivfQuantizedRecallAudit(spark: SparkSession, e: DataFrame,
       tableName: String, path: String, queryPred: Column, k: Int,
       nprobe: Int = 2, nlist: Int = 10): DataFrame = {
@@ -2024,6 +1850,9 @@ object Knn {
           col("n_brute_pairs").cast("double") + lit(0.5)).cast("long"))
   }
 
+  /** IVF: k-means centroids ([[kmeansCentroids]]; at scale trained once
+    * offline), every vector joins its nearest centroid's inverted list;
+    * queries probe the `nprobe` nearest lists. */
   def ivf(e: DataFrame, queryPred: Column, k: Int,
       nprobe: Int = 2, nlist: Int = 10): DataFrame = {
     // materialize the (id, v, nrm) base once: the k-means rounds, the
@@ -2032,22 +1861,14 @@ object Knn {
     // finiteNorm fence keeps degenerate vectors out of the float path
     val base = e.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
     val model = kmeansModel(base, nlist)
-    val assigned = assignTo(base, model)
-      .select(col("vec_id"), col("v"), col("nrm"), col("c_id"))
-    ranked(ivfScored(ivfProbes(model, base.filter(queryPred), nprobe),
-      assigned), k)
+    FloatCodec.search(model, base.filter(queryPred), k, nprobe,
+      FloatCodec.stored(assignTo(base, model)))
   }
-  // ── Product quantization (IVF-PQ — the NINTH persisted-index family) ──
-  //
-  // The memory-scale end of the ANN ladder (SURVEY §2-F): brute → LSH →
-  // IVF → IVF+int8 → IVF-PQ. int8 scalar quantization compresses 8× but
-  // still stores one code PER DIMENSION; product quantization stores one
-  // code per SUBSPACE (m codes for dim dims — dim/m× further), with
-  // scoring against a per-query lookup table (Jégou et al., PAMI 2011:
-  // "Product quantization for nearest neighbor search"). At the 100 TB
-  // design point this is the difference between an embedding index that
-  // fits executor memory and one that cannot: 64-dim float vectors are
-  // 256 B/row, int8 codes 64 B, PQ codes (m=8) ~32 B including ids.
+
+  // ── Product quantization (IVF-PQ) ── the memory-scale end of the ANN
+  // ladder: int8 stores one code per DIMENSION, PQ one per SUBSPACE (m
+  // codes for dim dims), scored against a per-query lookup table — 64-dim
+  // float vectors are 256 B/row, int8 codes 64 B, PQ codes (m=8) ~32 B.
 
   /** Default PQ geometry: 8 subspaces, 16 centroids each — dim must be
     * divisible by [[PqSubspaces]] (in-plan fence in [[pqSubvectors]]). */
@@ -2056,20 +1877,14 @@ object Knn {
 
   /** Slice every unit-normalized vector into `m` equal subvectors:
     * (vec_id, sub_id ∈ [0,m), sv, sv2 = |sv|²). Normalizing FIRST makes
-    * the additive ADC inner-product estimate approximate the COSINE
-    * directly (Σ_j dot(q_j, c_j) over unit vectors), so PQ scores rank
-    * on the same scale as every other ANN path here. The divisibility
-    * fence raises in-plan (momentGuard posture — a truncating slice
-    * would silently drop trailing dimensions, a wrong-answer
-    * generator). Slice-then-normalize, NOT normalize-then-slice: a
-    * whole-vector `u = transform(v, x -> x/nrm)` sibling alias gets
-    * inlined by CollapseProject into each of the m slice calls — the
-    * r12 hidden-O(m·dim) recompute class (r15 advice). Slicing `v`
-    * first and dividing inside each slice touches every element exactly
-    * once regardless of what the optimizer inlines, with the identical
-    * IEEE division per element (each element belongs to exactly one
-    * slice), so scores are bit-unchanged. `nrm` is a real column of the
-    * caller's materialized base, never a recomputed alias chain. */
+    * the additive ADC inner-product estimate approximate the COSINE, so
+    * PQ scores rank on the scale of every other ANN path here. The
+    * divisibility fence raises in-plan (a truncating slice would drop
+    * trailing dimensions silently). Slice-then-normalize, NOT
+    * normalize-then-slice: a whole-vector `transform(v, x -> x/nrm)`
+    * alias gets inlined by CollapseProject into each of the m slice
+    * calls (the hidden-O(m·dim) recompute class); dividing inside each
+    * slice touches every element once, with the identical IEEE division. */
   private[graft] def pqSubvectors(e: DataFrame, m: Int): DataFrame =
     e.filter(finiteNorm(col("nrm")))
       .withColumn("dimguard",
@@ -2102,15 +1917,11 @@ object Knn {
     * on. Returns (sub_id, c_id, cv, code_idx, cn2) with code_idx the
     * DENSE 0-based position of c_id within its subspace.
     *
-    * Determinism scope (r15 advice): the centroid update is a
-    * distributed sum, which is order-dependent across PARTITIONINGS —
-    * so codebooks (and thus codes, where an assignment is near-tied)
-    * are pinned deterministic for a fixed session/partitioning (what
-    * PqSpec rebuilds under), NOT bit-identical across arbitrary
-    * environments. That is the honest contract for a rows-only
-    * approximate family; cross-environment reproducibility of SERVED
-    * results comes from persisting the trained artifact
-    * ([[writeIvfPqIndex]]) and probing it, never from retraining. */
+    * Determinism scope: the centroid update is a distributed sum,
+    * order-dependent across PARTITIONINGS — codebooks are deterministic
+    * for a fixed session/partitioning (what PqSpec rebuilds under), not
+    * across environments; reproducible SERVED results come from
+    * persisting the trained artifact ([[writeIvfPqIndex]]). */
   def pqCodebook(base: DataFrame, m: Int = PqSubspaces,
       ksub: Int = PqCodesPerSub, iters: Int = 2): DataFrame =
     codebookFrame(base.sparkSession, pqCodebookModel(base, m, ksub, iters))
@@ -2179,56 +1990,27 @@ object Knn {
       .select(col("vec_id"), PqEncode(col("v"), col("nrm"),
         CentroidModel.codebook(codebook), m).as("codes"))
 
-  /** Build + persist the IVF-PQ index: coarse IVF assignment in float
-    * space (the writeIvfIndex discipline — build accuracy is a
-    * once-per-corpus offline cost), PQ codes per vector in the lists.
-    * The bucketed layout (bucketBy c_id) keeps the probe equijoin free
-    * of index-side Exchange exactly like the other persisted-index
-    * families; [[graft.sources.Staged]] gives the tmp→aside→promote
-    * rebuild with crash self-healing.
-    *
-    * ALL THREE artifacts persist (r15 advice): the code lists at
-    * `tableName`, the coarse centroids at `tableName_coarse`, the
-    * codebook at `tableName_codebook` — the streaming probe
-    * ([[graft.streaming.Streaming.runKnnPqProbe]]) resolves the two
-    * side tables BY NAME via Staged.liveTable, so they must be
-    * crash-safe catalog artifacts, not just returned frames. Side
-    * tables commit first, the main code table last (the Staged
-    * multi-table discipline: the main-table promote is the commit
-    * point probes key on). Returns (coarse, codebook) read back from
-    * the promoted tables — tiny, broadcast at probe time. */
+  /** Build + persist the IVF-PQ index ([[buildIvf]] with a [[PqCodec]]):
+    * coarse lists in float space, a codebook trained on the same fenced
+    * base, PQ codes in the bucketed lists. ALL THREE artifacts persist —
+    * the code lists at `tableName`, the coarse centroids at
+    * `tableName_coarse`, the codebook at `tableName_codebook` — because
+    * the streaming probe and the delta faces resolve the side tables BY
+    * NAME. Returns (coarse, codebook) read back from the promoted tables. */
   def writeIvfPqIndex(e: DataFrame, tableName: String, path: String,
       nlist: Int = 10, m: Int = PqSubspaces, ksub: Int = PqCodesPerSub,
       buckets: Int = 8): (DataFrame, DataFrame) = {
     val spark = e.sparkSession
-    val base = e.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
-    val coarse = kmeansModel(base, nlist)
-    val codebook = pqCodebookModel(base, m, ksub)
-    graft.sources.Staged.commit(spark, s"${tableName}_coarse",
-        s"${path}_coarse") { (tbl, p) =>
-      centroidFrame(spark, coarse).write.option("path", p)
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).saveAsTable(tbl)
+    buildIvf(e, tableName, path, nlist, buckets) { (base, coarse) =>
+      val codebook = pqCodebookModel(base, m, ksub)
+      commitSide(s"${tableName}_coarse", s"${path}_coarse",
+        centroidFrame(spark, coarse))
+      commitSide(s"${tableName}_codebook", s"${path}_codebook",
+        codebookFrame(spark, codebook))
+      new PqCodec(codebook, m)
     }
-    graft.sources.Staged.commit(spark, s"${tableName}_codebook",
-        s"${path}_codebook") { (tbl, p) =>
-      codebookFrame(spark, codebook).write.option("path", p)
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).saveAsTable(tbl)
-    }
-    val rows = assignTo(base, coarse).select(col("vec_id"), col("c_id"),
-      PqEncode(col("v"), col("nrm"), codebook, m).as("codes"))
-    graft.sources.Staged.commit(spark, tableName, path) {
-      (tbl, p) =>
-        rows
-          .repartition(col("c_id"))
-          .write
-          .option("path", p)
-          .bucketBy(buckets, "c_id")
-          .sortBy("c_id")
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .saveAsTable(tbl)
-    }
-    (graft.sources.Staged.liveTable(spark, s"${tableName}_coarse"),
-      graft.sources.Staged.liveTable(spark, s"${tableName}_codebook"))
+    (Staged.liveTable(spark, s"${tableName}_coarse"),
+      Staged.liveTable(spark, s"${tableName}_codebook"))
   }
 
   /** Per-query flattened ADC lookup table: (query_id, lut) with
@@ -2246,103 +2028,50 @@ object Knn {
   /** Search the persisted IVF-PQ index: queries take their `nprobe`
     * lists from the coarse model and their ADC LUTs from the codebook
     * model (both kernels on the query row), then meet the bucketed code
-    * lists in a c_id equijoin and score each candidate with ONE
-    * [[graft.functions.PqAdcScore]] table-lookup pass — O(m) per pair
-    * instead of O(dim), over an index dim/m× smaller than int8 codes.
-    * Scores are deterministic (fixed subspace loop order) and displayed
-    * at floor-half-up 4 decimals like every other score here; ranks
-    * break ties on neighbor_id. */
+    * lists in a c_id equijoin ([[PqCodec]]) — O(m) per pair instead of
+    * O(dim), over an index dim/m× smaller than int8 codes. Scores are
+    * deterministic (fixed subspace loop order); ranks break ties on
+    * neighbor_id. */
   def searchIvfPq(spark: SparkSession, tableName: String,
       coarse: DataFrame, codebook: DataFrame, queries: DataFrame, k: Int,
-      nprobe: Int = 2, m: Int = PqSubspaces): DataFrame =
-    ranked(pqScored(pqProbes(CentroidModel.of(coarse),
-      CentroidModel.codebook(codebook), queries, nprobe, m),
-      graft.sources.Staged.liveTable(spark, tableName)), k)
-
-  /** The PQ probe lists (query_id, c_id, lut): the coarse probe list +
-    * the per-query flattened ADC LUT, both kernel calls on the query
-    * row — shared by [[searchIvfPq]] and its delta face. */
-  private def pqProbes(coarse: CentroidModel, codebook: CentroidModel,
-      queries: DataFrame, nprobe: Int, m: Int): DataFrame =
-    probeLists(queries.filter(finiteNorm(col("nrm")))
-      .select(col("vec_id").as("query_id"), col("v"), col("nrm")),
-      coarse, nprobe)
-      .select(col("query_id"), col("c_id"),
-        PqLut(col("v"), col("nrm"), codebook, m).as("lut"))
-
-  /** Score PQ probe lists against one code-list frame with the O(m)
-    * ADC kernel, UNRANKED. */
-  private def pqScored(probes: DataFrame, index: DataFrame): DataFrame =
-    probes.as("q")
-      .join(index.as("c"),
-        col("q.c_id") === col("c.c_id") &&
-          col("query_id") =!= col("c.vec_id"))
-      .withColumn("score",
-        floor(graft.functions.PqAdcScore(col("c.codes"), col("q.lut"))
-          * lit(10000.0) + lit(0.5)).cast("double") / lit(10000.0))
-      .select(col("query_id"), col("c.vec_id").as("neighbor_id"),
-        col("score"))
-
-  /** Append a crawl delta to the persisted IVF-PQ index — the ANN
-    * delta completed at the memory-scale end of the ladder (r24; the
-    * [[appendIvfIndexDelta]] posture with TWO frozen model artifacts):
-    * delta vectors are assigned to the FROZEN coarse centroids and
-    * ENCODED with the FROZEN codebook (both resolved BY NAME from the
-    * live side tables — the runKnnPqProbe serving posture; retraining
-    * either is the full-rebuild cadence), landing bucketed by `c_id`
-    * with the in-table `base_gen` marker in ONE atomic Staged commit.
-    * The coarse-alignment fence runs before any assignment; the
-    * codebook has no join-observable mismatch signal (code_idx is
-    * dense per subspace by construction), so its freshness rides the
-    * Staged multi-table discipline — side tables promote before the
-    * main table at build, and this append resolves all three at one
-    * entry (the documented single-rename exposure, as everywhere).
-    * Encoding is a pure per-vector function of (v, codebook), so the
-    * delta rows are EXACTLY what a rebuild-with-frozen-model would
-    * store — DeltaIndexSpec pins probe transparency across the merge,
-    * a planted delta duplicate of a base vector surfacing at ~1.0, and
-    * the staleness/disjointness fences. */
-  def appendIvfPqIndexDelta(eNew: DataFrame, tableName: String,
-      path: String, m: Int = PqSubspaces, buckets: Int = 8): Unit = {
-    val spark = eNew.sparkSession
-    graft.sources.Staged.recover(spark, tableName)
-    require(spark.catalog.tableExists(tableName),
-      s"appendIvfPqIndexDelta: no base index $tableName — build it " +
-        "with writeIvfPqIndex first")
-    val (coarse, codebook) = pqModels(spark, tableName)
-    val index = requireCentroidAlignment(spark, tableName, coarse)
-    val base = eNew.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
-    val rows = assignTo(base, coarse).select(col("vec_id"),
-      PqEncode(col("v"), col("nrm"), codebook, m).as("codes"), col("c_id"))
-    appendIvfDeltaRows(spark, index, rows, tableName, path,
-      Seq("codes"), buckets)
+      nprobe: Int = 2, m: Int = PqSubspaces): DataFrame = {
+    val coarseModel = CentroidModel.of(coarse)
+    new PqCodec(CentroidModel.codebook(codebook), m).search(coarseModel,
+      queries, k, nprobe, Staged.liveTable(spark, tableName))
   }
+
+  /** Append a crawl delta to the persisted IVF-PQ index ([[appendIvf]]
+    * with TWO frozen models, both resolved BY NAME from the live side
+    * tables — the runKnnPqProbe serving posture). The coarse-alignment
+    * fence runs before any assignment; the codebook has no
+    * join-observable mismatch signal (code_idx is dense per subspace by
+    * construction), so its freshness rides the Staged multi-table
+    * discipline — side tables promote before the main table at build,
+    * and this append resolves all three at one entry (the documented
+    * single-rename exposure, as everywhere). */
+  def appendIvfPqIndexDelta(eNew: DataFrame, tableName: String,
+      path: String, m: Int = PqSubspaces, buckets: Int = 8): Unit =
+    appendIvf(eNew, tableName, path, buckets, "IvfPqIndex") {
+      val (coarse, codebook) = pqModels(eNew.sparkSession, tableName)
+      (coarse, new PqCodec(codebook, m))
+    }
 
   /** The frozen (coarse, codebook) models of a persisted IVF-PQ index,
     * read from its live side tables. */
   private def pqModels(spark: SparkSession,
       tableName: String): (CentroidModel, CentroidModel) =
-    (CentroidModel.of(graft.sources.Staged.liveTable(spark,
-        s"${tableName}_coarse")),
-      CentroidModel.codebook(graft.sources.Staged.liveTable(spark,
+    (CentroidModel.of(Staged.liveTable(spark, s"${tableName}_coarse")),
+      CentroidModel.codebook(Staged.liveTable(spark,
         s"${tableName}_codebook")))
 
-  /** [[searchIvfPq]] over base ∪ live delta — the [[searchIvfIndexDelta]]
-    * shape for the PQ family: probe lists + LUTs computed once, each
-    * side scored as its own c_id equijoin, scored rows unioned into the
-    * one bounded rank. Frozen artifacts resolved by name. */
+  /** [[searchIvfPq]] over base ∪ live delta ([[searchIvfDelta]]), the
+    * frozen artifacts resolved by name. */
   def searchIvfPqDelta(spark: SparkSession, tableName: String,
       queries: DataFrame, k: Int, nprobe: Int = 2,
       m: Int = PqSubspaces): DataFrame = {
     val (coarse, codebook) = pqModels(spark, tableName)
-    val index = requireCentroidAlignment(spark, tableName, coarse)
-    val probes = pqProbes(coarse, codebook, queries, nprobe, m)
-      .localCheckpoint(true)
-    val scored = pqScored(probes, index)
-    ivfDelta(spark, tableName, Seq("codes")) match {
-      case Some(dp) => ranked(scored.unionByName(pqScored(probes, dp)), k)
-      case None => ranked(scored, k)
-    }
+    searchIvfDelta(spark, tableName, coarse, new PqCodec(codebook, m),
+      queries, k, nprobe)
   }
 
   /** [[ivfRecallAudit]] for the PQ path: persisted IVF-PQ probe vs the

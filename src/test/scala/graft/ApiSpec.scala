@@ -518,6 +518,22 @@ class ApiSpec extends SparkSpec {
         s"the schema with a Spark job per read): ${offenders.mkString(", ")}")
   }
 
+  test("the bucketed c_id inverted-list write appears once under graft.similarity") {
+    import java.nio.file.{Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft/similarity")
+    assert(Files.isDirectory(root), root.toAbsolutePath.toString)
+    // `.bucketBy(<n>, "c_id")` across line breaks too
+    val write = """\.bucketBy\s*\(\s*[^,()]+,\s*"c_id"\s*\)""".r
+    val hits = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+      .flatMap((p: Path) => write.findAllIn(Files.readString(p))
+        .map(_ => root.relativize(p).toString))
+    assert(hits.size == 1,
+      s"bucketed c_id list writes under graft.similarity (every IVF codec " +
+        s"writes through Knn.writeLists): ${hits.mkString(", ")}")
+  }
+
   test("extensions expose native kernels to SQL") {
     spark // force base session first
     SparkSession.clearActiveSession()

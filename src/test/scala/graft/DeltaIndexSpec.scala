@@ -560,11 +560,128 @@ class DeltaIndexSpec extends SparkSpec {
         "quantized brute")
     val pre = rows(Knn.searchIvfIndexQuantizedDelta(spark, tbl, centroids,
       emb.filter(q), k = 10, nprobe = 2))
-    Knn.mergeIvfIndex(spark, tbl, path, carry = Seq("qv", "qnrm"))
+    Knn.mergeIvfIndex(spark, tbl, path)
     assert(!spark.catalog.tableExists(s"${tbl}_delta"))
     assert(rows(Knn.searchIvfIndexQuantized(spark, tbl, centroids,
       emb.filter(q), k = 10, nprobe = 2)) == pre,
       "quantized merge changed the pruned probe result")
+  }
+
+  /** One IVF codec's public faces, for the table-driven delta contract.
+    * `appendStale` appends under a coarse model from another generation. */
+  private case class IvfFaces(name: String,
+      build: (DataFrame, String, String) => Unit,
+      append: (DataFrame, String, String) => Unit,
+      appendStale: (DataFrame, String, String) => Unit,
+      search: (String, DataFrame, Int) => DataFrame,
+      searchDelta: (String, DataFrame, Int) => DataFrame)
+
+  private def centroidFaces(name: String,
+      build: (DataFrame, String, String) => DataFrame,
+      append: (DataFrame, String, String, DataFrame) => Unit,
+      search: (String, DataFrame, DataFrame, Int) => DataFrame,
+      searchDelta: (String, DataFrame, DataFrame, Int) => DataFrame) = {
+    var cents: DataFrame = null
+    IvfFaces(name, (e, t, p) => cents = build(e, t, p),
+      (d, t, p) => append(d, t, p, cents),
+      (d, t, p) => append(d, t, p, cents.withColumn("c_id", col("c_id") + 1L)),
+      (t, q, np) => search(t, cents, q, np),
+      (t, q, np) => searchDelta(t, cents, q, np))
+  }
+
+  private lazy val ivfFaces: Seq[IvfFaces] = {
+    import graft.similarity.Knn
+    import graft.sources.Staged
+    Seq(
+      centroidFaces("float", Knn.writeIvfIndex(_, _, _, nlist = 8),
+        Knn.appendIvfIndexDelta(_, _, _, _),
+        Knn.searchIvfIndex(spark, _, _, _, k = 10, _),
+        Knn.searchIvfIndexDelta(spark, _, _, _, k = 10, _)),
+      centroidFaces("int8", Knn.writeIvfIndexQuantized(_, _, _, nlist = 8),
+        Knn.appendIvfIndexQuantizedDelta(_, _, _, _),
+        Knn.searchIvfIndexQuantized(spark, _, _, _, k = 10, _),
+        Knn.searchIvfIndexQuantizedDelta(spark, _, _, _, k = 10, _)),
+      IvfFaces("pq", (e, t, p) => { Knn.writeIvfPqIndex(e, t, p, nlist = 8); () },
+        Knn.appendIvfPqIndexDelta(_, _, _),
+        (d, t, p) => {
+          // swap the coarse side table for one with shifted ids, then
+          // put the original back
+          val coarse = s"${t}_coarse"
+          val orig = Staged.liveTable(spark, coarse).localCheckpoint(true)
+          def put(df: DataFrame): Unit =
+            Staged.commit(spark, coarse, s"${p}_coarse") { (tbl, pp) =>
+              df.write.option("path", pp).mode("overwrite").saveAsTable(tbl)
+            }
+          put(orig.withColumn("c_id", col("c_id") + 1L))
+          try Knn.appendIvfPqIndexDelta(d, t, p) finally put(orig)
+        },
+        (t, q, np) => Knn.searchIvfPq(spark, t,
+          Staged.liveTable(spark, s"${t}_coarse"),
+          Staged.liveTable(spark, s"${t}_codebook"), q, k = 10, np),
+        (t, q, np) => Knn.searchIvfPqDelta(spark, t, q, k = 10, np)))
+  }
+
+  test("IVF delta contract, every codec (float, int8, PQ): fences fire by name; merge keeps every delta vector and is idempotent; a rebuild stales the delta") {
+    import graft.similarity.Knn
+    def ids(df: DataFrame): Set[Long] =
+      df.select("vec_id").collect().map(_.getLong(0)).toSet
+    def audit(tbl: String): (Long, Long) = {
+      val a = Knn.ivfDeltaAudit(spark, tbl).collect().head
+      (a.getAs[Long]("n_vecs_delta"), a.getAs[Long]("delta_share_milli"))
+    }
+    val fenced = col("nrm") > 0.0 && col("nrm") < Double.PositiveInfinity
+    val baseIds = ids(embBase.filter(fenced))
+    val deltaIds = ids(embDelta.filter(fenced))
+    val q = emb.filter(col("vec_id") < 5)
+    val twin = embBase.orderBy(col("vec_id")).limit(1)
+      .withColumn("vec_id", lit(999999L)).localCheckpoint(true)
+    ivfFaces.foreach { f =>
+      val tbl = s"dlt_contract_${f.name}"
+      val path = freshDir(s"c${f.name}")
+      dropAll(tbl)
+      Seq(s"${tbl}_coarse", s"${tbl}_codebook")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+      f.build(embBase, tbl, path)
+      // disjointness: against the base, then against the live delta
+      val e1 = intercept[IllegalArgumentException] {
+        f.append(embBase.limit(1), tbl, path)
+      }
+      assert(e1.getMessage.contains("already-indexed"), s"${f.name}: $e1")
+      f.append(embDelta, tbl, path)
+      val e2 = intercept[IllegalArgumentException] {
+        f.append(embDelta.limit(1), tbl, path)
+      }
+      assert(e2.getMessage.contains("already in the live delta"),
+        s"${f.name}: $e2")
+      // alignment: a coarse model from another generation is rejected
+      // before any assignment
+      val e3 = intercept[IllegalArgumentException] {
+        f.appendStale(embDelta, tbl, path)
+      }
+      assert(e3.getMessage.contains("generation mismatch"), s"${f.name}: $e3")
+      assert(audit(tbl)._1 == deltaIds.size.toLong && audit(tbl)._2 > 0L,
+        s"${f.name}: ${audit(tbl)}")
+      // merge with no payload argument: every delta vector lands in the
+      // base, the exhaustive probe is unchanged, and a rerun is a no-op
+      val pre = rows(f.searchDelta(tbl, q, 8))
+      assert(pre.exists(r => deltaIds(r(1).asInstanceOf[Long])),
+        s"${f.name}: no served neighbor came from the delta")
+      Knn.mergeIvfIndex(spark, tbl, path)
+      assert(!spark.catalog.tableExists(s"${tbl}_delta"), f.name)
+      assert(ids(spark.table(tbl)) == baseIds ++ deltaIds,
+        s"${f.name}: merge lost delta vectors")
+      assert(rows(f.search(tbl, q, 8)) == pre, s"${f.name}: merge changed the probe")
+      assert(rows(f.searchDelta(tbl, q, 8)) == pre, f.name)
+      Knn.mergeIvfIndex(spark, tbl, path)
+      assert(rows(f.search(tbl, q, 8)) == pre, s"${f.name}: merge not idempotent")
+      // a full rebuild stales a live delta: not served, zero audit mass
+      f.append(twin, tbl, path)
+      assert(audit(tbl)._1 == 1L, s"${f.name}: ${audit(tbl)}")
+      f.build(emb, tbl, path)
+      assert(rows(f.searchDelta(tbl, q, 2)) == rows(f.search(tbl, q, 2)),
+        s"${f.name}: stale delta leaked into the probe after a rebuild")
+      assert(audit(tbl) == ((0L, 0L)), s"${f.name}: ${audit(tbl)}")
+    }
   }
 
   test("live doc-vector delta ingest: micro-batched arrivals converge the probe to the frozen-vocab full vectorization") {
@@ -663,7 +780,7 @@ class DeltaIndexSpec extends SparkSpec {
     val pre = rows(Knn.searchIvfPqDelta(spark, tbl, emb.filter(q),
       k = 10, nprobe = 2))
     assert(pre.nonEmpty)
-    Knn.mergeIvfIndex(spark, tbl, path, carry = Seq("codes"))
+    Knn.mergeIvfIndex(spark, tbl, path)
     assert(!spark.catalog.tableExists(s"${tbl}_delta"))
     val coarse = graft.sources.Staged.liveTable(spark, s"${tbl}_coarse")
     val codebook = graft.sources.Staged.liveTable(spark,

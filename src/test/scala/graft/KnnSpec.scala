@@ -453,6 +453,32 @@ class KnnSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("int8 IVF build fences degenerate vectors: planted zero, NaN and empty vectors leave the centroids and every clean list row unchanged") {
+    import spark.implicits._
+    val dims = e.select(size(col("v"))).head.getInt(0)
+    val maxId = e.agg(max(col("vec_id"))).head.getLong(0)
+    val planted = Knn.embOf(Seq(
+        (maxId + 1L, Seq.fill(dims)(0.0)),
+        (maxId + 2L, Seq.fill(dims)(Double.NaN)),
+        (maxId + 3L, Seq.empty[Double]))
+      .toDF("vec_id", "embedding")
+      .withColumn("label", lit(null).cast(e.schema("label").dataType)))
+    def build(tbl: String, df: org.apache.spark.sql.DataFrame) = {
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      val dir = java.nio.file.Files.createTempDirectory(tbl).toString
+      val cents = Knn.writeIvfIndexQuantized(df, tbl, dir, nlist = 8)
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSet
+      val lists = spark.table(tbl).select("vec_id", "c_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      (cents, lists)
+    }
+    val clean = build("ivfq_fence_clean", e)
+    val dirty = build("ivfq_fence_dirty", e.unionByName(planted))
+    assert(dirty._1 == clean._1, "planted vectors moved the centroids")
+    // equal sets: every clean row kept its list, no planted row stored
+    assert(dirty._2 == clean._2, "planted vectors changed the stored lists")
+  }
+
   test("quantized persisted IVF: int8 lists recall like the float index, bucketed plan carries over") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfq_idx").toString
     spark.sql("DROP TABLE IF EXISTS ivfq_idx")
