@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local SparkSession builder of the entry points (Bench,
-  * Profile, Explain, Verify, VerifySome, Stress, StressDelta):
+  * Profile, Explain, Verify, Stress, StressDelta):
   * `local[cpus]`, one shuffle partition per core, the session time zone
   * pinned to UTC (the [[graft.sources.EventLog.tsUs]] contract), no UI,
   * WARN logging. */

@@ -103,8 +103,7 @@ object StressDelta {
 
     // ── text postings family ──
     val tTbl = "stress_dlt_text"
-    Seq(tTbl, s"${tTbl}_stats", s"${tTbl}_delta", s"${tTbl}_delta_stats")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    graft.sources.Staged.drop(spark, tTbl)
     step("text_build_base") {
       graft.text.TextOps.writeTextIndex(docs.filter(!isDelta), tTbl,
         s"$wh/text")
@@ -140,8 +139,7 @@ object StressDelta {
 
     // ── doc-vector family ──
     val vTbl = "stress_dlt_vec"
-    Seq(vTbl, s"${vTbl}_vocab", s"${vTbl}_delta")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    graft.sources.Staged.drop(spark, vTbl)
     // serving-sized query slice: ~4/4096 of docs probe together (the
     // brute serving join is |slice|·|corpus|/|langs| kernel calls —
     // a few queries at 1×, a few hundred at the 50× tier)
@@ -181,8 +179,7 @@ object StressDelta {
 
     // ── float IVF family ──
     val kTbl = "stress_dlt_ivf"
-    Seq(kTbl, s"${kTbl}_delta")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    graft.sources.Staged.drop(spark, kTbl)
     val emb = graft.similarity.Knn.emb(spark, sfDir)
     val isDeltaV = substring(md5(concat_ws(":",
       col("vec_id").cast("string"), lit("ivfd"))), 1, 1) >= "c"
@@ -227,8 +224,7 @@ object StressDelta {
 
     // ── IVF-PQ family (frozen coarse + frozen codebook) ──
     val pTbl = "stress_dlt_pq"
-    Seq(pTbl, s"${pTbl}_coarse", s"${pTbl}_codebook", s"${pTbl}_delta")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    graft.sources.Staged.drop(spark, pTbl)
     step("pq_build_base") {
       graft.similarity.Knn.writeIvfPqIndex(emb.filter(!isDeltaV), pTbl,
         s"$wh/pq")

@@ -9,7 +9,12 @@ object Verify {
     // iteration aid — the driver always invokes with exactly two args,
     // so the gate path is unchanged)
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+      if (args.length > 2) Some(args(2).split(",").map(_.trim)
+        .filter(_.nonEmpty).toSet) else None
+    only.foreach { wanted =>
+      val unknown = wanted -- SparkEntry.queries.keySet
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = LocalSession(cpus)
     new java.io.File(outDir).mkdirs()

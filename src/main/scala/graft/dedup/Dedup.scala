@@ -1004,9 +1004,9 @@ object Dedup {
     val anchors = winnowRows(d, k, w).localCheckpoint(true)
     val rare = anchors.groupBy("h").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select("h")
-    // staged rebuild (Staged.commit): the live index serves while the
-    // new generation builds; promote is a catalog rename
-    graft.sources.Staged.commit(d.sparkSession, tableName, path) {
+    // one generation behind the artifact pointer (Staged.commit): the
+    // live index serves while the new generation builds
+    graft.sources.Staged.commit(d.sparkSession, tableName, path)(_.write() {
       (tbl, p) =>
         anchors.join(rare, "h")
           .repartition(col("h"))
@@ -1016,7 +1016,7 @@ object Dedup {
           .sortBy("h")
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
           .saveAsTable(tbl)
-    }
+    })
   }
 
   /** Probe the PERSISTED anchor index with a batch of NEW documents —
@@ -1034,7 +1034,7 @@ object Dedup {
       docs: DataFrame, k: Int = 40, w: Int = 25): DataFrame = {
     require(k >= 1 && w >= 1, s"bad params k=$k w=$w")
     winnowRows(docs, k, w, idAs = "train_doc")
-      .join(graft.sources.Staged.liveTable(spark, tableName)
+      .join(graft.sources.Staged.table(spark, tableName)
         .select(col("doc_id").as("test_doc"), col("h")), "h")
       .groupBy("train_doc", "test_doc")
       .agg(count(lit(1)).as("n_anchors"))
@@ -1070,7 +1070,7 @@ object Dedup {
     val rare = shard.groupBy("h").agg(count(lit(1)).as("df"))
       .filter(col("df") <= maxDf).select("h")
     shard.join(rare, "h")
-      .join(graft.sources.Staged.liveTable(spark, tableName)
+      .join(graft.sources.Staged.table(spark, tableName)
         .select(col("doc_id").as("corpus_doc"), col("h")), "h")
       .groupBy("new_doc", "corpus_doc")
       .agg(count(lit(1)).as("n_anchors"))

@@ -229,16 +229,16 @@ object Multimodal {
     * writeAnchorIndex posture for media). */
   def writeMediaBucketIndex(media: DataFrame, tableName: String,
       path: String, maxOccupancy: Long = 512L): Unit =
-    // staged rebuild (Staged.commit): the live index serves while the
-    // new generation builds; promote is a catalog rename
-    graft.sources.Staged.commit(media.sparkSession, tableName, path) {
+    // one generation behind the artifact pointer (Staged.commit): the
+    // live index serves while the new generation builds
+    graft.sources.Staged.commit(media.sparkSession, tableName, path)(_.write() {
       (tbl, p) =>
         cappedBucketKeys(media, maxOccupancy)
           .write
           .option("path", p)
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
           .saveAsTable(tbl)
-    }
+    })
 
   /** Stream-static candidate probe against the PERSISTED bucket index
     * — the batch scorer [[graft.streaming.Streaming.runMediaNearDupProbe]]
@@ -254,7 +254,7 @@ object Multimodal {
   def mediaBucketProbe(spark: org.apache.spark.sql.SparkSession,
       tableName: String, media: DataFrame): DataFrame =
     bucketKeys(media)
-      .join(graft.sources.Staged.liveTable(spark, tableName)
+      .join(graft.sources.Staged.table(spark, tableName)
         .select(col("tbl"), col("bucket"), col("doc_id").as("corpus_doc")),
         Seq("tbl", "bucket"))
       .filter(col("corpus_doc") =!= col("doc_id"))

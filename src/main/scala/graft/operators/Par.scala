@@ -78,8 +78,8 @@ object Par {
     * rules tiny out — both treated as "big", so spreads no-op.
     * Memoized per file list per JVM keyed on the sorted path list's
     * [[graft.sources.Fingerprint]] (a 32-bit hashCode collision would
-    * silently reuse another relation's byte total; staged tables
-    * change paths on promote, so the key rolls with the generation). */
+    * silently reuse another relation's byte total; every committed
+    * generation has its own path, so the key rolls with it). */
   private def inputBytes(df: DataFrame): Long = {
     val files = df.inputFiles
     if (files.isEmpty || !tiny(files.length, 0L)) -1L

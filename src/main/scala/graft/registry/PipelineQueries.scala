@@ -6,6 +6,7 @@ import graft.text.TextOps
 import graft.dedup.Dedup
 import graft.similarity.Knn
 import graft.multimodal.Multimodal
+import graft.sources.Staged
 
 /** Driver bindings for SURVEY §2 families E–H (training-data pipeline
   * operators). Queries without an oracle entry are rows-only checks:
@@ -976,7 +977,7 @@ object PipelineQueries {
     "dedup_incremental" -> ((s, d) => {
       val dd = docs(s, d)
       val (tbl, path) = runScopedTable(s, d, "graft_anchor_index")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      Staged.drop(s, tbl)
       Dedup.writeAnchorIndex(
         dd.filter(col("doc_id") % 10 =!= 0), tbl, path)
       Dedup.incrementalSubstringPairs(s, tbl,
@@ -1086,7 +1087,7 @@ object PipelineQueries {
     // dedup_incremental posture)
     "domain_classifier_persisted" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_domain_model")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      Staged.drop(s, tbl)
       TextOps.writeDomainModel(docs(s, d), tbl, path)
       TextOps.domainScorePersisted(s, docs(s, d), tbl)
     }),
@@ -1230,7 +1231,7 @@ object PipelineQueries {
     // so the number isolates what the list pruning costs
     "knn_recall_audit_quantized" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_ivfq_audit")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      Staged.drop(s, tbl)
       Knn.ivfQuantizedRecallAudit(s, Knn.emb(s, d), tbl, path,
         col("vec_id") < 5, k = 10)
     }),
@@ -1243,7 +1244,7 @@ object PipelineQueries {
     "knn_ivf_persisted" -> ((s, d) => {
       val e = Knn.emb(s, d)
       val (tbl, path) = runScopedTable(s, d, "graft_ivf_persisted")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      Staged.drop(s, tbl)
       val centroids = Knn.writeIvfIndex(e, tbl, path, nlist = 10, buckets = 8)
       Knn.searchIvfIndex(s, tbl, centroids,
         e.filter(col("vec_id") < 5), k = 10)
@@ -1261,8 +1262,7 @@ object PipelineQueries {
     "knn_ivf_delta" -> ((s, d) => {
       val e = Knn.emb(s, d)
       val (tbl, path) = runScopedTable(s, d, "graft_ivf_delta")
-      Seq(tbl, s"${tbl}_delta")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
+      Staged.drop(s, tbl)
       val isDeltaV = substring(md5(concat_ws(":",
         col("vec_id").cast("string"), lit("ivfd"))), 1, 1) >= "c"
       val centroids = Knn.writeIvfIndex(e.filter(!isDeltaV), tbl, path,
@@ -1279,7 +1279,7 @@ object PipelineQueries {
     "ivf_balance_audit" -> ((s, d) => {
       val e = Knn.emb(s, d)
       val (tbl, path) = runScopedTable(s, d, "graft_ivf_balance")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      Staged.drop(s, tbl)
       Knn.writeIvfIndexQuantized(e, tbl, path, nlist = 10, buckets = 8)
       Knn.ivfBalanceAudit(s, tbl)
     }),
@@ -1294,7 +1294,7 @@ object PipelineQueries {
     "knn_ivf_quantized" -> ((s, d) => {
       val e = Knn.emb(s, d)
       val (tbl, path) = runScopedTable(s, d, "graft_ivf_quantized")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      Staged.drop(s, tbl)
       val centroids = Knn.writeIvfIndexQuantized(e, tbl, path,
         nlist = 10, buckets = 8)
       Knn.searchIvfIndexQuantized(s, tbl, centroids,
@@ -1324,8 +1324,7 @@ object PipelineQueries {
     "ivf_delta_audit" -> ((s, d) => {
       val e = Knn.emb(s, d)
       val (tbl, path) = runScopedTable(s, d, "graft_ivf_dltaud")
-      Seq(tbl, s"${tbl}_delta")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
+      Staged.drop(s, tbl)
       val isDeltaV = substring(md5(concat_ws(":",
         col("vec_id").cast("string"), lit("ivfd"))), 1, 1) >= "c"
       val centroids = Knn.writeIvfIndex(e.filter(!isDeltaV), tbl, path,
@@ -1344,8 +1343,7 @@ object PipelineQueries {
     "knn_pq_delta" -> ((s, d) => {
       val e = Knn.emb(s, d)
       val (tbl, path) = runScopedTable(s, d, "graft_pq_delta")
-      Seq(tbl, s"${tbl}_coarse", s"${tbl}_codebook", s"${tbl}_delta")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
+      Staged.drop(s, tbl)
       val isDeltaV = substring(md5(concat_ws(":",
         col("vec_id").cast("string"), lit("ivfd"))), 1, 1) >= "c"
       Knn.writeIvfPqIndex(e.filter(!isDeltaV), tbl, path, nlist = 10)
@@ -1498,8 +1496,7 @@ object PipelineQueries {
     // rows-only like it
     "token_count_bpe_persisted" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_bpe_model")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      s.sql(s"DROP TABLE IF EXISTS ${tbl}_merges")
+      Staged.drop(s, tbl)
       TextOps.writeBpeModel(docs(s, d), tbl, path)
       TextOps.tokenCountBpeIndexed(s, tbl, docs(s, d))
     }),
@@ -1528,7 +1525,7 @@ object PipelineQueries {
     // vocab_coverage oracle verbatim; the dedup_incremental posture)
     "vocab_coverage_persisted" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_vocab_idx")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      Staged.drop(s, tbl)
       TextOps.writeVocabIndex(docs(s, d), tbl, path)
       TextOps.vocabCoverageIndexed(s, tbl, docs(s, d))
     }),
@@ -1537,7 +1534,7 @@ object PipelineQueries {
     // per-doc additive, which is what makes the stream dual exact
     "oov_tag" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_vocab_tag")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      Staged.drop(s, tbl)
       TextOps.writeVocabIndex(docs(s, d), tbl, path)
       TextOps.oovTag(s, tbl, docs(s, d))
     }),
@@ -1659,8 +1656,7 @@ object PipelineQueries {
     // directed to in-slice endpoints
     "chunk_similar_persisted" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_chunk_vec")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      s.sql(s"DROP TABLE IF EXISTS ${tbl}_vocab")
+      Staged.drop(s, tbl)
       val cd = graft.text.Chunks.chunkDocsTok(docs(s, d))
       TextOps.writeDocVectorIndex(cd, tbl, path)
       TextOps.docSimilarPersisted(s, cd, tbl, s"${tbl}_vocab",
@@ -1683,8 +1679,7 @@ object PipelineQueries {
     // composes the whole serving path in one SQL
     "chunk_hybrid_rrf" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_chunk_hyb_vec")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      s.sql(s"DROP TABLE IF EXISTS ${tbl}_vocab")
+      Staged.drop(s, tbl)
       // ONE chunk relation feeds the index build AND both members —
       // the grid cannot diverge between them (the composite-id fence)
       val cd = graft.text.Chunks.chunkDocsTok(docs(s, d))
@@ -1699,8 +1694,8 @@ object PipelineQueries {
     // every hop transparent, shares chunk_hybrid_rrf's oracle
     "chunk_hybrid_serve" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_chunk_hyb_srv")
-      Seq(tbl, s"${tbl}_vocab", s"${tbl}_post", s"${tbl}_post_stats")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
+      Staged.drop(s, tbl)
+      Staged.drop(s, s"${tbl}_post")
       // ONE chunk relation feeds BOTH index builds (checkpointed —
       // never re-chunk the corpus per consumer)
       val cd = graft.text.Chunks.chunkDocsTok(docs(s, d))
@@ -1721,8 +1716,7 @@ object PipelineQueries {
     // transparency at chunk granularity)
     "chunk_search_delta" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_chunk_sdlt")
-      Seq(tbl, s"${tbl}_stats", s"${tbl}_delta")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
+      Staged.drop(s, tbl)
       val dd = docs(s, d)
       val isDelta = substring(md5(concat_ws(":",
         col("doc_id").cast("string"), lit("dsd"))), 1, 1) >= "c"
@@ -1745,9 +1739,8 @@ object PipelineQueries {
     // two-relation parameterized-CTE posture)
     "chunk_hybrid_serve_delta" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_chunk_hyb_dlt")
-      Seq(tbl, s"${tbl}_vocab", s"${tbl}_delta", s"${tbl}_post",
-        s"${tbl}_post_stats", s"${tbl}_post_delta")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
+      Staged.drop(s, tbl)
+      Staged.drop(s, s"${tbl}_post")
       val dd = docs(s, d)
       val isDelta = substring(md5(concat_ws(":",
         col("doc_id").cast("string"), lit("dsd"))), 1, 1) >= "c"
@@ -1780,7 +1773,7 @@ object PipelineQueries {
     "chunk_dedup_incremental" -> ((s, d) => {
       import org.apache.spark.sql.functions.{col, expr}
       val (tbl, path) = runScopedTable(s, d, "graft_chunk_index")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      Staged.drop(s, tbl)
       val isShard = expr(
         "substring(md5(concat_ws(':', cast(doc_id as string), 'shard')), " +
           "1, 1) < '3'")
@@ -1798,7 +1791,7 @@ object PipelineQueries {
     // lm_score_bigram oracle verbatim
     "lm_score_persisted" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_lm_model")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
+      Staged.drop(s, tbl)
       TextOps.writeLmIndex(docs(s, d), tbl, path)
       TextOps.lmScoreIndexed(s, tbl, docs(s, d))
     }),
@@ -1840,8 +1833,7 @@ object PipelineQueries {
     // endpoints, served directed
     "doc_similar_persisted" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_doc_vec")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      s.sql(s"DROP TABLE IF EXISTS ${tbl}_vocab")
+      Staged.drop(s, tbl)
       TextOps.writeDocVectorIndex(docs(s, d), tbl, path)
       TextOps.docSimilarPersisted(s, docs(s, d), tbl, s"${tbl}_vocab",
         substring(md5(concat_ws(":", col("doc_id").cast("string"),
@@ -1861,8 +1853,7 @@ object PipelineQueries {
     // passes); shares search_prf's oracle (transparent index hop)
     "search_prf_persisted" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_prf_index")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      s.sql(s"DROP TABLE IF EXISTS ${tbl}_stats")
+      Staged.drop(s, tbl)
       TextOps.writeTextIndex(docs(s, d), tbl, path)
       graft.text.Prf.searchPrfIndexed(s, tbl)
     }),
@@ -1872,8 +1863,7 @@ object PipelineQueries {
     // (every tf/df/stat round-trips the index exactly)
     "prf_terms_persisted" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_prfd_index")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      s.sql(s"DROP TABLE IF EXISTS ${tbl}_stats")
+      Staged.drop(s, tbl)
       TextOps.writeTextIndex(docs(s, d), tbl, path)
       graft.text.Prf.prfTermsIndexed(s, tbl)
     }),
@@ -1886,8 +1876,7 @@ object PipelineQueries {
     // faces (ad-hoc, persisted full, base + delta) row-identical
     "search_prf_delta" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_prf_delta")
-      Seq(tbl, s"${tbl}_stats", s"${tbl}_delta", s"${tbl}_delta_stats")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
+      Staged.drop(s, tbl)
       val dd = docs(s, d)
       val isDelta = substring(md5(concat_ws(":",
         col("doc_id").cast("string"), lit("dsd"))), 1, 1) >= "c"
@@ -1897,8 +1886,7 @@ object PipelineQueries {
     }),
     "prf_terms_delta" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_prft_delta")
-      Seq(tbl, s"${tbl}_stats", s"${tbl}_delta", s"${tbl}_delta_stats")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
+      Staged.drop(s, tbl)
       val dd = docs(s, d)
       val isDelta = substring(md5(concat_ws(":",
         col("doc_id").cast("string"), lit("dsd"))), 1, 1) >= "c"
@@ -1954,8 +1942,7 @@ object PipelineQueries {
     // shares that oracle — the persisted hop is transparent
     "text_search_indexed" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_text_index")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      s.sql(s"DROP TABLE IF EXISTS ${tbl}_stats")
+      Staged.drop(s, tbl)
       TextOps.writeTextIndex(docs(s, d), tbl, path)
       TextOps.searchIndex(s, tbl, Seq("vector", "stream", "window", "hash"))
     }),
@@ -1970,8 +1957,7 @@ object PipelineQueries {
     // generation staleness, and the doc-disjointness fences
     "text_search_delta" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_delta_index")
-      Seq(tbl, s"${tbl}_stats", s"${tbl}_delta", s"${tbl}_delta_stats")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
+      Staged.drop(s, tbl)
       val dd = docs(s, d)
       val isDelta = substring(md5(concat_ws(":",
         col("doc_id").cast("string"), lit("dsd"))), 1, 1) >= "c"
@@ -1986,8 +1972,7 @@ object PipelineQueries {
     // the two one-row stats tables
     "text_index_delta_audit" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_dltaud_index")
-      Seq(tbl, s"${tbl}_stats", s"${tbl}_delta", s"${tbl}_delta_stats")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
+      Staged.drop(s, tbl)
       val dd = docs(s, d)
       val isDelta = substring(md5(concat_ws(":",
         col("doc_id").cast("string"), lit("dsd"))), 1, 1) >= "c"
@@ -2004,8 +1989,7 @@ object PipelineQueries {
     // parameterized-CTE posture)
     "doc_similar_delta" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_doc_vec_dlt")
-      Seq(tbl, s"${tbl}_vocab", s"${tbl}_delta")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
+      Staged.drop(s, tbl)
       val dd = docs(s, d)
       val isDelta = substring(md5(concat_ws(":",
         col("doc_id").cast("string"), lit("dsd"))), 1, 1) >= "c"
@@ -2025,8 +2009,7 @@ object PipelineQueries {
     // from the base split and the delta tf table from the delta split
     "doc_vector_delta_audit" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_dvec_aud")
-      Seq(tbl, s"${tbl}_vocab", s"${tbl}_delta")
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
+      Staged.drop(s, tbl)
       val dd = docs(s, d)
       val isDelta = substring(md5(concat_ws(":",
         col("doc_id").cast("string"), lit("dsd"))), 1, 1) >= "c"
@@ -2043,8 +2026,7 @@ object PipelineQueries {
     // (spec-pinned: a novel doc's score is stable as others arrive)
     "standing_query_route" -> ((s, d) => {
       val (tbl, path) = runScopedTable(s, d, "graft_route_index")
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      s.sql(s"DROP TABLE IF EXISTS ${tbl}_stats")
+      Staged.drop(s, tbl)
       TextOps.writeTextIndex(docs(s, d), tbl, path)
       TextOps.standingQueryScore(s, tbl, docs(s, d),
         Seq("vector", "stream", "window", "hash"))

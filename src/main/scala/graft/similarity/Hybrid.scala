@@ -194,7 +194,6 @@ object Hybrid {
     val lex = directedMember(
       graft.text.TextOps.docSimilarPrefix(d, tauLex),
       "doc1", "doc2", "score", salt)
-    spark.sql(s"DROP TABLE IF EXISTS $indexTable")
     val centroids = Knn.writeIvfIndex(e, indexTable, path, nlist)
     val sem = Knn.searchIvfIndex(spark, indexTable, centroids,
         e.filter(slicePred(col("vec_id"), salt)), kSem, nprobe)
@@ -226,8 +225,6 @@ object Hybrid {
     val lex = directedMember(
       graft.text.TextOps.docSimilarPrefix(d, tauLex),
       "doc1", "doc2", "score", salt)
-    Seq(indexTable, s"${indexTable}_coarse", s"${indexTable}_codebook")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     val (coarse, codebook) = Knn.writeIvfPqIndex(e, indexTable, path, nlist)
     val sem = Knn.searchIvfPq(spark, indexTable, coarse, codebook,
         e.filter(slicePred(col("vec_id"), salt)), kSem, nprobe)

@@ -233,11 +233,10 @@ object Knn {
   private def probeScoredBy(spark: SparkSession, e: DataFrame,
       tableName: String, path: String, isIndexed: Column,
       nlist: Int, buckets: Int, nprobe: Int): DataFrame = {
-    spark.sql(s"DROP TABLE IF EXISTS $tableName")
-    val coarse = buildIvf(e.filter(isIndexed), tableName, path, nlist,
-      buckets)((_, _) => Int8Codec)
+    val (coarse, snap) = buildIvf(e.filter(isIndexed), tableName, path,
+      nlist, buckets)((_, _) => (Int8Codec, Nil))
     Int8Codec.scored(Int8Codec.probes(e.filter(!isIndexed), coarse, nprobe),
-        Staged.liveTable(spark, tableName))
+        snap.table(tableName))
       .select(col("query_id").as("probe_vec"),
         col("neighbor_id").as("vec_id"), col("score"))
   }
@@ -347,7 +346,7 @@ object Knn {
       labeledSixteenths: Int = 12, tau: Double = 0.3,
       nprobe: Int = 2): DataFrame = {
     labelPropArgs(labeledSixteenths, tau)
-    voteRollup(labelPropProbePairs(spark, tableName,
+    voteRollup(labelPropProbePairs(Staged.table(spark, tableName),
       CentroidModel.of(centroids), labels, queries, labeledSixteenths, tau,
       nprobe))
   }
@@ -355,13 +354,13 @@ object Knn {
   /** The vote pairs (same columns as [[labelPropPairs]]) of `queries`
     * outside the labeled slice against the int8 index `tableName`, voter
     * labels from `labels`. */
-  private def labelPropProbePairs(spark: SparkSession, tableName: String,
+  private def labelPropProbePairs(index: DataFrame,
       coarse: CentroidModel, labels: DataFrame, queries: DataFrame,
       labeledSixteenths: Int, tau: Double, nprobe: Int): DataFrame =
     Int8Codec.probes(queries.filter(!isLabeled(labeledSixteenths)), coarse,
         nprobe, Seq(col("label").as("true_label")))
       .as("q")
-      .join(Int8Codec.indexSide(Staged.liveTable(spark, tableName)).as("c"),
+      .join(Int8Codec.indexSide(index).as("c"),
         Seq("c_id"))
       .withColumn("score", Int8Codec.score)
       .filter(col("score") >= tau)
@@ -402,11 +401,10 @@ object Knn {
   private[graft] def labelPropPairsIvf(spark: SparkSession, e: DataFrame,
       tableName: String, path: String, labeledSixteenths: Int,
       tau: Double, nlist: Int, buckets: Int, nprobe: Int): DataFrame = {
-    spark.sql(s"DROP TABLE IF EXISTS $tableName")
-    val coarse = buildIvf(e.filter(isLabeled(labeledSixteenths)), tableName,
-      path, nlist, buckets)((_, _) => Int8Codec)
-    labelPropProbePairs(spark, tableName, coarse, e, e, labeledSixteenths,
-      tau, nprobe)
+    val (coarse, snap) = buildIvf(e.filter(isLabeled(labeledSixteenths)),
+      tableName, path, nlist, buckets)((_, _) => (Int8Codec, Nil))
+    labelPropProbePairs(snap.table(tableName), coarse, e, e,
+      labeledSixteenths, tau, nprobe)
   }
 
   /** Hard-TRIPLET MINING over the quantized embedding space — the
@@ -460,7 +458,6 @@ object Knn {
       nprobe: Int = 2): DataFrame = {
     require(anchorMod >= 2L, s"anchorMod must be >= 2, got $anchorMod")
     val isAnchor = col("vec_id") % lit(anchorMod) === lit(0L)
-    spark.sql(s"DROP TABLE IF EXISTS $tableName")
     val centroids = writeIvfIndexQuantized(e.filter(!isAnchor), tableName,
       path, nlist, buckets)
     tripletProbe(spark, tableName, centroids,
@@ -481,7 +478,7 @@ object Knn {
     val scored = Int8Codec.probes(queries, CentroidModel.of(centroids),
         nprobe, Seq(col("label").as("anchor_label")))
       .as("q")
-      .join(Int8Codec.indexSide(Staged.liveTable(spark, tableName)).as("c"),
+      .join(Int8Codec.indexSide(Staged.table(spark, tableName)).as("c"),
         Seq("c_id"))
       .select(col("query_id").as("anchor_id"), col("anchor_label"),
         col("c.vec_id").as("cand_id"),
@@ -983,7 +980,7 @@ object Knn {
     * addExact dual). */
   def embOutlierProbe(spark: SparkSession, tableName: String,
       e: DataFrame): DataFrame = {
-    val cent = graft.sources.Staged.liveTable(spark, tableName)
+    val cent = graft.sources.Staged.table(spark, tableName)
       .select(col("label"), col("pos"), col("s"))
     // no checkpoint: the artifact is a labels×dims parquet scan (tiny),
     // and an eager checkpoint PER MICRO-BATCH would accumulate blocks
@@ -1186,9 +1183,7 @@ object Knn {
     * balancing). Same kernel assignment as the IVF build, so it scales
     * identically. */
   def clusterStats(e: DataFrame, k: Int = 8): DataFrame = {
-    // same base materialization as [[ivf]]: k-means rounds + the final
-    // assignment re-scan the source otherwise
-    val base = e.localCheckpoint(true)
+    val base = fencedBase(e)
     assignTo(base, kmeansModel(base, k))
       .groupBy(col("c_id"))
       .agg(
@@ -1220,7 +1215,7 @@ object Knn {
   private[similarity] def assignSemanticClusters(e: DataFrame,
       targetClusterSize: Long, n: Long,
       trainSwitch: Long = SampleTrainSwitch): DataFrame = {
-    val base = e.localCheckpoint(true)
+    val base = fencedBase(e)
     val nn = if (n >= 0L) n else base.count()
     // clamp BEFORE the Long→Int narrowing: at the 100 TB design point
     // nn/targetClusterSize can exceed Int.MaxValue and a raw .toInt
@@ -1458,70 +1453,61 @@ object Knn {
       .withColumn("c_id",
         explode(NearestCentroids(col("v"), col("nrm"), coarse, nprobe)))
 
-  /** The ONE IVF build: degenerate vectors never enter an index (they are
-    * unsearchable — the [[finiteNorm]] rationale); the fenced base is
-    * materialized once for the k-means rounds and the assignment;
-    * `codecFor` trains and commits the codec's side artifacts (BEFORE
-    * the main table, whose promote is the commit point probes key on).
-    * Returns the coarse model. */
+  /** The finiteNorm-fenced base, materialized once: degenerate vectors
+    * never reach k-means or an index (they are unsearchable — the
+    * [[finiteNorm]] rationale), and the Lloyd rounds plus the final
+    * assignment read the materialized rows instead of re-scanning the
+    * source. Every k-means consumer trains through it. */
+  private def fencedBase(e: DataFrame): DataFrame =
+    e.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
+
+  /** The ONE IVF build over the [[fencedBase]]: `codecFor` trains the
+    * codec and names its side members (suffix → frame), which commit in
+    * the SAME generation as the lists — one pointer flip publishes the
+    * whole artifact. Returns the coarse model and the new snapshot. */
   private def buildIvf(e: DataFrame, tableName: String, path: String,
       nlist: Int, buckets: Int)(
-      codecFor: (DataFrame, CentroidModel) => IvfCodec): CentroidModel = {
-    val base = e.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
+      codecFor: (DataFrame, CentroidModel) => (IvfCodec,
+        Seq[(String, DataFrame)])): (CentroidModel, Staged.Snapshot) = {
+    val base = fencedBase(e)
     val coarse = kmeansModel(base, nlist)
-    val codec = codecFor(base, coarse)
-    writeLists(tableName, path, buckets, codec.stored(assignTo(base, coarse)))
-    coarse
+    val (codec, sides) = codecFor(base, coarse)
+    (coarse, Staged.commit(e.sparkSession, tableName, path) { g =>
+      sides.foreach { case (suffix, frame) => g.save(suffix, frame) }
+      g.write()(writeLists(buckets, codec.stored(assignTo(base, coarse))))
+    })
   }
 
-  /** Commit a tiny model artifact (centroids, coarse, codebook). */
-  private def commitSide(tableName: String, path: String,
-      frame: DataFrame): Unit =
-    Staged.commit(frame.sparkSession, tableName, path) { (tbl, p) =>
-      frame.write.option("path", p)
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).saveAsTable(tbl)
-    }
-
   /** The ONE inverted-list write (build, delta append, merge): rows
-    * BUCKETED BY the list id through a staged rebuild — the live table
-    * serves while the new generation builds. A probe needs no index-side
-    * Exchange: the bucketed layout already hash-partitions by `c_id`,
-    * and an equality/IN filter on `c_id` prunes whole buckets at
-    * planning time (ApiSpec pins that this is the only such write). */
-  private def writeLists(tableName: String, path: String, buckets: Int,
-      rows: DataFrame): Unit =
-    Staged.commit(rows.sparkSession, tableName, path) { (tbl, p) =>
-      rows
-        .repartition(col("c_id"))
-        .write
-        .option("path", p)
-        .bucketBy(buckets, "c_id")
-        .sortBy("c_id")
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .saveAsTable(tbl)
-    }
-
-  /** (vec_id, payload…, c_id) of a live base table, read from its schema:
-    * a delta and a merge carry exactly the payload the base stores. */
-  private def listColumns(base: DataFrame): Seq[String] =
-    ("vec_id" +: base.columns.filterNot(Set("vec_id", "c_id"))) :+ "c_id"
+    * BUCKETED BY the list id. A probe needs no index-side Exchange: the
+    * bucketed layout already hash-partitions by `c_id`, and an
+    * equality/IN filter on `c_id` prunes whole buckets at planning time
+    * (ApiSpec pins that this is the only such write). */
+  private def writeLists(buckets: Int, rows: DataFrame)(tbl: String,
+      p: String): Unit =
+    rows
+      .repartition(col("c_id"))
+      .write
+      .option("path", p)
+      .bucketBy(buckets, "c_id")
+      .sortBy("c_id")
+      .mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .saveAsTable(tbl)
 
   /** Persist a float IVF index ([[buildIvf]]). Returns the centroid
     * table (tiny — persist alongside, or recompute probes from it); with
-    * `persistCentroids` it ALSO commits to `${tableName}_centroids`, so
-    * a separate serving process (the live hybrid probe) reads both
-    * artifacts from tables alone. */
+    * `persistCentroids` it ALSO commits it as the `${tableName}_centroids`
+    * member, so a separate serving process (the live hybrid probe)
+    * reads both from one pointer read. */
   def writeIvfIndex(e: DataFrame, tableName: String, path: String,
       nlist: Int = 10, buckets: Int = 8,
       persistCentroids: Boolean = false): DataFrame = {
     val spark = e.sparkSession
     centroidFrame(spark, buildIvf(e, tableName, path, nlist, buckets) {
-      (_, coarse) =>
-        if (persistCentroids)
-          commitSide(s"${tableName}_centroids", s"${path}_centroids",
-            centroidFrame(spark, coarse))
-        FloatCodec
-    })
+      (_, coarse) => (FloatCodec,
+        if (persistCentroids) Seq("_centroids" -> centroidFrame(spark, coarse))
+        else Nil)
+    }._1)
   }
 
   /** Persist an int8 IVF index ([[Int8Codec]]) — the layout a 100 TB
@@ -1530,84 +1516,87 @@ object Knn {
     * table. */
   def writeIvfIndexQuantized(e: DataFrame, tableName: String, path: String,
       nlist: Int = 10, buckets: Int = 8): DataFrame =
-    centroidFrame(e.sparkSession,
-      buildIvf(e, tableName, path, nlist, buckets)((_, _) => Int8Codec))
+    centroidFrame(e.sparkSession, buildIvf(e, tableName, path, nlist,
+      buckets)((_, _) => (Int8Codec, Nil))._1)
 
   def searchIvfIndexQuantized(spark: SparkSession, tableName: String,
       centroids: DataFrame, queries: DataFrame, k: Int,
       nprobe: Int = 2): DataFrame =
     Int8Codec.search(CentroidModel.of(centroids), queries, k, nprobe,
-      Staged.liveTable(spark, tableName))
+      Staged.table(spark, tableName))
 
   def searchIvfIndexQuantizedDelta(spark: SparkSession, tableName: String,
       centroids: DataFrame, queries: DataFrame, k: Int,
       nprobe: Int = 2): DataFrame =
-    searchIvfDelta(spark, tableName, CentroidModel.of(centroids), Int8Codec,
-      queries, k, nprobe)
+    searchFencedDelta(spark, tableName, centroids, Int8Codec, queries, k,
+      nprobe)
 
-  /** Cross-table generation fence for the two-artifact IVF layout
-    * ([[writeIvfIndex]] with persistCentroids): centroids and index
-    * promote as two INDEPENDENT staged renames, so a probe landing
-    * between the promotes — or after a crash that Staged.recover heals
-    * per-table — can rank NEW centroids against an OLD index. The
-    * c_id space is xxhash64 of the seed vec_ids, so mismatched
-    * generations equijoin to NOTHING and the semantic member comes
-    * back silently EMPTY (the exact silent-degradation class this
-    * repo fences everywhere; an empty probe result is
-    * indistinguishable from "no neighbors" without this check). The
+  /** Generation fence for a centroid frame a CALLER passes in — outside
+    * input the artifact's pointer cannot vouch for. The c_id space is
+    * xxhash64 of the seed vec_ids, so a model from another build
+    * equijoins to NOTHING and the probe comes back silently EMPTY. The
     * fence: every inverted-list id in the index must exist in the
     * centroid MODEL the probe's kernels read — one left-anti existence
-    * count over the bucketed index scan, memoized per (index table,
-    * centroid-set digest) per JVM (the LshBuckets.corpusSize posture):
-    * a generation change flips the digest and re-pays one scan;
-    * steady-state probes pay the one model collect (nlist rows) their
-    * kernels need anyway, and the fence checks those very ids — no
-    * second read of the centroid table that a promote could swap in
-    * between. Any mid-swap state necessarily differs in c_id set from
-    * every verified state, so the memo cannot mask a mismatch. */
+    * count over the bucketed index scan, memoized per (resolved list
+    * table, centroid-set digest) per JVM: a generation name never
+    * repeats, so a new generation re-pays one scan and a steady-state
+    * probe pays only the model collect its kernels need anyway. Models
+    * read from the same snapshot as the lists (PQ coarse, persisted
+    * `_centroids`) are never fenced: one pointer read cannot mix
+    * generations. */
   private val centroidAlignmentMemo =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   private[graft] def requireCentroidAlignment(spark: SparkSession,
-      tableName: String, model: CentroidModel): DataFrame = {
-    // resolve the live index ONCE and return the resolved frame: the
-    // caller probes the SAME resolution the fence verified, closing the
-    // r17-ADVICE TOCTOU where a promote landing between the check and a
-    // by-name re-resolution served a NEW index against already-collected
-    // OLD centroids unverified for that micro-batch
-    val index = graft.sources.Staged.liveTable(spark, tableName)
+      tableName: String, model: CentroidModel): DataFrame =
+    alignedIndex(Staged.resolve(spark, tableName), tableName, model)
+
+  /** The list frame of `snap`, checked against `model`. */
+  private def alignedIndex(snap: Staged.Snapshot, tableName: String,
+      model: CentroidModel): DataFrame = {
+    val index = snap.table(tableName)
     val cids = model.ids
     require(cids.length <= 1000000,
       s"centroid table $tableName: ${cids.length} rows — not a " +
         "broadcastable centroid artifact")
-    // collision-FREE memo digest (r17 ADVICE): a 32-bit Arrays.hashCode
-    // collision between two same-count centroid generations would skip
-    // the fence — the exact silent-empty-member state it exists to
-    // catch. md5 over the ':'-joined sorted ids is the repo's standard
-    // outright-injective key (the derived-key doctrine). The key also
-    // carries the INDEX generation (its storage location — Staged flips
-    // it every promote): an index-side promote with an unchanged
-    // centroid table must re-pay the scan, not ride the old memo.
-    val key = tableName + "@" +
-      graft.sources.Staged.generation(spark, tableName) + ":" +
+    // collision-FREE memo digest: md5 over the ':'-joined sorted ids
+    val key = snap.members.getOrElse(tableName, tableName) + ":" +
       cids.length + ":" +
       org.apache.commons.codec.digest.DigestUtils.md5Hex(
         cids.sorted.mkString(":"))
     if (!centroidAlignmentMemo.contains(key)) {
-      val known = spark.createDataFrame(cids.toSeq.map(Tuple1(_))).toDF("c_id")
+      val known = index.sparkSession
+        .createDataFrame(cids.toSeq.map(Tuple1(_))).toDF("c_id")
       val orphans = index
         .select(col("c_id")).distinct()
         .join(broadcast(known), Seq("c_id"), "left_anti")
         .count()
       require(orphans == 0L,
         s"IVF generation mismatch: $orphans inverted-list ids in " +
-          s"$tableName have no row in its centroid table — the two " +
-          "staged artifacts are from different builds (probe landed " +
-          "mid-swap or a crashed rebuild healed one table only); " +
-          "retry after the index promote completes, or rebuild")
+          s"$tableName have no row in the centroid table passed in — " +
+          "the centroids are from a different build; pass the centroids " +
+          "of the live generation, or rebuild")
       centroidAlignmentMemo.add(key)
     }
     index
+  }
+
+  /** The model of a caller-passed centroid frame and the list frame it
+    * serves: unfenced when the frame IS the snapshot's own `_centroids`
+    * member, [[alignedIndex]] otherwise. */
+  private def fencedIndex(snap: Staged.Snapshot, tableName: String,
+      centroids: DataFrame): (CentroidModel, DataFrame) = {
+    val model = CentroidModel.of(centroids)
+    val own = snap.members.get(s"${tableName}_centroids").exists { t =>
+      centroids.queryExecution.analyzed match {
+        case org.apache.spark.sql.catalyst.plans.logical.SubqueryAlias(_,
+            r: org.apache.spark.sql.execution.datasources.LogicalRelation) =>
+          r.catalogTable.exists(_.identifier.table == t)
+        case _ => false
+      }
+    }
+    (model, if (own) snap.table(tableName)
+      else alignedIndex(snap, tableName, model))
   }
 
   /** Search a persisted float IVF index ([[writeIvfIndex]]): queries take
@@ -1618,15 +1607,12 @@ object Knn {
   def searchIvfIndex(spark: SparkSession, tableName: String,
       centroids: DataFrame, queries: DataFrame, k: Int,
       nprobe: Int = 2): DataFrame =
-    searchIvfIndexOn(Staged.liveTable(spark, tableName),
+    searchIvfIndexOn(Staged.table(spark, tableName),
       CentroidModel.of(centroids), queries, k, nprobe)
 
   /** [[searchIvfIndex]] over an ALREADY-RESOLVED index frame — the face
-    * the alignment-fenced probes use so the fence and the probe read
-    * the SAME generation (the frame [[requireCentroidAlignment]]
-    * returned) against the model the fence checked, never a by-name
-    * re-resolution a concurrent promote could swap underneath (r17
-    * ADVICE TOCTOU). */
+    * a reader that took the lists and the model from ONE pointer read
+    * (the live hybrid probe) serves from. */
   def searchIvfIndexOn(index: DataFrame,
       model: CentroidModel, queries: DataFrame, k: Int,
       nprobe: Int = 2): DataFrame =
@@ -1636,56 +1622,35 @@ object Knn {
   // re-cluster must not pay the weekly cost — the frozen-model posture of
   // appendDocVectorIndexDelta applied to the IVF layouts) ─────
 
-  /** The live IVF delta rows for `tableName` in the list columns of its
-    * live `base`, or None when absent, from another layout, or STALE —
-    * the in-table `base_gen` marker no longer matches the main table's
-    * generation because a rebuild or [[mergeIvfIndex]] promoted since
-    * (one table, one atomic commit, no cross-table crash window). */
-  private[similarity] def ivfDelta(spark: SparkSession, tableName: String,
-      base: DataFrame): Option[DataFrame] = {
-    val dt = s"${tableName}_delta"
-    Staged.recover(spark, dt)
-    if (!spark.catalog.tableExists(dt)) None
-    else {
-      val d = spark.table(dt)
-      val cols = listColumns(base)
-      // not serviceable: the next append overwrites it
-      if (!d.columns.contains("base_gen") ||
-          !cols.forall(d.columns.contains)) return None
-      val bg = d.select(col("base_gen")).limit(1).collect()
-      if (bg.nonEmpty && bg.head.getString(0) ==
-          Staged.generation(spark, tableName))
-        Some(d.select(cols.map(col): _*))
-      else None
-    }
-  }
+  /** The delta list member of a snapshot, in the base's column order. */
+  private def ivfDelta(snap: Staged.Snapshot,
+      tableName: String): Option[DataFrame] =
+    snap.get(s"${tableName}_delta")
 
   /** The ONE delta append: arriving vectors (fenced like the build) are
     * assigned to the FROZEN coarse model and encoded under the codec's
     * frozen model — re-training is the full-rebuild cadence — and land
-    * in `<table>_delta` ([[writeLists]]) marked with the base generation,
-    * so the batch promotes in ONE atomic commit; a repeat append extends
-    * the generation. Fences, by name: [[requireCentroidAlignment]]
-    * rejects a coarse model from another generation BEFORE any
-    * assignment (mismatched c_ids would equijoin to nothing), and the
+    * as the artifact's `_delta` member in the base's own column order
+    * ([[writeLists]]): one commit flips the pointer to the base members
+    * plus the new delta; a repeat append extends the delta. `models`
+    * resolves from the snapshot after the base's existence check and
+    * returns the (coarse, codec, list frame) — the list frame checked
+    * by [[fencedIndex]] when the coarse model is caller input. The
     * disjointness fences reject vec_ids already indexed or already in
-    * the live delta. Contract (DeltaIndexSpec, per codec): probe over
+    * the delta. Contract (DeltaIndexSpec, per codec): probe over
     * base ∪ delta ≡ a rebuild with the same frozen models — exactly, as
-    * assignment and encoding are pure per-vector functions. `models`
-    * resolves after the base table's existence check. */
+    * assignment and encoding are pure per-vector functions. */
   private def appendIvf(eNew: DataFrame, tableName: String, path: String,
       buckets: Int, face: String)(
-      models: => (CentroidModel, IvfCodec)): Unit = {
-    val spark = eNew.sparkSession
-    Staged.recover(spark, tableName)
-    require(spark.catalog.tableExists(tableName),
+      models: Staged.Snapshot => (CentroidModel, IvfCodec, DataFrame))
+      : Unit = {
+    val snap = Staged.resolve(eNew.sparkSession, tableName)
+    require(snap.has(tableName),
       s"append${face}Delta: no base index $tableName — build it with " +
         s"write$face first")
-    val (coarse, codec) = models
-    val index = requireCentroidAlignment(spark, tableName, coarse)
-    val base = eNew.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
-    val assigned = codec.stored(assignTo(base, coarse))
-      .select(listColumns(index).map(col): _*)
+    val (coarse, codec, index) = models(snap)
+    val assigned = codec.stored(assignTo(fencedBase(eNew), coarse))
+      .select(index.columns.toIndexedSeq.map(col): _*)
     val newIds = assigned.select(col("vec_id")).distinct()
     val clashBase = index.join(broadcast(newIds), Seq("vec_id"),
       "left_semi").count()
@@ -1693,7 +1658,7 @@ object Knn {
       s"append${face}Delta($tableName): $clashBase already-indexed " +
         "vec_ids in the delta batch — a delta holds only NEW vectors " +
         "(re-embeds go through rebuild or the merge cadence)")
-    val old = ivfDelta(spark, tableName, index)
+    val old = ivfDelta(snap, tableName)
     old.foreach { op =>
       val clashDelta = op.join(broadcast(newIds), Seq("vec_id"),
         "left_semi").count()
@@ -1701,41 +1666,45 @@ object Knn {
         s"append${face}Delta($tableName): $clashDelta vec_ids already " +
           "in the live delta — batches must be disjoint")
     }
-    val baseGen = Staged.generation(spark, tableName)
-    // materialize before the commit drops the old delta the plan reads
-    val rows = old.map(_.unionByName(assigned)).getOrElse(assigned)
-      .localCheckpoint(true)
-      .withColumn("base_gen", lit(baseGen))
-    writeLists(s"${tableName}_delta", s"${path}_delta", buckets, rows)
+    Staged.commit(eNew.sparkSession, tableName, path,
+        keep = snap.members - s"${tableName}_delta")(_.write("_delta")(
+      writeLists(buckets, old.map(_.unionByName(assigned))
+        .getOrElse(assigned))))
   }
 
-  /** The ONE delta search — base ∪ live delta. The live index resolves
-    * once, through the alignment fence (the searchIvfIndexOn TOCTOU
-    * posture); probe lists are computed ONCE and each side is scored as
-    * its OWN c_id equijoin before the one bounded rank — unioning the
-    * two index frames first would erase the base scan's bucketed
-    * partitioning and re-shuffle the whole index. With no serviceable
-    * delta this is exactly the base search. */
-  private def searchIvfDelta(spark: SparkSession, tableName: String,
-      coarse: CentroidModel, codec: IvfCodec, queries: DataFrame, k: Int,
-      nprobe: Int): DataFrame = {
-    val index = requireCentroidAlignment(spark, tableName, coarse)
+  /** The ONE delta search — base ∪ delta from one snapshot: probe
+    * lists are computed ONCE and each side is scored as its OWN c_id
+    * equijoin before the one bounded rank — unioning the two index
+    * frames first would erase the base scan's bucketed partitioning and
+    * re-shuffle the whole index. With no delta this is exactly the base
+    * search. */
+  private def searchIvfDelta(snap: Staged.Snapshot, tableName: String,
+      index: DataFrame, coarse: CentroidModel, codec: IvfCodec,
+      queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
     val probes = codec.probes(queries, coarse, nprobe).localCheckpoint(true)
-    ranked(ivfDelta(spark, tableName, index).foldLeft(
+    ranked(ivfDelta(snap, tableName).foldLeft(
       codec.scored(probes, index))((s, dp) =>
         s.unionByName(codec.scored(probes, dp))), k)
   }
 
+  /** [[searchIvfDelta]] under a caller-passed centroid frame. */
+  private def searchFencedDelta(spark: SparkSession, tableName: String,
+      centroids: DataFrame, codec: IvfCodec, queries: DataFrame, k: Int,
+      nprobe: Int): DataFrame = {
+    val snap = Staged.resolve(spark, tableName)
+    val (model, index) = fencedIndex(snap, tableName, centroids)
+    searchIvfDelta(snap, tableName, index, model, codec, queries, k, nprobe)
+  }
+
   /** Generation accounting for an IVF delta of any codec (the
     * textIndexDeltaAudit sibling): stored-vector masses and the integer
-    * half-up milli share the live delta holds. A stale/absent delta
-    * reports zero delta mass, so a silently-ignored stale delta SHOWS
-    * here. Pure counts over the corpus, the split and the finiteNorm
+    * half-up milli share the delta holds. No delta reports zero delta
+    * mass. Pure counts over the corpus, the split and the finiteNorm
     * fence — the row sits under the hash gate. */
   def ivfDeltaAudit(spark: SparkSession, tableName: String): DataFrame = {
-    val base = Staged.liveTable(spark, tableName)
-    val nBase = base.agg(count(lit(1)).as("n_vecs_base"))
-    val nDelta = ivfDelta(spark, tableName, base)
+    val snap = Staged.resolve(spark, tableName)
+    val nBase = snap.table(tableName).agg(count(lit(1)).as("n_vecs_base"))
+    val nDelta = ivfDelta(snap, tableName)
       .map(_.agg(count(lit(1)).as("n_vecs_delta")))
       .getOrElse(spark.range(1).select(lit(0L).as("n_vecs_delta")))
     nBase.crossJoin(broadcast(nDelta))
@@ -1749,35 +1718,40 @@ object Knn {
   /** Append a crawl delta to a float IVF index ([[appendIvf]]). */
   def appendIvfIndexDelta(eNew: DataFrame, tableName: String,
       path: String, centroids: DataFrame, buckets: Int = 8): Unit =
-    appendIvf(eNew, tableName, path, buckets, "IvfIndex")(
-      (CentroidModel.of(centroids), FloatCodec))
+    appendIvf(eNew, tableName, path, buckets, "IvfIndex") { snap =>
+      val (model, index) = fencedIndex(snap, tableName, centroids)
+      (model, FloatCodec, index)
+    }
 
   def appendIvfIndexQuantizedDelta(eNew: DataFrame, tableName: String,
       path: String, centroids: DataFrame, buckets: Int = 8): Unit =
-    appendIvf(eNew, tableName, path, buckets, "IvfIndexQuantized")(
-      (CentroidModel.of(centroids), Int8Codec))
+    appendIvf(eNew, tableName, path, buckets, "IvfIndexQuantized") { snap =>
+      val (model, index) = fencedIndex(snap, tableName, centroids)
+      (model, Int8Codec, index)
+    }
 
-  /** [[searchIvfIndex]] over base ∪ live delta ([[searchIvfDelta]]). */
+  /** [[searchIvfIndex]] over base ∪ delta ([[searchIvfDelta]]). */
   def searchIvfIndexDelta(spark: SparkSession, tableName: String,
       centroids: DataFrame, queries: DataFrame, k: Int,
       nprobe: Int = 2): DataFrame =
-    searchIvfDelta(spark, tableName, CentroidModel.of(centroids),
-      FloatCodec, queries, k, nprobe)
+    searchFencedDelta(spark, tableName, centroids, FloatCodec, queries, k,
+      nprobe)
 
-  /** Compact the live delta into the base index, any codec: one
-    * index-ROW union write in the base's own list columns, ZERO
-    * assignment or encoding recompute, ONE Staged commit. Idempotent:
-    * the promote STALES the delta for every probe instantly, so the drop
-    * is cleanup and a crash-rerun just sweeps. Models are NOT retrained
-    * — re-clustering is the full-rebuild cadence. */
+  /** Compact the delta into the base index, any codec: one index-ROW
+    * union write in the base's own list columns, ZERO assignment or
+    * encoding recompute, ONE commit whose pointer names the new lists,
+    * the kept models and no delta — a crash before the flip serves
+    * base ∪ delta unchanged, and with no delta this is a no-op. Models
+    * are NOT retrained — re-clustering is the full-rebuild cadence. */
   def mergeIvfIndex(spark: SparkSession, tableName: String, path: String,
       buckets: Int = 8): Unit = {
-    val base = Staged.liveTable(spark, tableName)
-    ivfDelta(spark, tableName, base).foreach { dp =>
-      writeLists(tableName, path, buckets,
-        base.select(listColumns(base).map(col): _*).unionByName(dp))
+    val snap = Staged.resolve(spark, tableName)
+    ivfDelta(snap, tableName).foreach { dp =>
+      Staged.commit(spark, tableName, path,
+          keep = snap.members -- Seq(tableName, s"${tableName}_delta"))(
+        _.write()(writeLists(buckets,
+          snap.table(tableName).unionByName(dp))))
     }
-    spark.sql(s"DROP TABLE IF EXISTS `${tableName}_delta`")
   }
   /** IVF LIST-BALANCE audit over a persisted index of any codec: list
     * population, heaviest/lightest lists, and max-over-ideal as the
@@ -1786,7 +1760,7 @@ object Knn {
     * the "rebuild the index" signal. One hash agg over the bucketed scan
     * (zero Exchange). Rows-only: lists come from seeded k-means. */
   def ivfBalanceAudit(spark: SparkSession, tableName: String): DataFrame =
-    graft.sources.Staged.liveTable(spark, tableName)
+    graft.sources.Staged.table(spark, tableName)
       .groupBy(col("c_id")).agg(count(lit(1)).as("list_size"))
       .groupBy()
       .agg(
@@ -1857,9 +1831,8 @@ object Knn {
       nprobe: Int = 2, nlist: Int = 10): DataFrame = {
     // materialize the (id, v, nrm) base once: the k-means rounds, the
     // corpus assignment, and the query probes otherwise each re-scan the
-    // source and re-derive norms — five scans collapse to one; the
-    // finiteNorm fence keeps degenerate vectors out of the float path
-    val base = e.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
+    // source and re-derive norms — five scans collapse to one
+    val base = fencedBase(e)
     val model = kmeansModel(base, nlist)
     FloatCodec.search(model, base.filter(queryPred), k, nprobe,
       FloatCodec.stored(assignTo(base, model)))
@@ -1992,25 +1965,24 @@ object Knn {
 
   /** Build + persist the IVF-PQ index ([[buildIvf]] with a [[PqCodec]]):
     * coarse lists in float space, a codebook trained on the same fenced
-    * base, PQ codes in the bucketed lists. ALL THREE artifacts persist —
-    * the code lists at `tableName`, the coarse centroids at
-    * `tableName_coarse`, the codebook at `tableName_codebook` — because
-    * the streaming probe and the delta faces resolve the side tables BY
-    * NAME. Returns (coarse, codebook) read back from the promoted tables. */
+    * base, PQ codes in the bucketed lists. ALL THREE persist as members
+    * of one artifact — the code lists at `tableName`, the coarse
+    * centroids at `tableName_coarse`, the codebook at
+    * `tableName_codebook` — because the streaming probe and the delta
+    * faces read the models from the same pointer read as the lists.
+    * Returns (coarse, codebook) read back from the committed snapshot. */
   def writeIvfPqIndex(e: DataFrame, tableName: String, path: String,
       nlist: Int = 10, m: Int = PqSubspaces, ksub: Int = PqCodesPerSub,
       buckets: Int = 8): (DataFrame, DataFrame) = {
     val spark = e.sparkSession
-    buildIvf(e, tableName, path, nlist, buckets) { (base, coarse) =>
-      val codebook = pqCodebookModel(base, m, ksub)
-      commitSide(s"${tableName}_coarse", s"${path}_coarse",
-        centroidFrame(spark, coarse))
-      commitSide(s"${tableName}_codebook", s"${path}_codebook",
-        codebookFrame(spark, codebook))
-      new PqCodec(codebook, m)
+    val (_, snap) = buildIvf(e, tableName, path, nlist, buckets) {
+      (base, coarse) =>
+        val codebook = pqCodebookModel(base, m, ksub)
+        (new PqCodec(codebook, m),
+          Seq("_coarse" -> centroidFrame(spark, coarse),
+            "_codebook" -> codebookFrame(spark, codebook)))
     }
-    (Staged.liveTable(spark, s"${tableName}_coarse"),
-      Staged.liveTable(spark, s"${tableName}_codebook"))
+    (snap.table(s"${tableName}_coarse"), snap.table(s"${tableName}_codebook"))
   }
 
   /** Per-query flattened ADC lookup table: (query_id, lut) with
@@ -2034,44 +2006,46 @@ object Knn {
     * neighbor_id. */
   def searchIvfPq(spark: SparkSession, tableName: String,
       coarse: DataFrame, codebook: DataFrame, queries: DataFrame, k: Int,
-      nprobe: Int = 2, m: Int = PqSubspaces): DataFrame = {
-    val coarseModel = CentroidModel.of(coarse)
-    new PqCodec(CentroidModel.codebook(codebook), m).search(coarseModel,
-      queries, k, nprobe, Staged.liveTable(spark, tableName))
-  }
+      nprobe: Int = 2, m: Int = PqSubspaces): DataFrame =
+    searchIvfPqOn(Staged.table(spark, tableName), coarse, codebook,
+      queries, k, nprobe, m)
+
+  /** [[searchIvfPq]] over an already-resolved list frame — the face a
+    * reader that took lists and models from ONE pointer read (the live
+    * PQ probe) serves from. */
+  private[graft] def searchIvfPqOn(index: DataFrame, coarse: DataFrame,
+      codebook: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
+      m: Int = PqSubspaces): DataFrame =
+    new PqCodec(CentroidModel.codebook(codebook), m).search(
+      CentroidModel.of(coarse), queries, k, nprobe, index)
 
   /** Append a crawl delta to the persisted IVF-PQ index ([[appendIvf]]
-    * with TWO frozen models, both resolved BY NAME from the live side
-    * tables — the runKnnPqProbe serving posture). The coarse-alignment
-    * fence runs before any assignment; the codebook has no
-    * join-observable mismatch signal (code_idx is dense per subspace by
-    * construction), so its freshness rides the Staged multi-table
-    * discipline — side tables promote before the main table at build,
-    * and this append resolves all three at one entry (the documented
-    * single-rename exposure, as everywhere). */
+    * with TWO frozen models, both read from the SAME snapshot as the
+    * lists — one pointer read cannot mix generations, so neither model
+    * needs a fence). */
   def appendIvfPqIndexDelta(eNew: DataFrame, tableName: String,
       path: String, m: Int = PqSubspaces, buckets: Int = 8): Unit =
-    appendIvf(eNew, tableName, path, buckets, "IvfPqIndex") {
-      val (coarse, codebook) = pqModels(eNew.sparkSession, tableName)
-      (coarse, new PqCodec(codebook, m))
+    appendIvf(eNew, tableName, path, buckets, "IvfPqIndex") { snap =>
+      val (coarse, codebook) = pqModels(snap, tableName)
+      (coarse, new PqCodec(codebook, m), snap.table(tableName))
     }
 
-  /** The frozen (coarse, codebook) models of a persisted IVF-PQ index,
-    * read from its live side tables. */
-  private def pqModels(spark: SparkSession,
+  /** The frozen (coarse, codebook) models of a persisted IVF-PQ index
+    * snapshot. */
+  private def pqModels(snap: Staged.Snapshot,
       tableName: String): (CentroidModel, CentroidModel) =
-    (CentroidModel.of(Staged.liveTable(spark, s"${tableName}_coarse")),
-      CentroidModel.codebook(Staged.liveTable(spark,
-        s"${tableName}_codebook")))
+    (CentroidModel.of(snap.table(s"${tableName}_coarse")),
+      CentroidModel.codebook(snap.table(s"${tableName}_codebook")))
 
-  /** [[searchIvfPq]] over base ∪ live delta ([[searchIvfDelta]]), the
-    * frozen artifacts resolved by name. */
+  /** [[searchIvfPq]] over base ∪ delta ([[searchIvfDelta]]), lists,
+    * delta and both frozen models from one snapshot. */
   def searchIvfPqDelta(spark: SparkSession, tableName: String,
       queries: DataFrame, k: Int, nprobe: Int = 2,
       m: Int = PqSubspaces): DataFrame = {
-    val (coarse, codebook) = pqModels(spark, tableName)
-    searchIvfDelta(spark, tableName, coarse, new PqCodec(codebook, m),
-      queries, k, nprobe)
+    val snap = Staged.resolve(spark, tableName)
+    val (coarse, codebook) = pqModels(snap, tableName)
+    searchIvfDelta(snap, tableName, snap.table(tableName), coarse,
+      new PqCodec(codebook, m), queries, k, nprobe)
   }
 
   /** [[ivfRecallAudit]] for the PQ path: persisted IVF-PQ probe vs the
@@ -2103,7 +2077,7 @@ object Knn {
     * agg to ≤ m·ksub rows, then a per-subspace rollup. */
   def pqCodeBalance(spark: SparkSession, tableName: String,
       codebook: DataFrame): DataFrame = {
-    val occ = graft.sources.Staged.liveTable(spark, tableName)
+    val occ = graft.sources.Staged.table(spark, tableName)
       .select(posexplode(col("codes")).as(Seq("sub_id", "code_idx")))
       .groupBy(col("sub_id"), col("code_idx"))
       .agg(count(lit(1)).as("occ"))

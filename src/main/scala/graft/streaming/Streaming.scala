@@ -407,7 +407,7 @@ object Streaming {
     import spark.implicits._
     require(tau > 0.0, s"bad tau=$tau")
     val vocab: Map[(String, String), Long] = boundedCollect(
-        graft.sources.Staged.liveTable(spark, vocabTable)
+        graft.sources.Staged.table(spark, vocabTable)
           .select(col("lang"), col("term"), col("idf_milli")),
         vocabTable, maxArtifactRows,
         "re-band the vocabulary or run the stream-static probe " +
@@ -448,7 +448,7 @@ object Streaming {
       .select(col("doc_id"), col("lang"), col("n2"),
         expr("transform(kw, s -> s.k)").as("ks"),
         expr("transform(kw, s -> s.w)").as("ws"))
-    val corpus = graft.sources.Staged.liveTable(spark, vecTable)
+    val corpus = graft.sources.Staged.table(spark, vecTable)
       .select(col("doc_id").as("similar_id"), col("lang"),
         col("n2").as("cn2"), col("ks").as("cks"), col("ws").as("cws"))
     entries.join(corpus, Seq("lang"))
@@ -496,7 +496,7 @@ object Streaming {
     import spark.implicits._
     require(k >= 1 && w >= 1, s"bad params k=$k w=$w")
     val idx: Map[String, Array[Long]] = boundedCollect(
-        graft.sources.Staged.liveTable(spark, anchorTable).select(col("h"), col("doc_id")),
+        graft.sources.Staged.table(spark, anchorTable).select(col("h"), col("doc_id")),
         anchorTable, maxArtifactRows,
         "scope the test split or run the stream-static probe " +
           "(Streaming.runContaminationProbe) instead")
@@ -668,8 +668,8 @@ object Streaming {
     * .searchIvfIndex]] — the exact member `hybrid_search_ivf` fuses in
     * batch — ranking the frozen centroid table
     * (`${ivfTable}_centroids`, committed by
-    * [[graft.similarity.Knn.writeIvfIndex]] with persistCentroids and
-    * healed on read by Staged.liveTable) and meeting only the nprobe
+    * [[graft.similarity.Knn.writeIvfIndex]] with persistCentroids, read
+    * with the lists from one pointer read) and meeting only the nprobe
     * nearest lists in a c_id equijoin with zero index-side Exchange.
     * The lexical member and the fusion are UNCHANGED
     * ([[graft.text.TextOps.docSimilarPersisted]] /
@@ -698,22 +698,11 @@ object Streaming {
         val q = graft.similarity.Knn.embOf(b.select(
           col("doc_id").as("vec_id"), lit(0).cast("int").as("label"),
           col("embedding")))
-        // ONE collect of the centroid table: the model the probe's
-        // kernels read is the model the fence checks
-        val model = graft.functions.CentroidModel.of(
-          graft.sources.Staged.liveTable(spark, s"${ivfTable}_centroids"))
-        // the two staged artifacts promote independently — verify the
-        // index's c_id space IS the one this centroid generation
-        // describes (memoized; a mid-swap probe would otherwise emit
-        // a silently EMPTY semantic member). The fence RETURNS the
-        // index resolution it verified and the probe reads exactly
-        // that frame — a promote landing between the check and the
-        // probe can no longer swap an unverified index in (r17 ADVICE
-        // TOCTOU).
-        val index = graft.similarity.Knn.requireCentroidAlignment(spark,
-          ivfTable, model)
-        val sem = graft.similarity.Knn.searchIvfIndexOn(index,
-            model, q, kSem, nprobe)
+        // lists and centroids from ONE pointer read: one generation
+        val snap = graft.sources.Staged.resolve(spark, ivfTable)
+        val sem = graft.similarity.Knn.searchIvfIndexOn(
+            snap.table(ivfTable), graft.functions.CentroidModel.of(
+              snap.table(s"${ivfTable}_centroids")), q, kSem, nprobe)
           .filter(col("score") >= tauSem)
           .select(col("query_id").as("doc_id"),
             col("neighbor_id").as("cand_id"), col("score"))
@@ -797,7 +786,7 @@ object Streaming {
           .localCheckpoint(true)
         if (b.limit(1).count() > 0L)
           graft.similarity.Knn.appendIvfIndexDelta(b, tableName, path,
-            graft.sources.Staged.liveTable(spark, centroidsTable))
+            graft.sources.Staged.table(spark, centroidsTable))
       }
     vecStream.writeStream.foreachBatch(perBatch).start()
   }
@@ -875,8 +864,8 @@ object Streaming {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => sink(graft.similarity.Knn.tripletProbe(spark,
-        indexTable, graft.sources.Staged.liveTable(spark, centroidsTable),
-        graft.sources.Staged.liveTable(spark, labelsTable), batch.toDF(), marginE4, nprobe))
+        indexTable, graft.sources.Staged.table(spark, centroidsTable),
+        graft.sources.Staged.table(spark, labelsTable), batch.toDF(), marginE4, nprobe))
     vecStream.writeStream.foreachBatch(perBatch).start()
   }
 
@@ -909,7 +898,7 @@ object Streaming {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => sink(graft.text.TextOps.mixApplyWith(batch.toDF(),
-        graft.sources.Staged.liveTable(spark, planTable)
+        graft.sources.Staged.table(spark, planTable)
           .select("lang", "source", "tokens_kept", "target_tokens"),
         seed))
     docStream.writeStream.foreachBatch(perBatch).start()
@@ -968,8 +957,8 @@ object Streaming {
     val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => sink(graft.similarity.Knn.labelPropProbe(spark,
         indexTable,
-        graft.sources.Staged.liveTable(spark, centroidsTable),
-        graft.sources.Staged.liveTable(spark, labelsTable),
+        graft.sources.Staged.table(spark, centroidsTable),
+        graft.sources.Staged.table(spark, labelsTable),
         graft.similarity.Knn.embOf(batch.toDF()),
         labeledSixteenths, tau, nprobe))
     embStream.writeStream.foreachBatch(perBatch).start()
@@ -992,11 +981,13 @@ object Streaming {
       k: Int = 10, nprobe: Int = 2)(sink: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => sink(graft.similarity.Knn.searchIvfPq(spark,
-        indexTable,
-        graft.sources.Staged.liveTable(spark, coarseTable),
-        graft.sources.Staged.liveTable(spark, codebookTable),
-        graft.similarity.Knn.embOf(batch.toDF()), k, nprobe))
+      (batch, _) => {
+        // lists and both models from ONE pointer read
+        val snap = graft.sources.Staged.resolve(spark, indexTable)
+        sink(graft.similarity.Knn.searchIvfPqOn(snap.table(indexTable),
+          snap.table(coarseTable), snap.table(codebookTable),
+          graft.similarity.Knn.embOf(batch.toDF()), k, nprobe))
+      }
     embStream.writeStream.foreachBatch(perBatch).start()
   }
 
@@ -1010,8 +1001,8 @@ object Streaming {
     * (key, id) is associative: bottom-k(S₁∪S₂) =
     * bottom-k(bottom-k(S₁)∪S₂), the exact invariant the stream's
     * eviction loop maintains), carries per-stratum n_seen forward as
-    * exact integer adds, and promotes the new state via
-    * [[graft.sources.Staged]] — crash-safe generations, like every
+    * exact integer adds, and commits the new state via
+    * [[graft.sources.Staged]] — one pointer flip per batch, like every
     * other persisted serving artifact. `sink` receives the strata the
     * batch TOUCHED (update-mode semantics, the stream's emit rule). */
   def runSampleExactKProbe(spark: SparkSession, docStream: DataFrame,
@@ -1024,15 +1015,10 @@ object Streaming {
         val b = batch.toDF()
           .select(col("doc_id"), col("lang"), col("source"))
           .localCheckpoint(true) // 3 consumers: union, counts, touch set
-        val havePrev = spark.catalog.tableExists(stateTable) ||
-          spark.catalog.tableExists(s"${stateTable}__stage")
-        val prev =
-          if (havePrev) graft.sources.Staged.liveTable(spark, stateTable)
-            .select(col("lang"), col("source"), col("doc_id"),
-              col("n_seen"))
-          else b.limit(0).withColumn("n_seen", lit(0L))
-            .select(col("lang"), col("source"), col("doc_id"),
-              col("n_seen"))
+        val prev = graft.sources.Staged.snapshot(spark, stateTable)
+          .map(_.table(stateTable))
+          .getOrElse(b.limit(0).withColumn("n_seen", lit(0L)))
+          .select(col("lang"), col("source"), col("doc_id"), col("n_seen"))
         // picks over (frozen picks ∪ batch) — the associative merge
         val picks = graft.text.TextOps.sampleExactK(
           prev.select(col("doc_id"), col("lang"), col("source"))
@@ -1050,12 +1036,8 @@ object Streaming {
           .select(col("lang"), col("source"), col("doc_id"),
             col("sample_rank"), col("n_seen"))
           .localCheckpoint(true) // consumed by the write AND the sink
-        graft.sources.Staged.commit(spark, stateTable, statePath) {
-          (tbl, p) =>
-            next.write.option("path", p)
-              .mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .saveAsTable(tbl)
-        }
+        graft.sources.Staged.commit(spark, stateTable, statePath)(
+          _.save("", next))
         sink(next.join(
           b.select(col("lang"), col("source")).distinct(),
           Seq("lang", "source"), "left_semi"))
@@ -1081,7 +1063,7 @@ object Streaming {
       modelTable: String, maxArtifactRows: Long = 1L << 22): DataFrame = {
     import spark.implicits._
     val model: Map[String, Long] = boundedCollect(
-        graft.sources.Staged.liveTable(spark, modelTable).select(col("term"), col("logodds_milli")),
+        graft.sources.Staged.table(spark, modelTable).select(col("term"), col("logodds_milli")),
         modelTable, maxArtifactRows,
         "the df band bounds the model — re-band it or run the " +
           "stream-static probe (Streaming.runDomainScoreProbe) instead")
@@ -1126,7 +1108,7 @@ object Streaming {
     // (lang, source) -> (base copies, 16-bit fractional threshold),
     // precomputed once from the frozen plan with the batch expressions
     val plan: Map[(String, String), (Long, Long)] = boundedCollect(
-        graft.sources.Staged.liveTable(spark, planTable)
+        graft.sources.Staged.table(spark, planTable)
           .select(col("lang"), col("source"), col("tokens_kept"),
             col("target_tokens")),
         planTable, maxArtifactRows,
@@ -1188,7 +1170,7 @@ object Streaming {
       indexTable: String, maxArtifactRows: Long = 1L << 22): DataFrame = {
     import spark.implicits._
     val idx: Map[(Int, String), Array[Long]] = boundedCollect(
-        graft.sources.Staged.liveTable(spark, indexTable)
+        graft.sources.Staged.table(spark, indexTable)
           .select(col("tbl"), col("bucket"), col("doc_id")),
         indexTable, maxArtifactRows,
         "a full-crawl index checks as the stream-static probe " +
@@ -1231,7 +1213,7 @@ object Streaming {
       salt: String = "curr"): DataFrame =
     graft.text.TextOps.assignPhases(
       graft.text.TextOps.scoredQ4(docStream),
-      graft.sources.Staged.liveTable(spark, boundariesTable), nPhases, salt)
+      graft.sources.Staged.table(spark, boundariesTable), nPhases, salt)
 
   /** Streaming BUDGET GATE — the ingest-time face of
     * [[graft.text.TextOps.budgetCut]]: each arriving doc is scored by
@@ -1251,7 +1233,7 @@ object Streaming {
       decisionsTable: String, salt: String = "budget"): DataFrame =
     graft.text.TextOps.applyBudget(
       graft.text.TextOps.budgetScored(docStream, salt),
-      broadcast(graft.sources.Staged.liveTable(spark, decisionsTable)))
+      broadcast(graft.sources.Staged.table(spark, decisionsTable)))
 
   /** Streaming QUALITY GATE — the live front of
     * [[graft.text.TextOps.qualityCut]] (the budgetGateStream posture):
@@ -1267,7 +1249,7 @@ object Streaming {
       decisionsTable: String): DataFrame =
     graft.text.TextOps.applyQualityGate(
       graft.text.TextOps.qualityCutScored(docStream),
-      broadcast(graft.sources.Staged.liveTable(spark, decisionsTable)))
+      broadcast(graft.sources.Staged.table(spark, decisionsTable)))
 
   /** Live PERPLEXITY scoring against the persisted bigram LM
     * ([[graft.text.TextOps.writeLmIndex]]) — the ingest-time gibberish
@@ -1307,7 +1289,7 @@ object Streaming {
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => sink(graft.text.Boilerplate.boilerplateTag(
-        batch.toDF(), k, dict = Some(graft.sources.Staged.liveTable(spark, dictTable))))
+        batch.toDF(), k, dict = Some(graft.sources.Staged.table(spark, dictTable))))
     docStream.writeStream.foreachBatch(perBatch).start()
   }
 
@@ -1334,7 +1316,7 @@ object Streaming {
       .groupBy(col("b")).agg(count(lit(1)).as("n_new"))
     val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => sink(graft.text.Dsir.driftFrom(
-        graft.sources.Staged.liveTable(spark, oldProfileTable), batch.toDF(), tauMicro))
+        graft.sources.Staged.table(spark, oldProfileTable), batch.toDF(), tauMicro))
     newCounts.writeStream.outputMode("complete")
       .foreachBatch(perBatch).start()
   }
@@ -1360,9 +1342,9 @@ object Streaming {
     val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
       (batch, _) => sink(graft.text.Dsir.applyDsirGate(
         graft.text.Dsir.dsirWeights(batch.toDF(),
-            model = Some(graft.sources.Staged.liveTable(spark, modelTable)))
+            model = Some(graft.sources.Staged.table(spark, modelTable)))
           .withColumn("hex4", graft.text.Dsir.hex4Col),
-        broadcast(graft.sources.Staged.liveTable(spark, decisionsTable))))
+        broadcast(graft.sources.Staged.table(spark, decisionsTable))))
     docStream.writeStream.foreachBatch(perBatch).start()
   }
 
@@ -1389,7 +1371,7 @@ object Streaming {
       dictTable: String, maxArtifactRows: Long = 1L << 20): DataFrame = {
     import spark.implicits._
     val dict: Set[(String, String, String)] = boundedCollect(
-        graft.sources.Staged.liveTable(spark, dictTable).select(col("lang"), col("w1"), col("w2")),
+        graft.sources.Staged.table(spark, dictTable).select(col("lang"), col("w1"), col("w2")),
         dictTable, maxArtifactRows,
         "raise the collocation support threshold — it is what bounds " +
           "the dictionary at any corpus size")
@@ -1784,7 +1766,7 @@ object Streaming {
     * diff minus its removed rows. */
   def crawlDiffStream(spark: SparkSession, docStream: DataFrame,
       oldSnapshotTable: String): DataFrame = {
-    val old = graft.sources.Staged.liveTable(spark, oldSnapshotTable)
+    val old = graft.sources.Staged.table(spark, oldSnapshotTable)
       .select(col("doc_id"), col("digest").as("o_digest"))
     docStream.select(col("doc_id"), col("lang"),
         md5(col("text")).as("n_digest"))
@@ -1810,7 +1792,7 @@ object Streaming {
     * batch queue exactly over the replayed crawl. */
   def recrawlPriorityStream(spark: SparkSession, docStream: DataFrame,
       oldSnapshotTable: String): DataFrame = {
-    val old = graft.sources.Staged.liveTable(spark, oldSnapshotTable)
+    val old = graft.sources.Staged.table(spark, oldSnapshotTable)
       .select(col("doc_id"), col("digest").as("o_digest"))
     graft.text.TextOps.qualityScored(docStream)
       .withColumn("q4", graft.text.TextOps.q4Expr)
@@ -1859,7 +1841,7 @@ object Streaming {
     val boundary = labeledSixteenths.toHexString.charAt(0)
     val labeled: Array[(Long, Int, Array[Byte], Double)] =
       boundedCollect(
-        graft.sources.Staged.liveTable(spark, labeledCodesTable)
+        graft.sources.Staged.table(spark, labeledCodesTable)
           .select(col("vec_id"), col("label"), col("qv"), col("qnrm")),
         labeledCodesTable, 1L << 20,
         "a corpus-scale labeled side runs the stream-static probe " +
@@ -1930,7 +1912,7 @@ object Streaming {
   def consumerLagStream(spark: SparkSession, entryStream: DataFrame,
       cursorTable: String): DataFrame =
     entryStream.select(col("space"), col("ts_us"))
-      .join(broadcast(graft.sources.Staged.liveTable(spark, cursorTable)), Seq("space"))
+      .join(broadcast(graft.sources.Staged.table(spark, cursorTable)), Seq("space"))
       .groupBy(col("grp"), col("space"), col("cursor_ts_us"), col("tmax"))
       .agg(sum(when(col("ts_us") > col("cursor_ts_us"), 1L).otherwise(0L))
         .as("n_behind"))
@@ -1961,7 +1943,7 @@ object Streaming {
       centroidTable: String, maxArtifactRows: Long = 1L << 20): DataFrame = {
     import spark.implicits._
     val sums: Map[Int, Array[Long]] = boundedCollect(
-        graft.sources.Staged.liveTable(spark, centroidTable).select(col("label"), col("pos"),
+        graft.sources.Staged.table(spark, centroidTable).select(col("label"), col("pos"),
           col("s")),
         centroidTable, maxArtifactRows,
         "the centroid artifact is labels×dims at ANY corpus size — a " +

@@ -102,14 +102,13 @@ object Boilerplate {
     * and tags every incoming batch against the frozen artifact.
     * Bucketed by `gram` (the tag join's key — a dictionary beyond
     * broadcast budget still joins with no index-side Exchange);
-    * rebuilds ride [[graft.sources.Staged]] tmp→aside→promote, so a
-    * crash mid-rebuild self-recovers and the live table serves
-    * throughout. The dictionary stays human-readable (literal grams —
+    * rebuilds commit through [[graft.sources.Staged]]'s pointer flip, so
+    * a crash mid-rebuild leaves the old generation serving. The dictionary stays human-readable (literal grams —
     * it doubles as the template report). */
   def writeBoilerplateIndex(d: DataFrame, tableName: String,
       path: String, k: Int = DefaultK, minDf: Long = DefaultMinDf,
       buckets: Int = 8): Unit =
-    graft.sources.Staged.commit(d.sparkSession, tableName, path) {
+    graft.sources.Staged.commit(d.sparkSession, tableName, path)(_.write() {
       (tbl, p) =>
         boilerplateSpans(d, k, minDf)
           .repartition(col("gram"))
@@ -119,7 +118,7 @@ object Boilerplate {
           .sortBy("gram")
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
           .saveAsTable(tbl)
-    }
+    })
 
   /** Per-doc tagging against the PERSISTED dictionary
     * ([[writeBoilerplateIndex]]) — result-identical to
@@ -134,7 +133,7 @@ object Boilerplate {
   def boilerplateTagIndexed(spark: org.apache.spark.sql.SparkSession,
       tableName: String, d: DataFrame, k: Int = DefaultK): DataFrame =
     grams(d, k)
-      .join(graft.sources.Staged.liveTable(spark, tableName)
+      .join(graft.sources.Staged.table(spark, tableName)
         .select(col("gram"), lit(1L).as("hit")), Seq("gram"), "left")
       .groupBy(col("doc_id"))
       .agg(

@@ -63,9 +63,9 @@ object Chunks {
     * probe = [[chunkDedupIncremental]]. */
   def writeChunkIndex(d: DataFrame, tableName: String, path: String,
       width: Int = 32, buckets: Int = 8): Unit =
-    // staged rebuild (Staged.commit): the live index serves while the
-    // new generation builds; promote is a catalog rename
-    graft.sources.Staged.commit(d.sparkSession, tableName, path) {
+    // one generation behind the artifact pointer (Staged.commit): the
+    // live index serves while the new generation builds
+    graft.sources.Staged.commit(d.sparkSession, tableName, path)(_.write() {
       (tbl, p) =>
         chunkAssign(d, width)
           .groupBy(col("chunk_digest"))
@@ -79,7 +79,7 @@ object Chunks {
           .sortBy("chunk_digest")
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
           .saveAsTable(tbl)
-    }
+    })
 
   /** The maximum chunks one document may hold under the composite
     * chunk id ([[chunkCorpus]]): 2²⁰ chunks × width-32 words ≈ 33M
@@ -337,7 +337,7 @@ object Chunks {
     val lexR = Prf.topDocs(lexScored, kLex)
       .select(col("doc_id").as("cand_id"), col("rnk").as("lex_rank"))
       .withColumn("doc_id", lit(0L))
-    val queryRel = graft.sources.Staged.liveTable(spark, vocabTable)
+    val queryRel = graft.sources.Staged.table(spark, vocabTable)
       .select(col("lang")).distinct()
       .select(lit(-1L).as("doc_id"), col("lang"),
         lit(terms.mkString(" ")).as("text"))
@@ -384,7 +384,7 @@ object Chunks {
     * persisted pipeline relationally. */
   def chunkDedupIncremental(spark: org.apache.spark.sql.SparkSession,
       tableName: String, newDocs: DataFrame, width: Int = 32): DataFrame = {
-    val idx = graft.sources.Staged.liveTable(spark, tableName)
+    val idx = graft.sources.Staged.table(spark, tableName)
       .select(col("chunk_digest"), col("keeper_doc"))
     chunkAssign(newDocs, width)
       .join(idx, Seq("chunk_digest"), "left_outer")

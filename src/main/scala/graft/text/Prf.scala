@@ -169,10 +169,10 @@ object Prf {
       indexTable: String, q0: Seq[String] = SeedQuery, k0: Int = 10,
       m: Int = 5, minDf: Long = 2L): DataFrame = {
     require(k0 >= 1, s"bad k0=$k0")
+    val snap = graft.sources.Staged.resolve(spark, indexTable)
     prfTermsOver(
-      graft.sources.Staged.liveTable(spark, indexTable),
-      graft.sources.Staged.liveTable(spark, s"${indexTable}_stats")
-        .select(col("n_docs_tok")),
+      snap.table(indexTable),
+      snap.table(s"${indexTable}_stats").select(col("n_docs_tok")),
       topDocs(TextOps.searchIndex(spark, indexTable, q0), k0)
         .select("doc_id"),
       q0, m, minDf)

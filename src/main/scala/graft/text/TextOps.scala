@@ -563,13 +563,12 @@ object TextOps {
     * incoming batch against the frozen artifact instead of re-deriving
     * it per query. Bucketed by `word` (the probe join's key — a vocab
     * beyond broadcast budget still joins with no index-side Exchange);
-    * rebuilds ride [[graft.sources.Staged]] tmp→aside→promote, so a
-    * crash mid-rebuild self-recovers and the live table serves
-    * throughout. */
+    * rebuilds commit through [[graft.sources.Staged]]'s pointer flip, so
+    * a crash mid-rebuild leaves the old generation serving. */
   def writeVocabIndex(d: DataFrame, tableName: String, path: String,
       minDf: Long = 2L, trainSixteenths: Int = 13,
       buckets: Int = 8): Unit =
-    graft.sources.Staged.commit(d.sparkSession, tableName, path) {
+    graft.sources.Staged.commit(d.sparkSession, tableName, path)(_.write() {
       (tbl, p) =>
         dfBandedVocab(d, minDf, trainSixteenths)
           .repartition(col("word"))
@@ -579,7 +578,7 @@ object TextOps {
           .sortBy("word")
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
           .saveAsTable(tbl)
-    }
+    })
 
   /** OOV audit against the PERSISTED vocabulary ([[writeVocabIndex]])
     * — result-identical to [[vocabCoverage]] when the table was
@@ -591,7 +590,7 @@ object TextOps {
       d: DataFrame, trainSixteenths: Int = 13): DataFrame =
     oovRollup(
       lowerToks(d).filter(splitExpr(trainSixteenths) === "test"),
-      graft.sources.Staged.liveTable(spark, tableName))
+      graft.sources.Staged.table(spark, tableName))
 
   /** Per-document OOV TAGGER against the persisted vocabulary (r17) —
     * the row-granular dual of [[vocabCoverageIndexed]] and the batch
@@ -612,7 +611,7 @@ object TextOps {
         explode(col("toks")).as("word"))
       .groupBy(col("doc_id"), col("source"), col("word"))
       .agg(count(lit(1)).as("cnt"))
-      .join(graft.sources.Staged.liveTable(spark, tableName).select(col("word"),
+      .join(graft.sources.Staged.table(spark, tableName).select(col("word"),
         lit(1L).as("known")), Seq("word"), "left")
       .groupBy(col("doc_id"), col("source"))
       .agg(
@@ -1192,9 +1191,9 @@ object TextOps {
   def writeDomainModel(d: DataFrame, tableName: String, path: String,
       refSource: String = "src0", minDf: Int = 2,
       buckets: Int = 8): Unit = {
-    // staged rebuild (Staged.commit): the live model serves while the
-    // new generation trains; promote is a catalog rename
-    graft.sources.Staged.commit(d.sparkSession, tableName, path) {
+    // one generation behind the artifact pointer (Staged.commit): the
+    // live model serves while the new generation trains
+    graft.sources.Staged.commit(d.sparkSession, tableName, path)(_.write() {
       (tbl, p) =>
         domainModel(d, refSource, minDf)
           .repartition(col("term"))
@@ -1204,7 +1203,7 @@ object TextOps {
           .sortBy("term")
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
           .saveAsTable(tbl)
-    }
+    })
   }
 
   /** Score a corpus against the PERSISTED model ([[writeDomainModel]])
@@ -1214,7 +1213,7 @@ object TextOps {
   def domainScorePersisted(spark: SparkSession, d: DataFrame,
       tableName: String): DataFrame =
     scoreAgainstModel(docTermTf(d),
-      graft.sources.Staged.liveTable(spark, tableName).select("term", "logodds_milli"))
+      graft.sources.Staged.table(spark, tableName).select("term", "logodds_milli"))
 
   /** Source/domain balancing — the data-mixing step before training:
     * every source is Bernoulli-downsampled to at most ≈`cap` expected
@@ -1911,27 +1910,21 @@ object TextOps {
     val spark = d.sparkSession
     import spark.implicits._
     val (vocab, merges) = bpeTrain(d, numMerges, maxVocab)
-    // staged rebuilds (Staged.commit), merge list first, MAIN vocab
-    // table last — the vocab promote is the commit point probes key on
-    graft.sources.Staged.commit(spark, s"${tableName}_merges",
-        s"${path}_merges") { (tbl, p) =>
-      merges.zipWithIndex
+    // vocab + merge list: one generation, one pointer flip
+    graft.sources.Staged.commit(spark, tableName, path) { g =>
+      g.save("_merges", merges.zipWithIndex
         .map { case ((a, b), i) => (i.toLong, a, b) }
-        .toDF("merge_rank", "left", "right")
-        .write
-        .option("path", p)
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .saveAsTable(tbl)
-    }
-    graft.sources.Staged.commit(spark, tableName, path) { (tbl, p) =>
-      vocab.select(col("word"), col("freq"), col("n_bpe"))
-        .repartition(col("word"))
-        .write
-        .option("path", p)
-        .bucketBy(buckets, "word")
-        .sortBy("word")
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .saveAsTable(tbl)
+        .toDF("merge_rank", "left", "right"))
+      g.write() { (tbl, p) =>
+        vocab.select(col("word"), col("freq"), col("n_bpe"))
+          .repartition(col("word"))
+          .write
+          .option("path", p)
+          .bucketBy(buckets, "word")
+          .sortBy("word")
+          .mode(org.apache.spark.sql.SaveMode.Overwrite)
+          .saveAsTable(tbl)
+      }
     }
   }
 
@@ -1945,7 +1938,7 @@ object TextOps {
     * doesn't). */
   def tokenCountBpeIndexed(spark: SparkSession, tableName: String,
       d: DataFrame): DataFrame = {
-    val seg = graft.sources.Staged.liveTable(spark, tableName).select(col("word"), col("n_bpe"))
+    val seg = graft.sources.Staged.table(spark, tableName).select(col("word"), col("n_bpe"))
     withToks(d.withColumn("text", lower(col("text"))))
       .select(col("doc_id"), col("source"), explode(col("toks")).as("word"))
       .join(seg, Seq("word"), "left")
@@ -2020,7 +2013,7 @@ object TextOps {
       .agg(count(lit(1)).as("c2"))
       .localCheckpoint(true) // 2 consumers: context rollup + model rows
     val c1 = c2.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
-    graft.sources.Staged.commit(d.sparkSession, tableName, path) {
+    graft.sources.Staged.commit(d.sparkSession, tableName, path)(_.write() {
       (tbl, p) =>
         c2.join(c1, Seq("w1"))
           .repartition(col("w1"))
@@ -2030,7 +2023,7 @@ object TextOps {
           .sortBy("w1", "w2")
           .mode(org.apache.spark.sql.SaveMode.Overwrite)
           .saveAsTable(tbl)
-    }
+    })
   }
 
   /** Score documents against the PERSISTED bigram LM
@@ -2046,7 +2039,7 @@ object TextOps {
   def lmScoreIndexed(spark: SparkSession, tableName: String,
       d: DataFrame): DataFrame =
     lmBigrams(d)
-      .join(graft.sources.Staged.liveTable(spark, tableName), Seq("w1", "w2"))
+      .join(graft.sources.Staged.table(spark, tableName), Seq("w1", "w2"))
       .select(col("doc_id"), (log(col("c2")) - log(col("c1"))).as("logp"))
       .groupBy(col("doc_id"))
       .agg(
@@ -2210,21 +2203,12 @@ object TextOps {
 
   def writeTextIndex(d: DataFrame, tableName: String, path: String,
       buckets: Int = 8): Unit = {
-    val spark = d.sparkSession
     // feeds the stats row AND the postings write — one tokenize pass
     val withDl = docLengths(d).localCheckpoint(true)
-    // staged rebuilds (Staged.commit), side table first, MAIN table
-    // last — the main promote is the commit point probes key on
-    graft.sources.Staged.commit(spark, s"${tableName}_stats",
-        s"${path}_stats") { (tbl, p) =>
-      indexStatsOf(withDl)
-        .write
-        .option("path", p)
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .saveAsTable(tbl)
-    }
-    graft.sources.Staged.commit(spark, tableName, path) { (tbl, p) =>
-      writePostings(postingRowsOf(withDl), tbl, p, buckets)
+    // postings + stats: one generation, one pointer flip
+    graft.sources.Staged.commit(d.sparkSession, tableName, path) { g =>
+      g.save("_stats", indexStatsOf(withDl))
+      g.write()(writePostings(postingRowsOf(withDl), _, _, buckets))
     }
   }
 
@@ -2234,14 +2218,14 @@ object TextOps {
     * shares its oracle: the persisted hop is transparent to the result.
     * The probe reads only the query terms' postings (predicate pushed to
     * the bucketed parquet scan); df rolls up from those postings with no
-    * index-side Exchange. */
+    * index-side Exchange. Postings and stats come from ONE pointer read. */
   def searchIndex(spark: SparkSession, tableName: String,
       terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "empty query")
+    val snap = graft.sources.Staged.resolve(spark, tableName)
     // the ONE scoring core — identical chain to the ad-hoc search
-    searchPostingsCore(
-      graft.sources.Staged.liveTable(spark, tableName),
-      graft.sources.Staged.liveTable(spark, s"${tableName}_stats"),
+    searchPostingsCore(snap.table(tableName),
+      snap.table(s"${tableName}_stats"),
       _.filter(col("term").isin(terms: _*)), k1, b)
   }
 
@@ -2255,36 +2239,47 @@ object TextOps {
     * [[bm25ScoreTail]] scores. Zero corpus tokenize passes: the corpus
     * was tokenized once, at index build. */
   def searchIndexTerms(spark: SparkSession, tableName: String,
-      termsDf: DataFrame, k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    searchPostingsCore(
-      graft.sources.Staged.liveTable(spark, tableName),
-      graft.sources.Staged.liveTable(spark, s"${tableName}_stats"),
+      termsDf: DataFrame, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    val snap = graft.sources.Staged.resolve(spark, tableName)
+    searchPostingsCore(snap.table(tableName),
+      snap.table(s"${tableName}_stats"),
       _.join(broadcast(termsDf.select(col("term")).distinct()), "term"),
       k1, b)
+  }
 
   // ───── delta-merge maintenance for the postings index (r17 verdict #1:
-  // at 100 TB a daily crawl delta must never pay a full-corpus rebuild —
-  // every write*Index was a full rebuild behind Staged; probes were
-  // incremental but builds were not) ──────────────────────────────────
+  // at 100 TB a daily crawl delta must never pay a full-corpus rebuild) ─────
+
+  /** The one-row sum of collection-stats rows: every counter is an
+    * ADDITIVE integer over disjoint doc sets (an empty batch adds 0). */
+  private def sumStats(stats: DataFrame): DataFrame =
+    stats.agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
+      coalesce(sum(col("sum_dl")), lit(0L)).as("sum_dl"),
+      coalesce(sum(col("n_docs_tok")), lit(0L)).as("n_docs_tok"))
+
+  private val PostingCols = Seq("term", "doc_id", "dl", "tf").map(col)
+  private val StatsCols = Seq("n_docs", "sum_dl", "n_docs_tok").map(col)
 
   /** Append a crawl delta to a persisted postings index: tokenize ONLY
-    * the delta docs into `<table>_delta` (its one-row stats riding
-    * in-table as constant columns), leaving the base untouched. [[searchIndexDelta]] probes
-    * base ∪ delta with closed-form merged statistics — tf, dl, df,
-    * n_docs, sum_dl, n_docs_tok are all ADDITIVE integers over disjoint
-    * doc sets, and BM25 derives idf at PROBE time from the merged df —
-    * so the probe result is EXACTLY the full-rebuild result
-    * (text_search_bm25's oracle shared verbatim; DeltaIndexSpec pins
-    * probe-over-(base ∪ delta) ≡ probe-over-full-rebuild row-for-row).
-    * A repeat append extends the same delta generation (old delta ∪ new
-    * batch, a delta-sized rewrite — never a corpus-sized one).
+    * the delta docs into the artifact's `_delta` postings member and its
+    * one-row `_delta_stats` member, leaving the base members untouched.
+    * [[searchIndexDelta]] probes base ∪ delta with closed-form merged
+    * statistics — tf, dl, df, n_docs, sum_dl, n_docs_tok are all
+    * ADDITIVE integers over disjoint doc sets, and BM25 derives idf at
+    * PROBE time from the merged df — so the probe result is EXACTLY the
+    * full-rebuild result (text_search_bm25's oracle shared verbatim;
+    * DeltaIndexSpec pins probe-over-(base ∪ delta) ≡
+    * probe-over-full-rebuild row-for-row). A repeat append extends the
+    * same delta (old delta ∪ new batch, a delta-sized rewrite — never a
+    * corpus-sized one); a token-less batch lands its stats with no
+    * postings.
     *
-    * Generation fencing: the delta records the BASE generation it
-    * extends (`base_gen` = the main table's Staged location, which
-    * every promote flips). A full rebuild or a [[mergeTextIndex]]
-    * promote makes the delta STALE — probes ignore it and the next
-    * append replaces it — so a delta can never double-serve rows that
-    * a rebuild already absorbed.
+    * The delta is a member of the artifact: the append flips the
+    * pointer to the base members plus the new delta pair in ONE commit,
+    * a rebuild or [[mergeTextIndex]] flips to a map with no delta, so
+    * a delta can never double-serve rows a rebuild already absorbed,
+    * and a crash before the flip leaves the previous delta serving (a
+    * retry of the batch lands it exactly once).
     *
     * Disjointness fence (the momentGuard posture — the "only NEW docs"
     * contract is enforced in-plan, not documented): the batch's doc_ids
@@ -2292,52 +2287,25 @@ object TextOps {
     * is one doc_id-column scan of the bucketed index with the new ids
     * broadcast — crawl-delta cadence, never query cadence. Bound: the
     * fence sees TOKENIZED docs; a re-crawled zero-token doc has no
-    * posting row and can only perturb n_docs by its duplicate count.
-    *
-    * Crash windows: the delta batch — postings AND its one-row stats —
-    * promotes in ONE Staged commit: the stats ride IN the delta table
-    * as constant columns (n_docs, sum_dl, n_docs_tok, base_gen on
-    * every row — parquet RLE stores a constant column in a few bytes;
-    * the doc-vector family's in-table base_gen posture, r18 ADVICE:
-    * the earlier two-table layout had a stats-promoted/postings-not
-    * window whose inflated stats mass PERSISTED and was then baked in
-    * by the merge). A batch whose docs are all token-less still needs
-    * its stats carried: every delta generation writes one SENTINEL row
-    * (doc_id NULL, tf 0) that probes filter out, so the constants
-    * always have a carrier. The remaining windows are Staged's own,
-    * each self-healing: a crash during the stage write leaves the old
-    * delta live (a RETRY of the same batch lands it exactly once —
-    * the fences check the old generation); a crash between drop-live
-    * and rename is completed by the recover-on-read at every probe/
-    * append entry, after which the batch IS landed and a retry raises
-    * the disjointness fence by name (the already-landed signal).
-    * DeltaIndexSpec simulates both windows. */
+    * posting row and can only perturb n_docs by its duplicate count. */
   def appendTextIndexDelta(dNew: DataFrame, tableName: String,
       path: String, buckets: Int = 8): Unit = {
     val spark = dNew.sparkSession
-    graft.sources.Staged.recover(spark, tableName)
-    require(spark.catalog.tableExists(tableName),
+    val snap = graft.sources.Staged.resolve(spark, tableName)
+    require(snap.has(tableName),
       s"appendTextIndexDelta: no base index $tableName — build it with " +
         "writeTextIndex first")
-    // heal a half-merged crash state FIRST (stats absorbed the live
-    // delta, postings not yet — the Staged.recover philosophy applied
-    // to the two-table merge): completing the pending merge here means
-    // the absorbed delta's postings can never be replaced away, and
-    // this append then starts a clean generation
-    if (rawTextDelta(spark, tableName).isDefined &&
-        deltaAbsorbed(spark, tableName))
-      mergeTextIndex(spark, tableName, path, buckets)
     // one tokenize pass over the DELTA only — the whole point
     val withDl = docLengths(dNew).localCheckpoint(true)
     val newIds = withDl.select(col("doc_id")).distinct()
-    val clashBase = graft.sources.Staged.liveTable(spark, tableName)
+    val clashBase = snap.table(tableName)
       .join(broadcast(newIds), Seq("doc_id"), "left_semi").count()
     require(clashBase == 0L,
       s"appendTextIndexDelta($tableName): $clashBase postings of " +
         "already-indexed doc_ids in the delta batch — a delta holds " +
         "only NEW docs (re-crawls go through purge + rebuild or the " +
         "merge cadence)")
-    val old = textIndexDelta(spark, tableName)
+    val old = textDelta(snap, tableName)
     old.foreach { case (op, _) =>
       val clashDelta = op.join(broadcast(newIds), Seq("doc_id"),
         "left_semi").count()
@@ -2345,137 +2313,42 @@ object TextOps {
         s"appendTextIndexDelta($tableName): $clashDelta postings of " +
           "doc_ids already in the live delta — batches must be disjoint")
     }
-    val baseGen = graft.sources.Staged.generation(spark, tableName)
-    // materialize base-union content BEFORE the commit drops the old
-    // delta table the plan reads (delta-sized, never corpus-sized)
     val newPost = postingRowsOf(withDl)
-    val postings = old
-      .map(_._1.select(col("term"), col("doc_id"), col("dl"), col("tf"))
-        .unionByName(newPost))
-      .getOrElse(newPost)
-      .localCheckpoint(true)
     val newStats = indexStatsOf(withDl)
-    // the merged one-row stats, collected (a 1-row control decision) so
-    // they fold into the postings as CONSTANT columns — postings and
-    // stats then promote atomically in the single commit below
-    val srow = old
-      .map { case (_, os) =>
-        os.select(col("n_docs"), col("sum_dl"), col("n_docs_tok"))
-          .unionByName(newStats)
-          .agg(sum(col("n_docs")).as("n_docs"),
-            sum(col("sum_dl")).as("sum_dl"),
-            sum(col("n_docs_tok")).as("n_docs_tok"))
-      }
-      .getOrElse(newStats)
-      .select(coalesce(col("n_docs"), lit(0L)),
-        coalesce(col("sum_dl"), lit(0L)),
-        coalesce(col("n_docs_tok"), lit(0L)))
-      .collect().head
-    // the sentinel carrier row (doc_id NULL): the constants survive even
-    // an all-token-less delta generation; probes filter it out
-    val sentinel = spark.range(1).select(
-      lit(null).cast("string").as("term"),
-      lit(null).cast("long").as("doc_id"),
-      lit(0L).as("dl"), lit(0L).as("tf"))
-    val rows = postings.unionByName(sentinel)
-      .withColumn("n_docs", lit(srow.getLong(0)))
-      .withColumn("sum_dl", lit(srow.getLong(1)))
-      .withColumn("n_docs_tok", lit(srow.getLong(2)))
-      .withColumn("base_gen", lit(baseGen))
-    graft.sources.Staged.commit(spark, s"${tableName}_delta",
-        s"${path}_delta") { (tbl, p) =>
-      writePostings(rows, tbl, p, buckets)
-    }
-    // sweep a legacy two-table generation's side table if one remains
-    spark.sql(s"DROP TABLE IF EXISTS `${tableName}_delta_stats`")
-  }
-
-  /** The delta pair (postings, stats) whose `base_gen` matches the
-    * CURRENT main generation — existence + generation check only, no
-    * absorbed filtering: [[mergeTextIndex]] and the heal path need the
-    * raw pair (an absorbed delta's POSTINGS are not yet in the base —
-    * dropping or replacing them on the absorbed signal alone would
-    * lose them). Both faces read the ONE delta table
-    * ([[appendTextIndexDelta]]'s in-table constant-stats layout):
-    * postings = the non-sentinel rows, stats = the constants off any
-    * one row. Runs Staged.recover first (the liveTable posture:
-    * crashed promotes heal on first read). */
-  private def rawTextDelta(spark: SparkSession,
-      tableName: String): Option[(DataFrame, DataFrame)] = {
-    val dt = s"${tableName}_delta"
-    graft.sources.Staged.recover(spark, dt)
-    if (!spark.catalog.tableExists(dt)) None
-    else {
-      val t = spark.table(dt)
-      // a LEGACY two-table-layout delta (no in-table stats columns)
-      // resolves as not-serviceable instead of crashing the probe —
-      // the next append overwrites it with the current layout and the
-      // next merge sweeps it, so the upgrade is self-healing
-      if (!t.columns.contains("base_gen") ||
-          !t.columns.contains("n_docs")) return None
-      val bg = t.select(col("base_gen")).limit(1).collect()
-      if (bg.isEmpty || bg.head.getString(0) !=
-          graft.sources.Staged.generation(spark, tableName)) None
-      else Some((
-        t.filter(col("doc_id").isNotNull)
-          .select(col("term"), col("doc_id"), col("dl"), col("tf")),
-        t.select(col("n_docs"), col("sum_dl"), col("n_docs_tok"),
-          col("base_gen")).limit(1)))
+    graft.sources.Staged.commit(spark, tableName, path, keep = snap.members
+        -- Seq(s"${tableName}_delta", s"${tableName}_delta_stats")) { g =>
+      g.save("_delta_stats", sumStats(old.map(_._2.select(StatsCols: _*)
+        .unionByName(newStats)).getOrElse(newStats)))
+      g.write("_delta")(writePostings(old.map(_._1.select(PostingCols: _*)
+        .unionByName(newPost)).getOrElse(newPost), _, _, buckets))
     }
   }
 
-  /** True when the main stats table already carries the live delta
-    * generation's mass — the half-merged crash window between the
-    * stats promote and the postings promote: probes must not add the
-    * delta's stats again, and writers must COMPLETE the merge before
-    * touching the delta. */
-  private def deltaAbsorbed(spark: SparkSession,
-      tableName: String): Boolean = {
-    val live = graft.sources.Staged.liveTable(spark,
-      s"${tableName}_stats")
-    live.columns.contains("merged_delta") &&
-      live.select(col("merged_delta")).limit(1).collect()
-        .headOption.exists(_.getString(0) ==
-          graft.sources.Staged.generation(spark, s"${tableName}_delta"))
-  }
-
-  /** The live delta pair for PROBE faces, or None when no delta is
-    * serviceable: absent tables, a STALE delta (its `base_gen` no
-    * longer matches the main table's generation — a rebuild or merge
-    * promoted since), or an ABSORBED delta (the merged stats already
-    * carry this delta generation's mass — the half-merged crash
-    * window, where adding delta stats again would double-count; a
-    * probe in that window reads base postings with delta-inclusive N,
-    * never duplicated rows, and the next [[mergeTextIndex]] or append
-    * COMPLETES the merge). */
-  private[text] def textIndexDelta(spark: SparkSession,
+  /** The delta (postings, one-row stats) members of a snapshot. */
+  private def textDelta(snap: graft.sources.Staged.Snapshot,
       tableName: String): Option[(DataFrame, DataFrame)] =
-    rawTextDelta(spark, tableName)
-      .filterNot(_ => deltaAbsorbed(spark, tableName))
+    for {
+      p <- snap.get(s"${tableName}_delta")
+      s <- snap.get(s"${tableName}_delta_stats")
+    } yield (p, s)
 
   /** Base ∪ live-delta postings + closed-form merged stats (n_docs,
     * sum_dl, n_docs_tok — all additive integers over disjoint doc
-    * sets) — the ONE delta resolution shared by every delta probe face
-    * ([[searchIndexDelta]], [[searchIndexDeltaTerms]], the PRF delta
-    * chain), so no face can drift in how it merges generations. With
-    * no serviceable delta this is the plain (postings, stats) pair. */
+    * sets), all members from ONE pointer read — the ONE delta
+    * resolution shared by every delta probe face ([[searchIndexDelta]],
+    * [[searchIndexDeltaTerms]], the PRF delta chain), so no face can
+    * drift in how it merges generations. With no delta this is the
+    * plain (postings, stats) pair. */
   private[graft] def indexWithDelta(spark: SparkSession,
       tableName: String): (DataFrame, DataFrame) = {
-    val base = graft.sources.Staged.liveTable(spark, tableName)
-      .select(col("term"), col("doc_id"), col("dl"), col("tf"))
-    val baseStats = graft.sources.Staged
-      .liveTable(spark, s"${tableName}_stats")
-      .select(col("n_docs"), col("sum_dl"), col("n_docs_tok"))
-    textIndexDelta(spark, tableName) match {
+    val snap = graft.sources.Staged.resolve(spark, tableName)
+    val base = snap.table(tableName).select(PostingCols: _*)
+    val baseStats = snap.table(s"${tableName}_stats")
+      .select(StatsCols: _*)
+    textDelta(snap, tableName) match {
       case Some((dp, dstats)) =>
-        (base.unionByName(
-           dp.select(col("term"), col("doc_id"), col("dl"), col("tf"))),
-         baseStats.unionByName(
-             dstats.select(col("n_docs"), col("sum_dl"),
-               col("n_docs_tok")))
-           .agg(sum(col("n_docs")).as("n_docs"),
-             sum(col("sum_dl")).as("sum_dl"),
-             sum(col("n_docs_tok")).as("n_docs_tok")))
+        (base.unionByName(dp.select(PostingCols: _*)),
+          sumStats(baseStats.unionByName(dstats.select(StatsCols: _*))))
       case None => (base, baseStats)
     }
   }
@@ -2497,10 +2370,9 @@ object TextOps {
     * over the union corpus and to [[searchIndex]] over a full rebuild
     * (closed-form merged stats, df derived at probe time from the
     * unioned pruned postings), so it shares text_search_bm25's oracle:
-    * the delta hop is transparent to the result. With no serviceable
-    * delta this IS [[searchIndex]]. Both posting sides are bucketed
-    * scans with the term predicate pushed down; the stats merge is a
-    * two-row sum. */
+    * the delta hop is transparent to the result. With no delta this IS
+    * [[searchIndex]]. Both posting sides are bucketed scans with the
+    * term predicate pushed down; the stats merge is a two-row sum. */
   def searchIndexDelta(spark: SparkSession, tableName: String,
       terms: Seq[String], k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "empty query")
@@ -2524,16 +2396,16 @@ object TextOps {
     * ops row a store operator watches to schedule [[mergeTextIndex]]
     * (the drop-accounting posture applied to index maintenance): base
     * and delta doc/length masses and the delta's integer half-up milli
-    * share of the serving corpus. A stale/absorbed delta reports
-    * zeros — the post-merge/post-rebuild steady state. Reads only the
-    * two one-row stats tables. */
+    * share of the serving corpus. No delta reports zeros — the
+    * post-merge/post-rebuild steady state. Reads only the one-row stats
+    * members, from one pointer read. */
   def textIndexDeltaAudit(spark: SparkSession,
       tableName: String): DataFrame = {
-    val base = graft.sources.Staged
-      .liveTable(spark, s"${tableName}_stats")
+    val snap = graft.sources.Staged.resolve(spark, tableName)
+    val base = snap.table(s"${tableName}_stats")
       .select(col("n_docs").as("n_docs_base"),
         col("sum_dl").as("sum_dl_base"))
-    val withDelta = textIndexDelta(spark, tableName) match {
+    val withDelta = textDelta(snap, tableName) match {
       case Some((_, dstats)) =>
         base.crossJoin(dstats.select(col("n_docs").as("n_docs_delta"),
           col("sum_dl").as("sum_dl_delta")))
@@ -2551,62 +2423,21 @@ object TextOps {
 
   /** Compact the live delta into the base index — pure index-ROW unions
     * (the corpus is tokenized ZERO times; tokenize cost is only ever
-    * paid once per doc, at its append). Stats merge side-first, MAIN
-    * postings promote last (the multi-table Staged posture — the main
-    * promote is the commit point: it flips the base generation, which
-    * instantly STALES the delta for every probe; the delta drops are
-    * cleanup, not correctness). Idempotent across every crash window:
-    * the merged stats carry `merged_delta` (the absorbed delta's
-    * generation), so a crash-rerun skips the already-committed stats
-    * instead of double-adding, and probes in the stats-promoted/
-    * postings-not-yet window ignore the delta's stats too (see
-    * [[textIndexDelta]]) — they read base postings with delta-inclusive
-    * N for that window, never duplicated rows. */
+    * paid once per doc, at its append). The merged postings and the
+    * merged stats are written as one generation and published by ONE
+    * pointer flip to a map with no delta: a crash mid-merge serves
+    * base ∪ delta unchanged and a rerun merges; with no delta the merge
+    * is a no-op (idempotent). */
   def mergeTextIndex(spark: SparkSession, tableName: String,
       path: String, buckets: Int = 8): Unit = {
-    // the RAW delta, not the probe face: an ABSORBED delta (stats
-    // promoted, postings not — the crash-rerun state) must still get
-    // its postings merged; the probe face hides it and a cleanup-only
-    // path here would LOSE those postings
-    rawTextDelta(spark, tableName) match {
-      case None =>
-        // nothing current-generation; sweep a stale delta if present
-        spark.sql(s"DROP TABLE IF EXISTS `${tableName}_delta_stats`")
-        spark.sql(s"DROP TABLE IF EXISTS `${tableName}_delta`")
-      case Some((dp, dstats)) =>
-        val statsTbl = s"${tableName}_stats"
-        val already = deltaAbsorbed(spark, tableName)
-        if (!already) {
-          val deltaGen = graft.sources.Staged
-            .generation(spark, s"${tableName}_delta")
-          val liveStats = graft.sources.Staged.liveTable(spark, statsTbl)
-          val merged = liveStats
-            .select(col("n_docs"), col("sum_dl"), col("n_docs_tok"))
-            .unionByName(dstats
-              .select(col("n_docs"), col("sum_dl"), col("n_docs_tok")))
-            .agg(sum(col("n_docs")).as("n_docs"),
-              sum(col("sum_dl")).as("sum_dl"),
-              sum(col("n_docs_tok")).as("n_docs_tok"))
-            .withColumn("merged_delta", lit(deltaGen))
-            // materialize before the commit drops the live stats it reads
-            .localCheckpoint(true)
-          graft.sources.Staged.commit(spark, statsTbl,
-              s"${path}_stats") { (tbl, p) =>
-            merged.write.option("path", p)
-              .mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .saveAsTable(tbl)
-          }
-        }
-        val mergedPostings = graft.sources.Staged
-          .liveTable(spark, tableName)
-          .select(col("term"), col("doc_id"), col("dl"), col("tf"))
-          .unionByName(
-            dp.select(col("term"), col("doc_id"), col("dl"), col("tf")))
-        graft.sources.Staged.commit(spark, tableName, path) { (tbl, p) =>
-          writePostings(mergedPostings, tbl, p, buckets)
-        }
-        spark.sql(s"DROP TABLE IF EXISTS `${tableName}_delta_stats`")
-        spark.sql(s"DROP TABLE IF EXISTS `${tableName}_delta`")
+    val snap = graft.sources.Staged.resolve(spark, tableName)
+    textDelta(snap, tableName).foreach { case (dp, dstats) =>
+      graft.sources.Staged.commit(spark, tableName, path) { g =>
+        g.save("_stats", sumStats(snap.table(s"${tableName}_stats")
+          .select(StatsCols: _*).unionByName(dstats.select(StatsCols: _*))))
+        g.write()(writePostings(snap.table(tableName).select(PostingCols: _*)
+          .unionByName(dp.select(PostingCols: _*)), _, _, buckets))
+      }
     }
   }
 
@@ -2628,11 +2459,11 @@ object TextOps {
       d: DataFrame, terms: Seq[String], k1: Double = 1.2,
       b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "empty query")
-    val dfT = graft.sources.Staged.liveTable(spark, indexTable)
+    val snap = graft.sources.Staged.resolve(spark, indexTable)
+    val dfT = snap.table(indexTable)
       .filter(col("term").isin(terms: _*))
       .groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val scalars = graft.sources.Staged
-      .liveTable(spark, s"${indexTable}_stats")
+    val scalars = snap.table(s"${indexTable}_stats")
     val tf = withToks(d.withColumn("text", lower(col("text"))))
       .select(col("doc_id"), col("toks"))
       .withColumn("dl", size(col("toks")).cast("long"))
@@ -2946,26 +2777,15 @@ object TextOps {
       minDf: Long = 2L, maxDfTenths: Int = 9): Unit = {
     // feeds the vocab distinct AND the vector agg — one tokenize pass
     val w = docWeights(d, minDf, maxDfTenths).localCheckpoint(true)
-    val spark = d.sparkSession
-    // staged rebuilds (Staged.commit), vocab first, MAIN vector table
-    // last — the vector promote is the commit point probes key on
-    graft.sources.Staged.commit(spark, s"${tableName}_vocab",
-        s"${path}_vocab") { (tbl, p) =>
-      w.select(col("lang"), col("term"), col("idf_milli")).distinct()
-        .write
-        .option("path", p)
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .saveAsTable(tbl)
-    }
-    graft.sources.Staged.commit(spark, tableName, path) { (tbl, p) =>
-      docVectors(w)
-        .select(col("doc_id"), col("lang"), col("n2"), col("ks"), col("ws"))
-        .write
-        .option("path", p)
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .saveAsTable(tbl)
+    // vectors + vocab: one generation, one pointer flip
+    graft.sources.Staged.commit(d.sparkSession, tableName, path) { g =>
+      g.save("_vocab",
+        w.select(col("lang"), col("term"), col("idf_milli")).distinct())
+      g.save("", docVectors(w).select(VectorCols: _*))
     }
   }
+
+  private val VectorCols = Seq("doc_id", "lang", "n2", "ks", "ws").map(col)
 
   /** Batch MORE-LIKE-THIS over the persisted index — the serving-side
     * face of [[docSimilar]] (the text_search_indexed posture applied to
@@ -2991,19 +2811,26 @@ object TextOps {
     * dedup_clusters_lsh pair-source-swap argument). */
   def docSimilarPersisted(spark: SparkSession, d: DataFrame,
       vecTable: String, vocabTable: String, queryPred: Column,
-      tau: Double = 0.9): DataFrame =
-    docSimilarPersistedOn(spark,
-      graft.sources.Staged.liveTable(spark, vecTable), d, vocabTable,
+      tau: Double = 0.9): DataFrame = {
+    val snap = graft.sources.Staged.resolve(spark, vecTable)
+    docSimilarOn(snap.table(vecTable), d, snap.table(vocabTable),
       queryPred, tau)
+  }
 
   /** [[docSimilarPersisted]] over an explicit corpus-vector frame — the
     * face the DELTA probe feeds base ∪ delta vectors into (the
     * searchIvfIndexOn posture: resolve once, probe that resolution). */
   def docSimilarPersistedOn(spark: SparkSession, corpusVecs: DataFrame,
       d: DataFrame, vocabTable: String, queryPred: Column,
-      tau: Double = 0.9): DataFrame = {
+      tau: Double = 0.9): DataFrame =
+    docSimilarOn(corpusVecs, d, graft.sources.Staged.table(spark,
+      vocabTable), queryPred, tau)
+
+  /** [[docSimilarPersistedOn]] against an already-resolved vocab frame. */
+  private def docSimilarOn(corpusVecs: DataFrame, d: DataFrame,
+      vocab: DataFrame, queryPred: Column, tau: Double): DataFrame = {
     require(tau > 0.0, s"bad tau=$tau")
-    val q = vectorizeAgainstVocab(spark, d.filter(queryPred), vocabTable)
+    val q = vectorizeWith(d.filter(queryPred), vocab)
     // spread the persisted-vector scan: the lang join streams the
     // corpus table through the kernel, and a one-file table is a
     // one-task scan (no-op at scale — the table then has many splits).
@@ -3036,9 +2863,11 @@ object TextOps {
     * bit-identical vector wherever it is vectorized (one definition —
     * a drift could only break one place). */
   private[graft] def vectorizeAgainstVocab(spark: SparkSession,
-      d: DataFrame, vocabTable: String): DataFrame = {
-    val vocab = graft.sources.Staged.liveTable(spark, vocabTable)
-      .select(col("lang"), col("term"), col("idf_milli"))
+      d: DataFrame, vocabTable: String): DataFrame =
+    vectorizeWith(d, graft.sources.Staged.table(spark, vocabTable))
+
+  private def vectorizeWith(d: DataFrame, vocabFrame: DataFrame): DataFrame = {
+    val vocab = vocabFrame.select(col("lang"), col("term"), col("idf_milli"))
     val tf = lowerToks(d)
       .select(col("doc_id"), col("lang"), explode(col("toks")).as("term"))
       .groupBy(col("doc_id"), col("lang"), col("term"))
@@ -3061,11 +2890,9 @@ object TextOps {
     * docs are vectorized against the FROZEN base vocabulary (the model
     * artifact — [[vectorizeAgainstVocab]], bit-identical to what a full
     * build stores for an equal doc whose terms are in-vocab) and land
-    * in `<table>_delta`. Because this family has NO collection-stats
-    * side table, the `base_gen` validity marker rides IN the delta
-    * table (a constant column — a delta is small by contract), so
-    * validity and content promote ATOMICALLY in ONE Staged commit:
-    * this family has no cross-table crash window at all.
+    * as the artifact's `_delta` member: one commit flips the pointer to
+    * the base members plus the new delta, a rebuild or a merge flips to
+    * a map with none.
     *
     * Semantics contract (spec-pinned): probe-over-(base ∪ delta) ≡
     * probe over a FULL REBUILD in which the vocabulary/df-band was
@@ -3078,22 +2905,22 @@ object TextOps {
   def appendDocVectorIndexDelta(dNew: DataFrame, tableName: String,
       path: String): Unit = {
     val spark = dNew.sparkSession
-    graft.sources.Staged.recover(spark, tableName)
-    require(spark.catalog.tableExists(tableName),
+    val snap = graft.sources.Staged.resolve(spark, tableName)
+    require(snap.has(tableName),
       s"appendDocVectorIndexDelta: no base index $tableName — build it " +
         "with writeDocVectorIndex first")
-    val vecs = vectorizeAgainstVocab(spark, dNew, s"${tableName}_vocab")
+    val vecs = vectorizeWith(dNew, snap.table(s"${tableName}_vocab"))
       .localCheckpoint(true)
     // disjointness fences (the momentGuard posture): one row per doc in
     // the vector table, so the base check is one column scan
     val newIds = vecs.select(col("doc_id")).distinct()
-    val clashBase = graft.sources.Staged.liveTable(spark, tableName)
+    val clashBase = snap.table(tableName)
       .join(broadcast(newIds), Seq("doc_id"), "left_semi").count()
     require(clashBase == 0L,
       s"appendDocVectorIndexDelta($tableName): $clashBase vectors of " +
         "already-indexed doc_ids in the delta batch — a delta holds " +
         "only NEW docs")
-    val old = docVectorDelta(spark, tableName)
+    val old = docVectorDelta(snap, tableName)
     old.foreach { op =>
       val clashDelta = op.join(broadcast(newIds), Seq("doc_id"),
         "left_semi").count()
@@ -3102,40 +2929,16 @@ object TextOps {
           "of doc_ids already in the live delta — batches must be " +
           "disjoint")
     }
-    val baseGen = graft.sources.Staged.generation(spark, tableName)
-    val allRows = old
-      .map(_.unionByName(vecs
-        .select(col("doc_id"), col("lang"), col("n2"), col("ks"),
-          col("ws"))))
-      .getOrElse(vecs)
-      // materialize before the commit drops the old delta the plan reads
-      .localCheckpoint(true)
-    graft.sources.Staged.commit(spark, s"${tableName}_delta",
-        s"${path}_delta") { (tbl, p) =>
-      allRows.withColumn("base_gen", lit(baseGen))
-        .write.option("path", p)
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).saveAsTable(tbl)
-    }
+    graft.sources.Staged.commit(spark, tableName, path,
+        keep = snap.members - s"${tableName}_delta")(
+      _.save("_delta", old.map(_.unionByName(vecs)).getOrElse(vecs)))
   }
 
-  /** The live doc-vector delta (doc_id, lang, n2, ks, ws), or None when
-    * absent or STALE (its in-table `base_gen` no longer matches the
-    * main table's generation — a rebuild or merge promoted since). */
-  private[text] def docVectorDelta(spark: SparkSession,
-      tableName: String): Option[DataFrame] = {
-    val dt = s"${tableName}_delta"
-    graft.sources.Staged.recover(spark, dt)
-    if (!spark.catalog.tableExists(dt)) None
-    else {
-      val d = spark.table(dt)
-      val bg = d.select(col("base_gen")).limit(1).collect()
-      if (bg.nonEmpty && bg.head.getString(0) ==
-          graft.sources.Staged.generation(spark, tableName))
-        Some(d.select(col("doc_id"), col("lang"), col("n2"), col("ks"),
-          col("ws")))
-      else None
-    }
-  }
+  /** The doc-vector delta member (doc_id, lang, n2, ks, ws) of a
+    * snapshot. */
+  private def docVectorDelta(snap: graft.sources.Staged.Snapshot,
+      tableName: String): Option[DataFrame] =
+    snap.get(s"${tableName}_delta").map(_.select(VectorCols: _*))
 
   /** Generation + OOV accounting for the doc-vector delta family (r24,
     * r18 verdict #3 — the text_index_delta_audit sibling; closes the
@@ -3163,13 +2966,13 @@ object TextOps {
     * bounded model artifact). */
   def docVectorDeltaAudit(spark: SparkSession, tableName: String,
       deltaDocs: DataFrame): DataFrame = {
-    val nBase = graft.sources.Staged.liveTable(spark, tableName)
+    val snap = graft.sources.Staged.resolve(spark, tableName)
+    val nBase = snap.table(tableName)
       .agg(count(lit(1)).as("n_vecs_base"))
-    val nDelta = docVectorDelta(spark, tableName)
+    val nDelta = docVectorDelta(snap, tableName)
       .map(_.agg(count(lit(1)).as("n_vecs_delta")))
       .getOrElse(spark.range(1).select(lit(0L).as("n_vecs_delta")))
-    val vocab = graft.sources.Staged
-      .liveTable(spark, s"${tableName}_vocab")
+    val vocab = snap.table(s"${tableName}_vocab")
       .select(col("lang"), col("term"), lit(1).as("inb"))
     val tf = withToks(deltaDocs.withColumn("text", lower(col("text"))))
       .select(col("doc_id"), col("lang"), explode(col("toks")).as("term"))
@@ -3200,39 +3003,32 @@ object TextOps {
   }
 
   /** More-like-this over base ∪ delta — [[docSimilarPersisted]] with
-    * the corpus extended by the live delta vectors. With no serviceable
-    * delta this IS the persisted probe. */
+    * the corpus extended by the delta member, every member from one
+    * pointer read. With no delta this IS the persisted probe. */
   def docSimilarPersistedDelta(spark: SparkSession, d: DataFrame,
       vecTable: String, vocabTable: String, queryPred: Column,
       tau: Double = 0.9): DataFrame = {
-    val base = graft.sources.Staged.liveTable(spark, vecTable)
-      .select(col("doc_id"), col("lang"), col("n2"), col("ks"), col("ws"))
-    val corpus = docVectorDelta(spark, vecTable)
+    val snap = graft.sources.Staged.resolve(spark, vecTable)
+    val base = snap.table(vecTable).select(VectorCols: _*)
+    val corpus = docVectorDelta(snap, vecTable)
       .map(base.unionByName(_)).getOrElse(base)
-    docSimilarPersistedOn(spark, corpus, d, vocabTable, queryPred, tau)
+    docSimilarOn(corpus, d, snap.table(vocabTable), queryPred, tau)
   }
 
-  /** Compact the live delta vectors into the base table — one index-ROW
-    * union, ZERO tokenize passes, ONE Staged commit (fully idempotent:
-    * the promote flips the base generation, which stales the delta; a
-    * crash-rerun finds no serviceable delta and just sweeps). The
-    * frozen vocabulary is NOT refreshed here — vocab refresh is the
+  /** Compact the delta vectors into the base table — one index-ROW
+    * union, ZERO tokenize passes, ONE commit whose pointer names the new
+    * base, the kept vocab and no delta (a crash before the flip serves
+    * base ∪ delta unchanged; with no delta this is a no-op). The frozen
+    * vocabulary is NOT refreshed here — vocab refresh is the
     * full-rebuild cadence ([[writeDocVectorIndex]]), by design. */
   def mergeDocVectorIndex(spark: SparkSession, tableName: String,
       path: String): Unit = {
-    docVectorDelta(spark, tableName) match {
-      case None =>
-        spark.sql(s"DROP TABLE IF EXISTS `${tableName}_delta`")
-      case Some(dp) =>
-        val merged = graft.sources.Staged.liveTable(spark, tableName)
-          .select(col("doc_id"), col("lang"), col("n2"), col("ks"),
-            col("ws"))
-          .unionByName(dp)
-        graft.sources.Staged.commit(spark, tableName, path) { (tbl, p) =>
-          merged.write.option("path", p)
-            .mode(org.apache.spark.sql.SaveMode.Overwrite).saveAsTable(tbl)
-        }
-        spark.sql(s"DROP TABLE IF EXISTS `${tableName}_delta`")
+    val snap = graft.sources.Staged.resolve(spark, tableName)
+    docVectorDelta(snap, tableName).foreach { dp =>
+      graft.sources.Staged.commit(spark, tableName, path,
+          keep = snap.members -- Seq(tableName, s"${tableName}_delta"))(
+        _.save("", snap.table(tableName).select(VectorCols: _*)
+          .unionByName(dp)))
     }
   }
 

@@ -534,6 +534,26 @@ class ApiSpec extends SparkSpec {
         s"writes through Knn.writeLists): ${hits.mkString(", ")}")
   }
 
+  test("catalog drops, renames and generation names in src/main live in graft.sources.Staged") {
+    import java.nio.file.{Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), root.toAbsolutePath.toString)
+    // a persisted artifact commits, reads and drops through its pointer
+    // (Staged.commit / Staged.table / Staged.drop); a hand-written drop
+    // or rename, or a physical generation name, would bypass it
+    // no non-artifact drop remains in src/main, so none is exempted
+    val bypass = """(?i)DROP\s+TABLE|RENAME\s+TO|__g""".r
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        !p.endsWith(Paths.get("graft/sources/Staged.scala")))
+      .filter((p: Path) => bypass.findFirstIn(Files.readString(p)).isDefined)
+      .map(root.relativize(_).toString).toList
+    assert(offenders.isEmpty,
+      s"DROP TABLE / RENAME TO / a __g generation name outside " +
+        s"graft.sources.Staged: ${offenders.mkString(", ")}")
+  }
+
   test("extensions expose native kernels to SQL") {
     spark // force base session first
     SparkSession.clearActiveSession()

@@ -113,7 +113,7 @@ class ChunkSpec extends SparkSpec {
     val shard = df(10L -> s"$a fresh words", 11L -> s"$nov $nov")
     val dir =
       java.nio.file.Files.createTempDirectory("graft_chunk_idx").toString
-    spark.sql("DROP TABLE IF EXISTS chunk_idx_t")
+    graft.sources.Staged.drop(spark, "chunk_idx_t")
     Chunks.writeChunkIndex(corpus, "chunk_idx_t", dir)
     val out = Chunks.chunkDedupIncremental(spark, "chunk_idx_t", shard)
     val rows = out.collect().map(r => r.getAs[Long]("doc_id") ->
@@ -164,8 +164,8 @@ class ChunkSpec extends SparkSpec {
     val tbl = "graft_chunk_vec_spec"
     val path = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), tbl).toString
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}_vocab")
+    graft.sources.Staged.drop(spark, tbl)
+    graft.sources.Staged.drop(spark, s"${tbl}_vocab")
     TextOps.writeDocVectorIndex(cd, tbl, path)
     val pred = substring(md5(concat_ws(":",
       expr("CAST(doc_id div 1048576 AS STRING)"), lit("cmlt"))), 1, 1) < "2"
@@ -213,8 +213,8 @@ class ChunkSpec extends SparkSpec {
     val tbl = "graft_chunk_vec_plant"
     val path = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), tbl).toString
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}_vocab")
+    graft.sources.Staged.drop(spark, tbl)
+    graft.sources.Staged.drop(spark, s"${tbl}_vocab")
     TextOps.writeDocVectorIndex(cd, tbl, path)
     // probe everything (pred = true): the planted pair must appear in
     // both directions
@@ -235,8 +235,8 @@ class ChunkSpec extends SparkSpec {
     val tbl = "graft_chunk_hyb_spec"
     val path = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), tbl).toString
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}_vocab")
+    graft.sources.Staged.drop(spark, tbl)
+    graft.sources.Staged.drop(spark, s"${tbl}_vocab")
     val cd = Chunks.chunkDocs(docs)
     TextOps.writeDocVectorIndex(cd, tbl, path)
     val out = Chunks.chunkHybridRrf(spark, cd, tbl, s"${tbl}_vocab")
@@ -271,7 +271,7 @@ class ChunkSpec extends SparkSpec {
     val path = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), tbl).toString
     Seq(tbl, s"${tbl}_vocab", s"${tbl}_post", s"${tbl}_post_stats")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+      .foreach(t => graft.sources.Staged.drop(spark, t))
     val cd = Chunks.chunkDocs(docs).localCheckpoint(true)
     TextOps.writeDocVectorIndex(cd, tbl, path)
     TextOps.writeTextIndex(cd.select(col("doc_id"), col("text")),
@@ -290,7 +290,7 @@ class ChunkSpec extends SparkSpec {
     val path = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), tbl).toString
     Seq(tbl, s"${tbl}_vocab", s"${tbl}_post", s"${tbl}_post_stats")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+      .foreach(t => graft.sources.Staged.drop(spark, t))
     val cd = Chunks.chunkDocs(docs).localCheckpoint(true)
     TextOps.writeDocVectorIndex(cd, tbl, path)
     TextOps.writeTextIndex(cd.select(col("doc_id"), col("text")),

@@ -377,7 +377,7 @@ class DedupSpec extends SparkSpec {
     val tbl = "graft_anchor_index_spec"
     val path = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), tbl).toString
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
+    graft.sources.Staged.drop(spark, tbl)
     Dedup.writeAnchorIndex(corpus, tbl, path)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {

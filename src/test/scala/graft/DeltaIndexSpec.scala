@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.text.TextOps
+import graft.sources.Staged
 
 /** Delta-merge index maintenance (r17 verdict #1): a crawl delta
   * appends its own generation instead of paying a full-corpus rebuild.
@@ -42,9 +43,11 @@ class DeltaIndexSpec extends SparkSpec {
     df.collect().map(_.toSeq).toSet
 
   private def dropAll(tbl: String): Unit =
-    Seq(tbl, s"${tbl}_stats", s"${tbl}_vocab", s"${tbl}_delta",
-      s"${tbl}_delta_stats", s"${tbl}__stage", s"${tbl}_delta__stage")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    graft.sources.Staged.drop(spark, tbl)
+
+  /** True while the artifact's pointer names a delta member. */
+  private def hasDelta(tbl: String): Boolean =
+    graft.sources.Staged.resolve(spark, tbl).has(s"${tbl}_delta")
 
   test("postings delta: probe over base ∪ delta ≡ full rebuild ≡ ad-hoc bm25; merge keeps it; merge is idempotent") {
     val tbl = "dlt_text_a"
@@ -65,8 +68,9 @@ class DeltaIndexSpec extends SparkSpec {
     // merge: index-row compaction — probe unchanged through BOTH faces,
     // delta gone
     TextOps.mergeTextIndex(spark, tbl, path)
-    assert(!spark.catalog.tableExists(s"${tbl}_delta"))
-    assert(!spark.catalog.tableExists(s"${tbl}_delta_stats"))
+    assert(!hasDelta(tbl))
+    assert(!graft.sources.Staged.resolve(spark, tbl)
+      .has(s"${tbl}_delta_stats"))
     assert(rows(TextOps.searchIndex(spark, tbl, Terms)) == want)
     assert(rows(TextOps.searchIndexDelta(spark, tbl, Terms)) == want)
     // idempotent: a second merge is a no-op
@@ -158,8 +162,7 @@ class DeltaIndexSpec extends SparkSpec {
       a2.toString)
   }
 
-  test("half-merged crash window (stats absorbed, postings not): probes never double-count, merge completes, append heals") {
-    import graft.sources.Staged
+  test("a crash mid-merge serves base ∪ delta unchanged, and a rerun merges; a crash mid-append serves the previous delta, and the retry lands the batch once") {
     val tbl = "dlt_text_cw"
     val path = freshDir("tcw")
     dropAll(tbl)
@@ -167,57 +170,35 @@ class DeltaIndexSpec extends SparkSpec {
     val d2 = delta.filter(col("doc_id") % 2 =!= 0).localCheckpoint(true)
     TextOps.writeTextIndex(base, tbl, path)
     TextOps.appendTextIndexDelta(d1, tbl, path)
-    // simulate mergeTextIndex crashing BETWEEN its two commits:
-    // replicate the first half verbatim — merged stats stamped with
-    // the live delta's generation — and stop there
-    def simulateHalfMerge(): Unit = {
-      val merged = Staged.liveTable(spark, s"${tbl}_stats")
-        .select(col("n_docs"), col("sum_dl"), col("n_docs_tok"))
-        .unionByName(spark.table(s"${tbl}_delta")
-          .select(col("n_docs"), col("sum_dl"), col("n_docs_tok"))
-          .limit(1))
-        .agg(sum(col("n_docs")).as("n_docs"),
-          sum(col("sum_dl")).as("sum_dl"),
-          sum(col("n_docs_tok")).as("n_docs_tok"))
-        .withColumn("merged_delta",
-          lit(Staged.generation(spark, s"${tbl}_delta")))
-        .localCheckpoint(true)
-      Staged.commit(spark, s"${tbl}_stats", s"${path}_stats") { (t, p) =>
-        merged.write.option("path", p)
-          .mode(org.apache.spark.sql.SaveMode.Overwrite).saveAsTable(t)
-      }
-    }
-    simulateHalfMerge()
-    // window probe: the delta is ABSORBED — postings must come from
-    // the base only (no row duplication is possible in any window);
-    // scores use the delta-inclusive N, so compare DOC SETS
-    val windowDocs = TextOps.searchIndexDelta(spark, tbl, Terms)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val baseDocs = TextOps.bm25Search(base, Terms)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(windowDocs == baseDocs,
-      "half-merged window served delta postings (double-count risk)")
-    // a merge RERUN completes the half-merge: postings land exactly
-    // once, stats are not re-added
+    val wantHalf = rows(TextOps.bm25Search(base.unionByName(d1), Terms))
+    // crash mergeTextIndex after its merged stats are written, before
+    // the merged postings: the pointer still names base + delta
+    CrashBefore(spark, tbl)(TextOps.mergeTextIndex(spark, tbl, path))
+    assert(hasDelta(tbl), "a crashed merge dropped the delta")
+    assert(rows(TextOps.searchIndexDelta(spark, tbl, Terms)) == wantHalf,
+      "a crashed merge changed what base ∪ delta serves")
+    // the rerun merges: postings land exactly once, stats added once
     TextOps.mergeTextIndex(spark, tbl, path)
-    val wantHalf = rows(TextOps.bm25Search(
-      base.unionByName(d1), Terms))
+    assert(!hasDelta(tbl))
     assert(rows(TextOps.searchIndex(spark, tbl, Terms)) == wantHalf,
-      "merge rerun lost or double-merged the absorbed delta")
-    assert(!spark.catalog.tableExists(s"${tbl}_delta"))
-    // same window again, healed by the NEXT APPEND instead: the
-    // absorbed d2 postings survive and the new batch lands cleanly
+      "merge rerun lost or double-merged the delta")
+    // crash an append after its stats member, before its postings: the
+    // previous delta (none here, then d2) keeps serving
+    CrashBefore(spark, s"${tbl}_delta")(
+      TextOps.appendTextIndexDelta(d2, tbl, path))
+    assert(!hasDelta(tbl))
+    assert(rows(TextOps.searchIndexDelta(spark, tbl, Terms)) == wantHalf,
+      "a crashed append served part of its batch")
     TextOps.appendTextIndexDelta(d2, tbl, path)
-    simulateHalfMerge()
-    TextOps.appendTextIndexDelta(
-      base.limit(0), tbl, path) // empty batch still heals first
     val wantAll = rows(TextOps.bm25Search(docs, Terms))
     assert(rows(TextOps.searchIndexDelta(spark, tbl, Terms)) == wantAll,
-      "append-path heal lost the absorbed delta postings")
+      "retry after a crashed append lost or doubled the batch")
+    // an empty batch lands nothing and keeps the delta exact
+    TextOps.appendTextIndexDelta(base.limit(0), tbl, path)
+    assert(rows(TextOps.searchIndexDelta(spark, tbl, Terms)) == wantAll)
   }
 
-  test("append crash windows (r18 ADVICE): the delta promotes atomically — stage leftovers are overwritten by a retry, a crashed promote heals on first read, and a retry after the heal raises the already-landed fence") {
-    import graft.sources.Staged
+  test("append crash windows (r18 ADVICE): the delta promotes atomically — a crash before the flip leaves the previous delta serving, the retry lands the batch exactly once, and a retry of a landed batch raises the already-landed fence") {
     val tbl = "dlt_text_aw"
     val path = freshDir("taw")
     dropAll(tbl)
@@ -225,33 +206,27 @@ class DeltaIndexSpec extends SparkSpec {
     val d2 = delta.filter(col("doc_id") % 2 =!= 0).localCheckpoint(true)
     TextOps.writeTextIndex(base, tbl, path)
     TextOps.appendTextIndexDelta(d1, tbl, path)
-    // window A — crash DURING the stage write of append(d2): the live
-    // delta (d1) is untouched and an orphaned stage table sits next to
-    // it; simulate with a garbage stage entry
-    spark.range(1)
-      .selectExpr("'junk' AS term", "CAST(-1 AS BIGINT) AS doc_id",
-        "CAST(0 AS BIGINT) AS dl", "CAST(0 AS BIGINT) AS tf",
-        "CAST(0 AS BIGINT) AS n_docs", "CAST(0 AS BIGINT) AS sum_dl",
-        "CAST(0 AS BIGINT) AS n_docs_tok", "'bogus' AS base_gen")
-      .write.option("path", s"${path}_delta__junk")
-      .saveAsTable(s"${tbl}_delta__stage")
-    // probes still serve base ∪ d1 (the live delta is authoritative)
+    val live = graft.sources.Staged.snapshot(spark, tbl).get
+    // crash append(d2) after its stats member is written: the live
+    // delta (d1) is untouched and an orphan stats generation sits next
+    // to it
+    CrashBefore(spark, s"${tbl}_delta")(
+      TextOps.appendTextIndexDelta(d2, tbl, path))
+    assert(graft.sources.Staged.snapshot(spark, tbl).get.members ==
+      live.members)
     assert(rows(TextOps.searchIndexDelta(spark, tbl, Terms)) ==
       rows(TextOps.bm25Search(base.unionByName(d1), Terms)),
-      "orphaned stage leaked into the probe")
-    // the RETRY lands d2 exactly once (fences check the OLD live delta)
+      "an orphaned generation leaked into the probe")
+    // the RETRY lands d2 exactly once (fences check the live delta) and
+    // sweeps the orphan
     TextOps.appendTextIndexDelta(d2, tbl, path)
     val wantAll = rows(TextOps.bm25Search(docs, Terms))
     assert(rows(TextOps.searchIndexDelta(spark, tbl, Terms)) == wantAll,
-      "retry after a stage-write crash lost or doubled the batch")
-    // window B — crash BETWEEN drop-live and rename (the promote
-    // window): simulate by demoting the live delta back to its stage
-    // name; the recover-on-read at the next probe entry completes the
-    // promote and the batch is fully landed
-    spark.sql(s"ALTER TABLE `${tbl}_delta` RENAME TO `${tbl}_delta__stage`")
-    assert(rows(TextOps.searchIndexDelta(spark, tbl, Terms)) == wantAll,
-      "crashed promote did not self-heal on first read")
-    assert(spark.catalog.tableExists(s"${tbl}_delta"))
+      "retry after a crashed append lost or doubled the batch")
+    val landed = graft.sources.Staged.snapshot(spark, tbl).get
+    assert(spark.catalog.listTables().collect().map(_.name)
+      .filter(n => n.startsWith(tbl) && n.contains("__g")).toSet ==
+      landed.members.values.toSet, "orphans survived the retry")
     // a retry of the ALREADY-LANDED batch raises the disjointness fence
     // by name — the at-least-once retrier's already-landed signal
     val e = intercept[IllegalArgumentException] {
@@ -261,7 +236,7 @@ class DeltaIndexSpec extends SparkSpec {
       e.getMessage)
   }
 
-  test("token-less delta batch: the sentinel row carries the stats constants (no postings exist to carry them)") {
+  test("token-less delta batch: the delta stats member carries its stats (no postings exist to carry them)") {
     val tbl = "dlt_text_tl"
     val path = freshDir("ttl")
     dropAll(tbl)
@@ -306,7 +281,7 @@ class DeltaIndexSpec extends SparkSpec {
     assert(got.exists(r => deltaIds.contains(r(2).asInstanceOf[Long])),
       "no served neighbor came from the delta")
     TextOps.mergeDocVectorIndex(spark, tbl, path)
-    assert(!spark.catalog.tableExists(s"${tbl}_delta"))
+    assert(!hasDelta(tbl))
     assert(rows(TextOps.docSimilarPersistedDelta(spark, docs, tbl,
       s"${tbl}_vocab", pred, tau = 0.5)) == got)
     TextOps.mergeDocVectorIndex(spark, tbl, path) // idempotent no-op
@@ -320,7 +295,7 @@ class DeltaIndexSpec extends SparkSpec {
     val path = freshDir("ca")
     Seq(tbl, s"${tbl}_stats", s"${tbl}_delta", s"${tbl}_vocab",
       s"${tbl}_post", s"${tbl}_post_stats", s"${tbl}_post_delta")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+      .foreach(t => graft.sources.Staged.drop(spark, t))
     val cdBase = Chunks.chunkDocs(base).localCheckpoint(true)
     val cdDelta = Chunks.chunkDocs(delta).localCheckpoint(true)
     // (a) chunk postings delta: probe ≡ ad-hoc chunk search over the
@@ -338,7 +313,7 @@ class DeltaIndexSpec extends SparkSpec {
     val vpath = freshDir("cv")
     Seq(vt, s"${vt}_vocab", s"${vt}_delta", s"${vt}_post",
       s"${vt}_post_stats", s"${vt}_post_delta")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+      .foreach(t => graft.sources.Staged.drop(spark, t))
     val cdAll = Chunks.chunkDocs(docs).localCheckpoint(true)
     TextOps.writeDocVectorIndex(cdAll, vt, vpath)
     TextOps.writeTextIndex(cdAll.select(col("doc_id"), col("text")),
@@ -370,7 +345,7 @@ class DeltaIndexSpec extends SparkSpec {
     assert(a.getAs[Long]("n_vecs_base") == spark.table(tbl).count(),
       a.toString)
     assert(a.getAs[Long]("n_vecs_delta") ==
-      spark.table(s"${tbl}_delta").count(), a.toString)
+      graft.sources.Staged.table(spark, s"${tbl}_delta").count(), a.toString)
     assert(a.getAs[Long]("n_docs_delta") == deltaP.count(), a.toString)
     // the planted doc: counted in the batch, not vectorized, its 3
     // tokens in the OOV mass
@@ -427,7 +402,7 @@ class DeltaIndexSpec extends SparkSpec {
     val pre = rows(Knn.searchIvfIndexDelta(spark, tbl, centroids,
       emb.filter(q), k = 10, nprobe = 2))
     Knn.mergeIvfIndex(spark, tbl, path)
-    assert(!spark.catalog.tableExists(s"${tbl}_delta"))
+    assert(!hasDelta(tbl))
     assert(rows(Knn.searchIvfIndex(spark, tbl, centroids,
       emb.filter(q), k = 10, nprobe = 2)) == pre,
       "merge changed the pruned probe result")
@@ -498,13 +473,13 @@ class DeltaIndexSpec extends SparkSpec {
 
   test("fenced IVF probes and appends read each centroid table once: the fence checks the model the kernels read") {
     import graft.similarity.Knn
-    def live(t: String) = graft.sources.Staged.liveTable(spark, t)
+    def live(t: String) = graft.sources.Staged.table(spark, t)
     val q = emb.filter(col("vec_id") < 5)
     // float family: centroids committed beside the index, read by name
     val tf = "dlt_once_f"
     val pf = freshDir("of")
     dropAll(tf)
-    spark.sql(s"DROP TABLE IF EXISTS `${tf}_centroids`")
+    graft.sources.Staged.drop(spark, s"${tf}_centroids")
     Knn.writeIvfIndex(embBase, tf, pf, nlist = 8, persistCentroids = true)
     val cf = s"${tf}_centroids"
     assert(TableScans.during(spark, cf) {
@@ -516,7 +491,7 @@ class DeltaIndexSpec extends SparkSpec {
     val tq = "dlt_once_q"
     val pq = freshDir("oq")
     dropAll(tq)
-    spark.sql(s"DROP TABLE IF EXISTS `${tq}_cents`")
+    graft.sources.Staged.drop(spark, s"${tq}_cents")
     Knn.writeIvfIndexQuantized(embBase, tq, pq, nlist = 8)
       .write.option("path", freshDir("oqc")).saveAsTable(s"${tq}_cents")
     val cq = s"${tq}_cents"
@@ -531,7 +506,7 @@ class DeltaIndexSpec extends SparkSpec {
     val tp = "dlt_once_p"
     val pp = freshDir("op")
     Seq(tp, s"${tp}_coarse", s"${tp}_codebook", s"${tp}_delta")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+      .foreach(t => graft.sources.Staged.drop(spark, t))
     Knn.writeIvfPqIndex(embBase, tp, pp, nlist = 8)
     val sides = Seq(s"${tp}_coarse", s"${tp}_codebook")
     assert(TableScans.during(spark, sides: _*) {
@@ -561,18 +536,21 @@ class DeltaIndexSpec extends SparkSpec {
     val pre = rows(Knn.searchIvfIndexQuantizedDelta(spark, tbl, centroids,
       emb.filter(q), k = 10, nprobe = 2))
     Knn.mergeIvfIndex(spark, tbl, path)
-    assert(!spark.catalog.tableExists(s"${tbl}_delta"))
+    assert(!hasDelta(tbl))
     assert(rows(Knn.searchIvfIndexQuantized(spark, tbl, centroids,
       emb.filter(q), k = 10, nprobe = 2)) == pre,
       "quantized merge changed the pruned probe result")
   }
 
   /** One IVF codec's public faces, for the table-driven delta contract.
-    * `appendStale` appends under a coarse model from another generation. */
+    * `appendStale` appends under a caller-passed coarse model from
+    * another generation — None for PQ, whose append takes no model from
+    * outside: it reads coarse, codebook and lists from ONE pointer read,
+    * which cannot mix generations. */
   private case class IvfFaces(name: String,
       build: (DataFrame, String, String) => Unit,
       append: (DataFrame, String, String) => Unit,
-      appendStale: (DataFrame, String, String) => Unit,
+      appendStale: Option[(DataFrame, String, String) => Unit],
       search: (String, DataFrame, Int) => DataFrame,
       searchDelta: (String, DataFrame, Int) => DataFrame)
 
@@ -584,7 +562,8 @@ class DeltaIndexSpec extends SparkSpec {
     var cents: DataFrame = null
     IvfFaces(name, (e, t, p) => cents = build(e, t, p),
       (d, t, p) => append(d, t, p, cents),
-      (d, t, p) => append(d, t, p, cents.withColumn("c_id", col("c_id") + 1L)),
+      Some((d, t, p) =>
+        append(d, t, p, cents.withColumn("c_id", col("c_id") + 1L))),
       (t, q, np) => search(t, cents, q, np),
       (t, q, np) => searchDelta(t, cents, q, np))
   }
@@ -602,22 +581,10 @@ class DeltaIndexSpec extends SparkSpec {
         Knn.searchIvfIndexQuantized(spark, _, _, _, k = 10, _),
         Knn.searchIvfIndexQuantizedDelta(spark, _, _, _, k = 10, _)),
       IvfFaces("pq", (e, t, p) => { Knn.writeIvfPqIndex(e, t, p, nlist = 8); () },
-        Knn.appendIvfPqIndexDelta(_, _, _),
-        (d, t, p) => {
-          // swap the coarse side table for one with shifted ids, then
-          // put the original back
-          val coarse = s"${t}_coarse"
-          val orig = Staged.liveTable(spark, coarse).localCheckpoint(true)
-          def put(df: DataFrame): Unit =
-            Staged.commit(spark, coarse, s"${p}_coarse") { (tbl, pp) =>
-              df.write.option("path", pp).mode("overwrite").saveAsTable(tbl)
-            }
-          put(orig.withColumn("c_id", col("c_id") + 1L))
-          try Knn.appendIvfPqIndexDelta(d, t, p) finally put(orig)
-        },
+        Knn.appendIvfPqIndexDelta(_, _, _), None,
         (t, q, np) => Knn.searchIvfPq(spark, t,
-          Staged.liveTable(spark, s"${t}_coarse"),
-          Staged.liveTable(spark, s"${t}_codebook"), q, k = 10, np),
+          Staged.table(spark, s"${t}_coarse"),
+          Staged.table(spark, s"${t}_codebook"), q, k = 10, np),
         (t, q, np) => Knn.searchIvfPqDelta(spark, t, q, k = 10, np)))
   }
 
@@ -640,7 +607,7 @@ class DeltaIndexSpec extends SparkSpec {
       val path = freshDir(s"c${f.name}")
       dropAll(tbl)
       Seq(s"${tbl}_coarse", s"${tbl}_codebook")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+        .foreach(t => graft.sources.Staged.drop(spark, t))
       f.build(embBase, tbl, path)
       // disjointness: against the base, then against the live delta
       val e1 = intercept[IllegalArgumentException] {
@@ -653,12 +620,20 @@ class DeltaIndexSpec extends SparkSpec {
       }
       assert(e2.getMessage.contains("already in the live delta"),
         s"${f.name}: $e2")
-      // alignment: a coarse model from another generation is rejected
-      // before any assignment
-      val e3 = intercept[IllegalArgumentException] {
-        f.appendStale(embDelta, tbl, path)
+      // alignment: a caller-passed coarse model from another generation
+      // is rejected before any assignment
+      f.appendStale.foreach { stale =>
+        val e3 = intercept[IllegalArgumentException] {
+          stale(embDelta, tbl, path)
+        }
+        assert(e3.getMessage.contains("generation mismatch"),
+          s"${f.name}: $e3")
       }
-      assert(e3.getMessage.contains("generation mismatch"), s"${f.name}: $e3")
+      // the delta stores the build's own list columns, in its order
+      val snap = Staged.resolve(spark, tbl)
+      val buildSchema = snap.table(tbl).schema
+      assert(snap.table(s"${tbl}_delta").schema == buildSchema,
+        s"${f.name}: delta schema differs from the build schema")
       assert(audit(tbl)._1 == deltaIds.size.toLong && audit(tbl)._2 > 0L,
         s"${f.name}: ${audit(tbl)}")
       // merge with no payload argument: every delta vector lands in the
@@ -667,7 +642,9 @@ class DeltaIndexSpec extends SparkSpec {
       assert(pre.exists(r => deltaIds(r(1).asInstanceOf[Long])),
         s"${f.name}: no served neighbor came from the delta")
       Knn.mergeIvfIndex(spark, tbl, path)
-      assert(!spark.catalog.tableExists(s"${tbl}_delta"), f.name)
+      assert(!hasDelta(tbl), f.name)
+      assert(Staged.table(spark, tbl).schema == buildSchema,
+        s"${f.name}: merged schema differs from the build schema")
       assert(ids(spark.table(tbl)) == baseIds ++ deltaIds,
         s"${f.name}: merge lost delta vectors")
       assert(rows(f.search(tbl, q, 8)) == pre, s"${f.name}: merge changed the probe")
@@ -717,7 +694,7 @@ class DeltaIndexSpec extends SparkSpec {
     val tbl = "dlt_ivf_live"
     val path = freshDir("il")
     dropAll(tbl)
-    spark.sql(s"DROP TABLE IF EXISTS `${tbl}_centroids`")
+    graft.sources.Staged.drop(spark, s"${tbl}_centroids")
     Knn.writeIvfIndex(embBase, tbl, path, nlist = 8,
       persistCentroids = true)
     // replay the RAW delta rows (vec_id, label, embedding) — the
@@ -734,7 +711,7 @@ class DeltaIndexSpec extends SparkSpec {
     val q = graft.streaming.Streaming.runIvfIndexDeltaIngest(spark,
       stream, tbl, path, s"${tbl}_centroids")
     q.processAllAvailable(); q.stop()
-    val centroids = graft.sources.Staged.liveTable(spark,
+    val centroids = graft.sources.Staged.table(spark,
       s"${tbl}_centroids")
     val qp = col("vec_id") < 5
     assert(rows(Knn.searchIvfIndexDelta(spark, tbl, centroids,
@@ -747,9 +724,7 @@ class DeltaIndexSpec extends SparkSpec {
     import graft.similarity.Knn
     val tbl = "dlt_pq_a"
     val path = freshDir("pa")
-    Seq(tbl, s"${tbl}_coarse", s"${tbl}_codebook", s"${tbl}_delta",
-      s"${tbl}__stage", s"${tbl}_delta__stage")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    dropAll(tbl)
     // plant a delta vector that duplicates a base vector byte-for-byte:
     // encoding is a pure function of (v, codebook), so the twin gets
     // the base row's exact codes and must serve among its neighbors
@@ -781,9 +756,9 @@ class DeltaIndexSpec extends SparkSpec {
       k = 10, nprobe = 2))
     assert(pre.nonEmpty)
     Knn.mergeIvfIndex(spark, tbl, path)
-    assert(!spark.catalog.tableExists(s"${tbl}_delta"))
-    val coarse = graft.sources.Staged.liveTable(spark, s"${tbl}_coarse")
-    val codebook = graft.sources.Staged.liveTable(spark,
+    assert(!hasDelta(tbl))
+    val coarse = graft.sources.Staged.table(spark, s"${tbl}_coarse")
+    val codebook = graft.sources.Staged.table(spark,
       s"${tbl}_codebook")
     assert(rows(Knn.searchIvfPq(spark, tbl, coarse, codebook,
       emb.filter(q), k = 10, nprobe = 2)) == pre,
@@ -795,8 +770,8 @@ class DeltaIndexSpec extends SparkSpec {
     val twin2 = baseRow.withColumn("vec_id", lit(999998L))
     Knn.appendIvfPqIndexDelta(twin2, tbl, path)
     Knn.writeIvfPqIndex(emb, tbl, path, nlist = 8)
-    val c2 = graft.sources.Staged.liveTable(spark, s"${tbl}_coarse")
-    val b2 = graft.sources.Staged.liveTable(spark, s"${tbl}_codebook")
+    val c2 = graft.sources.Staged.table(spark, s"${tbl}_coarse")
+    val b2 = graft.sources.Staged.table(spark, s"${tbl}_codebook")
     assert(rows(Knn.searchIvfPqDelta(spark, tbl, emb.filter(q),
         k = 10, nprobe = 2)) ==
       rows(Knn.searchIvfPq(spark, tbl, c2, b2, emb.filter(q),

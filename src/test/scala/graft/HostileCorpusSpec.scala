@@ -155,6 +155,17 @@ class HostileCorpusSpec extends SparkSpec {
         s"($abstained abstained via require)")
   }
 
+  test("k-means consumers train on the fenced base: the semantic rows answer on the hostile mirror") {
+    // an empty or NaN embedding never reaches k-means (an empty one
+    // would raise the dot_product dimensionality require)
+    def run(name: String) = SparkEntry.queries(name)(spark, hostileDir)
+      .collect()
+    run("dedup_semantic")
+    Seq("emb_clusters", "semantic_cluster_audit").foreach { name =>
+      assert(run(name).nonEmpty, s"$name: no rows on the hostile mirror")
+    }
+  }
+
   test("money fence: a non-centile event value raises the NAMED " +
       "centile error, never a silent NaN balance") {
     // the hostile log plants NaN/+Inf/-1e308 values in 'click' — any

@@ -117,7 +117,7 @@ class HybridSpec extends SparkSpec {
   test("hybrid_search_ivf at nprobe = nlist equals hybrid_search_rrf row-for-row") {
     val d = TextOps.docs(spark, SF)
     val e = Knn.emb(spark, SF)
-    spark.sql("DROP TABLE IF EXISTS hyb_ivf_spec")
+    graft.sources.Staged.drop(spark, "hyb_ivf_spec")
     val path = Files.createTempDirectory("graft_hyb_ivf").toString + "/v"
     // probe every list and rank past every τ-reachable candidate: the
     // IVF member then reaches exactly the brute member's list
@@ -152,8 +152,8 @@ class HybridSpec extends SparkSpec {
   test("stream-static hybrid probe (foreachBatch) converges to batch hybrid_search_rrf") {
     val docs = TextOps.docs(spark, SF)
     val embRaw = spark.read.parquet(s"$SF/embeddings.parquet")
-    spark.sql("DROP TABLE IF EXISTS hyb_vec")
-    spark.sql("DROP TABLE IF EXISTS hyb_vec_vocab")
+    graft.sources.Staged.drop(spark, "hyb_vec")
+    graft.sources.Staged.drop(spark, "hyb_vec_vocab")
     val idx = Files.createTempDirectory("graft_hyb_idx").toString + "/v"
     TextOps.writeDocVectorIndex(docs, "hyb_vec", idx)
     // arrivals: the batch query slice, text + embedding in one row
@@ -203,15 +203,15 @@ class HybridSpec extends SparkSpec {
   test("centroid/index generation fence: mismatched artifacts raise the named error, aligned pass") {
     import spark.implicits._
     val e = Knn.emb(spark, SF)
-    spark.sql("DROP TABLE IF EXISTS fence_ivf")
-    spark.sql("DROP TABLE IF EXISTS fence_ivf_centroids")
+    graft.sources.Staged.drop(spark, "fence_ivf")
+    graft.sources.Staged.drop(spark, "fence_ivf_centroids")
     val path = Files.createTempDirectory("graft_fence_ivf").toString + "/v"
     Knn.writeIvfIndex(e, "fence_ivf", path, nlist = 4,
       persistCentroids = true)
     // the committed pair verifies (and memoizes)
     Knn.requireCentroidAlignment(spark, "fence_ivf",
       graft.functions.CentroidModel.of(
-        graft.sources.Staged.liveTable(spark, "fence_ivf_centroids")))
+        graft.sources.Staged.table(spark, "fence_ivf_centroids")))
     // a centroid set from a DIFFERENT build (disjoint c_id space —
     // exactly what a probe sees mid-swap) must raise the NAMED error,
     // never serve a silently empty semantic member
@@ -238,7 +238,7 @@ class HybridSpec extends SparkSpec {
     val embRaw = spark.read.parquet(s"$SF/embeddings.parquet")
     Seq("hyb_vec2", "hyb_vec2_vocab", "hyb_ivf_live",
       "hyb_ivf_live_centroids").foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t"))
+      graft.sources.Staged.drop(spark, t))
     val idx = Files.createTempDirectory("graft_hyb_idx2").toString + "/v"
     TextOps.writeDocVectorIndex(docs, "hyb_vec2", idx)
     val ivfPath = Files.createTempDirectory("graft_hyb_ivf2").toString + "/i"

@@ -104,7 +104,7 @@ class KnnSpec extends SparkSpec {
         sqrt(graft.functions.DotProduct(col("v"), col("v"))))
     val dir =
       java.nio.file.Files.createTempDirectory("graft_contam_ivf").toString
-    spark.sql("DROP TABLE IF EXISTS contam_ivf_t")
+    graft.sources.Staged.drop(spark, "contam_ivf_t")
     val rows = Knn.contaminationSemanticIvf(spark, planted, "contam_ivf_t",
       dir, 13, tau = 0.3, nlist = 4, buckets = 2, nprobe = 2).collect()
     // the planted cross-split duplicate is RECALLED at exactly 1.0: the
@@ -131,7 +131,7 @@ class KnnSpec extends SparkSpec {
     // the audit row accounts the probe exactly: every split member
     // counted, candidates bounded by the brute cross product, flagged
     // count equals the operator's row count at the same tau
-    spark.sql("DROP TABLE IF EXISTS contam_ivf_aud_t")
+    graft.sources.Staged.drop(spark, "contam_ivf_aud_t")
     val audDir =
       java.nio.file.Files.createTempDirectory("graft_contam_aud").toString
     val aud = Knn.contaminationSemanticIvfAudit(spark, planted,
@@ -220,7 +220,7 @@ class KnnSpec extends SparkSpec {
         sqrt(graft.functions.DotProduct(col("v"), col("v"))))
     val dir =
       java.nio.file.Files.createTempDirectory("graft_lblprop_ivf").toString
-    spark.sql("DROP TABLE IF EXISTS lblprop_ivf_t")
+    graft.sources.Staged.drop(spark, "lblprop_ivf_t")
     val ivfPairs = Knn.labelPropPairsIvf(spark, planted, "lblprop_ivf_t",
       dir, 12, tau = 0.3, nlist = 4, buckets = 2, nprobe = 2).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("lab_vec"),
@@ -233,7 +233,7 @@ class KnnSpec extends SparkSpec {
     // the planted exact copy votes through the probe (same-centroid
     // argument as contaminationSemanticIvf) with score exactly 1.0
     assert(ivfPairs.contains((unl, lab, 1.0)), ivfPairs.toString)
-    spark.sql("DROP TABLE IF EXISTS lblprop_ivf_t2")
+    graft.sources.Staged.drop(spark, "lblprop_ivf_t2")
     val dir2 =
       java.nio.file.Files.createTempDirectory("graft_lblprop_ivf2").toString
     val rolled = Knn.labelPropagationIvf(spark, planted, "lblprop_ivf_t2",
@@ -420,7 +420,7 @@ class KnnSpec extends SparkSpec {
 
   test("persisted IVF index: bucketed layout serves search with no index-side shuffle") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString
-    spark.sql("DROP TABLE IF EXISTS ivf_idx")
+    graft.sources.Staged.drop(spark, "ivf_idx")
     val centroids = graft.similarity.Knn.writeIvfIndex(e, "ivf_idx", dir,
       nlist = 10, buckets = 4)
     // search over the PERSISTED index (no retraining) recalls like ivf
@@ -464,7 +464,7 @@ class KnnSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
       .withColumn("label", lit(null).cast(e.schema("label").dataType)))
     def build(tbl: String, df: org.apache.spark.sql.DataFrame) = {
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      graft.sources.Staged.drop(spark, tbl)
       val dir = java.nio.file.Files.createTempDirectory(tbl).toString
       val cents = Knn.writeIvfIndexQuantized(df, tbl, dir, nlist = 8)
         .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSet
@@ -481,7 +481,7 @@ class KnnSpec extends SparkSpec {
 
   test("quantized persisted IVF: int8 lists recall like the float index, bucketed plan carries over") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivfq_idx").toString
-    spark.sql("DROP TABLE IF EXISTS ivfq_idx")
+    graft.sources.Staged.drop(spark, "ivfq_idx")
     val centroids = graft.similarity.Knn.writeIvfIndexQuantized(
       e, "ivfq_idx", dir, nlist = 10, buckets = 4)
     // the stored lists carry CODES, not float vectors: tinyint array +
@@ -494,7 +494,7 @@ class KnnSpec extends SparkSpec {
     // probe must recall nearly the same neighbor set (quantization is
     // the only difference; both probe nprobe=2 of 10 lists)
     val fdir = java.nio.file.Files.createTempDirectory("graft_ivff_idx").toString
-    spark.sql("DROP TABLE IF EXISTS ivff_idx")
+    graft.sources.Staged.drop(spark, "ivff_idx")
     val fcentroids = graft.similarity.Knn.writeIvfIndex(
       e, "ivff_idx", fdir, nlist = 10, buckets = 4)
     val q = e.filter(col("vec_id") < 5)
@@ -540,7 +540,7 @@ class KnnSpec extends SparkSpec {
       "the list distribution, bucketed scan with no Exchange") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ivfb_idx").toString
-    spark.sql("DROP TABLE IF EXISTS ivfb_idx")
+    graft.sources.Staged.drop(spark, "ivfb_idx")
     graft.similarity.Knn.writeIvfIndexQuantized(
       e, "ivfb_idx", dir, nlist = 10, buckets = 4)
     val audit = graft.similarity.Knn.ivfBalanceAudit(spark, "ivfb_idx")
@@ -711,7 +711,7 @@ class KnnSpec extends SparkSpec {
   }
 
   test("quantized recall audit: full probe width is exact over the persisted index") {
-    spark.sql("DROP TABLE IF EXISTS ivfq_audit_spec")
+    graft.sources.Staged.drop(spark, "ivfq_audit_spec")
     val path = java.nio.file.Files
       .createTempDirectory("graft_ivfq_audit_spec").toString + "/v"
     // identical integer chain both sides + all lists probed ⇒ the
@@ -772,7 +772,7 @@ class KnnSpec extends SparkSpec {
     val brute = Knn.tripletMine(planted, anchorMod = 25L).collect()
       .map(_.toSeq).toSet
     assert(brute.nonEmpty)
-    spark.sql("DROP TABLE IF EXISTS triplet_ivf_spec")
+    graft.sources.Staged.drop(spark, "triplet_ivf_spec")
     val dir =
       java.nio.file.Files.createTempDirectory("graft_triplet_ivf").toString
     // probing every list makes the candidate set the full pool: the

@@ -117,7 +117,7 @@ class PlanSpec extends SparkSpec {
     // centroid table in any of the three probe plans
     val dir = Files.createTempDirectory("graft_kernel_plan").toString
     Seq("kp_ivf", "kp_ivfq", "kp_pq", "kp_pq_coarse", "kp_pq_codebook")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      .foreach(t => graft.sources.Staged.drop(spark, t))
     val q = e.filter(col("vec_id") < 5)
     val c = Knn.writeIvfIndex(e, "kp_ivf", s"$dir/ivf", nlist = 4)
     val cq = Knn.writeIvfIndexQuantized(e, "kp_ivfq", s"$dir/ivfq", nlist = 4)
@@ -134,8 +134,8 @@ class PlanSpec extends SparkSpec {
   test("co-bucketed segment join runs with no Exchange on either side") {
     val dirA = Files.createTempDirectory("graft_bkt_log").toString
     val dirB = Files.createTempDirectory("graft_bkt_state").toString
-    spark.sql("DROP TABLE IF EXISTS bkt_entries")
-    spark.sql("DROP TABLE IF EXISTS bkt_state")
+    graft.sources.Staged.drop(spark, "bkt_entries")
+    graft.sources.Staged.drop(spark, "bkt_state")
     EventLogWriter.writeBucketed(
       EventLog.entries(spark, SF, Some("click")), "bkt_entries", dirA,
       buckets = 8)
@@ -315,7 +315,7 @@ class PlanSpec extends SparkSpec {
     // lists — candidate-linear, and the index side arrives
     // pre-partitioned (bucketed scan, zero index-side Exchange)
     val dir = Files.createTempDirectory("graft_contam_ivf_plan").toString
-    spark.sql("DROP TABLE IF EXISTS contam_ivf_plan")
+    graft.sources.Staged.drop(spark, "contam_ivf_plan")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -342,7 +342,7 @@ class PlanSpec extends SparkSpec {
     // the IVF swap rides probeScoredBy — bucketed code-index scan, no
     // cross product (the labels ride candidate-sized key equijoins)
     val dir = Files.createTempDirectory("graft_lblprop_plan").toString
-    spark.sql("DROP TABLE IF EXISTS lblprop_plan")
+    graft.sources.Staged.drop(spark, "lblprop_plan")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -609,8 +609,8 @@ class PlanSpec extends SparkSpec {
 
   test("standing_query_route probes the bucketed postings index; hybrid_search_ivf keeps the IVF fences") {
     val docs = graft.text.TextOps.docs(spark, SF)
-    spark.sql("DROP TABLE IF EXISTS route_plan_idx")
-    spark.sql("DROP TABLE IF EXISTS route_plan_idx_stats")
+    graft.sources.Staged.drop(spark, "route_plan_idx")
+    graft.sources.Staged.drop(spark, "route_plan_idx_stats")
     val idx = Files.createTempDirectory("graft_route_plan").toString + "/v"
     graft.text.TextOps.writeTextIndex(docs, "route_plan_idx", idx)
     val p = plan(graft.text.TextOps.standingQueryScore(spark,
@@ -620,7 +620,7 @@ class PlanSpec extends SparkSpec {
     // scalar stats crossJoin is a 1-row broadcast by construction
     assert(p.contains("Bucketed: true"), p)
     assert(!p.contains("CartesianProduct"), p)
-    spark.sql("DROP TABLE IF EXISTS hyb_ivf_plan")
+    graft.sources.Staged.drop(spark, "hyb_ivf_plan")
     val idx2 = Files.createTempDirectory("graft_hyb_ivf_plan")
       .toString + "/v"
     val ph = plan(graft.similarity.Hybrid.hybridSearchIvf(spark, docs,
@@ -632,8 +632,8 @@ class PlanSpec extends SparkSpec {
   test("chunk_hybrid_rrf: bounded member cuts, the only window is the fused serving cut; persisted PRF probes stay bucketed") {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     val docs = graft.text.TextOps.docs(spark, SF)
-    spark.sql("DROP TABLE IF EXISTS chunk_hyb_plan")
-    spark.sql("DROP TABLE IF EXISTS chunk_hyb_plan_vocab")
+    graft.sources.Staged.drop(spark, "chunk_hyb_plan")
+    graft.sources.Staged.drop(spark, "chunk_hyb_plan_vocab")
     val idx = Files.createTempDirectory("graft_chunk_hyb_plan")
       .toString + "/v"
     val cd = graft.text.Chunks.chunkDocs(docs)
@@ -656,8 +656,8 @@ class PlanSpec extends SparkSpec {
 
     // search_prf_persisted's mining face: bucketed postings probes
     // (zero corpus tokenize), bounded seed cut, no cartesian
-    spark.sql("DROP TABLE IF EXISTS prf_plan_idx")
-    spark.sql("DROP TABLE IF EXISTS prf_plan_idx_stats")
+    graft.sources.Staged.drop(spark, "prf_plan_idx")
+    graft.sources.Staged.drop(spark, "prf_plan_idx_stats")
     val idx2 = Files.createTempDirectory("graft_prf_plan").toString + "/v"
     graft.text.TextOps.writeTextIndex(docs, "prf_plan_idx", idx2)
     val pt = plan(graft.text.Prf.prfTermsIndexed(spark, "prf_plan_idx"))

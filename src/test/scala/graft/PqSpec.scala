@@ -25,7 +25,7 @@ class PqSpec extends SparkSpec {
     java.nio.file.Files.createTempDirectory(tag).toString
 
   test("planted prototypes: PQ search returns same-prototype neighbors at exactly 1.0") {
-    spark.sql("DROP TABLE IF EXISTS pq_planted")
+    graft.sources.Staged.drop(spark, "pq_planted")
     val (coarse, codebook) = Knn.writeIvfPqIndex(planted, "pq_planted",
       freshDir("graft_pq_planted"), nlist = 4, m = 8, ksub = 16)
     val rows = Knn.searchIvfPq(spark, "pq_planted", coarse, codebook,
@@ -41,7 +41,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("planted prototypes: recall vs float brute is exactly 1000 at nprobe = nlist") {
-    spark.sql("DROP TABLE IF EXISTS pq_recall_t")
+    graft.sources.Staged.drop(spark, "pq_recall_t")
     val aud = Knn.pqRecallAudit(spark, planted, "pq_recall_t",
       freshDir("graft_pq_recall"), col("vec_id") < 3, k = 10,
       nprobe = 4, nlist = 4).collect().head
@@ -111,7 +111,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("code-balance audit: conservation, dead-code accounting, planted collapse visible") {
-    spark.sql("DROP TABLE IF EXISTS pq_balance_t")
+    graft.sources.Staged.drop(spark, "pq_balance_t")
     val (_, codebook) = Knn.writeIvfPqIndex(planted, "pq_balance_t",
       freshDir("graft_pq_bal"), nlist = 4, m = 8, ksub = 16)
     val rows = Knn.pqCodeBalance(spark, "pq_balance_t", codebook).collect()
@@ -131,7 +131,7 @@ class PqSpec extends SparkSpec {
 
   test("search plan: bucketed index scan, no cartesian, one probe-side c_id Exchange") {
     val e = Knn.emb(spark, SF)
-    spark.sql("DROP TABLE IF EXISTS pq_plan_t")
+    graft.sources.Staged.drop(spark, "pq_plan_t")
     val (coarse, codebook) = Knn.writeIvfPqIndex(e, "pq_plan_t",
       freshDir("graft_pq_plan"), nlist = 10, buckets = 4)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")

@@ -67,8 +67,8 @@ class PrfSpec extends SparkSpec {
   test("standing-query score of a novel doc is frozen-stats stable and the stream probe is exact") {
     import java.nio.file.Files
     val docs = TextOps.docs(spark, SF)
-    spark.sql("DROP TABLE IF EXISTS route_idx")
-    spark.sql("DROP TABLE IF EXISTS route_idx_stats")
+    graft.sources.Staged.drop(spark, "route_idx")
+    graft.sources.Staged.drop(spark, "route_idx_stats")
     val idx = Files.createTempDirectory("graft_route_idx").toString + "/v"
     TextOps.writeTextIndex(docs, "route_idx", idx)
     val q = Prf.SeedQuery
@@ -132,8 +132,8 @@ class PrfSpec extends SparkSpec {
   test("searchPrfIndexed is row-identical to the ad-hoc face (transparent index hop)") {
     import java.nio.file.Files
     val d = TextOps.docs(spark, SF)
-    spark.sql("DROP TABLE IF EXISTS prf_idx_spec")
-    spark.sql("DROP TABLE IF EXISTS prf_idx_spec_stats")
+    graft.sources.Staged.drop(spark, "prf_idx_spec")
+    graft.sources.Staged.drop(spark, "prf_idx_spec_stats")
     val path = Files.createTempDirectory("graft_prf_idx").toString
     TextOps.writeTextIndex(d, "prf_idx_spec", s"$path/t")
     val gotTerms = Prf.prfTermsIndexed(spark, "prf_idx_spec")
@@ -153,7 +153,7 @@ class PrfSpec extends SparkSpec {
     val d = TextOps.docs(spark, SF)
     Seq("prf_dlt_spec", "prf_dlt_spec_stats", "prf_dlt_spec_delta",
       "prf_dlt_spec_delta_stats")
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+      .foreach(t => graft.sources.Staged.drop(spark, t))
     val path = Files.createTempDirectory("graft_prf_dlt").toString
     val isDelta = substring(md5(concat_ws(":",
       col("doc_id").cast("string"), lit("dsd"))), 1, 1) >= "c"
@@ -187,8 +187,8 @@ class PrfSpec extends SparkSpec {
       (5L, "more filler body text words"),
       (6L, ""),
       (7L, "   "))
-    spark.sql("DROP TABLE IF EXISTS prf_idx_empty_spec")
-    spark.sql("DROP TABLE IF EXISTS prf_idx_empty_spec_stats")
+    graft.sources.Staged.drop(spark, "prf_idx_empty_spec")
+    graft.sources.Staged.drop(spark, "prf_idx_empty_spec_stats")
     val path = Files.createTempDirectory("graft_prf_idx_e").toString
     TextOps.writeTextIndex(d, "prf_idx_empty_spec", s"$path/t")
     val q0 = Seq("vector")

@@ -142,8 +142,8 @@ class StreamingSpec extends SparkSpec {
   test("streaming more-like-this converges to the batch doc_similar rows") {
     val docs = spark.read.parquet(s"$SF/documents.parquet")
     // freeze the serving artifacts over the full corpus
-    spark.sql("DROP TABLE IF EXISTS mlt_vec")
-    spark.sql("DROP TABLE IF EXISTS mlt_vec_vocab")
+    graft.sources.Staged.drop(spark, "mlt_vec")
+    graft.sources.Staged.drop(spark, "mlt_vec_vocab")
     val idx = Files.createTempDirectory("graft_mlt_idx").toString + "/v"
     graft.text.TextOps.writeDocVectorIndex(docs, "mlt_vec", idx)
     // replay the same corpus as a multi-micro-batch stream
@@ -172,7 +172,7 @@ class StreamingSpec extends SparkSpec {
     val docs = graft.text.TextOps.docs(spark, SF)
     val split = graft.text.TextOps.splitAssign(docs, 13)
     // freeze the serving artifact: the df-capped TEST-side anchor index
-    spark.sql("DROP TABLE IF EXISTS contam_stream_idx")
+    graft.sources.Staged.drop(spark, "contam_stream_idx")
     val idxPath = Files.createTempDirectory("graft_contam_sidx")
       .toString + "/v"
     graft.dedup.Dedup.writeAnchorIndex(
@@ -197,7 +197,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming quality-filter scoring converges to the batch classifier") {
     val docs = graft.text.TextOps.docs(spark, SF)
-    spark.sql("DROP TABLE IF EXISTS dom_model_stream")
+    graft.sources.Staged.drop(spark, "dom_model_stream")
     val path = Files.createTempDirectory("graft_dom_stream_idx")
       .toString + "/m"
     graft.text.TextOps.writeDomainModel(docs, "dom_model_stream", path)
@@ -325,7 +325,7 @@ class StreamingSpec extends SparkSpec {
   test("live perplexity probe (foreachBatch) converges to batch " +
       "lmScoreIndexed over the frozen model") {
     val docs = graft.text.TextOps.docs(spark, SF)
-    spark.sql("DROP TABLE IF EXISTS lm_stream_idx")
+    graft.sources.Staged.drop(spark, "lm_stream_idx")
     val idxPath = Files.createTempDirectory("graft_lm_stream_idx")
       .toString + "/m"
     graft.text.TextOps.writeLmIndex(docs, "lm_stream_idx", idxPath)
@@ -595,7 +595,7 @@ class StreamingSpec extends SparkSpec {
     import graft.multimodal.Multimodal
     val media = Multimodal.synthesize(graft.text.TextOps.docs(spark, SF))
       .localCheckpoint(true)
-    spark.sql("DROP TABLE IF EXISTS mm_bucket_idx")
+    graft.sources.Staged.drop(spark, "mm_bucket_idx")
     val idxPath = Files.createTempDirectory("graft_mm_bidx").toString + "/v"
     Multimodal.writeMediaBucketIndex(media, "mm_bucket_idx", idxPath)
     val dir = Files.createTempDirectory("graft_mm_nd_stream").toString
@@ -1036,8 +1036,8 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-static more-like-this probe (foreachBatch) converges to batch doc_similar") {
     val docs = spark.read.parquet(s"$SF/documents.parquet")
-    spark.sql("DROP TABLE IF EXISTS mlt2_vec")
-    spark.sql("DROP TABLE IF EXISTS mlt2_vec_vocab")
+    graft.sources.Staged.drop(spark, "mlt2_vec")
+    graft.sources.Staged.drop(spark, "mlt2_vec_vocab")
     val idx = Files.createTempDirectory("graft_mlt2_idx").toString + "/v"
     graft.text.TextOps.writeDocVectorIndex(docs, "mlt2_vec", idx)
     val dir = Files.createTempDirectory("graft_mlt2_stream").toString
@@ -1068,7 +1068,7 @@ class StreamingSpec extends SparkSpec {
   test("stream-static decontamination probe (foreachBatch) converges and scans the bucketed index") {
     val docs = graft.text.TextOps.docs(spark, SF)
     val split = graft.text.TextOps.splitAssign(docs, 13)
-    spark.sql("DROP TABLE IF EXISTS contam_probe_idx")
+    graft.sources.Staged.drop(spark, "contam_probe_idx")
     val idxPath = Files.createTempDirectory("graft_contam_pidx")
       .toString + "/v"
     graft.dedup.Dedup.writeAnchorIndex(
@@ -1111,7 +1111,7 @@ class StreamingSpec extends SparkSpec {
       .withColumn("nrm",
         sqrt(graft.functions.DotProduct(col("v"), col("v"))))
     val isAnchor = col("vec_id") % 25L === 0L
-    spark.sql("DROP TABLE IF EXISTS triplet_probe_idx")
+    graft.sources.Staged.drop(spark, "triplet_probe_idx")
     val idxPath = Files.createTempDirectory("graft_triplet_pidx")
       .toString + "/v"
     val centroids = graft.similarity.Knn.writeIvfIndexQuantized(
@@ -1147,7 +1147,7 @@ class StreamingSpec extends SparkSpec {
   test("live OOV probe (foreachBatch) converges to batch oovTag and " +
       "scans the bucketed vocab") {
     val docs = spark.read.parquet(s"$SF/documents.parquet")
-    spark.sql("DROP TABLE IF EXISTS oov_vocab_idx")
+    graft.sources.Staged.drop(spark, "oov_vocab_idx")
     val idxPath = Files.createTempDirectory("graft_oov_idx")
       .toString + "/v"
     graft.text.TextOps.writeVocabIndex(docs, "oov_vocab_idx", idxPath)
@@ -1178,7 +1178,7 @@ class StreamingSpec extends SparkSpec {
   test("stream-static domain-score probe (foreachBatch) converges to " +
       "the batch classifier with no driver-resident model") {
     val docs = graft.text.TextOps.docs(spark, SF)
-    spark.sql("DROP TABLE IF EXISTS dom_probe_model")
+    graft.sources.Staged.drop(spark, "dom_probe_model")
     val path = Files.createTempDirectory("graft_dom_probe_idx")
       .toString + "/m"
     graft.text.TextOps.writeDomainModel(docs, "dom_probe_model", path)
@@ -1229,7 +1229,7 @@ class StreamingSpec extends SparkSpec {
     import graft.multimodal.Multimodal
     val media = Multimodal.synthesize(graft.text.TextOps.docs(spark, SF))
       .localCheckpoint(true)
-    spark.sql("DROP TABLE IF EXISTS mm_probe_idx")
+    graft.sources.Staged.drop(spark, "mm_probe_idx")
     val idxPath = Files.createTempDirectory("graft_mm_pidx")
       .toString + "/v"
     Multimodal.writeMediaBucketIndex(media, "mm_probe_idx", idxPath)
@@ -1292,7 +1292,7 @@ class StreamingSpec extends SparkSpec {
     val labeledSlice = e.filter(
       substring(md5(concat_ws(":", col("vec_id").cast("string"),
         lit("lbl"))), 1, 1) < lit(12.toHexString))
-    spark.sql("DROP TABLE IF EXISTS lblprop_probe_idx")
+    graft.sources.Staged.drop(spark, "lblprop_probe_idx")
     val idxPath = Files.createTempDirectory("graft_lblprop_pidx")
       .toString + "/v"
     val centroids = Knn.writeIvfIndexQuantized(labeledSlice,
@@ -1329,7 +1329,7 @@ class StreamingSpec extends SparkSpec {
       "batch PQ search over the persisted index") {
     import graft.similarity.Knn
     val e = Knn.emb(spark, SF).localCheckpoint(true)
-    spark.sql("DROP TABLE IF EXISTS pq_probe_idx")
+    graft.sources.Staged.drop(spark, "pq_probe_idx")
     val idxPath = Files.createTempDirectory("graft_pq_probe_idx")
       .toString + "/v"
     val (coarse, codebook) = Knn.writeIvfPqIndex(e, "pq_probe_idx",
@@ -1369,8 +1369,7 @@ class StreamingSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_sample_probe_s").toString
     docs.limit(80).write.mode("overwrite").parquet(dir)
     docs.limit(30).write.mode("append").parquet(dir)
-    spark.sql("DROP TABLE IF EXISTS sample_probe_state")
-    spark.sql("DROP TABLE IF EXISTS sample_probe_state__stage")
+    graft.sources.Staged.drop(spark, "sample_probe_state")
     val statePath = Files.createTempDirectory("graft_sample_probe_st")
       .toString + "/s"
     val stream = spark.readStream.schema(docs.schema)
@@ -1430,8 +1429,8 @@ class StreamingSpec extends SparkSpec {
     val docs = base.unionByName(hostile.select(base.columns.map(col): _*))
       .localCheckpoint(true)
     // MORE-LIKE-THIS: the closure's toks walk sees null for null text
-    spark.sql("DROP TABLE IF EXISTS mlt_h_vec")
-    spark.sql("DROP TABLE IF EXISTS mlt_h_vec_vocab")
+    graft.sources.Staged.drop(spark, "mlt_h_vec")
+    graft.sources.Staged.drop(spark, "mlt_h_vec_vocab")
     val idx = Files.createTempDirectory("graft_mlt_h_idx").toString + "/v"
     graft.text.TextOps.writeDocVectorIndex(docs, "mlt_h_vec", idx)
     val dir = Files.createTempDirectory("graft_mlt_h_stream").toString
@@ -1496,11 +1495,11 @@ class StreamingSpec extends SparkSpec {
 
   test("frozen-artifact bounds are ENFORCED: an over-bound artifact fails a named require") {
     val docs = spark.read.parquet(s"$SF/documents.parquet").limit(30)
-    spark.sql("DROP TABLE IF EXISTS bound_vec")
-    spark.sql("DROP TABLE IF EXISTS bound_vec_vocab")
+    graft.sources.Staged.drop(spark, "bound_vec")
+    graft.sources.Staged.drop(spark, "bound_vec_vocab")
     val idx = Files.createTempDirectory("graft_bound_idx").toString + "/v"
     graft.text.TextOps.writeDocVectorIndex(docs, "bound_vec", idx)
-    spark.sql("DROP TABLE IF EXISTS bound_anchor")
+    graft.sources.Staged.drop(spark, "bound_anchor")
     val aPath = Files.createTempDirectory("graft_bound_a").toString + "/v"
     graft.dedup.Dedup.writeAnchorIndex(docs, "bound_anchor", aPath)
     val dir = Files.createTempDirectory("graft_bound_stream").toString

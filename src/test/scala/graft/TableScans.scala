@@ -38,7 +38,8 @@ object TableScans {
         .takeWhile(_ != "tableScans:end").toList
         .dropWhile(_ != "tableScans:start").drop(1)
       tables.map { t =>
-        val scan = ("default\\." + java.util.regex.Pattern.quote(t) + "\\b").r
+        val scan = ("default\\." + java.util.regex.Pattern.quote(t) +
+          "(__g\\d+)?\\b").r
         plans.count(p => scan.findFirstIn(p).isDefined)
       }
     } finally sc.removeSparkListener(listener)

@@ -487,8 +487,8 @@ class TextSpec extends SparkSpec {
     val tbl = "graft_doc_vec_spec"
     val path = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), tbl).toString
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}_vocab")
+    graft.sources.Staged.drop(spark, tbl)
+    graft.sources.Staged.drop(spark, s"${tbl}_vocab")
     TextOps.writeDocVectorIndex(d, tbl, path)
     val pred = substring(md5(concat_ws(":",
       col("doc_id").cast("string"), lit("mlt"))), 1, 1) < "4"
@@ -518,8 +518,8 @@ class TextSpec extends SparkSpec {
     val tbl = "graft_text_index_spec"
     val path = java.nio.file.Paths.get(
       System.getProperty("java.io.tmpdir"), tbl).toString
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}_stats")
+    graft.sources.Staged.drop(spark, tbl)
+    graft.sources.Staged.drop(spark, s"${tbl}_stats")
     TextOps.writeTextIndex(d, tbl, path)
     val got = TextOps.searchIndex(spark, tbl, terms)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -790,12 +790,12 @@ class TextSpec extends SparkSpec {
     val tbl = "graft_bpe_model_spec"
     val path = java.nio.file.Files
       .createTempDirectory("bpe_model").toString + "/m"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    spark.sql(s"DROP TABLE IF EXISTS ${tbl}_merges")
+    graft.sources.Staged.drop(spark, tbl)
+    graft.sources.Staged.drop(spark, s"${tbl}_merges")
     val (_, trained) = TextOps.bpeTrain(docs, numMerges = 40)
     TextOps.writeBpeModel(docs, tbl, path, numMerges = 40)
     // the model artifact round-trips exactly, in merge order
-    val persisted = spark.table(s"${tbl}_merges")
+    val persisted = graft.sources.Staged.table(spark, s"${tbl}_merges")
       .orderBy("merge_rank").collect()
       .map(r => (r.getAs[String]("left"), r.getAs[String]("right"))).toSeq
     assert(persisted == trained, s"$persisted vs $trained")
@@ -1230,7 +1230,7 @@ class TextSpec extends SparkSpec {
 
   test("domain_classifier_persisted: round-trip identical to the in-session model") {
     val d = graft.text.TextOps.docs(spark, SF)
-    spark.sql("DROP TABLE IF EXISTS dom_model_spec")
+    graft.sources.Staged.drop(spark, "dom_model_spec")
     val path = java.nio.file.Files
       .createTempDirectory("graft_dom_model_spec").toString + "/m"
     TextOps.writeDomainModel(d, "dom_model_spec", path)
@@ -1569,7 +1569,7 @@ class TextSpec extends SparkSpec {
       "row-identical to the in-session tagger and scans the bucketed " +
       "dictionary") {
     import graft.text.Boilerplate
-    spark.sql("DROP TABLE IF EXISTS bp_idx_spec")
+    graft.sources.Staged.drop(spark, "bp_idx_spec")
     val path = java.nio.file.Files
       .createTempDirectory("graft_bp_idx_spec").toString + "/d"
     Boilerplate.writeBoilerplateIndex(docs, "bp_idx_spec", path)
@@ -1586,7 +1586,7 @@ class TextSpec extends SparkSpec {
 
   test("lmScoreIndexed: persisted-model probe is row-identical to the " +
       "in-session scorer and scans the bucketed model") {
-    spark.sql("DROP TABLE IF EXISTS lm_idx_spec")
+    graft.sources.Staged.drop(spark, "lm_idx_spec")
     val path = java.nio.file.Files
       .createTempDirectory("graft_lm_idx_spec").toString + "/m"
     TextOps.writeLmIndex(docs, "lm_idx_spec", path)
@@ -1691,7 +1691,7 @@ class TextSpec extends SparkSpec {
 
   test("vocabCoverageIndexed: persisted-vocab probe is row-identical " +
       "to the in-plan derivation; oovTag masses sum to its totals") {
-    spark.sql("DROP TABLE IF EXISTS vocab_idx_spec")
+    graft.sources.Staged.drop(spark, "vocab_idx_spec")
     val path = java.nio.file.Files
       .createTempDirectory("graft_vocab_idx_spec").toString + "/v"
     TextOps.writeVocabIndex(docs, "vocab_idx_spec", path)

@@ -17,7 +17,7 @@ reports:
     this is how r21 caught text_search_bm25's 2.25x from a one-line
     formulation change).
 
-Usage: python3 tools/bench_compare.py tools/bench_r21 tools/bench_r19
+Usage: python3 tools/bench_compare.py <new pair dir> tools/bench_r26
        (newer pair first; each dir holds final_tree_run{1,2}.json)
 """
 import json, statistics as st, sys
