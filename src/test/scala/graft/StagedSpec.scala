@@ -135,6 +135,27 @@ class StagedSpec extends SparkSpec {
     }
   }
 
+  test("the first probe read after a crashed rebuild serves the old index") {
+    val tbl = "staged_first_read_t"
+    val path = freshDir("firstread")
+    Staged.drop(spark, tbl)
+    graft.text.Chunks.writeChunkIndex(docs, tbl, path)
+    val shard = docs.limit(10)
+    def probe() = graft.text.Chunks.chunkDedupIncremental(spark, tbl, shard)
+      .collect().map(_.toSeq).toSet
+    val want = probe()
+    val wantRows = checksum(spark.table(tbl))
+    // the crashed rebuild is over other docs, so serving any of its
+    // output would change the answer
+    CrashBefore(spark, tbl)(
+      graft.text.Chunks.writeChunkIndex(docs.limit(3), tbl, path))
+    // no recovery call: the very first read after the crash answers
+    // from the old generation, by probe, by name and by resolution
+    assert(probe() == want)
+    assert(checksum(spark.table(tbl)) == wantRows)
+    assert(checksum(Staged.table(spark, tbl)) == wantRows)
+  }
+
   test("an abandoned stage next to a live index is inert and overwritten by the next rebuild") {
     val tbl = "staged_orphan_t"
     val path = freshDir("orphan")
