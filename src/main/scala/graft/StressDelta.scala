@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
   * append → merge → serve cycle against an inflated corpus
   * (tools/stress/inflate.py — the mirror-crawl pathology), so the
   * delta-maintenance claims carry a scale artifact like every other
-  * capped family. For each of the three delta families (text postings,
-  * doc-vector, float IVF):
+  * capped family. For each delta family (text postings, doc-vector,
+  * float IVF, IVF-PQ):
   *
   *   build base (~3/4 split) → append B delta batches one at a time,
   *   PROBING AFTER EVERY APPEND → one merge → probe again.
@@ -20,10 +20,11 @@ import org.apache.spark.sql.functions._
   *    pre-merge digest (the transparent-merge contract at scale), and
   *    the text probe digest equals the AD-HOC full-corpus bm25 digest
   *    (probe ≡ rebuild, measured organically at N×);
-  *  - NO SUPERLINEAR STEP: appends are delta-sized (append k rewrites
-  *    k batches — linear in accumulated delta, NEVER corpus-sized;
-  *    base build time is the corpus-sized yardstick printed next to
-  *    them);
+  *  - FLAT APPENDS: append k writes ONE segment holding only batch k
+  *    (it never reads or rewrites an earlier segment's payload), so
+  *    per-append time is flat in k and batch-sized, NEVER corpus-sized
+  *    (base build time is the corpus-sized yardstick printed next to
+  *    them); probe time grows with the live segments until the merge;
   *  - the audits account every mass (drop-accounting posture).
   *
   * Probe scopes are serving-sized by design (a query's cost must not

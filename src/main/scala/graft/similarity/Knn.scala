@@ -1358,7 +1358,7 @@ object Knn {
     * Search", TPAMI 2011). The coarse half is ONE path for every codec:
     * the [[finiteNorm]]-fenced base, the k-means lists, the
     * [[NearestCentroids]] assignment and probe lists, the bucketed list
-    * write ([[writeLists]]), the delta generation and the merge. A codec
+    * write ([[writeLists]]), the delta segments and the merge. A codec
     * supplies only what differs: the stored payload of a list row
     * ([[stored]]), the probe-side payload its score reads ([[probes]]),
     * a filter on the index side ([[indexFilter]]) and the [[score]]
@@ -1622,69 +1622,40 @@ object Knn {
   // re-cluster must not pay the weekly cost — the frozen-model posture of
   // appendDocVectorIndexDelta applied to the IVF layouts) ─────
 
-  /** The delta list member of a snapshot, in the base's column order. */
-  private def ivfDelta(snap: Staged.Snapshot,
-      tableName: String): Option[DataFrame] =
-    snap.get(s"${tableName}_delta")
-
-  /** The ONE delta append: arriving vectors (fenced like the build) are
-    * assigned to the FROZEN coarse model and encoded under the codec's
-    * frozen model — re-training is the full-rebuild cadence — and land
-    * as the artifact's `_delta` member in the base's own column order
-    * ([[writeLists]]): one commit flips the pointer to the base members
-    * plus the new delta; a repeat append extends the delta. `models`
-    * resolves from the snapshot after the base's existence check and
-    * returns the (coarse, codec, list frame) — the list frame checked
-    * by [[fencedIndex]] when the coarse model is caller input. The
-    * disjointness fences reject vec_ids already indexed or already in
-    * the delta. Contract (DeltaIndexSpec, per codec): probe over
-    * base ∪ delta ≡ a rebuild with the same frozen models — exactly, as
+  /** The ONE IVF delta append ([[Staged.append]]): arriving vectors
+    * (fenced like the build) are assigned to the FROZEN coarse model and
+    * encoded under the codec's frozen model — re-training is the
+    * full-rebuild cadence — and land as ONE segment in the base's own
+    * list columns and order ([[writeLists]]). `models` resolves from the
+    * snapshot and returns the (coarse, codec, list frame) — the list
+    * frame checked by [[fencedIndex]] when the coarse model is caller
+    * input. Contract (DeltaIndexSpec, per codec): probe over base ∪
+    * segments ≡ a rebuild with the same frozen models — exactly, as
     * assignment and encoding are pure per-vector functions. */
   private def appendIvf(eNew: DataFrame, tableName: String, path: String,
       buckets: Int, face: String)(
       models: Staged.Snapshot => (CentroidModel, IvfCodec, DataFrame))
-      : Unit = {
-    val snap = Staged.resolve(eNew.sparkSession, tableName)
-    require(snap.has(tableName),
-      s"append${face}Delta: no base index $tableName — build it with " +
-        s"write$face first")
-    val (coarse, codec, index) = models(snap)
-    val assigned = codec.stored(assignTo(fencedBase(eNew), coarse))
-      .select(index.columns.toIndexedSeq.map(col): _*)
-    val newIds = assigned.select(col("vec_id")).distinct()
-    val clashBase = index.join(broadcast(newIds), Seq("vec_id"),
-      "left_semi").count()
-    require(clashBase == 0L,
-      s"append${face}Delta($tableName): $clashBase already-indexed " +
-        "vec_ids in the delta batch — a delta holds only NEW vectors " +
-        "(re-embeds go through rebuild or the merge cadence)")
-    val old = ivfDelta(snap, tableName)
-    old.foreach { op =>
-      val clashDelta = op.join(broadcast(newIds), Seq("vec_id"),
-        "left_semi").count()
-      require(clashDelta == 0L,
-        s"append${face}Delta($tableName): $clashDelta vec_ids already " +
-          "in the live delta — batches must be disjoint")
-    }
-    Staged.commit(eNew.sparkSession, tableName, path,
-        keep = snap.members - s"${tableName}_delta")(_.write("_delta")(
-      writeLists(buckets, old.map(_.unionByName(assigned))
-        .getOrElse(assigned))))
-  }
+      : Unit =
+    Staged.append(eNew.sparkSession, tableName, path, s"append${face}Delta",
+        "vec_id") { snap =>
+      val (coarse, codec, index) = models(snap)
+      codec.stored(assignTo(fencedBase(eNew), coarse))
+        .select(index.columns.toIndexedSeq.map(col): _*)
+    } { (g, segment, rows) => g.write(segment)(writeLists(buckets, rows)) }
 
-  /** The ONE delta search — base ∪ delta from one snapshot: probe
-    * lists are computed ONCE and each side is scored as its OWN c_id
-    * equijoin before the one bounded rank — unioning the two index
-    * frames first would erase the base scan's bucketed partitioning and
-    * re-shuffle the whole index. With no delta this is exactly the base
-    * search. */
-  private def searchIvfDelta(snap: Staged.Snapshot, tableName: String,
-      index: DataFrame, coarse: CentroidModel, codec: IvfCodec,
-      queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
+  /** The ONE delta search — base ∪ segments from one snapshot: probe
+    * lists are computed ONCE and the base and each segment are scored
+    * as their OWN c_id equijoin before the one bounded rank — unioning
+    * the index frames first would erase each bucketed scan's
+    * partitioning and re-shuffle the whole index. Probe width grows with
+    * the live segments until a merge. With no segment this is exactly
+    * the base search. */
+  private def searchIvfDelta(snap: Staged.Snapshot, index: DataFrame,
+      coarse: CentroidModel, codec: IvfCodec, queries: DataFrame, k: Int,
+      nprobe: Int): DataFrame = {
     val probes = codec.probes(queries, coarse, nprobe).localCheckpoint(true)
-    ranked(ivfDelta(snap, tableName).foldLeft(
-      codec.scored(probes, index))((s, dp) =>
-        s.unionByName(codec.scored(probes, dp))), k)
+    ranked(snap.segments.foldLeft(codec.scored(probes, index))((s, seg) =>
+      s.unionByName(codec.scored(probes, snap.table(seg)))), k)
   }
 
   /** [[searchIvfDelta]] under a caller-passed centroid frame. */
@@ -1693,7 +1664,7 @@ object Knn {
       nprobe: Int): DataFrame = {
     val snap = Staged.resolve(spark, tableName)
     val (model, index) = fencedIndex(snap, tableName, centroids)
-    searchIvfDelta(snap, tableName, index, model, codec, queries, k, nprobe)
+    searchIvfDelta(snap, index, model, codec, queries, k, nprobe)
   }
 
   /** Generation accounting for an IVF delta of any codec (the
@@ -1704,7 +1675,7 @@ object Knn {
   def ivfDeltaAudit(spark: SparkSession, tableName: String): DataFrame = {
     val snap = Staged.resolve(spark, tableName)
     val nBase = snap.table(tableName).agg(count(lit(1)).as("n_vecs_base"))
-    val nDelta = ivfDelta(snap, tableName)
+    val nDelta = snap.segments.map(snap.table).reduceOption(_.unionByName(_))
       .map(_.agg(count(lit(1)).as("n_vecs_delta")))
       .getOrElse(spark.range(1).select(lit(0L).as("n_vecs_delta")))
     nBase.crossJoin(broadcast(nDelta))
@@ -1737,22 +1708,16 @@ object Knn {
     searchFencedDelta(spark, tableName, centroids, FloatCodec, queries, k,
       nprobe)
 
-  /** Compact the delta into the base index, any codec: one index-ROW
-    * union write in the base's own list columns, ZERO assignment or
-    * encoding recompute, ONE commit whose pointer names the new lists,
-    * the kept models and no delta — a crash before the flip serves
-    * base ∪ delta unchanged, and with no delta this is a no-op. Models
-    * are NOT retrained — re-clustering is the full-rebuild cadence. */
+  /** Compact the segments into the base index, any codec
+    * ([[Staged.merge]]): one index-ROW union write in the base's own list
+    * columns, ZERO assignment or encoding recompute. Models are NOT
+    * retrained — re-clustering is the full-rebuild cadence. */
   def mergeIvfIndex(spark: SparkSession, tableName: String, path: String,
-      buckets: Int = 8): Unit = {
-    val snap = Staged.resolve(spark, tableName)
-    ivfDelta(snap, tableName).foreach { dp =>
-      Staged.commit(spark, tableName, path,
-          keep = snap.members -- Seq(tableName, s"${tableName}_delta"))(
-        _.write()(writeLists(buckets,
-          snap.table(tableName).unionByName(dp))))
+      buckets: Int = 8): Unit =
+    Staged.merge(spark, tableName, path) { (g, snap) =>
+      g.write()(writeLists(buckets, snap.segments.map(snap.table)
+        .foldLeft(snap.table(tableName))(_.unionByName(_))))
     }
-  }
   /** IVF LIST-BALANCE audit over a persisted index of any codec: list
     * population, heaviest/lightest lists, and max-over-ideal as the
     * integer half-up milli (1000 = perfectly balanced). Probe latency is
@@ -2044,7 +2009,7 @@ object Knn {
       m: Int = PqSubspaces): DataFrame = {
     val snap = Staged.resolve(spark, tableName)
     val (coarse, codebook) = pqModels(snap, tableName)
-    searchIvfDelta(snap, tableName, snap.table(tableName), coarse,
+    searchIvfDelta(snap, snap.table(tableName), coarse,
       new PqCodec(codebook, m), queries, k, nprobe)
   }
 

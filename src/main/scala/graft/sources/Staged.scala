@@ -2,20 +2,21 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, count, lit, when}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat,
   CatalogTable, CatalogTableType}
 
 /** One commit point per persisted artifact — the snapshot-pointer flip
   * of a table format's commit protocol (Delta Lake, Armbrust et al.,
-  * VLDB 2020), built on the session catalog alone.
+  * VLDB 2020), built on the session catalog alone — and ONE delta
+  * protocol of append-only segments behind that pointer (Delta Lake's
+  * add-file log).
   *
   * An artifact is a set of MEMBER tables under one name: a postings
-  * index is `t` + `t_stats` (+ `t_delta` + `t_delta_stats` while a delta
-  * is live), a BPE model `t` + `t_merges`, a doc-vector index `t` +
-  * `t_vocab` (+ `t_delta`), an IVF index `t` (+ `t_centroids`) (+
-  * `t_delta`), an IVF-PQ index `t` + `t_coarse` + `t_codebook` (+
-  * `t_delta`). A [[commit]]:
+  * index is `t` + `t_stats`, a BPE model `t` + `t_merges`, a doc-vector
+  * index `t` + `t_vocab`, an IVF index `t` (+ `t_centroids`), an IVF-PQ
+  * index `t` + `t_coarse` + `t_codebook`. A [[commit]]:
   *
   *  1. writes every new member as its own external table
   *     `<member>__g<N>` at `<member path>__g<N>`. N only ever grows (it
@@ -36,17 +37,24 @@ import org.apache.spark.sql.catalyst.catalog.{CatalogStorageFormat,
   * reader that needs several members of one artifact takes them all
   * from ONE pointer read ([[resolve]]).
   *
-  * A delta is a member like any other: an append flips to a map that
-  * reuses the base members and names a new delta table; a rebuild or a
-  * merge flips to a map with no delta. A stale delta or a half-merge
-  * therefore cannot exist.
+  * A delta is a list of immutable SEGMENTS the pointer names in append
+  * order ([[Snapshot.segments]]). [[append]] writes ONE segment holding
+  * only its own batch and flips to the base members, every earlier
+  * segment and the new one — it never reads or rewrites an earlier
+  * segment's payload, so B appends write B batches. A probe unions the
+  * base with every segment. [[merge]] folds base ∪ segments into a new
+  * base generation with no segments; a rebuild (a plain commit) also
+  * flips to a map with none, so a stale segment cannot be served. A
+  * family supplies only its payload, fence key, segment writer, stats
+  * fold and probe union.
   *
-  * Commits of one artifact are single-writer. Every `DROP TABLE` and
-  * every generation name in `src/main` lives in this file (ApiSpec
-  * lints it). */
+  * Commits of one artifact are single-writer. Every `DROP TABLE`, every
+  * generation name and every segment name in `src/main` lives in this
+  * file (ApiSpec lints it). */
 object Staged {
 
   private val MembersKey = "graft.members"
+  private val SegmentInfix = "_delta"
   private val GenerationKey = "graft.generation"
   private val GenerationName = """(.+)__g(\d+)""".r
 
@@ -63,6 +71,20 @@ object Staged {
       * its own ([[Staged.table]]). */
     def table(member: String): DataFrame =
       get(member).getOrElse(Staged.table(spark, member))
+
+    /** The main member of every delta segment, in append order. A
+      * segment's other members are named `<segment><suffix>`. */
+    lazy val segments: Seq[String] = {
+      val seg = (java.util.regex.Pattern.quote(artifact) +
+        SegmentInfix + """(\d+)""").r
+      members.keys.toSeq.collect { case m @ seg(k) => k.toInt -> m }
+        .sortBy(_._1).map(_._2)
+    }
+
+    /** The members that are not part of any segment. */
+    def baseMembers: Map[String, String] = members.filter { case (m, _) =>
+      !segments.exists(s => m == s || m.startsWith(s + "_"))
+    }
   }
 
   /** The artifact (and pointer) committed under `artifact`, if any. */
@@ -155,6 +177,62 @@ object Staged {
     new Snapshot(spark, artifact, g.n, members)
   }
 
+  /** Segment `k` (1-based, in append order) of `artifact`: its main
+    * member's name. */
+  def segment(artifact: String, k: Int): String =
+    s"$artifact$SegmentInfix$k"
+
+  /** The ONE delta append. `payload` derives the batch's rows from the
+    * resolved snapshot (its frozen models); ONE aggregate then counts
+    * the batch's rows and its `key`s already in the base or in a live
+    * segment (a left-semi scan of the key column against the broadcast
+    * batch keys), and a non-empty disjoint batch lands as ONE new
+    * segment: `write` receives the generation, the segment's suffix and
+    * the rows, and the flip names every base member, every earlier
+    * segment and the new one. An empty batch writes nothing. A crash
+    * before the flip serves the earlier segments; a retry lands the
+    * batch once. `face` names the append in its messages. */
+  def append(spark: SparkSession, artifact: String, path: String,
+      face: String, key: String)(payload: Snapshot => DataFrame)(
+      write: (Generation, String, DataFrame) => Unit): Unit = {
+    val snap = resolve(spark, artifact)
+    require(snap.has(artifact),
+      s"$face: no base index $artifact — build it first")
+    val rows = payload(snap)
+    val keys = broadcast(rows.select(col(key)))
+    def clashes(member: String, side: Int): DataFrame =
+      snap.table(member).select(col(key)).join(keys, Seq(key), "left_semi")
+        .select(lit(side).as("side"))
+    def of(side: Int) = count(when(col("side") === side, lit(1)))
+    val fence = (clashes(artifact, 0) +: snap.segments.map(clashes(_, 1)) :+
+        rows.select(lit(2).as("side")))
+      .reduce(_.unionByName(_)).agg(of(0), of(1), of(2)).head()
+    require(fence.getLong(0) == 0L,
+      s"$face($artifact): ${fence.getLong(0)} rows of already-indexed " +
+        s"${key}s in the delta batch — a delta holds only NEW rows " +
+        "(re-ingests go through a rebuild or the merge cadence)")
+    require(fence.getLong(1) == 0L,
+      s"$face($artifact): ${fence.getLong(1)} rows of ${key}s already in " +
+        "the live delta — batches must be disjoint")
+    if (fence.getLong(2) > 0L) {
+      val suffix = segment("", snap.segments.size + 1)
+      commit(spark, artifact, path, keep = snap.members)(
+        write(_, suffix, rows))
+    }
+  }
+
+  /** The ONE merge: `write` folds base ∪ every segment of the snapshot
+    * into new base members, and ONE flip publishes them with the kept
+    * base members and no segment. A crash before the flip serves base ∪
+    * segments unchanged; with no segment this is a no-op. */
+  def merge(spark: SparkSession, artifact: String, path: String)(
+      write: (Generation, Snapshot) => Unit): Unit = {
+    val snap = resolve(spark, artifact)
+    if (snap.segments.nonEmpty)
+      commit(spark, artifact, path, keep = snap.baseMembers)(
+        write(_, snap))
+  }
+
   /** Drop an artifact: its pointer (or whatever table holds the name)
     * and every generation table it owns, data included. */
   def drop(spark: SparkSession, artifact: String): Unit = {
@@ -207,11 +285,12 @@ object Staged {
   private def sweep(spark: SparkSession, artifact: String,
       members: Map[String, String]): Unit = {
     val live = members.values.toSet
-    generationTables(spark, artifact).foreach { case (t, m, _) =>
+    generationTables(spark, artifact).filterNot(t => live(t._1))
+        .foreach { case (t, m, _) =>
       val elsewhere = candidates(m).filter(_ != artifact)
         .flatMap(snapshot(spark, _)).exists(o =>
           o.artifact.length > artifact.length || o.members.values.exists(_ == t))
-      if (!live(t) && !elsewhere) {
+      if (!elsewhere) {
         val loc = spark.sessionState.catalog
           .getTableMetadata(TableIdentifier(t)).location
         spark.sql(s"DROP TABLE IF EXISTS `$t`")

@@ -713,82 +713,30 @@ object Streaming {
   }
 
   /** LIVE index ingest — the write-side streaming dual of the delta
-    * family (r23, closing the loop the r17 verdict #1 opened): each
-    * arriving micro-batch of documents APPENDS to the serving postings
-    * index as a delta generation
-    * ([[graft.text.TextOps.appendTextIndexDelta]] verbatim — the batch
-    * append IS the micro-batch append: a doc's postings are a pure
-    * function of its own row, so per-batch semantics are exact), and
-    * queries running concurrently through
-    * [[graft.text.TextOps.searchIndexDelta]] see base ∪ everything
-    * ingested so far — result-identical to a full rebuild over the
-    * corpus-to-date (the spec replays a split corpus batch-by-batch
-    * and pins the converged search ≡ the ad-hoc BM25 over everything).
-    * Tokenize cost per batch ∝ the batch; the delta REWRITE cost grows
-    * with the accumulated delta until [[graft.text.TextOps
-    * .mergeTextIndex]] compacts it — the merge cadence bounds it, and
-    * `textIndexDeltaAudit` is the number an operator schedules the
-    * merge on. The doc-disjointness fences hold per batch (a
-    * re-crawled doc raises, never double-serves). */
-  def runTextIndexDeltaIngest(spark: SparkSession, docStream: DataFrame,
-      tableName: String, path: String)
+    * families (r23/r24, closing the loop the r17 verdict #1 opened):
+    * `append` lands each arriving micro-batch as ONE new segment of the
+    * serving index — a family's append verbatim
+    * ([[graft.text.TextOps.appendTextIndexDelta]],
+    * [[graft.text.TextOps.appendDocVectorIndexDelta]],
+    * [[graft.similarity.Knn.appendIvfIndexDelta]] over
+    * [[graft.similarity.Knn.embOf]]; the batch append IS the
+    * micro-batch append: an index row is a pure function of its own
+    * input row and the frozen models, so per-batch semantics are
+    * exact). Concurrent probes through the `*Delta` faces see base ∪
+    * everything ingested so far — result-identical to a rebuild over
+    * the corpus-to-date with the frozen models (the spec replays split
+    * corpora batch-by-batch and pins the converged probes). A trigger
+    * writes only its own batch and never rewrites an earlier segment;
+    * an empty trigger writes nothing (the append skips it). Probe width
+    * grows with the live segments until a merge compacts them — the
+    * family's delta audit (`delta_share_milli`) is the number an
+    * operator schedules the merge on. The disjointness fences hold per
+    * batch (a re-crawled row raises, never double-serves). */
+  def runDeltaIngest(stream: DataFrame)(append: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val b = batch.toDF().localCheckpoint(true)
-        // an empty trigger must not rewrite the delta generation
-        if (b.limit(1).count() > 0L)
-          graft.text.TextOps.appendTextIndexDelta(b, tableName, path)
-      }
-    docStream.writeStream.foreachBatch(perBatch).start()
-  }
-
-  /** [[runTextIndexDeltaIngest]] for the DOC-VECTOR index (r24): each
-    * arriving micro-batch is vectorized against the FROZEN base
-    * vocabulary and appended as the delta generation
-    * ([[graft.text.TextOps.appendDocVectorIndexDelta]] verbatim — a
-    * doc's vector is a pure function of its own row and the frozen
-    * vocab, so per-batch semantics are exact); concurrent
-    * more-like-this probes ([[graft.text.TextOps
-    * .docSimilarPersistedDelta]]) see base ∪ everything ingested so
-    * far under the frozen-vocab serving semantic.
-    * `docVectorDeltaAudit` is the merge-scheduling + OOV number an
-    * operator watches while this runs. */
-  def runDocVectorDeltaIngest(spark: SparkSession, docStream: DataFrame,
-      tableName: String, path: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val b = batch.toDF().localCheckpoint(true)
-        if (b.limit(1).count() > 0L)
-          graft.text.TextOps.appendDocVectorIndexDelta(b, tableName, path)
-      }
-    docStream.writeStream.foreachBatch(perBatch).start()
-  }
-
-  /** [[runTextIndexDeltaIngest]] for the float IVF index (r24, the
-    * ANN-delta write side): each arriving micro-batch of vectors is
-    * assigned to the FROZEN centroids of the live index
-    * ([[graft.similarity.Knn.appendIvfIndexDelta]] verbatim — the
-    * alignment fence runs per batch, so a centroid/index generation
-    * mismatch raises instead of landing orphan lists) and appended as
-    * the delta generation; concurrent probes
-    * ([[graft.similarity.Knn.searchIvfIndexDelta]]) see base ∪
-    * everything ingested so far. The raw (vec_id, label, embedding)
-    * stream normalizes through [[graft.similarity.Knn.embOf]] — one
-    * definition with the batch reader. */
-  def runIvfIndexDeltaIngest(spark: SparkSession, vecStream: DataFrame,
-      tableName: String, path: String, centroidsTable: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val b = graft.similarity.Knn.embOf(batch.toDF())
-          .localCheckpoint(true)
-        if (b.limit(1).count() > 0L)
-          graft.similarity.Knn.appendIvfIndexDelta(b, tableName, path,
-            graft.sources.Staged.table(spark, centroidsTable))
-      }
-    vecStream.writeStream.foreachBatch(perBatch).start()
+      (batch, _) => append(batch.toDF())
+    stream.writeStream.foreachBatch(perBatch).start()
   }
 
   /** LIVE passage-granular hybrid retrieval — the streaming dual of

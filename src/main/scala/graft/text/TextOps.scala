@@ -2261,96 +2261,59 @@ object TextOps {
   private val StatsCols = Seq("n_docs", "sum_dl", "n_docs_tok").map(col)
 
   /** Append a crawl delta to a persisted postings index: tokenize ONLY
-    * the delta docs into the artifact's `_delta` postings member and its
-    * one-row `_delta_stats` member, leaving the base members untouched.
-    * [[searchIndexDelta]] probes base ∪ delta with closed-form merged
+    * the delta docs into ONE new segment — bucketed postings plus a
+    * one-row stats member — leaving the base and every earlier segment
+    * untouched ([[graft.sources.Staged.append]]).
+    * [[searchIndexDelta]] probes base ∪ segments with closed-form merged
     * statistics — tf, dl, df, n_docs, sum_dl, n_docs_tok are all
     * ADDITIVE integers over disjoint doc sets, and BM25 derives idf at
     * PROBE time from the merged df — so the probe result is EXACTLY the
     * full-rebuild result (text_search_bm25's oracle shared verbatim;
-    * DeltaIndexSpec pins probe-over-(base ∪ delta) ≡
-    * probe-over-full-rebuild row-for-row). A repeat append extends the
-    * same delta (old delta ∪ new batch, a delta-sized rewrite — never a
-    * corpus-sized one); a token-less batch lands its stats with no
-    * postings.
-    *
-    * The delta is a member of the artifact: the append flips the
-    * pointer to the base members plus the new delta pair in ONE commit,
-    * a rebuild or [[mergeTextIndex]] flips to a map with no delta, so
-    * a delta can never double-serve rows a rebuild already absorbed,
-    * and a crash before the flip leaves the previous delta serving (a
-    * retry of the batch lands it exactly once).
+    * DeltaIndexSpec pins probe-over-(base ∪ segments) ≡
+    * probe-over-full-rebuild row-for-row). A token-less batch lands its
+    * stats with no postings; an empty batch lands nothing.
     *
     * Disjointness fence (the momentGuard posture — the "only NEW docs"
     * contract is enforced in-plan, not documented): the batch's doc_ids
-    * must not exist in the base index or the live delta. The base check
-    * is one doc_id-column scan of the bucketed index with the new ids
-    * broadcast — crawl-delta cadence, never query cadence. Bound: the
-    * fence sees TOKENIZED docs; a re-crawled zero-token doc has no
-    * posting row and can only perturb n_docs by its duplicate count. */
+    * must not exist in the base index or a live segment — one doc_id
+    * column scan of the bucketed postings with the new ids broadcast,
+    * at crawl-delta cadence, never query cadence. Bound: the fence sees
+    * TOKENIZED docs; a re-crawled zero-token doc has no posting row and
+    * can only perturb n_docs by its duplicate count. */
   def appendTextIndexDelta(dNew: DataFrame, tableName: String,
-      path: String, buckets: Int = 8): Unit = {
-    val spark = dNew.sparkSession
-    val snap = graft.sources.Staged.resolve(spark, tableName)
-    require(snap.has(tableName),
-      s"appendTextIndexDelta: no base index $tableName — build it with " +
-        "writeTextIndex first")
-    // one tokenize pass over the DELTA only — the whole point
-    val withDl = docLengths(dNew).localCheckpoint(true)
-    val newIds = withDl.select(col("doc_id")).distinct()
-    val clashBase = snap.table(tableName)
-      .join(broadcast(newIds), Seq("doc_id"), "left_semi").count()
-    require(clashBase == 0L,
-      s"appendTextIndexDelta($tableName): $clashBase postings of " +
-        "already-indexed doc_ids in the delta batch — a delta holds " +
-        "only NEW docs (re-crawls go through purge + rebuild or the " +
-        "merge cadence)")
-    val old = textDelta(snap, tableName)
-    old.foreach { case (op, _) =>
-      val clashDelta = op.join(broadcast(newIds), Seq("doc_id"),
-        "left_semi").count()
-      require(clashDelta == 0L,
-        s"appendTextIndexDelta($tableName): $clashDelta postings of " +
-          "doc_ids already in the live delta — batches must be disjoint")
+      path: String, buckets: Int = 8): Unit =
+    graft.sources.Staged.append(dNew.sparkSession, tableName, path,
+        "appendTextIndexDelta", "doc_id") { _ =>
+      // one tokenize pass over the DELTA only — the whole point
+      docLengths(dNew).localCheckpoint(true)
+    } { (g, segment, withDl) =>
+      g.save(s"${segment}_stats", indexStatsOf(withDl))
+      g.write(segment)(writePostings(postingRowsOf(withDl), _, _, buckets))
     }
-    val newPost = postingRowsOf(withDl)
-    val newStats = indexStatsOf(withDl)
-    graft.sources.Staged.commit(spark, tableName, path, keep = snap.members
-        -- Seq(s"${tableName}_delta", s"${tableName}_delta_stats")) { g =>
-      g.save("_delta_stats", sumStats(old.map(_._2.select(StatsCols: _*)
-        .unionByName(newStats)).getOrElse(newStats)))
-      g.write("_delta")(writePostings(old.map(_._1.select(PostingCols: _*)
-        .unionByName(newPost)).getOrElse(newPost), _, _, buckets))
-    }
-  }
 
-  /** The delta (postings, one-row stats) members of a snapshot. */
-  private def textDelta(snap: graft.sources.Staged.Snapshot,
-      tableName: String): Option[(DataFrame, DataFrame)] =
-    for {
-      p <- snap.get(s"${tableName}_delta")
-      s <- snap.get(s"${tableName}_delta_stats")
-    } yield (p, s)
+  /** The one-row stats member of every segment of a snapshot. */
+  private def segmentStats(
+      snap: graft.sources.Staged.Snapshot): Seq[DataFrame] =
+    snap.segments.map(s => snap.table(s"${s}_stats").select(StatsCols: _*))
 
-  /** Base ∪ live-delta postings + closed-form merged stats (n_docs,
-    * sum_dl, n_docs_tok — all additive integers over disjoint doc
-    * sets), all members from ONE pointer read — the ONE delta
+  /** Base ∪ every segment's postings + closed-form merged stats
+    * (n_docs, sum_dl, n_docs_tok — all additive integers over disjoint
+    * doc sets), all members from ONE pointer read — the ONE delta
     * resolution shared by every delta probe face ([[searchIndexDelta]],
-    * [[searchIndexDeltaTerms]], the PRF delta chain), so no face can
-    * drift in how it merges generations. With no delta this is the
-    * plain (postings, stats) pair. */
+    * [[searchIndexDeltaTerms]], the PRF delta chain) and the merge, so
+    * no face can drift in how it merges generations. With no segment
+    * this is the plain (postings, stats) pair. */
   private[graft] def indexWithDelta(spark: SparkSession,
+      tableName: String): (DataFrame, DataFrame) =
+    withSegments(graft.sources.Staged.resolve(spark, tableName), tableName)
+
+  private def withSegments(snap: graft.sources.Staged.Snapshot,
       tableName: String): (DataFrame, DataFrame) = {
-    val snap = graft.sources.Staged.resolve(spark, tableName)
-    val base = snap.table(tableName).select(PostingCols: _*)
-    val baseStats = snap.table(s"${tableName}_stats")
-      .select(StatsCols: _*)
-    textDelta(snap, tableName) match {
-      case Some((dp, dstats)) =>
-        (base.unionByName(dp.select(PostingCols: _*)),
-          sumStats(baseStats.unionByName(dstats.select(StatsCols: _*))))
-      case None => (base, baseStats)
-    }
+    val baseStats = snap.table(s"${tableName}_stats").select(StatsCols: _*)
+    (snap.segments.foldLeft(snap.table(tableName).select(PostingCols: _*))(
+        (p, s) => p.unionByName(snap.table(s).select(PostingCols: _*))),
+      if (snap.segments.isEmpty) baseStats
+      else sumStats((baseStats +: segmentStats(snap)).reduce(_.unionByName(_))))
   }
 
   /** The ONE persisted-probe scoring core over explicit (postings,
@@ -2405,8 +2368,9 @@ object TextOps {
     val base = snap.table(s"${tableName}_stats")
       .select(col("n_docs").as("n_docs_base"),
         col("sum_dl").as("sum_dl_base"))
-    val withDelta = textDelta(snap, tableName) match {
-      case Some((_, dstats)) =>
+    val withDelta = segmentStats(snap).reduceOption(_.unionByName(_))
+        .map(sumStats) match {
+      case Some(dstats) =>
         base.crossJoin(dstats.select(col("n_docs").as("n_docs_delta"),
           col("sum_dl").as("sum_dl_delta")))
       case None =>
@@ -2421,25 +2385,20 @@ object TextOps {
               ELSE 0 END""").as("delta_share_milli"))
   }
 
-  /** Compact the live delta into the base index — pure index-ROW unions
+  /** Compact the segments into the base index — pure index-ROW unions
     * (the corpus is tokenized ZERO times; tokenize cost is only ever
     * paid once per doc, at its append). The merged postings and the
-    * merged stats are written as one generation and published by ONE
-    * pointer flip to a map with no delta: a crash mid-merge serves
-    * base ∪ delta unchanged and a rerun merges; with no delta the merge
-    * is a no-op (idempotent). */
+    * merged stats are one generation behind ONE pointer flip
+    * ([[graft.sources.Staged.merge]]): a crash mid-merge serves
+    * base ∪ segments unchanged and a rerun merges; with no segment the
+    * merge is a no-op (idempotent). */
   def mergeTextIndex(spark: SparkSession, tableName: String,
-      path: String, buckets: Int = 8): Unit = {
-    val snap = graft.sources.Staged.resolve(spark, tableName)
-    textDelta(snap, tableName).foreach { case (dp, dstats) =>
-      graft.sources.Staged.commit(spark, tableName, path) { g =>
-        g.save("_stats", sumStats(snap.table(s"${tableName}_stats")
-          .select(StatsCols: _*).unionByName(dstats.select(StatsCols: _*))))
-        g.write()(writePostings(snap.table(tableName).select(PostingCols: _*)
-          .unionByName(dp.select(PostingCols: _*)), _, _, buckets))
-      }
+      path: String, buckets: Int = 8): Unit =
+    graft.sources.Staged.merge(spark, tableName, path) { (g, snap) =>
+      val (postings, stats) = withSegments(snap, tableName)
+      g.save("_stats", stats)
+      g.write()(writePostings(postings, _, _, buckets))
     }
-  }
 
   /** STANDING-QUERY routing score — the scoring face a live router
     * needs: rank ARRIVING documents (not yet in any index) against a
@@ -2890,55 +2849,32 @@ object TextOps {
     * docs are vectorized against the FROZEN base vocabulary (the model
     * artifact — [[vectorizeAgainstVocab]], bit-identical to what a full
     * build stores for an equal doc whose terms are in-vocab) and land
-    * as the artifact's `_delta` member: one commit flips the pointer to
-    * the base members plus the new delta, a rebuild or a merge flips to
-    * a map with none.
+    * as ONE plain vector segment ([[graft.sources.Staged.append]]); a
+    * rebuild or a merge flips to a map with none.
     *
-    * Semantics contract (spec-pinned): probe-over-(base ∪ delta) ≡
+    * Semantics contract (spec-pinned): probe-over-(base ∪ segments) ≡
     * probe over a FULL REBUILD in which the vocabulary/df-band was
     * derived from the BASE corpus only — the frozen-vocab serving
     * semantic the streaming dual already has. A delta doc's
     * out-of-band novel terms join nothing until the next vocabulary
     * refresh (a full [[writeDocVectorIndex]] rebuild — that is the
     * vocab-refresh cadence; [[mergeDocVectorIndex]] compacts rows
-    * WITHOUT refreshing the vocab, zero tokenize passes). */
+    * WITHOUT refreshing the vocab, zero tokenize passes). The
+    * disjointness fence is one doc_id column scan (one row per doc). */
   def appendDocVectorIndexDelta(dNew: DataFrame, tableName: String,
-      path: String): Unit = {
-    val spark = dNew.sparkSession
-    val snap = graft.sources.Staged.resolve(spark, tableName)
-    require(snap.has(tableName),
-      s"appendDocVectorIndexDelta: no base index $tableName — build it " +
-        "with writeDocVectorIndex first")
-    val vecs = vectorizeWith(dNew, snap.table(s"${tableName}_vocab"))
-      .localCheckpoint(true)
-    // disjointness fences (the momentGuard posture): one row per doc in
-    // the vector table, so the base check is one column scan
-    val newIds = vecs.select(col("doc_id")).distinct()
-    val clashBase = snap.table(tableName)
-      .join(broadcast(newIds), Seq("doc_id"), "left_semi").count()
-    require(clashBase == 0L,
-      s"appendDocVectorIndexDelta($tableName): $clashBase vectors of " +
-        "already-indexed doc_ids in the delta batch — a delta holds " +
-        "only NEW docs")
-    val old = docVectorDelta(snap, tableName)
-    old.foreach { op =>
-      val clashDelta = op.join(broadcast(newIds), Seq("doc_id"),
-        "left_semi").count()
-      require(clashDelta == 0L,
-        s"appendDocVectorIndexDelta($tableName): $clashDelta vectors " +
-          "of doc_ids already in the live delta — batches must be " +
-          "disjoint")
-    }
-    graft.sources.Staged.commit(spark, tableName, path,
-        keep = snap.members - s"${tableName}_delta")(
-      _.save("_delta", old.map(_.unionByName(vecs)).getOrElse(vecs)))
-  }
+      path: String): Unit =
+    graft.sources.Staged.append(dNew.sparkSession, tableName, path,
+        "appendDocVectorIndexDelta", "doc_id") { snap =>
+      vectorizeWith(dNew, snap.table(s"${tableName}_vocab"))
+        .localCheckpoint(true)
+    } { (g, segment, vecs) => g.save(segment, vecs) }
 
-  /** The doc-vector delta member (doc_id, lang, n2, ks, ws) of a
-    * snapshot. */
-  private def docVectorDelta(snap: graft.sources.Staged.Snapshot,
-      tableName: String): Option[DataFrame] =
-    snap.get(s"${tableName}_delta").map(_.select(VectorCols: _*))
+  /** Base ∪ every segment of a doc-vector snapshot, (doc_id, lang, n2,
+    * ks, ws). */
+  private def vectorsWithSegments(snap: graft.sources.Staged.Snapshot,
+      tableName: String): DataFrame =
+    snap.segments.foldLeft(snap.table(tableName).select(VectorCols: _*))(
+      (v, s) => v.unionByName(snap.table(s).select(VectorCols: _*)))
 
   /** Generation + OOV accounting for the doc-vector delta family (r24,
     * r18 verdict #3 — the text_index_delta_audit sibling; closes the
@@ -2969,7 +2905,7 @@ object TextOps {
     val snap = graft.sources.Staged.resolve(spark, tableName)
     val nBase = snap.table(tableName)
       .agg(count(lit(1)).as("n_vecs_base"))
-    val nDelta = docVectorDelta(snap, tableName)
+    val nDelta = snap.segments.map(snap.table).reduceOption(_.unionByName(_))
       .map(_.agg(count(lit(1)).as("n_vecs_delta")))
       .getOrElse(spark.range(1).select(lit(0L).as("n_vecs_delta")))
     val vocab = snap.table(s"${tableName}_vocab")
@@ -3002,35 +2938,27 @@ object TextOps {
                 ELSE 0 END""").as("oov_milli"))
   }
 
-  /** More-like-this over base ∪ delta — [[docSimilarPersisted]] with
-    * the corpus extended by the delta member, every member from one
-    * pointer read. With no delta this IS the persisted probe. */
+  /** More-like-this over base ∪ segments — [[docSimilarPersisted]]
+    * with the corpus extended by every segment, every member from one
+    * pointer read. With no segment this IS the persisted probe. */
   def docSimilarPersistedDelta(spark: SparkSession, d: DataFrame,
       vecTable: String, vocabTable: String, queryPred: Column,
       tau: Double = 0.9): DataFrame = {
     val snap = graft.sources.Staged.resolve(spark, vecTable)
-    val base = snap.table(vecTable).select(VectorCols: _*)
-    val corpus = docVectorDelta(snap, vecTable)
-      .map(base.unionByName(_)).getOrElse(base)
-    docSimilarOn(corpus, d, snap.table(vocabTable), queryPred, tau)
+    docSimilarOn(vectorsWithSegments(snap, vecTable), d,
+      snap.table(vocabTable), queryPred, tau)
   }
 
-  /** Compact the delta vectors into the base table — one index-ROW
-    * union, ZERO tokenize passes, ONE commit whose pointer names the new
-    * base, the kept vocab and no delta (a crash before the flip serves
-    * base ∪ delta unchanged; with no delta this is a no-op). The frozen
+  /** Compact the segments into the base vectors
+    * ([[graft.sources.Staged.merge]]) — one index-ROW union, ZERO
+    * tokenize passes; the kept vocab serves the new base. The frozen
     * vocabulary is NOT refreshed here — vocab refresh is the
     * full-rebuild cadence ([[writeDocVectorIndex]]), by design. */
   def mergeDocVectorIndex(spark: SparkSession, tableName: String,
-      path: String): Unit = {
-    val snap = graft.sources.Staged.resolve(spark, tableName)
-    docVectorDelta(snap, tableName).foreach { dp =>
-      graft.sources.Staged.commit(spark, tableName, path,
-          keep = snap.members -- Seq(tableName, s"${tableName}_delta"))(
-        _.save("", snap.table(tableName).select(VectorCols: _*)
-          .unionByName(dp)))
+      path: String): Unit =
+    graft.sources.Staged.merge(spark, tableName, path) { (g, snap) =>
+      g.save("", vectorsWithSegments(snap, tableName))
     }
-  }
 
   /** The 100 TB path for [[docSimilar]], with a PROVABLY IDENTICAL
     * result — prefix filtering (the AllPairs/PPJoin bound, Bayardo,

@@ -203,36 +203,6 @@ class ApiSpec extends SparkSpec {
     assert(deduped.count() == entries.count())
   }
 
-  /** Jobs started while `body` runs, seen by a SparkListener. Listener
-    * events arrive asynchronously but in order, so a tagged sentinel job
-    * before and after `body` brackets exactly its jobs. */
-  private def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    def sentinel(tag: String): Unit = {
-      sc.setJobDescription(tag)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sentinel("jobsDuring:start")
-      body
-      sentinel("jobsDuring:end")
-      val order = Iterator.continually(
-          seen.poll(30, java.util.concurrent.TimeUnit.SECONDS))
-        .map(d => if (d == null) fail("listener bus never delivered") else d)
-        .takeWhile(_ != "jobsDuring:end").toList
-      order.length - order.indexOf("jobsDuring:start") - 1
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** The physical plan and its scan node's (untruncated) fields, exprIds
     * stripped (two reads of one path resolve to different attribute ids). */
   private def planFields(df: org.apache.spark.sql.DataFrame) = {
@@ -293,7 +263,8 @@ class ApiSpec extends SparkSpec {
     ).foreach { case (path, query) =>
       ParquetSource.read(spark, path)
       var again: org.apache.spark.sql.DataFrame = null
-      assert(jobsDuring { again = ParquetSource.read(spark, path); again.schema } == 0,
+      assert(JobCount.during(spark) {
+        again = ParquetSource.read(spark, path); again.schema } == 0,
         s"repeat read of $path launched a job")
       val plain = spark.read.parquet(path)
       assert(again.schema == plain.schema, path)
@@ -552,6 +523,27 @@ class ApiSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"DROP TABLE / RENAME TO / a __g generation name outside " +
         s"graft.sources.Staged: ${offenders.mkString(", ")}")
+  }
+
+  test("delta segment names in src/main live in graft.sources.Staged") {
+    import java.nio.file.{Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), root.toAbsolutePath.toString)
+    // a delta is a list of segments that Staged names, appends and
+    // merges; a family that spells a delta member (`"_delta"`,
+    // `"_delta_stats"`, `s"${t}_delta"`) bypasses that protocol. Audit
+    // column names (`n_docs_delta`) are not member names: the pattern
+    // only hits a literal that STARTS with the suffix
+    val member = """("|\})_delta""".r
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        !p.endsWith(Paths.get("graft/sources/Staged.scala")))
+      .filter((p: Path) => member.findFirstIn(Files.readString(p)).isDefined)
+      .map(root.relativize(_).toString).toList
+    assert(offenders.isEmpty,
+      s"delta member names outside graft.sources.Staged: " +
+        offenders.mkString(", "))
   }
 
   test("extensions expose native kernels to SQL") {

@@ -7,20 +7,25 @@ import graft.text.TextOps
 import graft.sources.Staged
 
 /** Delta-merge index maintenance (r17 verdict #1): a crawl delta
-  * appends its own generation instead of paying a full-corpus rebuild.
+  * appends one immutable segment instead of paying a full-corpus
+  * rebuild ([[graft.sources.Staged.append]]).
   *
-  * Pins, per family (postings / doc-vector):
-  *  - probe over base ∪ delta ≡ probe over a FULL rebuild (the
-  *    transparent-hop contract the shared oracle rides) — for postings
-  *    exactly (all stats additive, idf derived at probe time); for
-  *    vectors under the frozen-vocab contract (vocab from base);
-  *  - repeat appends extend the delta and stay exact;
-  *  - mergeTextIndex / mergeDocVectorIndex compact index ROWS (zero
-  *    tokenize passes), drop the delta, keep the probe row-identical,
-  *    and re-running the merge is a no-op (idempotent);
-  *  - the doc-disjointness fences fire by name on a re-crawled doc;
-  *  - a full rebuild STALES a live delta (generation marker) — probes
-  *    ignore it and the next append replaces it.
+  * Pins, per family (postings / doc-vector / float, int8 and PQ IVF):
+  *  - append k writes ONE segment holding exactly batch k and leaves
+  *    every earlier segment's physical table untouched; an empty batch
+  *    writes none; a crash before the flip serves the earlier segments
+  *    and the retry lands the batch once;
+  *  - probe over base ∪ segments ≡ probe over a rebuild with the frozen
+  *    models (the transparent-hop contract the shared oracle rides) —
+  *    for postings exactly (all stats additive, idf derived at probe
+  *    time); for vectors under the frozen-vocab contract (vocab from
+  *    base);
+  *  - the merges compact index ROWS (zero tokenize passes), fold every
+  *    segment, keep the probe row-identical, and re-running the merge
+  *    is a no-op (idempotent);
+  *  - the disjointness fences fire by name on a re-ingested row;
+  *  - a full rebuild STALES every live segment — probes ignore it and
+  *    the audits report zero delta mass.
   */
 class DeltaIndexSpec extends SparkSpec {
 
@@ -45,9 +50,9 @@ class DeltaIndexSpec extends SparkSpec {
   private def dropAll(tbl: String): Unit =
     graft.sources.Staged.drop(spark, tbl)
 
-  /** True while the artifact's pointer names a delta member. */
+  /** True while the artifact's pointer names a delta segment. */
   private def hasDelta(tbl: String): Boolean =
-    graft.sources.Staged.resolve(spark, tbl).has(s"${tbl}_delta")
+    graft.sources.Staged.resolve(spark, tbl).segments.nonEmpty
 
   test("postings delta: probe over base ∪ delta ≡ full rebuild ≡ ad-hoc bm25; merge keeps it; merge is idempotent") {
     val tbl = "dlt_text_a"
@@ -69,8 +74,8 @@ class DeltaIndexSpec extends SparkSpec {
     // delta gone
     TextOps.mergeTextIndex(spark, tbl, path)
     assert(!hasDelta(tbl))
-    assert(!graft.sources.Staged.resolve(spark, tbl)
-      .has(s"${tbl}_delta_stats"))
+    assert(graft.sources.Staged.resolve(spark, tbl).members.keySet ==
+      Set(tbl, s"${tbl}_stats"))
     assert(rows(TextOps.searchIndex(spark, tbl, Terms)) == want)
     assert(rows(TextOps.searchIndexDelta(spark, tbl, Terms)) == want)
     // idempotent: a second merge is a no-op
@@ -143,8 +148,8 @@ class DeltaIndexSpec extends SparkSpec {
     delta.repartition(3).write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(delta.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
-    val q = graft.streaming.Streaming.runTextIndexDeltaIngest(spark,
-      stream, tbl, path)
+    val q = graft.streaming.Streaming.runDeltaIngest(stream)(
+      TextOps.appendTextIndexDelta(_, tbl, path))
     q.processAllAvailable(); q.stop()
     assert(rows(TextOps.searchIndexDelta(spark, tbl, Terms)) ==
       rows(TextOps.bm25Search(docs, Terms)),
@@ -184,7 +189,7 @@ class DeltaIndexSpec extends SparkSpec {
       "merge rerun lost or double-merged the delta")
     // crash an append after its stats member, before its postings: the
     // previous delta (none here, then d2) keeps serving
-    CrashBefore(spark, s"${tbl}_delta")(
+    CrashBefore(spark, Staged.segment(tbl, 1))(
       TextOps.appendTextIndexDelta(d2, tbl, path))
     assert(!hasDelta(tbl))
     assert(rows(TextOps.searchIndexDelta(spark, tbl, Terms)) == wantHalf,
@@ -208,9 +213,9 @@ class DeltaIndexSpec extends SparkSpec {
     TextOps.appendTextIndexDelta(d1, tbl, path)
     val live = graft.sources.Staged.snapshot(spark, tbl).get
     // crash append(d2) after its stats member is written: the live
-    // delta (d1) is untouched and an orphan stats generation sits next
+    // segment (d1) is untouched and an orphan stats generation sits next
     // to it
-    CrashBefore(spark, s"${tbl}_delta")(
+    CrashBefore(spark, Staged.segment(tbl, 2))(
       TextOps.appendTextIndexDelta(d2, tbl, path))
     assert(graft.sources.Staged.snapshot(spark, tbl).get.members ==
       live.members)
@@ -293,8 +298,8 @@ class DeltaIndexSpec extends SparkSpec {
     import graft.text.Chunks
     val tbl = "dlt_chunk_a"
     val path = freshDir("ca")
-    Seq(tbl, s"${tbl}_stats", s"${tbl}_delta", s"${tbl}_vocab",
-      s"${tbl}_post", s"${tbl}_post_stats", s"${tbl}_post_delta")
+    Seq(tbl, s"${tbl}_stats", s"${tbl}_vocab", s"${tbl}_post",
+      s"${tbl}_post_stats")
       .foreach(t => graft.sources.Staged.drop(spark, t))
     val cdBase = Chunks.chunkDocs(base).localCheckpoint(true)
     val cdDelta = Chunks.chunkDocs(delta).localCheckpoint(true)
@@ -311,8 +316,7 @@ class DeltaIndexSpec extends SparkSpec {
     // (b) the serve pair with NO delta appended ≡ the plain serve face
     val vt = "dlt_chunk_v"
     val vpath = freshDir("cv")
-    Seq(vt, s"${vt}_vocab", s"${vt}_delta", s"${vt}_post",
-      s"${vt}_post_stats", s"${vt}_post_delta")
+    Seq(vt, s"${vt}_vocab", s"${vt}_post", s"${vt}_post_stats")
       .foreach(t => graft.sources.Staged.drop(spark, t))
     val cdAll = Chunks.chunkDocs(docs).localCheckpoint(true)
     TextOps.writeDocVectorIndex(cdAll, vt, vpath)
@@ -345,7 +349,7 @@ class DeltaIndexSpec extends SparkSpec {
     assert(a.getAs[Long]("n_vecs_base") == spark.table(tbl).count(),
       a.toString)
     assert(a.getAs[Long]("n_vecs_delta") ==
-      graft.sources.Staged.table(spark, s"${tbl}_delta").count(), a.toString)
+      Staged.table(spark, Staged.segment(tbl, 1)).count(), a.toString)
     assert(a.getAs[Long]("n_docs_delta") == deltaP.count(), a.toString)
     // the planted doc: counted in the batch, not vectorized, its 3
     // tokens in the OOV mass
@@ -420,12 +424,36 @@ class DeltaIndexSpec extends SparkSpec {
     val path = freshDir("ip")
     dropAll(tbl)
     val centroids = Knn.writeIvfIndex(embBase, tbl, path, nlist = 8)
-    Knn.appendIvfIndexDelta(embDelta, tbl, path, centroids)
-    val plan = Knn.searchIvfIndexDelta(spark, tbl, centroids,
+    Seq(0, 1).foreach(i => Knn.appendIvfIndexDelta(
+      embDelta.filter(col("vec_id") % 2 === i), tbl, path, centroids))
+    def executed = Knn.searchIvfIndexDelta(spark, tbl, centroids,
         emb.filter(col("vec_id") < 5), k = 10, nprobe = 2)
-      .queryExecution.executedPlan.toString
+      .queryExecution.executedPlan
+    val plan = executed.toString
     assert(!plan.contains("CartesianProduct") &&
       !plan.contains("BroadcastNestedLoop"), plan)
+    // the base and each segment are bucketed c_id scans joined with no
+    // Exchange on their side (broadcast off, as at scale, where no
+    // index side is broadcastable)
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val shuffled = try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      executed
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val initial = shuffled match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    val scans = initial.collect { case s: FileSourceScanExec => s }
+    assert(scans.size == 3 && scans.forall(_.bucketedScan), initial)
+    val indexSides = initial.collect { case j: BaseJoinExec => j.children }
+      .flatten.filter(_.collect { case s: FileSourceScanExec => s }.nonEmpty)
+    assert(indexSides.size == 3 && indexSides.forall(
+      _.collect { case e: Exchange => e }.isEmpty), initial)
   }
 
   test("IVF delta: disjointness and centroid-alignment fences fire by name; a full rebuild stales the delta") {
@@ -505,7 +533,7 @@ class DeltaIndexSpec extends SparkSpec {
     // PQ family: both frozen side tables, resolved by name
     val tp = "dlt_once_p"
     val pp = freshDir("op")
-    Seq(tp, s"${tp}_coarse", s"${tp}_codebook", s"${tp}_delta")
+    Seq(tp, s"${tp}_coarse", s"${tp}_codebook")
       .foreach(t => graft.sources.Staged.drop(spark, t))
     Knn.writeIvfPqIndex(embBase, tp, pp, nlist = 8)
     val sides = Seq(s"${tp}_coarse", s"${tp}_codebook")
@@ -552,7 +580,8 @@ class DeltaIndexSpec extends SparkSpec {
       append: (DataFrame, String, String) => Unit,
       appendStale: Option[(DataFrame, String, String) => Unit],
       search: (String, DataFrame, Int) => DataFrame,
-      searchDelta: (String, DataFrame, Int) => DataFrame)
+      searchDelta: (String, DataFrame, Int) => DataFrame,
+      coarse: String => DataFrame)
 
   private def centroidFaces(name: String,
       build: (DataFrame, String, String) => DataFrame,
@@ -565,7 +594,8 @@ class DeltaIndexSpec extends SparkSpec {
       Some((d, t, p) =>
         append(d, t, p, cents.withColumn("c_id", col("c_id") + 1L))),
       (t, q, np) => search(t, cents, q, np),
-      (t, q, np) => searchDelta(t, cents, q, np))
+      (t, q, np) => searchDelta(t, cents, q, np),
+      _ => cents)
   }
 
   private lazy val ivfFaces: Seq[IvfFaces] = {
@@ -585,7 +615,8 @@ class DeltaIndexSpec extends SparkSpec {
         (t, q, np) => Knn.searchIvfPq(spark, t,
           Staged.table(spark, s"${t}_coarse"),
           Staged.table(spark, s"${t}_codebook"), q, k = 10, np),
-        (t, q, np) => Knn.searchIvfPqDelta(spark, t, q, k = 10, np)))
+        (t, q, np) => Knn.searchIvfPqDelta(spark, t, q, k = 10, np),
+        t => Staged.table(spark, s"${t}_coarse")))
   }
 
   test("IVF delta contract, every codec (float, int8, PQ): fences fire by name; merge keeps every delta vector and is idempotent; a rebuild stales the delta") {
@@ -632,7 +663,7 @@ class DeltaIndexSpec extends SparkSpec {
       // the delta stores the build's own list columns, in its order
       val snap = Staged.resolve(spark, tbl)
       val buildSchema = snap.table(tbl).schema
-      assert(snap.table(s"${tbl}_delta").schema == buildSchema,
+      assert(snap.table(snap.segments.head).schema == buildSchema,
         s"${f.name}: delta schema differs from the build schema")
       assert(audit(tbl)._1 == deltaIds.size.toLong && audit(tbl)._2 > 0L,
         s"${f.name}: ${audit(tbl)}")
@@ -661,6 +692,200 @@ class DeltaIndexSpec extends SparkSpec {
     }
   }
 
+  /** One delta family's faces for the segment contract. `key` is the
+    * fence key; `expect` the rows segment k must hold for batch k (a
+    * rebuild of the batch alone under the frozen models, in the
+    * segment's columns); `segmentRows` reads a segment's rows (with its
+    * side members); `reference` the probe of a rebuild with the frozen
+    * models over a corpus — None where the merge is the only
+    * frozen-model rebuild (PQ); `audit` the family audit's (delta mass,
+    * delta_share_milli). */
+  private case class DeltaFace(name: String, key: String,
+      base: DataFrame, batches: Seq[DataFrame],
+      build: (DataFrame, String, String) => Unit,
+      append: (DataFrame, String, String) => Unit,
+      merge: (String, String) => Unit,
+      expect: (DataFrame, String) => Set[Seq[Any]],
+      segmentRows: (Staged.Snapshot, String) => Set[Seq[Any]],
+      probe: String => Set[Seq[Any]],
+      plain: String => Set[Seq[Any]],
+      reference: Option[(DataFrame, String) => Set[Seq[Any]]],
+      audit: String => (Long, Long))
+
+  /** The jobs of a second append, per face: the payload, ONE fence
+    * aggregate (its broadcast of the batch keys included) and the
+    * segment write — never a read of the first segment's payload. */
+  private val SecondAppendJobs = Map("postings" -> 9, "docvec" -> 8,
+    "float" -> 6, "int8" -> 6, "pq" -> 8)
+
+  private lazy val deltaFaces: Seq[DeltaFace] = {
+    import graft.similarity.Knn
+    import graft.functions.CentroidModel
+    def thirds(d: DataFrame, key: String) = (0 until 3).map(i =>
+      d.filter(col(key) % 3 === i).localCheckpoint(true))
+    val postingCols = Seq("term", "doc_id", "dl", "tf")
+    val statsCols = Seq("n_docs", "sum_dl", "n_docs_tok")
+    val vectorCols = Seq("doc_id", "lang", "n2", "ks", "ws")
+    val vecPred = substring(md5(concat_ws(":", col("doc_id").cast("string"),
+      lit("dlt"))), 1, 1) < "4"
+    def vocab(t: String) = s"${t}_vocab"
+    val postings = DeltaFace("postings", "doc_id", base,
+      thirds(delta, "doc_id"),
+      TextOps.writeTextIndex(_, _, _), TextOps.appendTextIndexDelta(_, _, _),
+      TextOps.mergeTextIndex(spark, _, _),
+      // a rebuild over the batch alone: the same postings and stats
+      (b, t) => {
+        val ref = s"ref_$t"
+        Staged.drop(spark, ref)
+        TextOps.writeTextIndex(b, ref, freshDir("ref"))
+        val snap = Staged.resolve(spark, ref)
+        rows(snap.table(ref).select(postingCols.map(col): _*)) ++
+          rows(snap.table(s"${ref}_stats").select(statsCols.map(col): _*))
+      },
+      (snap, seg) => rows(snap.table(seg).select(postingCols.map(col): _*)) ++
+        rows(snap.table(s"${seg}_stats").select(statsCols.map(col): _*)),
+      t => rows(TextOps.searchIndexDelta(spark, t, Terms)),
+      t => rows(TextOps.searchIndex(spark, t, Terms)),
+      Some((corpus, _) => rows(TextOps.bm25Search(corpus, Terms))),
+      t => {
+        val a = TextOps.textIndexDeltaAudit(spark, t).collect().head
+        (a.getAs[Long]("n_docs_delta"), a.getAs[Long]("delta_share_milli"))
+      })
+    val docvec = DeltaFace("docvec", "doc_id", base, thirds(delta, "doc_id"),
+      TextOps.writeDocVectorIndex(_, _, _),
+      TextOps.appendDocVectorIndexDelta(_, _, _),
+      TextOps.mergeDocVectorIndex(spark, _, _),
+      (b, t) => rows(TextOps.vectorizeAgainstVocab(spark, b, vocab(t))
+        .select(vectorCols.map(col): _*)),
+      (snap, seg) => rows(snap.table(seg).select(vectorCols.map(col): _*)),
+      t => rows(TextOps.docSimilarPersistedDelta(spark, docs, t, vocab(t),
+        vecPred, tau = 0.5)),
+      t => rows(TextOps.docSimilarPersisted(spark, docs, t, vocab(t),
+        vecPred, tau = 0.5)),
+      Some((corpus, t) => rows(TextOps.docSimilarPersistedOn(spark,
+        TextOps.vectorizeAgainstVocab(spark, corpus, vocab(t)), docs,
+        vocab(t), vecPred, tau = 0.5))),
+      t => {
+        val a = TextOps.docVectorDeltaAudit(spark, t, delta).collect().head
+        (a.getAs[Long]("n_vecs_delta"), a.getAs[Long]("delta_share_milli"))
+      })
+    // exhaustive IVF probes (nprobe = nlist) from base queries, so the
+    // brute reference over any corpus-to-date sees the same queries
+    val qIds = embBase.orderBy(col("vec_id")).limit(5)
+      .select("vec_id").collect().map(_.getLong(0)).toSeq
+    val qPred = col("vec_id").isin(qIds: _*)
+    val fenced = col("nrm") > 0.0 && col("nrm") < Double.PositiveInfinity
+    def assigned(b: DataFrame, f: IvfFaces, t: String) =
+      Knn.assignTo(b.filter(fenced), CentroidModel.of(f.coarse(t)))
+    val stored: Map[String, (DataFrame, String) => DataFrame] = Map(
+      "float" -> ((a, _) => a.select("vec_id", "v", "nrm", "c_id")),
+      "int8" -> ((a, _) =>
+        Knn.quantize(a).select("vec_id", "qv", "qnrm", "c_id")),
+      "pq" -> ((a, t) => a.select("vec_id", "c_id").join(
+        Knn.pqEncode(a, Staged.table(spark, s"${t}_codebook")), "vec_id")))
+    val brute: Map[String, DataFrame => DataFrame] = Map(
+      "float" -> (Knn.brute(_, qPred, k = 10)),
+      "int8" -> (Knn.bruteQuantized(_, qPred, k = 10)))
+    val ivf = ivfFaces.map { f =>
+      DeltaFace(f.name, "vec_id", embBase, thirds(embDelta, "vec_id"),
+        f.build, f.append, Knn.mergeIvfIndex(spark, _, _),
+        (b, t) => {
+          val want = stored(f.name)(assigned(b, f, t), t)
+          rows(want.select(want.columns.sorted.map(col): _*))
+        },
+        (snap, seg) => {
+          val got = snap.table(seg)
+          rows(got.select(got.columns.sorted.map(col): _*))
+        },
+        t => rows(f.searchDelta(t, emb.filter(qPred), 8)),
+        t => rows(f.search(t, emb.filter(qPred), 8)),
+        brute.get(f.name).map(b =>
+          (corpus: DataFrame, _: String) => rows(b(corpus))),
+        t => {
+          val a = Knn.ivfDeltaAudit(spark, t).collect().head
+          (a.getAs[Long]("n_vecs_delta"), a.getAs[Long]("delta_share_milli"))
+        })
+    }
+    Seq(postings, docvec) ++ ivf
+  }
+
+  test("delta segment contract, every family (postings, doc vectors, float, int8, PQ): one segment per append holding only its batch; probe ≡ frozen-model rebuild; crash, empty batch, merge and rebuild windows") {
+    deltaFaces.foreach { f =>
+      val tbl = s"dlt_seg_${f.name}"
+      val path = freshDir(s"s${f.name}")
+      dropAll(tbl)
+      def snap = Staged.resolve(spark, tbl)
+      def segs = snap.segments
+      def tag(msg: String) = s"${f.name}: $msg"
+      f.build(f.base, tbl, path)
+      // an empty batch writes no segment and flips nothing
+      val built = Staged.snapshot(spark, tbl).get
+      f.append(f.batches.head.limit(0), tbl, path)
+      assert(Staged.snapshot(spark, tbl).get.generation == built.generation,
+        tag("an empty batch committed"))
+      val physical = scala.collection.mutable.ArrayBuffer.empty[String]
+      f.batches.zipWithIndex.foreach { case (b, i) =>
+        val k = i + 1
+        val corpus = f.batches.take(k).foldLeft(f.base)(_.unionByName(_))
+        if (k == 2) {
+          val jobs = JobCount.during(spark)(f.append(b, tbl, path))
+          assert(jobs == SecondAppendJobs(f.name),
+            tag(s"second append ran $jobs jobs"))
+        } else if (k == 3) {
+          // a crash before segment k's flip serves the k - 1 segments
+          val before = snap.members
+          val pre = f.probe(tbl)
+          CrashBefore(spark, Staged.segment(tbl, k))(f.append(b, tbl, path))
+          assert(snap.members == before, tag("a crashed append flipped"))
+          assert(f.probe(tbl) == pre, tag("a crashed append served rows"))
+          f.append(b, tbl, path) // the retry lands the batch once
+        } else f.append(b, tbl, path)
+        assert(segs.size == k, tag(s"after append $k: ${snap.members}"))
+        assert(segs.take(k - 1).map(snap.members) == physical,
+          tag(s"append $k rewrote an earlier segment"))
+        physical += snap.members(segs.last)
+        assert(f.segmentRows(snap, segs.last) == f.expect(b, tbl),
+          tag(s"segment $k does not hold exactly batch $k"))
+        f.reference.foreach { ref =>
+          assert(f.probe(tbl) == ref(corpus, tbl),
+            tag(s"probe over $k segments differs from the rebuild"))
+        }
+      }
+      // fences name both clashes: a row of the base, a row of segment 1
+      def indexed(d: DataFrame, member: String) = d.join(
+        snap.table(member).select(f.key).limit(1), Seq(f.key), "left_semi")
+      val e1 = intercept[IllegalArgumentException] {
+        f.append(indexed(f.base, tbl), tbl, path)
+      }
+      assert(e1.getMessage.contains("already-indexed"), tag(e1.getMessage))
+      val e2 = intercept[IllegalArgumentException] {
+        f.append(indexed(f.batches.head, segs.head), tbl, path)
+      }
+      assert(e2.getMessage.contains("already in the live delta"),
+        tag(e2.getMessage))
+      assert(f.audit(tbl)._1 > 0L && f.audit(tbl)._2 > 0L,
+        tag(f.audit(tbl).toString))
+      // the merge folds every segment; a second merge is a no-op
+      val pre = f.probe(tbl)
+      f.merge(tbl, path)
+      assert(segs.isEmpty, tag(s"merge left ${snap.members}"))
+      assert(f.plain(tbl) == pre, tag("merge changed the probe"))
+      val merged = snap.generation
+      f.merge(tbl, path)
+      assert(snap.generation == merged && f.plain(tbl) == pre,
+        tag("merge is not idempotent"))
+      // a rebuild stales every segment: none served, zero audit mass
+      f.build(f.base, tbl, path)
+      f.batches.take(2).foreach(f.append(_, tbl, path))
+      assert(segs.size == 2, tag(snap.members.toString))
+      f.build(f.batches.foldLeft(f.base)(_.unionByName(_)), tbl, path)
+      assert(segs.isEmpty, tag(s"a rebuild kept ${snap.members}"))
+      assert(f.probe(tbl) == f.plain(tbl),
+        tag("a stale segment leaked into the probe after a rebuild"))
+      assert(f.audit(tbl) == ((0L, 0L)), tag(f.audit(tbl).toString))
+    }
+  }
+
   test("live doc-vector delta ingest: micro-batched arrivals converge the probe to the frozen-vocab full vectorization") {
     val tbl = "dlt_vec_live"
     val path = freshDir("vl")
@@ -670,8 +895,8 @@ class DeltaIndexSpec extends SparkSpec {
     delta.repartition(3).write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(delta.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
-    val q = graft.streaming.Streaming.runDocVectorDeltaIngest(spark,
-      stream, tbl, path)
+    val q = graft.streaming.Streaming.runDeltaIngest(stream)(
+      TextOps.appendDocVectorIndexDelta(_, tbl, path))
     q.processAllAvailable(); q.stop()
     val pred = substring(md5(concat_ws(":", col("doc_id").cast("string"),
       lit("dlt"))), 1, 1) < "4"
@@ -708,8 +933,9 @@ class DeltaIndexSpec extends SparkSpec {
     rawDelta.repartition(3).write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(rawDelta.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
-    val q = graft.streaming.Streaming.runIvfIndexDeltaIngest(spark,
-      stream, tbl, path, s"${tbl}_centroids")
+    val q = graft.streaming.Streaming.runDeltaIngest(stream)(b =>
+      Knn.appendIvfIndexDelta(Knn.embOf(b), tbl, path,
+        Staged.table(spark, s"${tbl}_centroids")))
     q.processAllAvailable(); q.stop()
     val centroids = graft.sources.Staged.table(spark,
       s"${tbl}_centroids")

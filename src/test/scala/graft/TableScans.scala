@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Counts the SQL executions that scan given catalog tables while a block
   * runs. Listener events arrive asynchronously but in order, so a tagged
   * sentinel job before and after the block brackets exactly its
-  * executions (the ApiSpec `jobsDuring` posture). */
+  * executions (the [[JobCount]] posture). */
 object TableScans {
   def during(spark: SparkSession, tables: String*)(body: => Unit): Seq[Int] = {
     import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
