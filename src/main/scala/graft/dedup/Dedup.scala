@@ -782,16 +782,12 @@ object Dedup {
     * Candidate volume is bounded by tables · Σ|bucket|²/2 with |bucket| ≤
     * maxOccupancy by construction — linear in corpus size at fixed
     * target occupancy. Drop accounting: LshBuckets.audit (registered as
-    * `lsh_bucket_audit`). */
+    * `lsh_bucket_audit`). `emb` is a [[graft.similarity.Knn.embOf]]
+    * frame: its degenerate vectors are already fenced out. */
   def embeddingPairsLsh(emb: DataFrame, tau: Double,
       planes: Int = 0, tables: Int = 4, targetOccupancy: Long = 128L,
       maxOccupancy: Long = 4096L, n: Long = -1L): DataFrame = {
     import graft.similarity.LshBuckets
-    val e = emb.select(col("vec_id"), col("v").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(DotProduct(col("v"), col("v"))))
-      // the Knn.finiteNorm fence: degenerate vectors have no cosine
-      // direction and (under Spark 4 ANSI) a zero divisor kills the job
-      .filter(graft.similarity.Knn.finiteNorm(col("nrm")))
     // planes = 0 → derive from corpus size so expected occupancy tracks
     // targetOccupancy at ANY scale; callers that already know the
     // cardinality (table metadata, LshBuckets.corpusSize) pass `n` so a
@@ -799,8 +795,8 @@ object Dedup {
     // (n = -1 → unknown; 0 is a real empty-corpus cardinality)
     val p = if (planes > 0) planes
       else LshBuckets.adaptivePlanes(
-        if (n >= 0L) n else e.count(), targetOccupancy)
-    val m = LshBuckets.members(e, p, tables, maxOccupancy)
+        if (n >= 0L) n else emb.count(), targetOccupancy)
+    val m = LshBuckets.members(emb, p, tables, maxOccupancy)
     val cand = m.as("a").join(m.as("b"),
         col("a.tbl") === col("b.tbl") &&
           col("a.bucket") === col("b.bucket") &&
@@ -809,9 +805,9 @@ object Dedup {
       .select(col("a.vec_id").as("vec_id1"), col("b.vec_id").as("vec_id2"))
       .dropDuplicates("vec_id1", "vec_id2")
     cand
-      .join(e.select(col("vec_id").as("vec_id1"), col("v").as("v1"),
+      .join(emb.select(col("vec_id").as("vec_id1"), col("v").as("v1"),
         col("nrm").as("nrm1")), "vec_id1")
-      .join(e.select(col("vec_id").as("vec_id2"), col("v").as("v2"),
+      .join(emb.select(col("vec_id").as("vec_id2"), col("v").as("v2"),
         col("nrm").as("nrm2")), "vec_id2")
       .withColumn("cos_sim",
         round(DotProduct(col("v1"), col("v2")) /
@@ -824,28 +820,26 @@ object Dedup {
     * doubles — the degenerate mass the LSH occupancy cap deliberately
     * drops), keep the lowest vec_id. One map-side-combinable shuffle on
     * the vector bytes; the companion to [[exact]] for the embedding
-    * table, and the documented absorber for `lsh_bucket_audit` drops. */
+    * table, and the documented absorber for `lsh_bucket_audit` drops.
+    * It answers about STORED rows, so `emb` is
+    * [[graft.similarity.Knn.embStoredRows]]: degenerate vectors group
+    * too. */
   def embeddingExact(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), col("v").cast("array<double>").as("v"))
-      .groupBy(col("v"))
+    emb.groupBy(col("v"))
       .agg(min(col("vec_id")).as("keeper"), count(lit(1)).as("n_copies"))
       .select("keeper", "n_copies")
 
-  def embeddingPairs(emb: DataFrame, tau: Double): DataFrame = {
-    // norms computed once per vector (not per pair); the pair loop is the
-    // native DotProduct kernel — no per-pair array allocation; the
-    // finiteNorm fence mirrors the oracle's squared-norm predicate
-    val e = emb.select(col("vec_id"), col("v").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(DotProduct(col("v"), col("v"))))
-      .filter(graft.similarity.Knn.finiteNorm(col("nrm")))
-    e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
+  def embeddingPairs(emb: DataFrame, tau: Double): DataFrame =
+    // norms come with the Knn.embOf frame (once per vector, not per
+    // pair, and fenced there — the oracle's squared-norm predicate); the
+    // pair loop is the native DotProduct kernel
+    emb.as("a").join(emb.as("b"), col("a.vec_id") < col("b.vec_id"))
       .withColumn("cos_sim",
         round(DotProduct(col("a.v"), col("b.v")) /
           (col("a.nrm") * col("b.nrm")), 4))
       .filter(col("cos_sim") >= tau)
       .select(col("a.vec_id").as("vec_id1"), col("b.vec_id").as("vec_id2"),
         col("cos_sim"))
-  }
 
   /** Quality-aware keeper selection over near-dup clusters — the stage a
     * production pipeline runs INSTEAD of keep-lowest-id: within each

@@ -947,14 +947,14 @@ object PipelineQueries {
     // cross-table referential integrity: the precondition the
     // embedding-dependent operators silently assume, as one audited row
     "pipeline_integrity" -> ((s, d) => TextOps.pipelineIntegrity(
-      docs(s, d), Knn.emb(s, d))),
+      docs(s, d), Knn.embStoredRows(s, d))),
     // pre-flight payload health: exact accounting of the mass the r16
     // hostile-payload fences silently exclude (null/empty/tokenless
     // text, null lang/source, dup ids) — drops are never silent
     "corpus_health" -> ((s, d) => TextOps.corpusHealth(docs(s, d))),
-    // the vector-table companion: what finiteNorm / the qnrm fence
-    // exclude (null/empty/zero/NaN-or-Inf vectors) + id/dims invariants
-    "emb_health" -> ((s, d) => Knn.embHealth(Knn.emb(s, d))),
+    // the vector-table companion: what the Knn.embOf reader fences out
+    // (null/empty/zero/NaN-or-Inf vectors) + id/dims invariants
+    "emb_health" -> ((s, d) => Knn.embHealth(Knn.embStoredRows(s, d))),
     // right-to-be-forgotten propagation: opted-out sources leave their
     // near-dup clusters and keepers are re-elected among survivors
     // (cluster ids stay those of the full run — membership filtered,
@@ -1173,7 +1173,7 @@ object PipelineQueries {
     "dedup_embedding" -> ((s, d) =>
       Dedup.embeddingPairs(Knn.emb(s, d), tau = 0.4)),
     "dedup_embedding_exact" -> ((s, d) =>
-      Dedup.embeddingExact(Knn.emb(s, d))),
+      Dedup.embeddingExact(Knn.embStoredRows(s, d))),
     // corpus size via the shared JVM cache so the three LSH queries
     // (this, knn_lsh, lsh_bucket_audit) run ONE sizing count between
     // them, not one each

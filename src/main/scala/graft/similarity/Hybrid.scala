@@ -11,8 +11,8 @@ import graft.functions.DotProduct
   * ([[graft.text.TextOps.docSimilar]] — inverted-index formulation,
   * integer weights, 1e-4-grid scores) and the SEMANTIC member is
   * embedding cosine against the `embeddings` table (the dedup_embedding
-  * kernel chain, finiteNorm-fenced). RRF (Cormack, Clarke & Büttcher,
-  * SIGIR'09) is the standard training-data/RAG recipe for combining a
+  * kernel chain over [[Knn.embOf]]'s fenced frame). RRF (Cormack,
+  * Clarke & Büttcher, SIGIR'09) is the standard training-data/RAG recipe for combining a
   * term index with a vector index without score calibration: each
   * member contributes 1/(60+rank), so a candidate surfacing in BOTH
   * modalities outranks one that tops either alone.
@@ -71,22 +71,20 @@ object Hybrid {
             col(score).as("score")))
 
   /** Semantic member for an explicit query set: rounded cosine of each
-    * query vector against every finite-norm corpus vector, τ-bounded.
-    * One definition for the batch slice AND the streaming probe (whose
-    * queries are the arriving micro-batch) — the embOf posture. Inputs
-    * are [[Knn.embOf]]-normalized (vec_id, v, nrm). The join is the
+    * query vector against every corpus vector, τ-bounded. One
+    * definition for the batch slice AND the streaming probe (whose
+    * queries are the arriving micro-batch). Inputs are [[Knn.embOf]]
+    * frames (vec_id, v, nrm), so both sides are fenced. The join is the
     * declared brute baseline (the knn_brute broadcast-queries shape);
     * τ bounds the OUTPUT, and the persisted IVF probe swaps in as the
     * candidate source at corpus scale. */
   def semMemberFor(queries: DataFrame, corpus: DataFrame,
       tauSem: Double): DataFrame = {
     require(tauSem > 0.0, s"bad tauSem=$tauSem")
-    val q = queries.filter(Knn.finiteNorm(col("nrm")))
-      .select(col("vec_id").as("doc_id"), col("v").as("qv"),
-        col("nrm").as("qnrm"))
-    val c = corpus.filter(Knn.finiteNorm(col("nrm")))
-      .select(col("vec_id").as("cand_id"), col("v").as("cv"),
-        col("nrm").as("cnrm"))
+    val q = queries.select(col("vec_id").as("doc_id"), col("v").as("qv"),
+      col("nrm").as("qnrm"))
+    val c = corpus.select(col("vec_id").as("cand_id"), col("v").as("cv"),
+      col("nrm").as("cnrm"))
     q.join(c, col("doc_id") =!= col("cand_id"))
       .withColumn("score",
         round(DotProduct(col("qv"), col("cv")) /
@@ -245,19 +243,18 @@ object Hybrid {
     * candidate count EXCEEDS kSem — a top-kSem cut drops candidates
     * and compresses ranks for exactly these; a query with exactly kSem
     * candidates loses nothing — the deepest list, and the declared
-    * kSem. `e` is the [[Knn.embOf]]-normalized embedding table, as
+    * kSem. `e` is the fenced [[Knn.embOf]] embedding table, as
     * everywhere in this family. count(when(..)) + coalesce(max, 0):
     * exact zeros on an empty corpus in both engines. */
   def capAudit(e: DataFrame, tauSem: Double = 0.3, kSem: Int = 50,
       salt: String = "hyb"): DataFrame = {
     require(kSem >= 1, s"bad kSem=$kSem")
-    // n_queries counts every PROBING query — the sliced finite-norm
+    // n_queries counts every PROBING query — the sliced (fenced)
     // set, left-joined so a query whose τ-passing list is EMPTY still
     // lands in the denominator with n_cand = 0 (r17 ADVICE: the old
     // groupBy-only shape silently dropped empty-list queries and
     // under-reported the probing denominator)
     val probing = e.filter(slicePred(col("vec_id"), salt))
-      .filter(Knn.finiteNorm(col("nrm")))
       .select(col("vec_id").as("doc_id"))
     val sem = semMemberFor(e.filter(slicePred(col("vec_id"), salt)), e,
       tauSem)

@@ -34,32 +34,41 @@ object Knn {
   def emb(spark: SparkSession, dir: String): DataFrame =
     embOf(graft.sources.ParquetSource.read(spark, s"$dir/embeddings.parquet"))
 
-  /** Normalize a RAW embedding table or stream (vec_id, label,
-    * embedding) to the (v, nrm) shape every operator here consumes —
-    * one definition with [[emb]], reused by the stream-static probes so
-    * their per-batch normalization cannot drift from batch. */
+  /** The ONE reader of a raw embedding table or stream (vec_id, label,
+    * embedding): cast to doubles, `nrm` computed once, only
+    * [[finiteNorm]] rows kept. Every (vec_id, label, v, nrm) frame a
+    * similarity, dedup or hybrid operator receives comes from here, so
+    * no operator repeats the fence; [[emb]] is its parquet face and the
+    * stream probes call it per micro-batch. */
   def embOf(raw: DataFrame): DataFrame =
+    castRaw(raw).withColumn("nrm", sqrt(DotProduct(col("v"), col("v"))))
+      .filter(finiteNorm(col("nrm")))
+
+  private def castRaw(raw: DataFrame): DataFrame =
     raw.select(col("vec_id"), col("label"),
-        col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", sqrt(DotProduct(col("v"), col("v"))))
+      col("embedding").cast("array<double>").as("v"))
+
+  /** EVERY stored row as (vec_id, label, v), unfenced: only for the
+    * three inventory rows (`emb_health`, `pipeline_integrity`,
+    * `dedup_embedding_exact`), whose oracle counts or groups every row. */
+  def embStoredRows(spark: SparkSession, dir: String): DataFrame =
+    castRaw(graft.sources.ParquetSource.read(spark, s"$dir/embeddings.parquet"))
 
   /** Cosine via the native kernel; norms are precomputed per vector. */
   private def cosine: Column =
     round(DotProduct(col("q.v"), col("c.v")) /
       (col("q.nrm") * col("c.nrm")), 4)
 
-  /** Degenerate-vector fence for the FLOAT cosine paths — the
-    * bruteQuantized zero-code posture, generalized by the
-    * hostile-corpus sweep (r16): a zero vector has no cosine direction
-    * (0/0 — under Spark 4 ANSI the zero divisor outright KILLS the job,
-    * and where it doesn't, both engines sort the NaN above every real
-    * score, so one degenerate corpus row would head EVERY query's
-    * top-k); a NaN- or Inf-poisoned vector turns every score it touches
-    * NaN. `nrm > 0 AND nrm < Infinity` excludes all three, identically
-    * in Spark and DuckDB (both order NaN greatest, so it fails both
-    * compares) — the oracle-checked float path carries the same
-    * predicate in SQL. */
-  private[graft] def finiteNorm(nrm: Column): Column =
+  /** The degenerate-vector fence [[embOf]] applies: a zero vector has
+    * no cosine direction (0/0 — under Spark 4 ANSI the zero divisor
+    * KILLS the job, elsewhere both engines sort the NaN above every real
+    * score, so one degenerate row would head EVERY query's top-k); a
+    * NaN- or Inf-poisoned vector turns every score it touches NaN, and
+    * one NaN element even passes int8's `qnrm > 0` (the encoder codes it
+    * 0). `nrm > 0 AND nrm < Infinity` excludes all of them, identically
+    * in Spark and DuckDB (both order NaN greatest) — the oracle's float
+    * paths carry the same predicate in SQL. */
+  private def finiteNorm(nrm: Column): Column =
     nrm > lit(0.0) && nrm < lit(Double.PositiveInfinity)
 
   private def ranked(scored: DataFrame, k: Int): DataFrame = {
@@ -71,9 +80,9 @@ object Knn {
   }
 
   /** Pre-flight EMBEDDING HEALTH audit — the corpus_health companion
-    * for the vector table, accounting exactly what the [[finiteNorm]]
-    * fence and the qnrm > 0 quantized fence silently exclude: null /
-    * empty / all-zero / NaN-or-Inf-poisoned vectors, plus the id and
+    * for the vector table, over [[embStoredRows]] (every stored row),
+    * accounting exactly what the reader's [[finiteNorm]] fence drops:
+    * null / empty / all-zero / NaN-or-Inf-poisoned vectors, plus the id and
     * dimensionality invariants every pairwise operator assumes
     * (duplicate vec_ids double-count votes; mixed dims crash the dot
     * kernels). One exact-integer corpus agg under the hash gate; the
@@ -102,7 +111,7 @@ object Knn {
 
   /** Exact top-k cosine neighbors for each query vector. */
   def brute(e: DataFrame, queryPred: Column, k: Int): DataFrame =
-    exhaustive(FloatCodec, e.filter(finiteNorm(col("nrm"))), queryPred, k)
+    exhaustive(FloatCodec, e, queryPred, k)
 
   /** Exact top-k over a prepared `corpus`: the `queryPred` rows against
     * every other row, scored by `codec` with no list pruning. */
@@ -1090,15 +1099,14 @@ object Knn {
   def lsh(e: DataFrame, queryPred: Column, k: Int,
       planes: Int = 0, tables: Int = 4, targetOccupancy: Long = 128L,
       maxOccupancy: Long = 4096L, n: Long = -1L): DataFrame = {
-    val fe = e.filter(finiteNorm(col("nrm")))
     // `n` = known corpus cardinality (metadata / LshBuckets.corpusSize):
     // skips the sizing count scan; -1 → unknown, count here (0 is a real
     // empty-corpus cardinality and is honored, not re-counted)
     val p = if (planes > 0) planes
       else LshBuckets.adaptivePlanes(
-        if (n >= 0L) n else fe.count(), targetOccupancy)
-    val m = LshBuckets.members(fe, p, tables, maxOccupancy)
-    val qm = m.join(fe.filter(queryPred).select(col("vec_id")), "vec_id")
+        if (n >= 0L) n else e.count(), targetOccupancy)
+    val m = LshBuckets.members(e, p, tables, maxOccupancy)
+    val qm = m.join(e.filter(queryPred).select(col("vec_id")), "vec_id")
       .withColumnRenamed("vec_id", "query_id")
     val cand = qm.as("q").join(m.as("c"),
         col("q.tbl") === col("c.tbl") &&
@@ -1108,9 +1116,9 @@ object Knn {
       .select(col("query_id"), col("c.vec_id").as("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")
     val scored = cand
-      .join(fe.select(col("vec_id").as("query_id"), col("v").as("qv"),
+      .join(e.select(col("vec_id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qnrm")), "query_id")
-      .join(fe.select(col("vec_id").as("neighbor_id"), col("v").as("nv"),
+      .join(e.select(col("vec_id").as("neighbor_id"), col("v").as("nv"),
         col("nrm").as("nnrm")), "neighbor_id")
       .withColumn("score",
         round(DotProduct(col("qv"), col("nv")) /
@@ -1183,7 +1191,7 @@ object Knn {
     * balancing). Same kernel assignment as the IVF build, so it scales
     * identically. */
   def clusterStats(e: DataFrame, k: Int = 8): DataFrame = {
-    val base = fencedBase(e)
+    val base = checkpointedBase(e)
     assignTo(base, kmeansModel(base, k))
       .groupBy(col("c_id"))
       .agg(
@@ -1215,7 +1223,7 @@ object Knn {
   private[similarity] def assignSemanticClusters(e: DataFrame,
       targetClusterSize: Long, n: Long,
       trainSwitch: Long = SampleTrainSwitch): DataFrame = {
-    val base = fencedBase(e)
+    val base = checkpointedBase(e)
     val nn = if (n >= 0L) n else base.count()
     // clamp BEFORE the Long→Int narrowing: at the 100 TB design point
     // nn/targetClusterSize can exceed Int.MaxValue and a raw .toInt
@@ -1356,7 +1364,7 @@ object Knn {
   /** One IVF codec — the residual half of the coarse-quantizer + codec
     * split (Jégou et al., "Product Quantization for Nearest Neighbor
     * Search", TPAMI 2011). The coarse half is ONE path for every codec:
-    * the [[finiteNorm]]-fenced base, the k-means lists, the
+    * the [[embOf]]-fenced, checkpointed base, the k-means lists, the
     * [[NearestCentroids]] assignment and probe lists, the bucketed list
     * write ([[writeLists]]), the delta segments and the merge. A codec
     * supplies only what differs: the stored payload of a list row
@@ -1399,7 +1407,7 @@ object Knn {
       assigned.select(col("vec_id"), col("v"), col("nrm"), col("c_id"))
     def probes(queries: DataFrame, coarse: CentroidModel,
         nprobe: Int): DataFrame =
-      probeLists(queries.filter(finiteNorm(col("nrm"))), coarse, nprobe)
+      probeLists(queries, coarse, nprobe)
     def score: Column = cosine
   }
 
@@ -1435,7 +1443,7 @@ object Knn {
         PqEncode(col("v"), col("nrm"), codebook, m).as("codes"))
     def probes(queries: DataFrame, coarse: CentroidModel,
         nprobe: Int): DataFrame =
-      probeLists(queries.filter(finiteNorm(col("nrm"))), coarse, nprobe)
+      probeLists(queries, coarse, nprobe)
         .withColumn("lut", PqLut(col("v"), col("nrm"), codebook, m))
         .drop("v", "nrm")
     def score: Column =
@@ -1453,23 +1461,21 @@ object Knn {
       .withColumn("c_id",
         explode(NearestCentroids(col("v"), col("nrm"), coarse, nprobe)))
 
-  /** The finiteNorm-fenced base, materialized once: degenerate vectors
-    * never reach k-means or an index (they are unsearchable — the
-    * [[finiteNorm]] rationale), and the Lloyd rounds plus the final
-    * assignment read the materialized rows instead of re-scanning the
-    * source. Every k-means consumer trains through it. */
-  private def fencedBase(e: DataFrame): DataFrame =
-    e.filter(finiteNorm(col("nrm"))).localCheckpoint(true)
+  /** The [[embOf]] base, materialized once: the Lloyd rounds plus the
+    * final assignment read the checkpointed rows instead of re-scanning
+    * the source. Every k-means consumer trains through it. */
+  private def checkpointedBase(e: DataFrame): DataFrame =
+    e.localCheckpoint(true)
 
-  /** The ONE IVF build over the [[fencedBase]]: `codecFor` trains the
-    * codec and names its side members (suffix → frame), which commit in
+  /** The ONE IVF build over the [[checkpointedBase]]: `codecFor` trains
+    * the codec and names its side members (suffix → frame), which commit in
     * the SAME generation as the lists — one pointer flip publishes the
     * whole artifact. Returns the coarse model and the new snapshot. */
   private def buildIvf(e: DataFrame, tableName: String, path: String,
       nlist: Int, buckets: Int)(
       codecFor: (DataFrame, CentroidModel) => (IvfCodec,
         Seq[(String, DataFrame)])): (CentroidModel, Staged.Snapshot) = {
-    val base = fencedBase(e)
+    val base = checkpointedBase(e)
     val coarse = kmeansModel(base, nlist)
     val (codec, sides) = codecFor(base, coarse)
     (coarse, Staged.commit(e.sparkSession, tableName, path) { g =>
@@ -1623,7 +1629,7 @@ object Knn {
   // appendDocVectorIndexDelta applied to the IVF layouts) ─────
 
   /** The ONE IVF delta append ([[Staged.append]]): arriving vectors
-    * (fenced like the build) are assigned to the FROZEN coarse model and
+    * (an [[embOf]] frame, like the build's) are assigned to the FROZEN coarse model and
     * encoded under the codec's frozen model — re-training is the
     * full-rebuild cadence — and land as ONE segment in the base's own
     * list columns and order ([[writeLists]]). `models` resolves from the
@@ -1639,7 +1645,7 @@ object Knn {
     Staged.append(eNew.sparkSession, tableName, path, s"append${face}Delta",
         "vec_id") { snap =>
       val (coarse, codec, index) = models(snap)
-      codec.stored(assignTo(fencedBase(eNew), coarse))
+      codec.stored(assignTo(checkpointedBase(eNew), coarse))
         .select(index.columns.toIndexedSeq.map(col): _*)
     } { (g, segment, rows) => g.write(segment)(writeLists(buckets, rows)) }
 
@@ -1670,7 +1676,7 @@ object Knn {
   /** Generation accounting for an IVF delta of any codec (the
     * textIndexDeltaAudit sibling): stored-vector masses and the integer
     * half-up milli share the delta holds. No delta reports zero delta
-    * mass. Pure counts over the corpus, the split and the finiteNorm
+    * mass. Pure counts over the corpus, the split and the reader's
     * fence — the row sits under the hash gate. */
   def ivfDeltaAudit(spark: SparkSession, tableName: String): DataFrame = {
     val snap = Staged.resolve(spark, tableName)
@@ -1797,7 +1803,7 @@ object Knn {
     // materialize the (id, v, nrm) base once: the k-means rounds, the
     // corpus assignment, and the query probes otherwise each re-scan the
     // source and re-derive norms — five scans collapse to one
-    val base = fencedBase(e)
+    val base = checkpointedBase(e)
     val model = kmeansModel(base, nlist)
     FloatCodec.search(model, base.filter(queryPred), k, nprobe,
       FloatCodec.stored(assignTo(base, model)))
@@ -1824,8 +1830,7 @@ object Knn {
     * calls (the hidden-O(m·dim) recompute class); dividing inside each
     * slice touches every element once, with the identical IEEE division. */
   private[graft] def pqSubvectors(e: DataFrame, m: Int): DataFrame =
-    e.filter(finiteNorm(col("nrm")))
-      .withColumn("dimguard",
+    e.withColumn("dimguard",
         coalesce(assert_true(size(col("v")) % lit(m) === lit(0),
           concat(lit("pq: dimensionality "), size(col("v")).cast("string"),
             lit(s" not divisible by m=$m subspaces — a truncating slice " +
@@ -1868,8 +1873,7 @@ object Knn {
       iters: Int = 2): CentroidModel = {
     val spark = base.sparkSession
     def vec(r: Row, i: Int) = r.getSeq[Double](i).toArray
-    val seeds = pqSubvectors(base.filter(finiteNorm(col("nrm")))
-        .withColumn("h", xxhash64(col("vec_id")))
+    val seeds = pqSubvectors(base.withColumn("h", xxhash64(col("vec_id")))
         .orderBy("h").limit(ksub), m)
       .select(col("sub_id"), xxhash64(col("vec_id")).as("c_id"),
         col("sv").as("cv"))
@@ -1924,8 +1928,7 @@ object Knn {
     * trainer itself is same-partitioning deterministic only). */
   def pqEncode(base: DataFrame, codebook: DataFrame,
       m: Int = PqSubspaces): DataFrame =
-    base.filter(finiteNorm(col("nrm")))
-      .select(col("vec_id"), PqEncode(col("v"), col("nrm"),
+    base.select(col("vec_id"), PqEncode(col("v"), col("nrm"),
         CentroidModel.codebook(codebook), m).as("codes"))
 
   /** Build + persist the IVF-PQ index ([[buildIvf]] with a [[PqCodec]]):
@@ -1958,8 +1961,7 @@ object Knn {
     * call per query against the broadcast codebook. */
   def pqLut(queries: DataFrame, codebook: DataFrame,
       m: Int = PqSubspaces): DataFrame =
-    queries.filter(finiteNorm(col("nrm")))
-      .select(col("vec_id").as("query_id"), PqLut(col("v"), col("nrm"),
+    queries.select(col("vec_id").as("query_id"), PqLut(col("v"), col("nrm"),
         CentroidModel.codebook(codebook), m).as("lut"))
 
   /** Search the persisted IVF-PQ index: queries take their `nprobe`

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming duals of the reference's live surface
@@ -36,12 +37,21 @@ object Streaming {
     * table — then collects; past the bound the error names the
     * stream-static probe alternative. */
   private def boundedCollect(d: DataFrame, what: String, maxRows: Long,
-      alt: String): Array[org.apache.spark.sql.Row] = {
+      alt: String): Array[Row] = {
     val n = d.count()
     require(n <= maxRows,
       s"frozen artifact $what has $n rows > $maxRows — too large for a " +
         s"driver-collected closure constant; $alt")
     d.collect()
+  }
+
+  /** The ONE per-micro-batch runner behind every `run*` probe: `f`
+    * receives each micro-batch as a batch DataFrame. `writer` carries
+    * the stream's own settings (an output mode, say). */
+  private def eachBatch(writer: DataStreamWriter[Row])(f: DataFrame => Unit)
+      : StreamingQuery = {
+    val perBatch: (Dataset[Row], Long) => Unit = (batch, _) => f(batch.toDF())
+    writer.foreachBatch(perBatch).start()
   }
 
   /** File-source stream of the canonical entry columns (no sequence —
@@ -292,17 +302,16 @@ object Streaming {
     graft.multimodal.Multimodal.featureRollup(
       graft.multimodal.Multimodal.extractFeatures(mediaStream).toDF())
 
-  /** File-source embedding stream with the batch [[graft.similarity
-    * .Knn.emb]] column contract (vec_id, label, v as array<double>). */
+  /** File-source embedding stream through the batch reader
+    * [[graft.similarity.Knn.embOf]]: the (vec_id, label, v, nrm)
+    * contract of [[graft.similarity.Knn.emb]], fenced the same way. */
   def readEmbeddingStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream
+    graft.similarity.Knn.embOf(spark.readStream
       .schema(org.apache.spark.sql.types.StructType.fromDDL(
         "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(dir)
-      .select(col("vec_id"), col("label"),
-        col("embedding").cast("array<double>").as("v"))
+      .parquet(dir))
 
   // Seq[Byte] (not Array[Byte]): the encoder must map qv to
   // ARRAY<TINYINT>, the quantize kernel's type — Array[Byte] means BINARY
@@ -545,12 +554,11 @@ object Streaming {
   def runDocSimilarProbe(spark: SparkSession, docStream: DataFrame,
       vecTable: String, vocabTable: String, tau: Double = 0.9)(
       sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(tau > 0.0, s"bad tau=$tau")
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => sink(graft.text.TextOps.docSimilarPersisted(
-        spark, batch.toDF(), vecTable, vocabTable, lit(true), tau))
-    docStream.writeStream.foreachBatch(perBatch).start()
+    eachBatch(docStream.writeStream)(batch =>
+      sink(graft.text.TextOps.docSimilarPersisted(spark, batch, vecTable,
+        vocabTable, lit(true), tau)))
   }
 
   /** The SCALE shape of [[contaminationStream]] — the stream-static
@@ -567,12 +575,10 @@ object Streaming {
   def runContaminationProbe(spark: SparkSession, docStream: DataFrame,
       anchorTable: String, k: Int = 40, w: Int = 25)(
       sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(k >= 1 && w >= 1, s"bad params k=$k w=$w")
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => sink(graft.dedup.Dedup.anchorProbe(
-        spark, anchorTable, batch.toDF(), k, w))
-    docStream.writeStream.foreachBatch(perBatch).start()
+    eachBatch(docStream.writeStream)(batch =>
+      sink(graft.dedup.Dedup.anchorProbe(spark, anchorTable, batch, k, w)))
   }
 
   /** Live OOV monitoring against the PERSISTED df-banded vocabulary
@@ -593,11 +599,9 @@ object Streaming {
     * vocabulary. */
   def runOovProbe(spark: SparkSession, docStream: DataFrame,
       vocabTable: String)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => sink(graft.text.TextOps.oovTag(
-        spark, vocabTable, batch.toDF()))
-    docStream.writeStream.foreachBatch(perBatch).start()
+      : StreamingQuery = {
+    eachBatch(docStream.writeStream)(batch =>
+      sink(graft.text.TextOps.oovTag(spark, vocabTable, batch)))
   }
 
   /** LIVE standing-query routing (the runDocSimilarProbe posture):
@@ -614,11 +618,10 @@ object Streaming {
     * residency. */
   def runStandingQueryProbe(spark: SparkSession, docStream: DataFrame,
       indexTable: String, terms: Seq[String])(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => sink(graft.text.TextOps.standingQueryScore(
-        spark, indexTable, batch.toDF(), terms))
-    docStream.writeStream.foreachBatch(perBatch).start()
+      : StreamingQuery = {
+    eachBatch(docStream.writeStream)(batch =>
+      sink(graft.text.TextOps.standingQueryScore(spark, indexTable, batch,
+        terms)))
   }
 
   /** LIVE hybrid retrieval — RRF serving during ingest (the
@@ -640,23 +643,20 @@ object Streaming {
       vecTable: String, vocabTable: String, corpusEmb: DataFrame,
       k: Int = 10, tauLex: Double = 0.9, tauSem: Double = 0.3)(
       sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val b = batch.toDF()
-        val lex = graft.text.TextOps.docSimilarPersisted(
-            spark, b, vecTable, vocabTable, lit(true), tauLex)
-          .select(col("doc_id"), col("similar_id").as("cand_id"),
-            col("score"))
-        val q = graft.similarity.Knn.embOf(b.select(
-          col("doc_id").as("vec_id"), lit(0).cast("int").as("label"),
-          col("embedding")))
-        val sem = graft.similarity.Hybrid.semMemberFor(q, corpusEmb,
-          tauSem)
-        sink(graft.similarity.Hybrid.topK(
-          graft.similarity.Hybrid.fuse(lex, sem), k))
-      }
-    docStream.writeStream.foreachBatch(perBatch).start()
+      : StreamingQuery = {
+    eachBatch(docStream.writeStream) { b =>
+      val lex = graft.text.TextOps.docSimilarPersisted(
+          spark, b, vecTable, vocabTable, lit(true), tauLex)
+        .select(col("doc_id"), col("similar_id").as("cand_id"),
+          col("score"))
+      val q = graft.similarity.Knn.embOf(b.select(
+        col("doc_id").as("vec_id"), lit(0).cast("int").as("label"),
+        col("embedding")))
+      val sem = graft.similarity.Hybrid.semMemberFor(q, corpusEmb,
+        tauSem)
+      sink(graft.similarity.Hybrid.topK(
+        graft.similarity.Hybrid.fuse(lex, sem), k))
+    }
   }
 
   /** [[runHybridSearchProbe]] with an INDEX-BACKED semantic member —
@@ -686,30 +686,27 @@ object Streaming {
       vecTable: String, vocabTable: String, ivfTable: String,
       k: Int = 10, tauLex: Double = 0.9, tauSem: Double = 0.3,
       kSem: Int = 50, nprobe: Int = 2)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(kSem >= k, s"semantic member depth kSem=$kSem below k=$k")
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val b = batch.toDF()
-        val lex = graft.text.TextOps.docSimilarPersisted(
-            spark, b, vecTable, vocabTable, lit(true), tauLex)
-          .select(col("doc_id"), col("similar_id").as("cand_id"),
-            col("score"))
-        val q = graft.similarity.Knn.embOf(b.select(
-          col("doc_id").as("vec_id"), lit(0).cast("int").as("label"),
-          col("embedding")))
-        // lists and centroids from ONE pointer read: one generation
-        val snap = graft.sources.Staged.resolve(spark, ivfTable)
-        val sem = graft.similarity.Knn.searchIvfIndexOn(
-            snap.table(ivfTable), graft.functions.CentroidModel.of(
-              snap.table(s"${ivfTable}_centroids")), q, kSem, nprobe)
-          .filter(col("score") >= tauSem)
-          .select(col("query_id").as("doc_id"),
-            col("neighbor_id").as("cand_id"), col("score"))
-        sink(graft.similarity.Hybrid.topK(
-          graft.similarity.Hybrid.fuse(lex, sem), k))
-      }
-    docStream.writeStream.foreachBatch(perBatch).start()
+    eachBatch(docStream.writeStream) { b =>
+      val lex = graft.text.TextOps.docSimilarPersisted(
+          spark, b, vecTable, vocabTable, lit(true), tauLex)
+        .select(col("doc_id"), col("similar_id").as("cand_id"),
+          col("score"))
+      val q = graft.similarity.Knn.embOf(b.select(
+        col("doc_id").as("vec_id"), lit(0).cast("int").as("label"),
+        col("embedding")))
+      // lists and centroids from ONE pointer read: one generation
+      val snap = graft.sources.Staged.resolve(spark, ivfTable)
+      val sem = graft.similarity.Knn.searchIvfIndexOn(
+          snap.table(ivfTable), graft.functions.CentroidModel.of(
+            snap.table(s"${ivfTable}_centroids")), q, kSem, nprobe)
+        .filter(col("score") >= tauSem)
+        .select(col("query_id").as("doc_id"),
+          col("neighbor_id").as("cand_id"), col("score"))
+      sink(graft.similarity.Hybrid.topK(
+        graft.similarity.Hybrid.fuse(lex, sem), k))
+    }
   }
 
   /** LIVE index ingest — the write-side streaming dual of the delta
@@ -733,10 +730,8 @@ object Streaming {
     * operator schedules the merge on. The disjointness fences hold per
     * batch (a re-crawled row raises, never double-serves). */
   def runDeltaIngest(stream: DataFrame)(append: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => append(batch.toDF())
-    stream.writeStream.foreachBatch(perBatch).start()
+      : StreamingQuery = {
+    eachBatch(stream.writeStream)(append)
   }
 
   /** LIVE passage-granular hybrid retrieval — the streaming dual of
@@ -766,31 +761,29 @@ object Streaming {
       postingsTable: String, vecTable: String, vocabTable: String,
       tauSem: Double = 0.05, kLex: Int = 50, kSem: Int = 50, k: Int = 10,
       maxQueriesPerBatch: Long = 64L)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val qs = boundedCollect(
-          batch.toDF().select(col("query_id"), col("text")),
-          "chunk-hybrid query micro-batch", maxQueriesPerBatch,
-          "shrink the trigger interval or shard the query stream")
-        qs.foreach { row =>
-          // term derivation MUST match the engine's one-definition
-          // tokenizer (lower() + literal-space split — toksExpr): Spark's
-          // lower IS UTF8String.toLowerCase, and a locale-default Java
-          // toLowerCase or a \s+ split would drift for tab-separated or
-          // locale-sensitive query text (r18 ADVICE — the domainScore
-          // stream's driver-side tokenizer precedent)
-          val terms = org.apache.spark.unsafe.types.UTF8String
-            .fromString(Option(row.getString(1)).getOrElse(""))
-            .toLowerCase.toString.split(" ", -1)
-            .toSeq.filter(_.nonEmpty).distinct
-          if (terms.nonEmpty)
-            sink(graft.text.Chunks.chunkHybridServe(spark, postingsTable,
-                vecTable, vocabTable, terms, tauSem, kLex, kSem, k)
-              .withColumn("query_id", lit(row.get(0))))
-        }
+      : StreamingQuery = {
+    eachBatch(queryStream.writeStream) { batch =>
+      val qs = boundedCollect(
+        batch.select(col("query_id"), col("text")),
+        "chunk-hybrid query micro-batch", maxQueriesPerBatch,
+        "shrink the trigger interval or shard the query stream")
+      qs.foreach { row =>
+        // term derivation MUST match the engine's one-definition
+        // tokenizer (lower() + literal-space split — toksExpr): Spark's
+        // lower IS UTF8String.toLowerCase, and a locale-default Java
+        // toLowerCase or a \s+ split would drift for tab-separated or
+        // locale-sensitive query text (r18 ADVICE — the domainScore
+        // stream's driver-side tokenizer precedent)
+        val terms = org.apache.spark.unsafe.types.UTF8String
+          .fromString(Option(row.getString(1)).getOrElse(""))
+          .toLowerCase.toString.split(" ", -1)
+          .toSeq.filter(_.nonEmpty).distinct
+        if (terms.nonEmpty)
+          sink(graft.text.Chunks.chunkHybridServe(spark, postingsTable,
+              vecTable, vocabTable, terms, tauSem, kLex, kSem, k)
+            .withColumn("query_id", lit(row.get(0))))
       }
-    queryStream.writeStream.foreachBatch(perBatch).start()
+    }
   }
 
   /** LIVE hard-triplet mining — contrastive curation running DURING
@@ -809,12 +802,11 @@ object Streaming {
   def runTripletProbe(spark: SparkSession, vecStream: DataFrame,
       indexTable: String, centroidsTable: String, labelsTable: String,
       marginE4: Long = 500L, nprobe: Int = 2)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => sink(graft.similarity.Knn.tripletProbe(spark,
+      : StreamingQuery = {
+    eachBatch(vecStream.writeStream)(batch =>
+      sink(graft.similarity.Knn.tripletProbe(spark,
         indexTable, graft.sources.Staged.table(spark, centroidsTable),
-        graft.sources.Staged.table(spark, labelsTable), batch.toDF(), marginE4, nprobe))
-    vecStream.writeStream.foreachBatch(perBatch).start()
+        graft.sources.Staged.table(spark, labelsTable), batch, marginE4, nprobe)))
   }
 
   /** Live quality-filter scoring in its SCALE shape — the stream-static
@@ -828,11 +820,9 @@ object Streaming {
     * size. */
   def runDomainScoreProbe(spark: SparkSession, docStream: DataFrame,
       modelTable: String)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => sink(graft.text.TextOps.domainScorePersisted(
-        spark, batch.toDF(), modelTable))
-    docStream.writeStream.foreachBatch(perBatch).start()
+      : StreamingQuery = {
+    eachBatch(docStream.writeStream)(batch =>
+      sink(graft.text.TextOps.domainScorePersisted(spark, batch, modelTable)))
   }
 
   /** Live mixture application in its SCALE shape — the stream-static
@@ -843,13 +833,12 @@ object Streaming {
     * is a pure per-doc function, so per-batch semantics are EXACT. */
   def runMixApplyProbe(spark: SparkSession, docStream: DataFrame,
       planTable: String, seed: Long = 42L)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => sink(graft.text.TextOps.mixApplyWith(batch.toDF(),
+      : StreamingQuery = {
+    eachBatch(docStream.writeStream)(batch =>
+      sink(graft.text.TextOps.mixApplyWith(batch,
         graft.sources.Staged.table(spark, planTable)
           .select("lang", "source", "tokens_kept", "target_tokens"),
-        seed))
-    docStream.writeStream.foreachBatch(perBatch).start()
+        seed)))
   }
 
   /** Live media near-dup checking in its SCALE shape — the
@@ -862,11 +851,10 @@ object Streaming {
     * EXACT and a full-crawl index serves with no driver residency. */
   def runMediaNearDupProbe(spark: SparkSession, mediaStream: DataFrame,
       indexTable: String)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => sink(graft.multimodal.Multimodal.mediaBucketProbe(
-        spark, indexTable, batch.toDF()))
-    mediaStream.writeStream.foreachBatch(perBatch).start()
+      : StreamingQuery = {
+    eachBatch(mediaStream.writeStream)(batch =>
+      sink(graft.multimodal.Multimodal.mediaBucketProbe(spark, indexTable,
+        batch)))
   }
 
   /** Live embedding-outlier gating in its SCALE shape — the
@@ -878,12 +866,10 @@ object Streaming {
     * EXACT and the emitted rows equal the closure variant's. */
   def runEmbOutlierProbe(spark: SparkSession, embStream: DataFrame,
       centroidTable: String)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => sink(graft.similarity.Knn.embOutlierProbe(
-        spark, centroidTable,
-        graft.similarity.Knn.embOf(batch.toDF())))
-    embStream.writeStream.foreachBatch(perBatch).start()
+      : StreamingQuery = {
+    eachBatch(embStream.writeStream)(batch =>
+      sink(graft.similarity.Knn.embOutlierProbe(spark, centroidTable,
+        graft.similarity.Knn.embOf(batch))))
   }
 
   /** Live label propagation in its SCALE shape — the stream-static
@@ -901,15 +887,14 @@ object Streaming {
       indexTable: String, centroidsTable: String, labelsTable: String,
       labeledSixteenths: Int = 12, tau: Double = 0.3, nprobe: Int = 2)(
       sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => sink(graft.similarity.Knn.labelPropProbe(spark,
+      : StreamingQuery = {
+    eachBatch(embStream.writeStream)(batch =>
+      sink(graft.similarity.Knn.labelPropProbe(spark,
         indexTable,
         graft.sources.Staged.table(spark, centroidsTable),
         graft.sources.Staged.table(spark, labelsTable),
-        graft.similarity.Knn.embOf(batch.toDF()),
-        labeledSixteenths, tau, nprobe))
-    embStream.writeStream.foreachBatch(perBatch).start()
+        graft.similarity.Knn.embOf(batch),
+        labeledSixteenths, tau, nprobe)))
   }
 
   /** Live ANN retrieval over the persisted IVF-PQ index (the
@@ -927,16 +912,14 @@ object Streaming {
   def runKnnPqProbe(spark: SparkSession, embStream: DataFrame,
       indexTable: String, coarseTable: String, codebookTable: String,
       k: Int = 10, nprobe: Int = 2)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        // lists and both models from ONE pointer read
-        val snap = graft.sources.Staged.resolve(spark, indexTable)
-        sink(graft.similarity.Knn.searchIvfPqOn(snap.table(indexTable),
-          snap.table(coarseTable), snap.table(codebookTable),
-          graft.similarity.Knn.embOf(batch.toDF()), k, nprobe))
-      }
-    embStream.writeStream.foreachBatch(perBatch).start()
+      : StreamingQuery = {
+    eachBatch(embStream.writeStream) { batch =>
+      // lists and both models from ONE pointer read
+      val snap = graft.sources.Staged.resolve(spark, indexTable)
+      sink(graft.similarity.Knn.searchIvfPqOn(snap.table(indexTable),
+        snap.table(coarseTable), snap.table(codebookTable),
+        graft.similarity.Knn.embOf(batch), k, nprobe))
+    }
   }
 
   /** Live exact-k sampling in its SCALE shape — the stream-static
@@ -956,41 +939,38 @@ object Streaming {
   def runSampleExactKProbe(spark: SparkSession, docStream: DataFrame,
       stateTable: String, statePath: String, k: Int = 5,
       salt: String = "strat")(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => {
-        val b = batch.toDF()
-          .select(col("doc_id"), col("lang"), col("source"))
-          .localCheckpoint(true) // 3 consumers: union, counts, touch set
-        val prev = graft.sources.Staged.snapshot(spark, stateTable)
-          .map(_.table(stateTable))
-          .getOrElse(b.limit(0).withColumn("n_seen", lit(0L)))
-          .select(col("lang"), col("source"), col("doc_id"), col("n_seen"))
-        // picks over (frozen picks ∪ batch) — the associative merge
-        val picks = graft.text.TextOps.sampleExactK(
-          prev.select(col("doc_id"), col("lang"), col("source"))
-            .union(b.select(col("doc_id"), col("lang"), col("source"))),
-          k, salt)
-        val seen = prev.groupBy(col("lang"), col("source"))
-          .agg(max(col("n_seen")).as("seen_prev"))
-          .join(b.groupBy(col("lang"), col("source"))
-            .agg(count(lit(1)).as("seen_new")),
-            Seq("lang", "source"), "full_outer")
-          .select(col("lang"), col("source"),
-            (coalesce(col("seen_prev"), lit(0L)) +
-              coalesce(col("seen_new"), lit(0L))).as("n_seen"))
-        val next = picks.join(seen, Seq("lang", "source"))
-          .select(col("lang"), col("source"), col("doc_id"),
-            col("sample_rank"), col("n_seen"))
-          .localCheckpoint(true) // consumed by the write AND the sink
-        graft.sources.Staged.commit(spark, stateTable, statePath)(
-          _.save("", next))
-        sink(next.join(
-          b.select(col("lang"), col("source")).distinct(),
-          Seq("lang", "source"), "left_semi"))
-      }
-    docStream.writeStream.foreachBatch(perBatch).start()
+    eachBatch(docStream.writeStream) { batch =>
+      val b = batch.select(col("doc_id"), col("lang"), col("source"))
+        .localCheckpoint(true) // 3 consumers: union, counts, touch set
+      val prev = graft.sources.Staged.snapshot(spark, stateTable)
+        .map(_.table(stateTable))
+        .getOrElse(b.limit(0).withColumn("n_seen", lit(0L)))
+        .select(col("lang"), col("source"), col("doc_id"), col("n_seen"))
+      // picks over (frozen picks ∪ batch) — the associative merge
+      val picks = graft.text.TextOps.sampleExactK(
+        prev.select(col("doc_id"), col("lang"), col("source"))
+          .union(b.select(col("doc_id"), col("lang"), col("source"))),
+        k, salt)
+      val seen = prev.groupBy(col("lang"), col("source"))
+        .agg(max(col("n_seen")).as("seen_prev"))
+        .join(b.groupBy(col("lang"), col("source"))
+          .agg(count(lit(1)).as("seen_new")),
+          Seq("lang", "source"), "full_outer")
+        .select(col("lang"), col("source"),
+          (coalesce(col("seen_prev"), lit(0L)) +
+            coalesce(col("seen_new"), lit(0L))).as("n_seen"))
+      val next = picks.join(seen, Seq("lang", "source"))
+        .select(col("lang"), col("source"), col("doc_id"),
+          col("sample_rank"), col("n_seen"))
+        .localCheckpoint(true) // consumed by the write AND the sink
+      graft.sources.Staged.commit(spark, stateTable, statePath)(
+        _.save("", next))
+      sink(next.join(
+        b.select(col("lang"), col("source")).distinct(),
+        Seq("lang", "source"), "left_semi"))
+    }
   }
 
   /** Streaming quality-filter scoring — the apply side of the trained
@@ -1212,11 +1192,9 @@ object Streaming {
     * quality gate trained on in-distribution text sees it. */
   def runLmScoreProbe(spark: SparkSession, docStream: DataFrame,
       modelTable: String)(sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => sink(graft.text.TextOps.lmScoreIndexed(
-        spark, modelTable, batch.toDF()))
-    docStream.writeStream.foreachBatch(perBatch).start()
+      : StreamingQuery = {
+    eachBatch(docStream.writeStream)(batch =>
+      sink(graft.text.TextOps.lmScoreIndexed(spark, modelTable, batch)))
   }
 
   /** Live boilerplate tagging against the FROZEN template dictionary
@@ -1234,11 +1212,10 @@ object Streaming {
   def runBoilerplateTag(spark: SparkSession, docStream: DataFrame,
       dictTable: String, k: Int = graft.text.Boilerplate.DefaultK)(
       sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => sink(graft.text.Boilerplate.boilerplateTag(
-        batch.toDF(), k, dict = Some(graft.sources.Staged.table(spark, dictTable))))
-    docStream.writeStream.foreachBatch(perBatch).start()
+      : StreamingQuery = {
+    eachBatch(docStream.writeStream)(batch =>
+      sink(graft.text.Boilerplate.boilerplateTag(batch, k,
+        dict = Some(graft.sources.Staged.table(spark, dictTable)))))
   }
 
   /** LIVE hashed-feature drift monitor — the streaming face of
@@ -1259,14 +1236,12 @@ object Streaming {
   def runFeatureDriftMonitor(spark: SparkSession, docStream: DataFrame,
       oldProfileTable: String, tauMicro: Long = 500L)(
       sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      : StreamingQuery = {
     val newCounts = graft.text.Dsir.featBuckets(docStream)
       .groupBy(col("b")).agg(count(lit(1)).as("n_new"))
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => sink(graft.text.Dsir.driftFrom(
-        graft.sources.Staged.table(spark, oldProfileTable), batch.toDF(), tauMicro))
-    newCounts.writeStream.outputMode("complete")
-      .foreachBatch(perBatch).start()
+    eachBatch(newCounts.writeStream.outputMode("complete"))(batch =>
+      sink(graft.text.Dsir.driftFrom(
+        graft.sources.Staged.table(spark, oldProfileTable), batch, tauMicro)))
   }
 
   /** Live DSIR importance gate — the ingest-time face of
@@ -1286,14 +1261,13 @@ object Streaming {
   def runDsirGate(spark: SparkSession, docStream: DataFrame,
       modelTable: String, decisionsTable: String)(
       sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val perBatch: (Dataset[org.apache.spark.sql.Row], Long) => Unit =
-      (batch, _) => sink(graft.text.Dsir.applyDsirGate(
-        graft.text.Dsir.dsirWeights(batch.toDF(),
+      : StreamingQuery = {
+    eachBatch(docStream.writeStream)(batch =>
+      sink(graft.text.Dsir.applyDsirGate(
+        graft.text.Dsir.dsirWeights(batch,
             model = Some(graft.sources.Staged.table(spark, modelTable)))
           .withColumn("hex4", graft.text.Dsir.hex4Col),
-        broadcast(graft.sources.Staged.table(spark, decisionsTable))))
-    docStream.writeStream.foreachBatch(perBatch).start()
+        broadcast(graft.sources.Staged.table(spark, decisionsTable)))))
   }
 
   /** Streaming PHRASE-DENSITY tagger — the live dual of
@@ -1773,7 +1747,9 @@ object Streaming {
     * same `id:lbl` string, and the winner is the same (count desc,
     * label asc) integer order — so emits are independent of
     * micro-batching and the spec's stream==batch row equality is
-    * exact. SCALE HONESTY (the mediaNearDupStream framing): the
+    * exact. Arrivals pass the batch reader [[graft.similarity.Knn.embOf]],
+    * so both sides drop the same degenerate vectors. SCALE HONESTY (the
+    * mediaNearDupStream framing): the
     * labeled codes ship as a bounded broadcast closure constant, which
     * fits the CURATED labeled sets label propagation actually serves
     * (human-labeled seed corpora — small by construction); a
@@ -1797,14 +1773,14 @@ object Streaming {
         .map(r => (r.getLong(0), r.getInt(1),
           r.getSeq[Byte](2).toArray, r.getDouble(3)))
     val bc = spark.sparkContext.broadcast(labeled)
-    embStream.select(col("vec_id"), col("label"),
-        col("embedding").cast("array<double>").as("v"))
+    graft.similarity.Knn.embOf(embStream)
+      .select(col("vec_id"), col("label"), col("v"))
       .as[(Long, Int, Seq[Double])]
       .flatMap { case (id, trueLabel, v) =>
         val md = java.security.MessageDigest.getInstance("MD5")
         val hex = md.digest(s"$id:lbl".getBytes("UTF-8"))
           .map("%02x".format(_)).mkString
-        if (hex.charAt(0) < boundary || v == null) Iterator.empty
+        if (hex.charAt(0) < boundary) Iterator.empty
         else {
           val qv = graft.functions.QuantizeInt8.encode(
             new org.apache.spark.sql.catalyst.util.GenericArrayData(
@@ -1884,7 +1860,8 @@ object Streaming {
     * integer sum (order-free ⟹ the closure's ascending loop ≡ the
     * batch hash agg), the score the identical floor-half-up IEEE
     * chain — so emits are a pure function of the vector and the spec's
-    * stream==batch row equality is exact. Vectors with zero-norm codes
+    * stream==batch row equality is exact. Arrivals pass the batch
+    * reader [[graft.similarity.Knn.embOf]]; vectors with zero-norm codes
     * or an unknown/degenerate label pass silently (no row — the batch
     * integer fences). */
   def embOutlierStream(spark: SparkSession, embStream: DataFrame,
@@ -1921,12 +1898,11 @@ object Streaming {
           }
         lab -> ((a, s2))
       })
-    embStream.select(col("vec_id"), col("label"),
-        col("embedding").cast("array<double>").as("v"))
+    graft.similarity.Knn.embOf(embStream)
+      .select(col("vec_id"), col("label"), col("v"))
       .as[(Long, Int, Seq[Double])]
       .flatMap { case (id, label, v) =>
-        val entry = if (v == null) None else bc.value.get(label)
-        entry match {
+        bc.value.get(label) match {
           case Some((s, s2)) if s2 > 0L =>
             val qv = graft.functions.QuantizeInt8.encode(
               new org.apache.spark.sql.catalyst.util.GenericArrayData(

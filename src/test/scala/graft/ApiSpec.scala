@@ -525,6 +525,50 @@ class ApiSpec extends SparkSpec {
         s"graft.sources.Staged: ${offenders.mkString(", ")}")
   }
 
+  /** Every `pattern` hit in src/main as (file, name of the nearest
+    * preceding `enclosing` match) — the def or registry entry it sits
+    * in. */
+  private def hitsIn(pattern: String, enclosing: String): List[(String, String)] = {
+    import java.nio.file.{Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), root.toAbsolutePath.toString)
+    val outer = enclosing.r
+    Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+      .flatMap { (p: Path) =>
+        val text = Files.readString(p)
+        pattern.r.findAllMatchIn(text).map { m =>
+          root.relativize(p).toString ->
+            outer.findAllMatchIn(text.substring(0, m.end)).toList
+              .lastOption.flatMap(_.subgroups.find(_ != null)).getOrElse("")
+        }
+      }
+  }
+
+  test("the degenerate-vector fence runs once in src/main, in Knn.embOf") {
+    // every (v, nrm) frame an operator receives comes from the reader;
+    // a second fence is dead code, a missing one a wrong answer
+    val hits = hitsIn("""\bfiniteNorm\s*\(""", """\bdef\s+(\w+)""")
+    assert(hits.sorted == List(
+        "graft/similarity/Knn.scala" -> "embOf",
+        "graft/similarity/Knn.scala" -> "finiteNorm"),
+      s"finiteNorm( outside its definition and Knn.embOf: $hits")
+  }
+
+  test("only the three stored-row inventory rows read embeddings unfenced") {
+    // emb_health, pipeline_integrity and dedup_embedding_exact answer
+    // about stored rows; every other reader gets the fenced Knn.emb
+    val hits = hitsIn("""\bembStoredRows\s*\(""",
+      """(?:\bdef\s+(\w+)|"(\w+)"\s*->)""")
+    assert(hits.sorted == List(
+        "graft/registry/PipelineQueries.scala" -> "dedup_embedding_exact",
+        "graft/registry/PipelineQueries.scala" -> "emb_health",
+        "graft/registry/PipelineQueries.scala" -> "pipeline_integrity",
+        "graft/similarity/Knn.scala" -> "embStoredRows"),
+      s"embStoredRows( outside the three inventory rows: $hits")
+  }
+
   test("delta segment names in src/main live in graft.sources.Staged") {
     import java.nio.file.{Path, Paths}
     import scala.jdk.CollectionConverters._

@@ -8,8 +8,9 @@ import org.apache.spark.sql.functions._
   * `embeddings` tables carry the payload pathologies a real crawl
   * delivers — NULL and empty text, NULL lang/source, astral (4-byte
   * UTF-8) and unpaired-surrogate text, 1-char docs, NULL / empty /
-  * all-zero / NaN / ±Infinity embeddings. Keys stay valid (ids are the
-  * ingest layer's contract); payloads are the operators' problem.
+  * all-zero / NaN / one-NaN-element / ±Infinity embeddings. Keys stay
+  * valid (ids are the ingest layer's contract); payloads are the
+  * operators' problem.
   *
   * Contract (the EmptyInputSpec discipline): a result — hostile rows
   * may legitimately be dropped, grouped under NULL, or scored as
@@ -89,7 +90,9 @@ class HostileCorpusSpec extends SparkSpec {
       (maxVid + 4L, Seq.fill(dims)(Float.NaN), 1),         // NaN vector
       (maxVid + 5L, Seq.tabulate(dims)(i =>
         if (i == 0) Float.PositiveInfinity else 1.0f), 2), // Inf spike
-      (maxVid + 6L, Seq.fill(dims)(Float.MaxValue), 2))    // magnitude max
+      (maxVid + 6L, Seq.fill(dims)(Float.MaxValue), 2),   // magnitude max
+      (maxVid + 7L, Seq.tabulate(dims)(i =>
+        if (i == 0) Float.NaN else 1.0f), 0))              // one NaN element
     val extraVecCols = emb.columns.toSet --
       Set("vec_id", "embedding", "label")
     var extraV = hostileVecs.toDF("vec_id", "embedding", "label")
@@ -208,16 +211,17 @@ class HostileCorpusSpec extends SparkSpec {
     assert(d(bd, hd, "n_null_lang") == 1L)
     assert(d(bd, hd, "n_null_source") == 1L)
     val be = row(graft.similarity.Knn.embHealth(
-      graft.similarity.Knn.emb(spark, SF)))
+      graft.similarity.Knn.embStoredRows(spark, SF)))
     val he = row(graft.similarity.Knn.embHealth(
-      graft.similarity.Knn.emb(spark, hostileDir)))
-    assert(d(be, he, "n_vecs") == 6L && d(be, he, "n_distinct_ids") == 6L)
+      graft.similarity.Knn.embStoredRows(spark, hostileDir)))
+    assert(d(be, he, "n_vecs") == 7L && d(be, he, "n_distinct_ids") == 7L)
     assert(d(be, he, "n_null_vec") == 1L)
     assert(d(be, he, "n_empty_vec") == 1L)
     assert(d(be, he, "n_zero_norm") == 1L)
-    // NaN vector + the Inf spike; the Float.MaxValue vector is finite
-    // (64·(3.4e38)² ≈ 7.4e78 fits a double) and counts nowhere
-    assert(d(be, he, "n_nonfinite") == 2L)
+    // NaN vector, the one-NaN-element vector and the Inf spike; the
+    // Float.MaxValue vector is finite (64·(3.4e38)² ≈ 7.4e78 fits a
+    // double) and counts nowhere
+    assert(d(be, he, "n_nonfinite") == 3L)
     assert(he.getAs[Long]("dims_min") == 0L) // the empty vector
     assert(he.getAs[Long]("dims_max") == be.getAs[Long]("dims_max"))
     // sk_log_health (r21): the event-log pre-flight must account the

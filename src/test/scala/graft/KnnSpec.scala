@@ -931,7 +931,7 @@ class KnnSpec extends SparkSpec {
   }
 
   test("centroid kernels ≡ the DataFrame reference on sf0.001: assignment, probe lists, Lloyd round") {
-    val base = e.filter(Knn.finiteNorm(col("nrm"))).localCheckpoint(true)
+    val base = Knn.emb(spark, SF).localCheckpoint(true)
     // seeds + one kernel round: a trained (not seed-aligned) table
     assertCentroidKernelsMatch(base, Knn.kmeansCentroids(base, 10, iters = 1),
       "sf0.001")
@@ -948,12 +948,69 @@ class KnnSpec extends SparkSpec {
       .toDF("c_id", "cv")
     val grid = for (x <- -2 to 2; y <- -2 to 2)
       yield ((x + 2) * 5L + (y + 2), 0, Seq(x.toDouble, y.toDouble))
-    val base = Knn.embOf(grid.toDF("vec_id", "label", "embedding"))
+    // the origin is a zero vector, which the reader (Knn.embOf) fences
+    // out: the kernels take the (v, nrm) frame directly
+    val base = grid.toDF("vec_id", "label", "v")
+      .withColumn("nrm", sqrt(graft.functions.DotProduct(col("v"), col("v"))))
       .localCheckpoint(true)
     assertCentroidKernelsMatch(base, centroids, "planted ties")
     // the origin sits at distance 1 from all five: the smallest id wins
     val origin = Knn.assignTo(base.filter(col("vec_id") === 12L),
       graft.functions.CentroidModel.of(centroids)).select("c_id").head.getLong(0)
     assert(origin == 5L, s"origin assigned to $origin")
+  }
+
+  test("the reader fences degenerate vectors once: embOf keeps only finite, non-zero ones and no operator sees the rest") {
+    import spark.implicits._
+    val raw = spark.read.parquet(s"$SF/embeddings.parquet")
+    val dims = raw.select(size(col("embedding"))).head.getInt(0)
+    val top = raw.agg(max(col("vec_id"))).head.getLong(0)
+    // null, empty, all-zero, all-NaN, ONE NaN element (its other
+    // elements code to non-zero int8, so qnrm > 0 alone would keep it),
+    // a +Inf spike — and all-Float.MaxValue, whose squared norm
+    // (64·(3.4e38)² ≈ 7.4e78) is finite: it stays
+    val degenerate = Seq(
+      (top + 1L, null.asInstanceOf[Seq[Float]]),
+      (top + 2L, Seq.empty[Float]),
+      (top + 3L, Seq.fill(dims)(0.0f)),
+      (top + 4L, Seq.fill(dims)(Float.NaN)),
+      (top + 5L, Seq.tabulate(dims)(i => if (i == 0) Float.NaN else 1.0f)),
+      (top + 6L, Seq.tabulate(dims)(i =>
+        if (i == 0) Float.PositiveInfinity else 1.0f)))
+    val maxValue = (top + 7L, Seq.fill(dims)(Float.MaxValue))
+    val bad = degenerate.map(_._1).toSet
+    val planted = Knn.embOf(raw.select(col("vec_id"), col("embedding"),
+        col("label"))
+      .unionByName((degenerate :+ maxValue).toDF("vec_id", "embedding")
+        .withColumn("embedding", col("embedding").cast("array<float>"))
+        .withColumn("label", lit(0).cast(raw.schema("label").dataType))))
+      .localCheckpoint(true)
+    val clean = raw.select("vec_id").as[Long].collect().toSet
+    val kept = planted.select("vec_id").as[Long].collect().toSet
+    assert(kept -- clean == Set(maxValue._1) && (clean -- kept).isEmpty)
+    // every planted id probes, so a leak shows as a query AND a neighbor
+    val probes = col("vec_id") < 5L || col("vec_id") > top
+    def ids(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      cols.flatMap(c => df.select(col(c)).as[Long].collect()).toSet
+    def clear(what: String, got: Set[Long]) = {
+      assert(got.nonEmpty, s"$what: no rows")
+      assert((got & bad).isEmpty, s"$what served ${got & bad}")
+    }
+    clear("brute", ids(Knn.brute(planted, probes, k = 5),
+      "query_id", "neighbor_id"))
+    clear("bruteQuantized", ids(Knn.bruteQuantized(planted, probes, k = 5),
+      "query_id", "neighbor_id"))
+    graft.sources.Staged.drop(spark, "reader_fence_ivfq")
+    Knn.writeIvfIndexQuantized(planted, "reader_fence_ivfq",
+      java.nio.file.Files.createTempDirectory("reader_fence").toString,
+      nlist = 4, buckets = 2)
+    clear("writeIvfIndexQuantized lists",
+      ids(spark.table("reader_fence_ivfq"), "vec_id"))
+    clear("lsh", ids(Knn.lsh(planted, probes, k = 5), "query_id",
+      "neighbor_id"))
+    clear("semMemberFor", ids(graft.similarity.Hybrid.semMemberFor(
+      planted.filter(probes), planted, 0.1), "doc_id", "cand_id"))
+    clear("embeddingPairs", ids(graft.dedup.Dedup.embeddingPairs(planted,
+      tau = 0.3), "vec_id1", "vec_id2"))
   }
 }

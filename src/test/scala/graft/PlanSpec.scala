@@ -96,8 +96,7 @@ class PlanSpec extends SparkSpec {
     import graft.similarity.Knn
     import graft.functions.CentroidModel
     val exchanges = "\\bExchange\\b".r
-    val e = Knn.emb(spark, SF).filter(Knn.finiteNorm(col("nrm")))
-      .localCheckpoint(true)
+    val e = Knn.emb(spark, SF).localCheckpoint(true)
     val model = CentroidModel.of(Knn.kmeansCentroids(e, k = 4, iters = 1))
     // a Lloyd round is ONE aggregation: the assignment kernel in the
     // grouping key, the vector mean as the aggregate
